@@ -814,10 +814,8 @@ def _zoned_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalized plans, so every later call with the same sf_dir reuses the
     same cache entry; the frame is a few columns per page (tiny) and the
     bench/driver clear the cache between queries."""
-    g = flagship.geo_pages(pages_from_documents(spark, sf_dir))
-    g = g.withColumn("chars", F.length("text_extracted").cast("long"))
-    return spatial_join_points(g, layers.climate_zones(),
-                               passthrough=["lang", "chars"]).persist()
+    return flagship.pip_join(
+        flagship.page_chars(pages_from_documents(spark, sf_dir))).persist()
 
 
 def _q_zonal_unweighted(spark: SparkSession, sf_dir: str) -> DataFrame:

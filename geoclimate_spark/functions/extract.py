@@ -43,17 +43,10 @@ def extract_lon_e6(html: pd.Series) -> pd.Series:
     return pd.to_numeric(out[1], errors="coerce").astype("Int64")
 
 
-# JVM-side equivalents (whole-stage codegen; java.util.regex). For the
-# synthetic page format both engines' regexes are byte-equivalent — asserted
-# in tests/test_extract.py. Real-world HTML would need the Arrow path.
-_MAIN_RE_J = "(?s)<main>(.*?)</main>"
-_GEO_LAT_J = '<meta name="geo\\.position" content="(-?\\d+);(-?\\d+)">'
-
-
 def with_extraction(df, html_col: str = "html", method: str = "builtin"):
     """Project extracted text + integer-microdegree coords from html.
 
-    method="builtin" (default): decode + regexp_extract stay inside
+    method="builtin" (default): decode + substring search stay inside
     whole-stage codegen — the fast path (no Python round-trip at all).
     method="arrow": the batched pandas-UDF path (one Arrow exchange; the
     general-purpose hook where a real HTML parser would plug in).
@@ -65,18 +58,6 @@ def with_extraction(df, html_col: str = "html", method: str = "builtin"):
             "text_extracted": extract_text(h),
             "lat_e6": extract_lat_e6(h),
             "lon_e6": extract_lon_e6(h),
-        })
-    if method == "regex":
-        s = F.decode(h, "UTF-8")
-        # regexp_extract returns '' on no-match; gate on a containment test
-        # so an empty-but-present <main></main> still extracts '' (not
-        # null), matching the Arrow path exactly.
-        has_geo = s.contains('<meta name="geo.position"')
-        return df.withColumns({
-            "text_extracted": F.when(s.contains("<main>"),
-                                     F.regexp_extract(s, _MAIN_RE_J, 1)),
-            "lat_e6": F.when(has_geo, F.regexp_extract(s, _GEO_LAT_J, 1).cast("long")),
-            "lon_e6": F.when(has_geo, F.regexp_extract(s, _GEO_LAT_J, 2).cast("long")),
         })
     # "builtin" default: pure substring search, no regex engine at all —
     # ~12% faster than the regex builtins and byte-identical on the page

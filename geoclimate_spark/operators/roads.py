@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.layers import _lcg
 from .distribution import octant_bin_col, octant_bin_sql
 
 N_DIR_BINS = 8
@@ -47,25 +48,25 @@ def synth_roads_rows(n: int = 400) -> list[tuple]:
     rows = []
     s = 987_653
     for k in range(n):
-        s = (s * 48_271 + 11) % 2_147_483_647
+        s = _lcg(s)
         x0 = s % 330_000_000 - 170_000_000
-        s = (s * 48_271 + 11) % 2_147_483_647
+        s = _lcg(s)
         y0 = s % 130_000_000 - 70_000_000
-        s = (s * 48_271 + 11) % 2_147_483_647
+        s = _lcg(s)
         dx = 500_000 + s % 12_000_000          # > 0 always
-        s = (s * 48_271 + 11) % 2_147_483_647
+        s = _lcg(s)
         dy = (s % 9_000_000) - 4_500_000
         if dy == 0:
             dy = 1_000                          # never axis-parallel
-        s = (s * 48_271 + 11) % 2_147_483_647
+        s = _lcg(s)
         rtype = ROAD_TYPES[s % len(ROAD_TYPES)]
-        s = (s * 48_271 + 11) % 2_147_483_647
+        s = _lcg(s)
         surface = ROAD_SURFACES[s % len(ROAD_SURFACES)]
-        s = (s * 48_271 + 11) % 2_147_483_647
+        s = _lcg(s)
         maxspeed = -1 if s % 3 == 0 else 30 + (s % 8) * 10
-        s = (s * 48_271 + 11) % 2_147_483_647
+        s = _lcg(s)
         direction = 1 + s % 3
-        s = (s * 48_271 + 11) % 2_147_483_647
+        s = _lcg(s)
         zindex = s % 3 - 1
         rows.append((k, x0, y0, x0 + dx, y0 + dy, rtype, surface,
                      maxspeed, direction, zindex))

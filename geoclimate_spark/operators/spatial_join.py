@@ -7,32 +7,42 @@ each source row gets the id of the zone containing its point
 deterministic lowest-id tie-break at shared boundaries (convention of
 `RsuIndicators.groovy:955-957`).
 
-Spark-first physical strategy (filter-and-refine, SURVEY.md §4):
+Spark-first physical strategy, picked per zone geometry:
 
-1. zones (small dim, driver-side) are exploded into a covering of grid cells
-   at an auto-picked resolution, each flagged *full* (cell entirely inside the
-   zone) or *partial* — the ST_SUBDIVIDE + spatial-index analogue;
-2. the page side derives its cell key with pure column arithmetic (codegen'd,
-   no UDF) and **broadcast hash joins** the covering — no shuffle of the big
-   side, filters/pruning push into the parquet scan;
-3. only rows landing in *partial* cells run the exact vectorized
-   ray-cast refine (Arrow-batched pandas UDF over the broadcast zone dim) —
-   at a sane covering resolution that's the boundary sliver, a few % of rows;
-4. the winning zone per page is ``min(zone_id)`` — a partial-aggregable
-   (map-side combine) commutative agg, so the only shuffle in the operator is
-   (key, zone_id) pairs, never the wide page rows.
+* **rectangles on the µ° grid** (the climate-band dim): an exact
+  interval-class lookup. The distinct rectangle edges cut each axis into
+  classes (below, on, or between edges); the driver tabulates the lowest
+  covering zone id per (lon class, lat class) pair — a few hundred rows —
+  and the page side computes its class key with two codegen'd ``CASE``
+  expressions and **broadcast hash joins** the table 1:1. No shuffle, no
+  Python, one map pass over the pages.
+* **general polygons** (filter-and-refine, SURVEY.md §4):
 
-At 100 TB: step 2's broadcast is a few MB of (cell → zone) pairs even for
-10^5 zones; skew from dense urban cells is irrelevant to the join itself
-(broadcast, no key shuffle) and handled at aggregation time by AQE +
-salted two-phase aggs (see operators/zonal.py).
+  1. zones (small dim, driver-side) are exploded into a covering of grid
+     cells at an auto-picked resolution, each flagged *full* (cell entirely
+     inside the zone) or *partial* — the ST_SUBDIVIDE + spatial-index
+     analogue;
+  2. the page side derives its cell key with pure column arithmetic
+     (codegen'd, no UDF) and **broadcast hash joins** the covering — no
+     shuffle of the big side, filters/pruning push into the parquet scan;
+  3. only rows landing in *partial* cells run the exact vectorized
+     ray-cast refine (Arrow-batched pandas UDF over the broadcast zone dim);
+  4. the winning zone per page is ``min(zone_id)`` — a partial-aggregable
+     (map-side combine) commutative agg, so the only shuffle in the operator
+     is (key, zone_id) pairs, never the wide page rows.
+
+At 100 TB: the broadcast side is sized by the zones, not the pages (class
+pairs for rectangles, a few MB of (cell → zone) pairs for 10^5 polygons);
+skew from dense urban cells is irrelevant to the join itself (broadcast,
+no key shuffle) and handled at aggregation time by AQE + salted two-phase
+aggs (see operators/zonal.py).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -108,52 +118,43 @@ def _rect_bounds_e6(zones: list[Zone]) -> dict[int, tuple[int, int, int, int]] |
     return out
 
 
-_DIM_CACHE: dict = {}
+def _rect_class_table(bounds: dict[int, tuple[int, int, int, int]],
+                      max_cells: int):
+    """Exact interval-class lookup for rectangle zones, or None if too big.
 
-
-def _rect_cell_dim_df(spark, zones: list[Zone], res: int,
-                      bounds: dict[int, tuple[int, int, int, int]]) -> DataFrame:
-    """ONE row per covering cell: the lowest fully-covering zone id plus the
-    (ascending-id) list of partially-covering rectangles as int-µ° bounds.
-    The per-cell pre-aggregation is what makes the page-side join 1:1.
-
-    Cached per (session, zones, res): createDataFrame ships the local rows
-    Python→JVM eagerly, so at the rect path's 10× cell budget the build is a
-    ~1 s driver-side fixed cost that every rect-join query in a session
-    would otherwise re-pay (measured 2.4× on short sf0.01 queries). The dim
-    is immutable for a given zone set, so reuse is exact."""
-    ckey = (id(spark), res, tuple((z.zone_id, z.bbox) for z in zones))
-    if ckey in _DIM_CACHE:
-        return _DIM_CACHE[ckey]
-    cell, zid, full = zone_covering(zones, res)
-    # the covering is driver-side already (small dim) — aggregate it here so
-    # the dim reaches Spark as ONE LocalTableScan row per cell, no dim-side
-    # exchange in any consumer plan. lexsort on (cell, zid) makes group
-    # starts contiguous and partial lists ascending-id by construction.
-    order = np.lexsort((zid, cell))
-    c, z, f = cell[order], zid[order], full[order]
-    starts = (np.flatnonzero(np.r_[True, c[1:] != c[:-1]])
-              if len(c) else np.array([], np.int64))
-    uc = c[starts]
+    Each axis is cut at the distinct sorted µ° edges e_0 < … < e_{n-1} into
+    2n+1 classes: 2k is strictly between e_{k-1} and e_k (below e_0 for
+    k=0), 2k+1 is exactly e_k, 2n is above e_{n-1}. Every point of a class
+    lies in the same set of boundary-inclusive rectangles (a rectangle
+    [e_i, e_j] covers classes 2i+1 … 2j+1), so the minimum zone id per
+    (lon class, lat class) pair is the exact join answer. Returns the lon
+    and lat edges plus the covered pairs as flat keys
+    ``lon_class * n_lat_classes + lat_class`` and their zone ids; pairs that
+    no zone covers are dropped. None when the dense class grid exceeds
+    ``max_cells`` (the caller then takes the generic covering path)."""
+    b = np.array(list(bounds.values()), np.int64)   # lon0, lat0, lon1, lat1
+    lon_e, lat_e = np.unique(b[:, [0, 2]]), np.unique(b[:, [1, 3]])
+    n_lon, n_lat = 2 * len(lon_e) + 1, 2 * len(lat_e) + 1
+    if n_lon * n_lat > max_cells:
+        return None
+    lon_cls = 2 * np.searchsorted(lon_e, b[:, [0, 2]]) + 1
+    lat_cls = 2 * np.searchsorted(lat_e, b[:, [1, 3]]) + 1
     big = np.iinfo(np.int64).max
-    fullmin = np.minimum.reduceat(np.where(f, z, big), starts)
-    # partial lists: loop only the boundary rows (~perimeter cells), not the
-    # full covering — at the 10× budget the vast majority of cells are
-    # full-cover with an empty list
-    partials: dict[int, list] = {}
-    for i in np.flatnonzero(~f):
-        zi = int(z[i])
-        partials.setdefault(int(c[i]), []).append((zi, *bounds[zi]))
-    rows = [(int(uc[j]),
-             None if fullmin[j] == big else int(fullmin[j]),
-             partials.get(int(uc[j]), []))
-            for j in range(len(uc))]
-    df = spark.createDataFrame(
-        rows,
-        "z_cell long, z_fullmin long, z_partials array<struct<"
-        "zid:long,lon0:long,lat0:long,lon1:long,lat1:long>>")
-    _DIM_CACHE[ckey] = df
-    return df
+    best = np.full((n_lon, n_lat), big)
+    for zid, (x0, x1), (y0, y1) in zip(bounds, lon_cls, lat_cls):
+        cell = best[x0:x1 + 1, y0:y1 + 1]
+        np.minimum(cell, zid, out=cell)
+    keys = np.flatnonzero(best != big)
+    return lon_e, lat_e, keys, best.ravel()[keys]
+
+
+def _class_col(c: Column, edges: np.ndarray) -> Column:
+    """The interval class of column ``c`` over ``edges`` (see
+    :func:`_rect_class_table`) as one CASE of ``<`` / ``=`` tests."""
+    cls = F  # F.when opens the CASE, Column.when extends it
+    for k, e in enumerate(edges.tolist()):
+        cls = cls.when(c < e, 2 * k).when(c == e, 2 * k + 1)
+    return cls.otherwise(2 * len(edges))
 
 
 def spatial_join_points(df: DataFrame, zones: list[Zone], key: str = "page_id",
@@ -163,60 +164,52 @@ def spatial_join_points(df: DataFrame, zones: list[Zone], key: str = "page_id",
                         force_generic: bool = False) -> DataFrame:
     """Assign each row's point to its containing zone.
 
-    Returns ``(key, zone_id, *passthrough)`` — one row per input row whose
-    point lies in at least one zone; lowest zone_id wins on boundaries/
-    overlaps. ``passthrough`` columns ride through the narrow aggregation
-    (every candidate row of a key carries identical values, so ``first`` is
-    deterministic) — avoids a second wide join at page scale.
+    Returns ``(key, zone_id, lon, lat, *passthrough)`` — one row per input
+    row whose point lies in at least one zone; lowest zone_id wins on
+    boundaries/overlaps. ``passthrough`` columns ride along unchanged.
 
     Physical strategy is picked per zone geometry:
 
     * **all-rectangle zones on the µ° grid** (the climate-band dim and any
-      gridded zoning): ZERO-shuffle, ZERO-Python path. The covering is
-      pre-aggregated to ONE row per cell (min fully-covering zone id + the
-      short ascending list of partially-covering rects), so the page side
-      does a single 1:1 broadcast hash join and resolves the winner with
-      codegen'd integer comparisons (``filter``/``transform``/``array_min``
-      over the per-cell rect list + ``least`` with the full-cover min).
-      Nothing is exploded, nothing is shuffled, no Arrow round-trip — at
-      100 TB the operator costs exactly one map pass over the pages.
-    * **general convex polygons**: the original filter-and-refine — explode
-      candidates against the covering, Arrow-batched ray-cast on
-      partial-cell rows only, then a narrow min(zone_id) aggregation.
+      gridded zoning): ZERO-shuffle, ZERO-Python interval lookup. The
+      distinct rectangle edges cut each axis into interval classes; the
+      driver precomputes the lowest covering zone id per (lon class, lat
+      class) pair (375 rows for the 72 climate zones), and the page side
+      computes its two classes with codegen'd ``CASE`` comparisons and
+      broadcast hash joins that table 1:1. Pages in uncovered classes find
+      no row and drop out. The lookup is keyed by a join, not inlined as a
+      projection plus ``zone_id IS NOT NULL`` filter: Catalyst would push
+      that filter below the extraction projection and copy the extraction
+      into every comparison. ``res`` does not apply here; when the class
+      grid exceeds ``max_cells`` the generic path runs instead.
+    * **general convex polygons**: filter-and-refine — explode candidates
+      against a covering at resolution ``res`` (auto-picked under
+      ``max_cells``), Arrow-batched ray-cast on partial-cell rows only, then
+      a narrow min(zone_id) aggregation.
 
     Both paths are bit-equivalent (asserted in tests/test_spatial_join.py);
     ``force_generic=True`` pins the polygon path (tests).
     """
     spark = df.sparkSession
     passthrough = passthrough or []
+    pts = df.where(F.col(lon).isNotNull()).select(key, lon, lat, *passthrough)
     rect_bounds = None if force_generic else _rect_bounds_e6(zones)
+    table = _rect_class_table(rect_bounds, max_cells) if rect_bounds else None
+    if table is not None:
+        lon_e, lat_e, keys, zids = table
+        n_lat = 2 * len(lat_e) + 1
+        dim = spark.createDataFrame(pd.DataFrame(
+            {"z_cls": keys.astype(np.int32), "zone_id": zids}))
+        pts = pts.withColumn("_zcls", _class_col(F.col(lon), lon_e) * n_lat
+                             + _class_col(F.col(lat), lat_e))
+        j = pts.join(F.broadcast(dim), pts["_zcls"] == dim["z_cls"], "inner")
+        return j.select(key, "zone_id", lon, lat, *passthrough)
     if res is None:
-        # the rect path's covering is a per-cell dim (no explode), so a 10×
-        # cell budget costs only broadcast bytes (~8 MB at 140k cells) while
-        # shrinking boundary cells — measured 15% faster than the generic
-        # budget (hotspot cells become full-cover with empty partial lists)
-        res = pick_cover_res(zones,
-                             max_cells * 10 if rect_bounds else max_cells)
-    if rect_bounds is not None:
-        dim = _rect_cell_dim_df(spark, zones, res, rect_bounds)
-        pts = (df.where(F.col(lon).isNotNull())
-                 .select(key, lon, lat, *passthrough)
-                 .withColumn("_jcell", grid.cell_col(F.col(lon), F.col(lat), res)))
-        j = pts.join(F.broadcast(dim), pts["_jcell"] == dim["z_cell"], "inner")
-        lo, la = F.col(lon), F.col(lat)
-        in_rect = lambda p: ((lo >= p["lon0"]) & (lo <= p["lon1"])
-                             & (la >= p["lat0"]) & (la <= p["lat1"]))
-        part_min = F.array_min(F.transform(
-            F.filter(F.col("z_partials"), in_rect), lambda p: p["zid"]))
-        zone = F.least(F.col("z_fullmin"), part_min)
-        return (j.select(key, zone.alias("zone_id"), lon, lat, *passthrough)
-                 .where(F.col("zone_id").isNotNull()))
+        res = pick_cover_res(zones, max_cells)
     cov = covering_df(spark, zones, res)
     pip = _pip_refine_udf(zones)
 
-    pts = (df.where(F.col(lon).isNotNull())
-             .select(key, lon, lat, *passthrough)
-             .withColumn("_jcell", grid.cell_col(F.col(lon), F.col(lat), res)))
+    pts = pts.withColumn("_jcell", grid.cell_col(F.col(lon), F.col(lat), res))
     cand = pts.join(F.broadcast(cov), pts["_jcell"] == cov["z_cell"], "inner")
     hit = cand.where(F.col("z_full") | pip(F.col(lon), F.col(lat), F.col("zone_id")))
     # Passthrough + coords go in the GROUPING KEY, not first() buffers:

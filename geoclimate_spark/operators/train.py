@@ -27,12 +27,7 @@ from __future__ import annotations
 
 import math
 
-_M = 2_147_483_647
-_A = 48_271
-
-
-def _lcg(s: int) -> int:
-    return (s * _A + 11) % _M
+from ..sources.layers import _lcg
 
 
 # ------------------------------------------------------------------- split

@@ -1,9 +1,9 @@
 """Flagship end-to-end pipeline: raw html → zone/tile page statistics.
 
 The minimum end-to-end slice of SURVEY.md §7 step 4: *"pages per climate zone
-and tile, with language mix"* — extraction (Arrow UDF), cell indexing (pure
-column arithmetic), broadcast filter-and-refine PIP join, tile assignment,
-zonal aggregation. Reference lifecycle analogue: §3.1's
+and tile, with language mix"* — extraction (codegen'd substring search),
+broadcast PIP join, tile assignment (pure column arithmetic), zonal
+aggregation. Reference lifecycle analogue: §3.1's
 extract→format→units→indicators chain collapsed into one lazy DataFrame DAG
 (the reference materializes every stage eagerly; we let Catalyst fuse).
 """
@@ -30,24 +30,38 @@ def geo_pages(pages: DataFrame) -> DataFrame:
     return ex.where(F.col("lon_e6").isNotNull()).drop("html")
 
 
-def zone_tile_language_mix(pages: DataFrame, tile_res: int = TILE_RES) -> DataFrame:
-    """Pages per (zone, tile): counts, language mix, mean extracted length.
-
-    The wide ``text_extracted`` column is reduced to an integer ``chars``
-    BEFORE the PIP join, so the join output, both shuffles and all agg
-    buffers are numeric + one short lang string — HashAggregate with
-    map-side combine end to end (checked in docs/PLANS.md).
-    """
-    g = geo_pages(pages).withColumn(
+def page_chars(pages: DataFrame) -> DataFrame:
+    """:func:`geo_pages` plus ``chars`` = extracted length — the wide
+    ``text_extracted`` column is reduced to an integer BEFORE the PIP join,
+    so the join output, both shuffles and all agg buffers are numeric + one
+    short lang string."""
+    return geo_pages(pages).withColumn(
         "chars", F.length("text_extracted").cast("long"))
-    assigned = spatial_join_points(g, climate_zones(),
-                                   passthrough=["lang", "chars"])
+
+
+def pip_join(g: DataFrame) -> DataFrame:
+    """Climate zone of every page; lang and chars ride through."""
+    return spatial_join_points(g, climate_zones(), passthrough=["lang", "chars"])
+
+
+def zone_tile_agg(assigned: DataFrame, tile_res: int = TILE_RES) -> DataFrame:
+    """Pages per (zone, tile): counts, language mix, mean extracted length.
+    HashAggregate with map-side combine end to end (checked in
+    docs/PLANS.md)."""
     tiled = with_tile(assigned, res=tile_res)
     return (tiled.groupBy("zone_id", "tile_id")
             .agg(F.count("*").alias("n_pages"),
                  F.countDistinct("lang").alias("n_langs"),
                  F.sum("chars").alias("total_chars"),
                  (F.sum("chars") / F.count("*")).alias("avg_chars")))
+
+
+def zone_tile_language_mix(pages: DataFrame, tile_res: int = TILE_RES) -> DataFrame:
+    """Pages per (zone, tile): counts, language mix, mean extracted length —
+    :func:`page_chars` → :func:`pip_join` → :func:`zone_tile_agg`, the same
+    three steps the resumable pipeline checkpoints one by one
+    (plans/pipeline.py::flagship_stages)."""
+    return zone_tile_agg(pip_join(page_chars(pages)), tile_res)
 
 
 def run(spark: SparkSession, sf_dir: str, tile_res: int = TILE_RES) -> DataFrame:

@@ -197,33 +197,16 @@ class PipelineRunner:
 
 
 def flagship_stages(sf_dir: str, tile_res: int | None = None) -> list[Stage]:
-    """The flagship query as a resumable 3-stage pipeline:
-    extract → pip_join → zone_tile_agg."""
-    from ..functions.extract import with_extraction
-    from ..operators.spatial_join import spatial_join_points
-    from ..operators.tile import TILE_RES, with_tile
-    from ..sources.layers import climate_zones
+    """The flagship query (plans/flagship.py) as a resumable 3-stage
+    pipeline: extract → pip_join → zone_tile_agg."""
+    from ..operators.tile import TILE_RES
     from ..sources.pages import pages_from_documents
+    from . import flagship
 
-    tr = tile_res or TILE_RES
-
-    def s_extract(spark, up):
-        pages = pages_from_documents(spark, sf_dir)
-        ex = with_extraction(pages.select("page_id", "url", "lang", "html"))
-        return (ex.where(F.col("lon_e6").isNotNull()).drop("html")
-                .withColumn("chars", F.length("text_extracted").cast("long")))
-
-    def s_pip(spark, up):
-        return spatial_join_points(up["extract"], climate_zones(),
-                                   passthrough=["lang", "chars"])
-
-    def s_agg(spark, up):
-        tiled = with_tile(up["pip_join"], res=tr)
-        return (tiled.groupBy("zone_id", "tile_id")
-                .agg(F.count("*").alias("n_pages"),
-                     F.countDistinct("lang").alias("n_langs"),
-                     F.sum("chars").alias("total_chars"),
-                     (F.sum("chars") / F.count("*")).alias("avg_chars")))
-
-    return [Stage("extract", s_extract), Stage("pip_join", s_pip),
-            Stage("zone_tile_agg", s_agg)]
+    return [
+        Stage("extract", lambda spark, up: flagship.page_chars(
+            pages_from_documents(spark, sf_dir))),
+        Stage("pip_join", lambda spark, up: flagship.pip_join(up["extract"])),
+        Stage("zone_tile_agg", lambda spark, up: flagship.zone_tile_agg(
+            up["pip_join"], tile_res or TILE_RES)),
+    ]

@@ -34,7 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import layers
-from .wkb import _lcg, equirect_scales, synth_multipoly_rows
+from .layers import _lcg
+from .wkb import equirect_scales, synth_multipoly_rows
 
 _POLY_COORDS = "array<array<array<double>>>"
 _MPOLY_COORDS = "array<array<array<array<double>>>>"

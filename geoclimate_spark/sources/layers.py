@@ -139,6 +139,12 @@ def zone_center_values_sql() -> str:
             f" AS t(zone_id, center_lon_e6, center_lat_e6)")
 
 
+def _lcg(s: int) -> int:
+    """One step of the repository's Lehmer LCG (a=48271, m=2^31-1, +11),
+    shared by the Python fixture generators."""
+    return (s * 48_271 + 11) % 2_147_483_647
+
+
 RECT_LAYER_NAMES = ("builtup", "water", "veg")
 
 
@@ -151,13 +157,13 @@ def synth_rect_layer_rows(n_per_layer: int = 25) -> list[tuple[str, int, int, in
     s = 123_457
     for li, layer in enumerate(RECT_LAYER_NAMES):
         for k in range(n_per_layer):
-            s = (s * 48_271 + 11) % 2_147_483_647
+            s = _lcg(s)
             x0 = s % 340_000_000 - 175_000_000
-            s = (s * 48_271 + 11) % 2_147_483_647
+            s = _lcg(s)
             y0 = s % 120_000_000 - 65_000_000
-            s = (s * 48_271 + 11) % 2_147_483_647
+            s = _lcg(s)
             w = 1_000_000 + s % (8_000_000 * (li + 1))
-            s = (s * 48_271 + 11) % 2_147_483_647
+            s = _lcg(s)
             h = 1_000_000 + s % 6_000_000
             rows.append((layer, x0, y0, min(x0 + w, 180_000_000),
                          min(y0 + h, 90_000_000)))
@@ -196,10 +202,6 @@ def rect_layers_values_sql() -> str:
 # intersection numerators ≤ ~5e18 < 2^63), so the polygon clipping in
 # operators/polygon_overlay.py is bit-deterministic vs the DuckDB oracle.
 POLY_LAYER_NAMES = ("canopy", "urban", "flood")
-
-
-def _lcg(s: int) -> int:
-    return (s * 48_271 + 11) % 2_147_483_647
 
 
 def _synth_convex(n: int, seed: int, rmin: int, rmax: int,
@@ -391,7 +393,8 @@ def voronoi_zones(n: int = 40, seed: int = 42,
 
 # Covering construction is pure driver-side Python — without caching it is a
 # FIXED SERIAL COST in every query (measured ~3s at res 6 / 72 zones), which
-# destroys N→4N scaling of short jobs. Keyed by zone content + res.
+# destroys N→4N scaling of short jobs. Keyed by res + every zone's id and
+# vertices: two polygons can share an id and a bbox but not a covering.
 _COVER_CACHE: dict = {}
 
 
@@ -410,7 +413,8 @@ def zone_covering(zones: list[Zone], res: int) -> tuple[np.ndarray, np.ndarray, 
     cells with no corner inside (polygon spike entering a cell side).
     full = all 4 corners inside — safe for convex zones (rects and hulls).
     """
-    key = (res, tuple((z.zone_id, z.bbox) for z in zones))
+    key = (res, tuple((z.zone_id, np.ascontiguousarray(z.poly, np.float64).tobytes())
+                      for z in zones))
     if key in _COVER_CACHE:
         return _COVER_CACHE[key]
     cells, zids, fulls = [], [], []

@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .layers import _lcg
+
 _WKB_POLYGON = 3
 _WKB_MULTIPOLYGON = 6
 _EWKB_SRID_FLAG = 0x2000_0000
@@ -312,10 +314,6 @@ FROM e GROUP BY {id_col}"""
 
 
 # ---------------------------------------------------------------- fixtures
-def _lcg(s: int) -> int:
-    return (s * 48_271 + 11) % 2_147_483_647
-
-
 N_MULTIPOLY = 48
 
 

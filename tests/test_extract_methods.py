@@ -12,20 +12,12 @@ def test_builtin_and_arrow_paths_byte_identical(spark):
     pages = pages_from_documents(spark, SF_SMOKE).select("page_id", "html")
     a = with_extraction(pages, method="builtin").alias("a")
     b = with_extraction(pages, method="arrow").alias("b")
-    c = with_extraction(pages, method="regex")
     j = a.join(b, F.col("a.page_id") == F.col("b.page_id"))
     diff = j.where(
         ~(F.col("a.text_extracted").eqNullSafe(F.col("b.text_extracted")))
         | ~(F.col("a.lat_e6").eqNullSafe(F.col("b.lat_e6")))
         | ~(F.col("a.lon_e6").eqNullSafe(F.col("b.lon_e6")))).count()
     assert diff == 0
-    # the regex path agrees too (all three methods are interchangeable)
-    jc = a.join(c.alias("c"), F.col("a.page_id") == F.col("c.page_id"))
-    diff_c = jc.where(
-        ~(F.col("a.text_extracted").eqNullSafe(F.col("c.text_extracted")))
-        | ~(F.col("a.lat_e6").eqNullSafe(F.col("c.lat_e6")))
-        | ~(F.col("a.lon_e6").eqNullSafe(F.col("c.lon_e6")))).count()
-    assert diff_c == 0
 
 
 def test_edge_cases_both_methods(spark):
@@ -37,7 +29,7 @@ def test_edge_cases_both_methods(spark):
         (4, None),                                                       # null html
     ]
     df = spark.createDataFrame(rows, "page_id int, html binary")
-    for method in ("builtin", "regex", "arrow"):
+    for method in ("builtin", "arrow"):
         got = {r.page_id: r for r in with_extraction(df, method=method).collect()}
         assert got[1].text_extracted == ""
         assert got[2].text_extracted is None and got[2].lat_e6 is None

@@ -48,34 +48,59 @@ def test_voronoi_zone_join_matches_numpy_oracle(spark):
     assert len(got) < len(src)
 
 
+def _rect_join_vs_oracle(spark, zones, pts_deg):
+    """Rect-path join of ``pts_deg`` (lon, lat degrees) checked against the
+    numpy ray-cast oracle: matched points in order, gap points dropped.
+    Returns the zone ids of every point (-1 = dropped)."""
+    from geoclimate_spark.operators.spatial_join import (
+        _rect_bounds_e6, _rect_class_table)
+    assert _rect_class_table(_rect_bounds_e6(zones), 20_000) is not None
+    lon = np.array([round(x * 1e6) for x, _ in pts_deg], np.int64)
+    lat = np.array([round(y * 1e6) for _, y in pts_deg], np.int64)
+    pdf = pd.DataFrame({"page_id": np.arange(len(lon)), "lon_e6": lon, "lat_e6": lat})
+    got = spatial_join_points(spark.createDataFrame(pdf), zones) \
+        .orderBy("page_id").toPandas()
+    want = spatial_join_points_np(lon, lat, zones)
+    assert got.page_id.tolist() == np.flatnonzero(want >= 0).tolist()
+    assert got.zone_id.tolist() == want[want >= 0].tolist()
+    return want.tolist()
+
+
 def test_boundary_point_lowest_zone_id_tiebreak(spark):
     """Point exactly on a shared boundary → lowest zone id (reference
     convention, RsuIndicators.groovy:955-957)."""
     zones = [
         layers.Zone(7, "b", geometry.rect_poly(0.0, 0.0, 1.0, 1.0)),
         layers.Zone(3, "a", geometry.rect_poly(1.0, 0.0, 2.0, 1.0)),
+        # four rectangles meeting at the corner (10, 10)
+        layers.Zone(12, "c", geometry.rect_poly(9.0, 9.0, 10.0, 10.0)),
+        layers.Zone(11, "c", geometry.rect_poly(10.0, 9.0, 11.0, 10.0)),
+        layers.Zone(14, "c", geometry.rect_poly(9.0, 10.0, 10.0, 11.0)),
+        layers.Zone(13, "c", geometry.rect_poly(10.0, 10.0, 11.0, 11.0)),
+        # an isolated rectangle
+        layers.Zone(20, "d", geometry.rect_poly(20.0, 20.0, 21.0, 21.0)),
     ]
-    pdf = pd.DataFrame({
-        "page_id": [1, 2, 3],
-        "lon_e6": [1_000_000, 500_000, 1_500_000],  # on boundary, in z7, in z3
-        "lat_e6": [500_000, 500_000, 500_000],
-    })
-    df = spark.createDataFrame(pdf)
-    got = spatial_join_points(df, zones, res=8).orderBy("page_id").toPandas()
-    assert got.zone_id.tolist() == [3, 7, 3]
+    pts = [(1.0, 0.5), (0.5, 0.5), (1.5, 0.5),       # on boundary, in z7, in z3
+           (10.0, 10.0), (9.5, 10.0), (10.0, 10.5),  # shared corner, shared edges
+           (5.0, 5.0), (10.0, 11.000001),            # gaps: dropped
+           (21.0, 20.5), (20.5, 21.0), (20.0, 20.0),  # isolated rect's outer edges
+           (21.000001, 20.5)]                        # just outside it
+    assert _rect_join_vs_oracle(spark, zones, pts) == \
+        [3, 7, 3, 11, 12, 13, -1, -1, 20, 20, 20, -1]
 
 
 def test_overlapping_zones_lowest_id_wins(spark):
     zones = [
         layers.Zone(5, "big", geometry.rect_poly(0.0, 0.0, 2.0, 2.0)),
         layers.Zone(2, "inner", geometry.rect_poly(0.5, 0.5, 1.5, 1.5)),
+        # nested in z5 and sharing its left and top edges
+        layers.Zone(1, "nested", geometry.rect_poly(0.0, 1.5, 0.5, 2.0)),
     ]
-    pdf = pd.DataFrame({"page_id": [1, 2],
-                        "lon_e6": [1_000_000, 100_000],
-                        "lat_e6": [1_000_000, 100_000]})
-    got = spatial_join_points(spark.createDataFrame(pdf), zones, res=8) \
-        .orderBy("page_id").toPandas()
-    assert got.zone_id.tolist() == [2, 5]
+    pts = [(1.0, 1.0), (0.1, 0.1),
+           (0.0, 1.75), (0.25, 2.0), (0.5, 1.75),  # z1 edges shared with z5 / own
+           (0.500001, 1.75), (0.5, 1.5),           # z5 only / z1 ∩ z2 corner
+           (0.0, 1.499999)]                        # z5's left edge below z1
+    assert _rect_join_vs_oracle(spark, zones, pts) == [2, 5, 1, 1, 1, 5, 1, 5]
 
 
 def test_full_cell_fast_path_consistency(spark):
@@ -104,6 +129,29 @@ def test_rect_fast_path_equals_generic_refine(spark):
         .executedPlan().toString()
     assert "ArrowEvalPython" not in plan
     assert "Exchange hashpartitioning" not in plan
+    # a class grid over max_cells falls back to the generic path, same rows
+    capped = spatial_join_points(g, zones, max_cells=400) \
+        .orderBy("page_id").toPandas()
+    assert capped.zone_id.tolist() == slow.zone_id.tolist()
+    assert "ArrowEvalPython" in spatial_join_points(g, zones, max_cells=400) \
+        ._jdf.queryExecution().executedPlan().toString()
+
+
+def test_rect_class_table_climate_zones():
+    """13 lon × 8 lat edges → 27 × 17 classes; the 25 × 15 covered pairs are
+    the whole broadcast side, and each carries its lowest covering zone."""
+    from geoclimate_spark.operators.spatial_join import (
+        _rect_bounds_e6, _rect_class_table)
+    zones = layers.climate_zones()
+    lon_e, lat_e, keys, zids = _rect_class_table(_rect_bounds_e6(zones), 20_000)
+    assert (len(lon_e), len(lat_e), len(keys)) == (13, 8, 375)
+    lon_cls, lat_cls = np.divmod(keys, 2 * len(lat_e) + 1)
+    # a representative point per class: the edge itself (odd) or the
+    # midpoint of the open interval below it (even)
+    rep = lambda e, c: np.where(c % 2 == 1, e[np.minimum(c // 2, len(e) - 1)],
+                                (e[c // 2 - 1] + e[np.minimum(c // 2, len(e) - 1)]) // 2)
+    want = spatial_join_points_np(rep(lon_e, lon_cls), rep(lat_e, lat_cls), zones)
+    assert (zids == want).all()
 
 
 def test_rect_fast_path_requires_grid_aligned_edges(spark):
@@ -125,6 +173,19 @@ def test_pick_cover_res_budget():
     cells, _, _ = layers.zone_covering(zones, res)
     assert len(cells) <= 20_000
     assert res >= 2
+
+
+def test_zone_covering_cache_keys_on_vertices():
+    """A triangle with the same zone id and bbox as a square must not get
+    the square's cached covering (its full cells would skip the refine)."""
+    sq = layers.Zone(0, "t", geometry.rect_poly(40.0, 40.0, 44.0, 44.0))
+    tri = layers.Zone(0, "t", np.array([[40.0, 40.0], [44.0, 40.0], [40.0, 44.0]]))
+    _, _, sq_full = layers.zone_covering([sq], 8)
+    cells, _, full = layers.zone_covering([tri], 8)
+    assert 0 < full.sum() < sq_full.sum()
+    lo0, la0, lo1, la1 = grid.cell_bounds_np(cells[full])
+    for cx, cy in ((lo0, la0), (lo1, la0), (lo1, la1), (lo0, la1)):
+        assert geometry.points_in_polygon(cx, cy, tri.poly).all()
 
 
 def test_zone_covering_full_flags():
