@@ -11,8 +11,9 @@ exact dedup" is a statement about the corpus, not about stage order.
 
 One row per stage: (stage_ord, stage, n_docs_kept, n_tokens_kept,
 tokens_removed_millis) with the millis ratio relative to the raw token
-total (zero-guarded). Token counts treat the empty normalized text as 0
-tokens (the ``split('') = ['']`` artifact never counts).
+total (zero-guarded). Token counts treat a NULL or empty normalized text
+as 0 tokens: the ``split('') = ['']`` artifact never counts, and neither
+does the -1 that Spark gives ``size(split(NULL))`` with ANSI mode off.
 
 Scale shape: the raw and exact stages are one scan + one fingerprint-keyed
 window; segment/span reuse their operators' documented shuffle contracts
@@ -33,9 +34,9 @@ from ..functions.text import normalize_col, normalize_sql
 from .dupspan import duplicate_spans, duplicate_spans_sql
 from .segdedup import segment_dedup, segment_dedup_sql
 
-_NTOK = ("CASE WHEN {t} = '' THEN CAST(0 AS BIGINT)"
+_NTOK = ("CASE WHEN {t} IS NULL OR {t} = '' THEN CAST(0 AS BIGINT)"
          " ELSE CAST(size(split({t}, ' ')) AS BIGINT) END")
-_NTOK_SQL = ("CASE WHEN {t} = '' THEN CAST(0 AS BIGINT)"
+_NTOK_SQL = ("CASE WHEN {t} IS NULL OR {t} = '' THEN CAST(0 AS BIGINT)"
              " ELSE CAST(len(string_split({t}, ' ')) AS BIGINT) END")
 
 

@@ -2,12 +2,19 @@
 
 from __future__ import annotations
 
+import subprocess
+import sys
+
 import numpy as np
 import pytest
 
 import __spark_entry__ as E
 
-from conftest import SF_SMOKE
+from conftest import REPO, SF_SMOKE
+
+QUERIES = E.queries()
+# built once for the whole module: some oracles retrain a forest
+ORACLES = E.oracle_sql()
 
 
 def test_entry_smoke(spark):
@@ -18,30 +25,31 @@ def test_entry_smoke(spark):
 
 
 def test_queries_have_oracles():
-    qs, os_ = E.queries(), E.oracle_sql()
-    assert set(os_) <= set(qs)
+    """Registry invariant: one oracle per query, both maps in the same
+    order, and the 50 window queries lead it."""
+    assert len(QUERIES) == 181
+    assert list(ORACLES) == list(QUERIES)
+    window = {name for name, (_, _, w) in E._REGISTRY.items() if w}
+    assert len(window) == 50
+    assert set(list(QUERIES)[:50]) == window
+    with pytest.raises(ValueError, match="registered twice"):
+        E.query("segment_dedup", oracle=str)(lambda spark, sf_dir: None)
 
 
-@pytest.mark.parametrize("name",
-                         sorted(set(E.queries()) - set(E.oracle_sql())))
-def test_non_oracle_queries_run(spark, name):
-    """Rows-only queries (no SQL oracle) must still execute and yield rows
-    with a stable schema — the driver's weaker check.
-
-    NOTE: every query currently HAS an oracle, so the parameter set is
-    empty and pytest reports this as the suite's single intentional SKIP
-    ("got empty parameter set"). The test stays: it self-arms the moment a
-    rows-only query is ever added."""
-    df = E.queries()[name](spark, SF_SMOKE)
-    rows = df.collect()
-    assert len(rows) > 0
-    assert len(df.columns) >= 2
+def test_import_builds_no_oracle():
+    """Oracles are built by oracle_sql(), not at import: importing the entry
+    module with the forest trainers disabled must still succeed."""
+    code = ("from geoclimate_spark.operators import train\n"
+            "def fail(*a, **k): raise AssertionError('oracle built at import')\n"
+            "train.trained_cls_forest = train.trained_reg_forest = fail\n"
+            "import __spark_entry__\n")
+    subprocess.run([sys.executable, "-c", code], cwd=REPO, check=True)
 
 
-@pytest.mark.parametrize("name", sorted(E.oracle_sql()))
+@pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_duckdb_oracle(spark, duck, name):
-    sdf = E.queries()[name](spark, SF_SMOKE).toPandas()
-    odf = duck.execute(E.oracle_sql()[name]).fetchdf()
+    sdf = QUERIES[name](spark, SF_SMOKE).toPandas()
+    odf = duck.execute(ORACLES[name]).fetchdf()
     cols = sorted(sdf.columns)
     assert cols == sorted(odf.columns)
     a = sdf[cols].sort_values(cols).reset_index(drop=True)

@@ -77,3 +77,28 @@ def test_dedup_funnel_hand_case(spark):
     con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
     _parity(DF.dedup_funnel_report(df), con, DF.dedup_funnel_report_sql())
     con.close()
+
+
+def test_dedup_funnel_null_text_without_ansi(spark):
+    """A NULL text counts 0 tokens on both engines whatever the session's
+    ANSI mode: with ANSI off Spark sizes split(NULL) as -1, which used to
+    shrink the raw token total and push a stage's removal below zero."""
+    rows = [(0, "alpha beta gamma delta epsilon"),
+            (1, "alpha beta gamma delta epsilon"),
+            (2, None),
+            (3, "one two three four five six seven eight nine ten eleven")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        got = {r.stage: r for r in DF.dedup_funnel_report(df).collect()}
+        assert got["raw"].n_docs_kept == 4
+        assert got["raw"].n_tokens_kept == 5 + 5 + 11
+        assert all(r.tokens_removed_millis >= 0 for r in got.values())
+        _parity(DF.dedup_funnel_report(df), con, DF.dedup_funnel_report_sql())
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        con.close()

@@ -62,7 +62,7 @@ def test_text_cluster_composition(spark):
     con.execute("create view documents as select * from "
                 "read_parquet('/root/testdata/sf0.001/documents.parquet')")
     want = sorted(map(tuple, con.execute(
-        E.oracle_sql()["text_cluster_assignments"]).fetchall()))
+        E._text_clusters_sql()).fetchall()))
     assert got == want
     clusters = {c for _, c, _ in got}
     assert len(clusters) >= 2
@@ -81,7 +81,7 @@ def test_ann_recall_report(spark):
     con.execute("create view embeddings as select * from "
                 "read_parquet('/root/testdata/sf0.01/embeddings.parquet')")
     want = {v: (h, r) for v, h, r in con.execute(
-        E.oracle_sql()["ann_recall_report"]).fetchall()}
+        E._ann_recall_report_sql()).fetchall()}
     assert got == want
     assert got["lsh_multitable"][1] >= got["lsh"][1]
     assert all(0.0 <= r <= 1.0 for _, r in got.values())
