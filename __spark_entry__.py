@@ -9,7 +9,7 @@ Each query is declared once: ``@query(name, oracle=...)`` on its ``_q_*``
 body registers the engine plan together with its DuckDB dual, and
 ``queries()`` / ``oracle_sql()`` are read off that registry.
 
-Engine queries run the REAL machinery (Arrow extraction UDFs, covering +
+Engine queries run the REAL machinery (codegen'd html extraction, covering +
 broadcast PIP join, cell-arithmetic tiling); oracles recompute the same
 answers in pure ANSI SQL from the shared deterministic derivation
 (geoclimate_spark.sources.pages.pages_oracle_sql).

@@ -1,4 +1,4 @@
-"""Batched Arrow UDFs: html(binary) -> text / coordinates.
+"""html(binary) -> text / coordinates, as codegen'd column expressions.
 
 Analogue of the reference's deterministic per-row input formatting
 (`/root/reference/osm/.../InputDataFormatting.groovy:48-193` — OSM tags →
@@ -6,65 +6,24 @@ typed attributes via regex + rules; deterministic output row per source id).
 Here: pure functions of the html bytes, asserted byte-identical per url
 (BASELINE.json per-row invariant).
 
-All UDFs are pandas_udf (Arrow-batched) — no per-row Python anywhere.
+No UDF: decode and substring search stay inside whole-stage codegen, so
+extraction rides the scan projection with no Python round-trip.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-# Non-greedy, DOTALL via [\s\S]; html is trusted synthetic content so a
-# regex (not a full parser) is the deterministic spec of the format.
-_MAIN_RE = r"<main>([\s\S]*?)</main>"
-_GEO_RE = r'<meta name="geo\.position" content="(-?\d+);(-?\d+)">'
 
 
-@F.pandas_udf(T.StringType())
-def extract_text(html: pd.Series) -> pd.Series:
-    """Decode utf-8 and pull the <main> payload; None when absent."""
-    s = html.map(lambda b: b.decode("utf-8", "strict") if b is not None else None)
-    return s.str.extract(_MAIN_RE, expand=False)
-
-
-@F.pandas_udf(T.LongType())
-def extract_lat_e6(html: pd.Series) -> pd.Series:
-    s = html.map(lambda b: b.decode("utf-8", "strict") if b is not None else None)
-    out = s.str.extract(_GEO_RE)
-    return pd.to_numeric(out[0], errors="coerce").astype("Int64")
-
-
-@F.pandas_udf(T.LongType())
-def extract_lon_e6(html: pd.Series) -> pd.Series:
-    s = html.map(lambda b: b.decode("utf-8", "strict") if b is not None else None)
-    out = s.str.extract(_GEO_RE)
-    return pd.to_numeric(out[1], errors="coerce").astype("Int64")
-
-
-def with_extraction(df, html_col: str = "html", method: str = "builtin"):
+def with_extraction(df, html_col: str = "html"):
     """Project extracted text + integer-microdegree coords from html.
 
-    method="builtin" (default): decode + substring search stay inside
-    whole-stage codegen — the fast path (no Python round-trip at all).
-    method="arrow": the batched pandas-UDF path (one Arrow exchange; the
-    general-purpose hook where a real HTML parser would plug in).
-    Both produce byte-identical output on the page format.
+    Pure substring search, no regex engine: the page format has a single
+    ``<main>`` block and a single ``geo.position`` meta tag, and text/url
+    never contain the delimiters. Checked against the stored text and the
+    coordinate derivation in tests.
     """
-    h = F.col(html_col)
-    if method == "arrow":
-        return df.withColumns({
-            "text_extracted": extract_text(h),
-            "lat_e6": extract_lat_e6(h),
-            "lon_e6": extract_lon_e6(h),
-        })
-    # "builtin" default: pure substring search, no regex engine at all —
-    # ~12% faster than the regex builtins and byte-identical on the page
-    # format (single <main> block, text/url never contain the delimiters;
-    # asserted against the Arrow path in tests). Real-world HTML goes
-    # through the "arrow" hook instead.
-    s = F.decode(h, "UTF-8")
+    s = F.decode(F.col(html_col), "UTF-8")
     has_geo = s.contains('<meta name="geo.position"')
     geo = F.substring_index(F.substring_index(s, 'content="', -1), '"', 1)
     return df.withColumns({
@@ -74,8 +33,3 @@ def with_extraction(df, html_col: str = "html", method: str = "builtin"):
         "lat_e6": F.when(has_geo, F.substring_index(geo, ";", 1).cast("long")),
         "lon_e6": F.when(has_geo, F.substring_index(geo, ";", -1).cast("long")),
     })
-
-
-def lonlat_deg(lon_e6: Column, lat_e6: Column) -> tuple[Column, Column]:
-    """Degrees as double (display/distance math); cell keys use the e6 ints."""
-    return (lon_e6.cast("double") / F.lit(1e6), lat_e6.cast("double") / F.lit(1e6))

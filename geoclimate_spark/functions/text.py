@@ -14,7 +14,7 @@ Every function exists twice and MUST stay in lock-step:
 * ``*_sql`` — DuckDB-runnable SQL fragments for the driver's oracle.
 
 All ratios divide exact integer counts, so both engines produce bit-identical
-doubles; the only rounding is the explicit ROUND in ``quality``.
+doubles; the only rounding is the explicit one in ``quality``.
 """
 
 from __future__ import annotations
@@ -85,6 +85,26 @@ def _stop_hits_col(toks: Column, stops: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
 
 
+def _avg_tok_col(n_chars: Column, n_tokens: Column) -> Column:
+    return (n_chars - (n_tokens - F.lit(1))).cast("double") / n_tokens.cast("double")
+
+
+def quality_col(n_tokens: Column, n_chars: Column, punct: Column,
+                stop_hits: Column) -> Column:
+    """Quality score in [0, 1] from four integer counts, rounded to 6
+    decimals as ``FLOOR(q * 1e6 + 0.5) / 1e6`` in doubles, which both engines
+    evaluate bit-identically. Not ``ROUND(q, 6)``: Spark rounds the shortest
+    decimal form of q HALF_UP while DuckDB rounds ``q * 1e6``, and the two
+    differ next to half-way points."""
+    punct_ratio = punct.cast("double") / n_chars.cast("double")
+    stop_ratio = stop_hits.cast("double") / n_tokens.cast("double")
+    q = (F.lit(0.3) * F.least(n_tokens.cast("double") / F.lit(100.0), F.lit(1.0))
+         + F.lit(0.3) * (F.lit(1.0) - F.least(punct_ratio * F.lit(5.0), F.lit(1.0)))
+         + F.lit(0.2) * F.least(stop_ratio * F.lit(4.0), F.lit(1.0))
+         + F.lit(0.2) * F.least(_avg_tok_col(n_chars, n_tokens) / F.lit(8.0), F.lit(1.0)))
+    return F.floor(q * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+
+
 def text_metrics_cols(text: Column) -> dict[str, Column]:
     """All metric columns keyed by output name (same keys as the SQL side)."""
     norm = normalize_col(text)
@@ -92,10 +112,7 @@ def text_metrics_cols(text: Column) -> dict[str, Column]:
     n_chars = F.length(norm)
     n_tokens = F.size(toks)
     punct = n_chars - F.length(F.regexp_replace(norm, _PUNCT_CLASS, ""))
-    punct_ratio = punct.cast("double") / n_chars.cast("double")
     stop_hits = _stop_hits_col(toks, _EN_STOPS)
-    stop_ratio = stop_hits.cast("double") / n_tokens.cast("double")
-    avg_tok = (n_chars - (n_tokens - F.lit(1))).cast("double") / n_tokens.cast("double")
     scores = {lang: _stop_hits_col(toks, stops) for lang, stops in LANG_STOPWORDS}
     langs = [lang for lang, _ in LANG_STOPWORDS]
     guess = F.lit(langs[-1])
@@ -105,21 +122,14 @@ def text_metrics_cols(text: Column) -> dict[str, Column]:
             c = scores[langs[i]] >= scores[langs[j]]
             cond = c if cond is None else (cond & c)
         guess = F.when(cond, F.lit(langs[i])).otherwise(guess)
-    quality = F.round(
-        F.lit(0.3) * F.least(n_tokens.cast("double") / F.lit(100.0), F.lit(1.0))
-        + F.lit(0.3) * (F.lit(1.0) - F.least(punct_ratio * F.lit(5.0), F.lit(1.0)))
-        + F.lit(0.2) * F.least(stop_ratio * F.lit(4.0), F.lit(1.0))
-        + F.lit(0.2) * F.least(avg_tok / F.lit(8.0), F.lit(1.0)),
-        6,
-    )
     return {
         "n_chars_norm": n_chars.cast("long"),
         "n_tokens": n_tokens.cast("long"),
         "punct_chars": punct.cast("long"),
         "stopword_hits": stop_hits.cast("long"),
-        "avg_token_len": avg_tok,
+        "avg_token_len": _avg_tok_col(n_chars, n_tokens),
         "lang_guess": guess,
-        "quality": quality,
+        "quality": quality_col(n_tokens, n_chars, punct, stop_hits),
         "fingerprint": hash60_col(norm),
     }
 
@@ -150,16 +160,28 @@ def _stop_hits_sql(norm: str, stops: tuple[str, ...]) -> str:
     return (f"len(list_filter(string_split({norm}, ' '), t -> t IN ({inlist})))")
 
 
+def _avg_tok_sql(n_chars: str, n_tokens: str) -> str:
+    return f"(CAST({n_chars} - ({n_tokens} - 1) AS DOUBLE) / CAST({n_tokens} AS DOUBLE))"
+
+
+def quality_sql(n_tokens: str, n_chars: str, punct: str, stop_hits: str) -> str:
+    """DuckDB dual of :func:`quality_col`."""
+    punct_ratio = f"(CAST({punct} AS DOUBLE) / CAST({n_chars} AS DOUBLE))"
+    stop_ratio = f"(CAST({stop_hits} AS DOUBLE) / CAST({n_tokens} AS DOUBLE))"
+    q = (f"0.3 * LEAST(CAST({n_tokens} AS DOUBLE) / 100.0, 1.0)"
+         f" + 0.3 * (1.0 - LEAST({punct_ratio} * 5.0, 1.0))"
+         f" + 0.2 * LEAST({stop_ratio} * 4.0, 1.0)"
+         f" + 0.2 * LEAST({_avg_tok_sql(n_chars, n_tokens)} / 8.0, 1.0)")
+    return f"(FLOOR(({q}) * 1e6 + CAST(0.5 AS DOUBLE)) / 1e6)"
+
+
 def text_metrics_sql(text_sql: str) -> dict[str, str]:
     """DuckDB fragments; same keys/semantics as :func:`text_metrics_cols`."""
     norm = normalize_sql(text_sql)
     n_chars = f"length({norm})"
     n_tokens = f"len(string_split({norm}, ' '))"
     punct = f"(length({norm}) - length(regexp_replace({norm}, '{_PUNCT_CLASS}', '', 'g')))"
-    punct_ratio = f"(CAST({punct} AS DOUBLE) / CAST({n_chars} AS DOUBLE))"
     stop_hits = _stop_hits_sql(norm, _EN_STOPS)
-    stop_ratio = f"(CAST({stop_hits} AS DOUBLE) / CAST({n_tokens} AS DOUBLE))"
-    avg_tok = f"(CAST({n_chars} - ({n_tokens} - 1) AS DOUBLE) / CAST({n_tokens} AS DOUBLE))"
     langs = [lang for lang, _ in LANG_STOPWORDS]
     scores = {lang: _stop_hits_sql(norm, stops) for lang, stops in LANG_STOPWORDS}
     cases = []
@@ -168,19 +190,13 @@ def text_metrics_sql(text_sql: str) -> dict[str, str]:
             f"({scores[langs[i]]}) >= ({scores[langs[j]]})" for j in range(i + 1, len(langs)))
         cases.append(f"WHEN {conds} THEN '{langs[i]}'")
     guess = "CASE " + " ".join(cases) + f" ELSE '{langs[-1]}' END"
-    quality = (
-        f"ROUND(0.3 * LEAST(CAST({n_tokens} AS DOUBLE) / 100.0, 1.0)"
-        f" + 0.3 * (1.0 - LEAST({punct_ratio} * 5.0, 1.0))"
-        f" + 0.2 * LEAST({stop_ratio} * 4.0, 1.0)"
-        f" + 0.2 * LEAST({avg_tok} / 8.0, 1.0), 6)"
-    )
     return {
         "n_chars_norm": f"CAST({n_chars} AS BIGINT)",
         "n_tokens": f"CAST({n_tokens} AS BIGINT)",
         "punct_chars": f"CAST({punct} AS BIGINT)",
         "stopword_hits": f"CAST({stop_hits} AS BIGINT)",
-        "avg_token_len": avg_tok,
+        "avg_token_len": _avg_tok_sql(n_chars, n_tokens),
         "lang_guess": guess,
-        "quality": quality,
+        "quality": quality_sql(n_tokens, n_chars, punct, stop_hits),
         "fingerprint": hash60_sql(norm),
     }

@@ -97,52 +97,11 @@ def _int_hull(pts: list[tuple[int, int]]) -> list[tuple[int, int]]:
     return lower[:-1] + upper[:-1]
 
 
-def hull_points(comp_pts: DataFrame) -> DataFrame:
-    """Per-component exact convex hull vertices (min pid per coordinate).
-
-    The scale lever for :func:`smbr_per_component`: the pair-direction scan
-    is O(h³) on h hull points instead of O(n³) on all points — valid because
-    the minimum enclosing rectangle has a side collinear with a hull EDGE
-    (every hull-edge direction is a hull-point pair direction) and
-    projection/cross extrema are attained at hull vertices. Arrow-batched
-    per-component group work, bounded by component size.
-    """
-    schema = "component long, pid long, x long, y long"
-
-    def run(groups: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for g in groups:
-            comp = int(g["component"].iloc[0])
-            by_xy = g.groupby(["x", "y"], as_index=False)["pid"].min()
-            pts = sorted((int(x), int(y)) for x, y in
-                         zip(by_xy["x"], by_xy["y"]))
-            hull = set(_int_hull(pts))
-            keep = by_xy[[(int(x), int(y)) in hull
-                          for x, y in zip(by_xy["x"], by_xy["y"])]]
-            yield pd.DataFrame({"component": comp, "pid": keep["pid"],
-                                "x": keep["x"], "y": keep["y"]})
-
-    return comp_pts.groupBy("component").applyInPandas(run, schema)
-
-
 def _norm_dir(dx: Column, dy: Column) -> tuple[Column, Column]:
     """Normalize a direction into the upper half-plane: dy > 0, or
     dy == 0 and dx > 0."""
     flip = (dy < 0) | ((dy == 0) & (dx < 0))
     return (F.when(flip, -dx).otherwise(dx), F.when(flip, -dy).otherwise(dy))
-
-
-def _gcd_col(a: Column, b: Column) -> Column:
-    """Exact int64 gcd(|a|, |b|) as a fixed-iteration Euclid fold — pure
-    column expression (JVM, codegen), no UDF. 48 iterations cover any
-    |input| < 2^33 (worst case is consecutive Fibonacci numbers,
-    log_phi(2^33) ~ 47); coordinate deltas here are < 2^29."""
-    acc0 = F.struct(F.abs(a).cast("long").alias("a"),
-                    F.abs(b).cast("long").alias("b"))
-    step = lambda acc, _: F.struct(
-        F.when(acc["b"] == 0, acc["a"]).otherwise(acc["b"]).alias("a"),
-        F.when(acc["b"] == 0, F.lit(0).cast("long"))
-        .otherwise(acc["a"] % acc["b"]).alias("b"))
-    return F.aggregate(F.sequence(F.lit(1), F.lit(48)), acc0, step)["a"]
 
 
 def sector_bin_col(dx: Column, dy: Column) -> Column:

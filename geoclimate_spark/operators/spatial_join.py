@@ -19,14 +19,15 @@ Spark-first physical strategy, picked per zone geometry:
 * **general polygons** (filter-and-refine, SURVEY.md §4):
 
   1. zones (small dim, driver-side) are exploded into a covering of grid
-     cells at an auto-picked resolution, each flagged *full* (cell entirely
-     inside the zone) or *partial* — the ST_SUBDIVIDE + spatial-index
+     cells at an auto-picked resolution: every (cell, zone) pair whose cell
+     rect intersects the zone polygon — the ST_SUBDIVIDE + spatial-index
      analogue;
   2. the page side derives its cell key with pure column arithmetic
      (codegen'd, no UDF) and **broadcast hash joins** the covering — no
      shuffle of the big side, filters/pruning push into the parquet scan;
-  3. only rows landing in *partial* cells run the exact vectorized
-     ray-cast refine (Arrow-batched pandas UDF over the broadcast zone dim);
+  3. every candidate (page, zone) row runs the exact vectorized ray-cast
+     refine (Arrow-batched pandas UDF over the broadcast zone dim) — the
+     same rule as :func:`spatial_join_points_np`, for any simple polygon;
   4. the winning zone per page is ``min(zone_id)`` — a partial-aggregable
      (map-side combine) commutative agg, so the only shuffle in the operator
      is (key, zone_id) pairs, never the wide page rows.
@@ -63,12 +64,6 @@ def pick_cover_res(zones: list[Zone], max_cells: int = 20_000) -> int:
             return best
         best = res
     return best
-
-
-def covering_df(spark, zones: list[Zone], res: int) -> DataFrame:
-    cell, zid, full = zone_covering(zones, res)
-    pdf = pd.DataFrame({"z_cell": cell, "zone_id": zid, "z_full": full})
-    return spark.createDataFrame(pdf)
 
 
 def _pip_refine_udf(zones: list[Zone]):
@@ -159,9 +154,8 @@ def _class_col(c: Column, edges: np.ndarray) -> Column:
 
 def spatial_join_points(df: DataFrame, zones: list[Zone], key: str = "page_id",
                         lon: str = "lon_e6", lat: str = "lat_e6",
-                        res: int | None = None, max_cells: int = 20_000,
-                        passthrough: list[str] | None = None,
-                        force_generic: bool = False) -> DataFrame:
+                        max_cells: int = 20_000,
+                        passthrough: list[str] | None = None) -> DataFrame:
     """Assign each row's point to its containing zone.
 
     Returns ``(key, zone_id, lon, lat, *passthrough)`` — one row per input
@@ -180,20 +174,22 @@ def spatial_join_points(df: DataFrame, zones: list[Zone], key: str = "page_id",
       no row and drop out. The lookup is keyed by a join, not inlined as a
       projection plus ``zone_id IS NOT NULL`` filter: Catalyst would push
       that filter below the extraction projection and copy the extraction
-      into every comparison. ``res`` does not apply here; when the class
-      grid exceeds ``max_cells`` the generic path runs instead.
-    * **general convex polygons**: filter-and-refine — explode candidates
-      against a covering at resolution ``res`` (auto-picked under
-      ``max_cells``), Arrow-batched ray-cast on partial-cell rows only, then
-      a narrow min(zone_id) aggregation.
+      into every comparison. When the class grid exceeds ``max_cells``
+      the generic path runs instead.
+    * **general simple polygons** (convex or not): filter-and-refine —
+      explode candidates against a covering at the finest resolution whose
+      bbox covering stays under ``max_cells`` cells (:func:`pick_cover_res`),
+      Arrow-batched ray-cast on every candidate row, then a narrow
+      min(zone_id) aggregation.
 
-    Both paths are bit-equivalent (asserted in tests/test_spatial_join.py);
-    ``force_generic=True`` pins the polygon path (tests).
+    ``max_cells`` is the one tuning knob: it picks the path and the
+    covering resolution. Both paths are bit-equivalent (asserted in
+    tests/test_spatial_join.py).
     """
     spark = df.sparkSession
     passthrough = passthrough or []
     pts = df.where(F.col(lon).isNotNull()).select(key, lon, lat, *passthrough)
-    rect_bounds = None if force_generic else _rect_bounds_e6(zones)
+    rect_bounds = _rect_bounds_e6(zones)
     table = _rect_class_table(rect_bounds, max_cells) if rect_bounds else None
     if table is not None:
         lon_e, lat_e, keys, zids = table
@@ -204,14 +200,14 @@ def spatial_join_points(df: DataFrame, zones: list[Zone], key: str = "page_id",
                              + _class_col(F.col(lat), lat_e))
         j = pts.join(F.broadcast(dim), pts["_zcls"] == dim["z_cls"], "inner")
         return j.select(key, "zone_id", lon, lat, *passthrough)
-    if res is None:
-        res = pick_cover_res(zones, max_cells)
-    cov = covering_df(spark, zones, res)
+    res = pick_cover_res(zones, max_cells)
+    cell, zid = zone_covering(zones, res)
+    cov = spark.createDataFrame(pd.DataFrame({"z_cell": cell, "zone_id": zid}))
     pip = _pip_refine_udf(zones)
 
     pts = pts.withColumn("_jcell", grid.cell_col(F.col(lon), F.col(lat), res))
     cand = pts.join(F.broadcast(cov), pts["_jcell"] == cov["z_cell"], "inner")
-    hit = cand.where(F.col("z_full") | pip(F.col(lon), F.col(lat), F.col("zone_id")))
+    hit = cand.where(pip(F.col(lon), F.col(lat), F.col("zone_id")))
     # Passthrough + coords go in the GROUPING KEY, not first() buffers:
     # string agg buffers would force SortAggregate; as keys the plan stays a
     # HashAggregate with map-side combine (values identical per page, so the

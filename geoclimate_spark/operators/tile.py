@@ -14,12 +14,10 @@ is a bit-shift parent + re-aggregate.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .. import geometry, grid
-from ..sources.layers import Zone
+from .. import grid
 
 TILE_RES = 7  # ~1.4° tiles globally; override per pipeline
 
@@ -229,22 +227,3 @@ j AS (SELECT z.zone_id,
 ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY zone_id
            ORDER BY overlap_e6sq DESC, tile_id ASC) AS rn FROM j)
 SELECT zone_id, tile_id, overlap_e6sq FROM ranked WHERE rn = 1"""
-
-
-def assign_tiles_polygons(zones: list[Zone], res: int = TILE_RES) -> pd.DataFrame:
-    """Largest-overlap top-1 tile per polygon (driver-side; zones are a small
-    dim). Overlap area via Sutherland–Hodgman clip vs the tile rect; ties
-    break to the lowest tile id (reference `SpatialUnits.groovy:526-528`
-    ORDER BY area DESC LIMIT 1 + deterministic id tie-break).
-    """
-    rows = []
-    for z in zones:
-        cand = grid.cover_bbox_np(*z.bbox, res)
-        lo0, la0, lo1, la1 = grid.cell_bounds_np(cand)
-        best_tile, best_area = -1, -1.0
-        for c, a0, b0, a1, b1 in sorted(zip(cand.tolist(), lo0, la0, lo1, la1)):
-            area = geometry.clip_area_rect(z.poly, a0, b0, a1, b1)
-            if area > best_area + 1e-12:
-                best_tile, best_area = int(c), float(area)
-        rows.append({"zone_id": z.zone_id, "tile_id": best_tile, "overlap_area": best_area})
-    return pd.DataFrame(rows)

@@ -15,7 +15,8 @@ from pyspark.sql import SparkSession
 def get_spark(app: str = "geoclimate_spark", cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        # SPARK_GRAFT_CPUS, else every CPU this process may run on
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         # ~2x cores locally; on a real cluster this would be sized to
         # total-cores * 2..3 or left to AQE coalescing from a high initial.

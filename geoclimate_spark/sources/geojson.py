@@ -21,7 +21,7 @@ downstream relational geometry operator consumes either front door
 unchanged.
 
 ``origin=(lon0, lat0)`` applies the same deterministic equirectangular
-degrees→meters transform as the WKB door (:func:`wkb.snap_equirect_sql`,
+degrees→meters transform as the WKB door (:func:`wkb.equirect_scales`,
 `osm/InputDataLoading.groovy:74-78` ST_Transform analogue) — as literal SQL
 constants, still pure codegen.
 """

@@ -81,13 +81,6 @@ def zone_case_sql(lon_e6_sql: str, lat_e6_sql: str) -> str:
     return f"(({band}) * {N_SECTORS} + ({sector}))"
 
 
-def zone_type_sql(zone_id_sql: str) -> str:
-    branches = " ".join(
-        f"WHEN {b} THEN '{BAND_NAMES[b]}'" for b in range(len(BAND_NAMES)))
-    return (f"CASE CAST(({zone_id_sql}) - (({zone_id_sql}) % {N_SECTORS}) AS BIGINT) / {N_SECTORS} "
-            f"{branches} ELSE NULL END")
-
-
 def zone_dim_rows() -> list[tuple[int, str, float]]:
     """(zone_id, zone_type, area_deg2) for every climate zone — the broadcast
     dimension used by zonal stats. Areas are computed once here in Python and
@@ -355,12 +348,6 @@ def nc_zone_ring_df(spark):
         _synth_nc_zone_data()[0], "zone_id long, seq long, x long, y long")
 
 
-def nc_zone_parts_df(spark):
-    return spark.createDataFrame(
-        _synth_nc_zone_data()[1],
-        "zone_id long, part_id long, seq long, x long, y long")
-
-
 def nc_zone_parts_values_sql() -> str:
     vals = ",\n  ".join(f"({z}, {p}, {s}, {x}, {y})"
                         for z, p, s, x, y in _synth_nc_zone_data()[1])
@@ -398,10 +385,10 @@ def voronoi_zones(n: int = 40, seed: int = 42,
 _COVER_CACHE: dict = {}
 
 
-def zone_covering(zones: list[Zone], res: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def zone_covering(zones: list[Zone], res: int) -> tuple[np.ndarray, np.ndarray]:
     """Filter-and-refine covering: for each zone, every res-cell whose rect
-    intersects the zone polygon, flagged full (rect entirely inside → skip the
-    exact PIP refine) or partial. Returns (cell, zone_id, full) arrays.
+    intersects the zone polygon. Returns (cell, zone_id) arrays; the exact
+    PIP refine decides which points of a cell lie in the zone.
 
     Analogue of the reference's manual spatial indexing + ST_SUBDIVIDE
     (`SpatialUnits.groovy:128-129`, `InputDataFormatting.groovy:204-208`):
@@ -410,29 +397,26 @@ def zone_covering(zones: list[Zone], res: int) -> tuple[np.ndarray, np.ndarray, 
 
     Vectorized: the 4 corner-in-polygon tests run over ALL candidate cells of
     a zone at once; the exact rect↔polygon fallback only runs for the rare
-    cells with no corner inside (polygon spike entering a cell side).
-    full = all 4 corners inside — safe for convex zones (rects and hulls).
+    cells with no corner inside (polygon spike entering a cell side). Both
+    are exact for any simple polygon, convex or not.
     """
     key = (res, tuple((z.zone_id, np.ascontiguousarray(z.poly, np.float64).tobytes())
                       for z in zones))
     if key in _COVER_CACHE:
         return _COVER_CACHE[key]
-    cells, zids, fulls = [], [], []
+    cells, zids = [], []
     for z in zones:
         cand = grid.cover_bbox_np(*z.bbox, res)
         lo0, la0, lo1, la1 = grid.cell_bounds_np(cand)
-        inside = np.stack([
+        keep = np.stack([
             geometry.points_in_polygon(cx, cy, z.poly)
-            for cx, cy in ((lo0, la0), (lo1, la0), (lo1, la1), (lo0, la1))])
-        full = inside.all(axis=0)
-        keep = inside.any(axis=0)
+            for cx, cy in ((lo0, la0), (lo1, la0), (lo1, la1), (lo0, la1))
+        ]).any(axis=0)
         for i in np.where(~keep)[0]:
             keep[i] = geometry.rect_intersects_polygon(
                 lo0[i], la0[i], lo1[i], la1[i], z.poly)
         cells.append(cand[keep])
         zids.append(np.full(int(keep.sum()), z.zone_id, np.int64))
-        fulls.append(full[keep])
-    out = (np.concatenate(cells).astype(np.int64), np.concatenate(zids),
-           np.concatenate(fulls))
+    out = (np.concatenate(cells).astype(np.int64), np.concatenate(zids))
     _COVER_CACHE[key] = out
     return out

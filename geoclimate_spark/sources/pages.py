@@ -16,7 +16,7 @@ cells; the north rule requires salted-repartition skew handling): 40% of pages
 are geo-taggable, half of those cluster within ±0.1° of 3 "urban" hotspots.
 
 The synthesized ``html`` embeds the text in ``<main>…</main>`` and coordinates
-as integer microdegrees in a ``geo.position`` meta tag; the extractor UDFs
+as integer microdegrees in a ``geo.position`` meta tag; the extractor
 (:mod:`geoclimate_spark.functions.extract`) must recover ``text``
 byte-identically per url — the analogue of the reference's deterministic
 row-formatters (`/root/reference/osm/.../InputDataFormatting.groovy:48-193`).

@@ -65,18 +65,6 @@ def equirect_scales(lat0: float) -> tuple[float, float]:
     return (M_PER_DEG * math.cos(math.radians(lat0)), M_PER_DEG)
 
 
-def snap_equirect_sql(lon_sql: str, lat_sql: str, lon0: float, lat0: float,
-                      scale: float = 1.0) -> tuple[str, str]:
-    """SQL duals of the decode-side transform+snap: the literal constants
-    round-trip through repr so both engines multiply the same doubles."""
-    cx, cy = equirect_scales(lat0)
-    x = (f"CAST(FLOOR((({lon_sql} - {lon0!r}) * {cx!r}) * {scale!r} + 0.5) "
-         f"AS BIGINT)")
-    y = (f"CAST(FLOOR((({lat_sql} - {lat0!r}) * {cy!r}) * {scale!r} + 0.5) "
-         f"AS BIGINT)")
-    return x, y
-
-
 # ------------------------------------------------------------------ writer
 def _ring_bytes(ring: np.ndarray) -> bytes:
     """One closed linear ring (closing vertex appended — the engine's vertex

@@ -104,14 +104,36 @@ def test_overlapping_zones_lowest_id_wins(spark):
 
 
 def test_full_cell_fast_path_consistency(spark):
-    """Coarse vs fine covering resolutions must agree (full-cell shortcut is
-    semantics-free)."""
+    """Coarse vs fine covering resolutions must agree: the covering only
+    picks candidates, the ray-cast decides."""
     g = _geo_pages(spark).limit(200)
     zones = layers.voronoi_zones(n=10, seed=1)
-    a = spatial_join_points(g, zones, res=4).orderBy("page_id").toPandas()
-    b = spatial_join_points(g, zones, res=8).orderBy("page_id").toPandas()
+    assert (pick_cover_res(zones, 50), pick_cover_res(zones, 2000)) == (4, 8)
+    a = spatial_join_points(g, zones, max_cells=50).orderBy("page_id").toPandas()
+    b = spatial_join_points(g, zones, max_cells=2000).orderBy("page_id").toPandas()
     assert a.page_id.tolist() == b.page_id.tolist()
     assert a.zone_id.tolist() == b.zone_id.tolist()
+
+
+def test_non_convex_zone_matches_numpy_oracle(spark):
+    """A square with a 0.04°-wide notch cut down to its middle: covering
+    cells whose four corners are all inside still straddle the notch, so
+    only the ray-cast may decide. 61 points cross the notch; the 22 on or
+    outside its walls match, the 39 strictly inside it do not."""
+    notch = np.array([[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [5.02, 10.0],
+                      [5.02, 5.0], [4.98, 5.0], [4.98, 10.0], [0.0, 10.0]])
+    zones = [layers.Zone(0, "notched", notch)]
+    lon = np.arange(4_970_000, 5_030_001, 1_000, dtype=np.int64)
+    lat = np.full(len(lon), 7_500_000, np.int64)
+    pdf = pd.DataFrame({"page_id": np.arange(len(lon)), "lon_e6": lon, "lat_e6": lat})
+    want = spatial_join_points_np(lon, lat, zones)
+    assert (len(lon), int((want >= 0).sum())) == (61, 22)
+    for max_cells, res in ((50, 6), (500, 8)):
+        assert pick_cover_res(zones, max_cells) == res
+        got = spatial_join_points(spark.createDataFrame(pdf), zones,
+                                  max_cells=max_cells).orderBy("page_id").toPandas()
+        assert got.page_id.tolist() == np.flatnonzero(want >= 0).tolist()
+        assert got.zone_id.tolist() == want[want >= 0].tolist()
 
 
 def test_rect_fast_path_equals_generic_refine(spark):
@@ -120,21 +142,18 @@ def test_rect_fast_path_equals_generic_refine(spark):
     g = _geo_pages(spark)
     zones = layers.climate_zones()
     fast = spatial_join_points(g, zones).orderBy("page_id").toPandas()
-    slow = spatial_join_points(g, zones, force_generic=True) \
-        .orderBy("page_id").toPandas()
-    assert fast.page_id.tolist() == slow.page_id.tolist()
-    assert fast.zone_id.tolist() == slow.zone_id.tolist()
     # and the fast plan really is UDF-free + shuffle-free
     plan = spatial_join_points(g, zones)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "ArrowEvalPython" not in plan
     assert "Exchange hashpartitioning" not in plan
-    # a class grid over max_cells falls back to the generic path, same rows
-    capped = spatial_join_points(g, zones, max_cells=400) \
-        .orderBy("page_id").toPandas()
-    assert capped.zone_id.tolist() == slow.zone_id.tolist()
-    assert "ArrowEvalPython" in spatial_join_points(g, zones, max_cells=400) \
-        ._jdf.queryExecution().executedPlan().toString()
+    # the 27 x 17 class grid exceeds max_cells=400: the generic path runs
+    slow = spatial_join_points(g, zones, max_cells=400)
+    assert "ArrowEvalPython" in \
+        slow._jdf.queryExecution().executedPlan().toString()
+    slow = slow.orderBy("page_id").toPandas()
+    assert fast.page_id.tolist() == slow.page_id.tolist()
+    assert fast.zone_id.tolist() == slow.zone_id.tolist()
 
 
 def test_rect_class_table_climate_zones():
@@ -170,28 +189,20 @@ def test_rect_fast_path_requires_grid_aligned_edges(spark):
 def test_pick_cover_res_budget():
     zones = layers.climate_zones()
     res = pick_cover_res(zones, max_cells=20_000)
-    cells, _, _ = layers.zone_covering(zones, res)
+    cells, _ = layers.zone_covering(zones, res)
     assert len(cells) <= 20_000
     assert res >= 2
 
 
 def test_zone_covering_cache_keys_on_vertices():
     """A triangle with the same zone id and bbox as a square must not get
-    the square's cached covering (its full cells would skip the refine)."""
+    the square's cached covering: it keeps only the cells it intersects."""
     sq = layers.Zone(0, "t", geometry.rect_poly(40.0, 40.0, 44.0, 44.0))
     tri = layers.Zone(0, "t", np.array([[40.0, 40.0], [44.0, 40.0], [40.0, 44.0]]))
-    _, _, sq_full = layers.zone_covering([sq], 8)
-    cells, _, full = layers.zone_covering([tri], 8)
-    assert 0 < full.sum() < sq_full.sum()
-    lo0, la0, lo1, la1 = grid.cell_bounds_np(cells[full])
-    for cx, cy in ((lo0, la0), (lo1, la0), (lo1, la1), (lo0, la1)):
-        assert geometry.points_in_polygon(cx, cy, tri.poly).all()
-
-
-def test_zone_covering_full_flags():
-    zones = [layers.Zone(0, "t", geometry.rect_poly(0.0, 0.0, 10.0, 10.0))]
-    cells, zids, fulls = layers.zone_covering(zones, 6)
-    # interior cells flagged full, boundary cells not
-    lo0, la0, lo1, la1 = grid.cell_bounds_np(cells)
-    interior = (lo0 >= 0) & (lo1 <= 10) & (la0 >= 0) & (la1 <= 10)
-    assert (fulls == interior).all()
+    sq_cells, _ = layers.zone_covering([sq], 8)
+    cells, _ = layers.zone_covering([tri], 8)
+    assert 0 < len(cells) < len(sq_cells)
+    assert set(cells.tolist()) < set(sq_cells.tolist())
+    # every cell dropped from the square's covering lies beyond the hypotenuse
+    lo0, la0, _, _ = grid.cell_bounds_np(np.setdiff1d(sq_cells, cells))
+    assert ((lo0 - 40.0) + (la0 - 40.0) >= 4.0).all()

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import duckdb
 import pandas as pd
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from geoclimate_spark.functions import text as T
@@ -33,3 +35,33 @@ def test_fingerprint_is_stable_and_normalizing(spark):
     fp = T.text_metrics_cols(F.col("text"))["fingerprint"]
     rows = {r.id: r.fp for r in df.select("id", fp.alias("fp")).collect()}
     assert rows[1] == rows[2] != rows[3]
+
+
+@st.composite
+def _counts(draw):
+    """(n_tokens, n_chars, punct_chars, stopword_hits) of some document."""
+    n_tokens = draw(st.integers(1, 300))
+    n_chars = draw(st.integers(n_tokens, 3000))
+    return (n_tokens, n_chars, draw(st.integers(0, n_chars // 4)),
+            draw(st.integers(0, n_tokens)))
+
+
+# Count tuples on which ROUND(q, 6) disagrees between the engines: the
+# unrounded quality sits next to a half-way point (0.5010625, 0.28781249999999997,
+# ...) and Spark rounds its shortest decimal form HALF_UP while DuckDB rounds
+# q * 1e6. Random tuples hit such a case about once in 10^5.
+_HALF_WAY = [(4, 128, 18, 2), (16, 60, 4, 11), (37, 768, 12, 20),
+             (10, 192, 31, 0), (80, 128, 12, 9), (2, 1600, 219, 1)]
+
+
+@given(st.lists(_counts(), min_size=1, max_size=60))
+@example(_HALF_WAY)
+@settings(max_examples=25, deadline=None)
+def test_quality_rounding_parity(spark, rows):
+    got = (spark.createDataFrame(rows, "t long, c long, p long, s long")
+           .select(T.quality_col(F.col("t"), F.col("c"), F.col("p"), F.col("s")))
+           .collect())
+    vals = ", ".join(f"({i}, {t}, {c}, {p}, {s})" for i, (t, c, p, s) in enumerate(rows))
+    want = duckdb.sql(f"SELECT {T.quality_sql('t', 'c', 'p', 's')} FROM (VALUES {vals})"
+                      " AS v(i, t, c, p, s) ORDER BY i").fetchall()
+    assert [r[0] for r in got] == [r[0] for r in want]

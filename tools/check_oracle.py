@@ -13,7 +13,7 @@ import __spark_entry__ as E
 SF = "/root/testdata/sf0.01"
 only = set(sys.argv[1:])
 
-spark = get_spark(cores=8)
+spark = get_spark()
 spark.sparkContext.setLogLevel("ERROR")
 con = duckdb.connect()
 for t in ("region nation customer supplier part orders lineitem events "
