@@ -117,7 +117,7 @@ def oracle_sql() -> dict[str, str]:
 
 # ------------------------------------------------- shared oracle fragments
 _ZONE_SQL = layers.zone_case_sql("lon_e6", "lat_e6")
-_TILE_SQL = tile_op.tile_sql("lon_e6", "lat_e6", TILE_RES)
+_TILE_SQL = tile_op.tile_sql("lon_e6", "lat_e6")
 _ORACLE_NTOK = f"len(string_split({text_fn.normalize_sql('text')}, ' '))"
 _NB_POINT_COLS = "page_id AS nb_id, lon_e6, lat_e6"
 
@@ -185,7 +185,7 @@ def _q_tile_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = flagship.geo_pages(pages_from_documents(spark, sf_dir))
     return g.select(
         "page_id",
-        tile_op.tile_col(F.col("lon_e6"), F.col("lat_e6"), TILE_RES).alias("tile_id"),
+        tile_op.tile_col(F.col("lon_e6"), F.col("lat_e6")).alias("tile_id"),
         grid.cell_col(F.col("lon_e6"), F.col("lat_e6"), CELL_RES).alias("cell_id"),
     )
 
@@ -518,7 +518,7 @@ def _q_topk_docs_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _url_canonical_dedup_sql() -> str:
-    frags = urlnorm.url_crawl_fixture_sql("doc_id")
+    frags = urlnorm.url_crawl_fixture_sql()
     return urlnorm.latest_crawl_per_url_sql(
         "SELECT doc_id AS crawl_id, " + frags["raw_url"] + " AS raw_url, "
         + frags["fetch_epoch"] + " AS fetch_epoch FROM documents")
@@ -529,7 +529,7 @@ def _q_url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL canonicalization + keep-latest-fetch over a deterministic messy
     crawl-log fixture (scheme/www/slash/utm/#fragment/host-case noise);
     fixture fragments are shared SQL evaluated by both engines."""
-    frags = urlnorm.url_crawl_fixture_sql("doc_id")
+    frags = urlnorm.url_crawl_fixture_sql()
     crawls = _docs(spark, sf_dir).select(
         F.col("doc_id").alias("crawl_id"),
         F.expr(frags["raw_url"]).alias("raw_url"),
@@ -590,7 +590,7 @@ def _q_tile_indicator_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = flagship.geo_pages(pages_from_documents(spark, sf_dir))
     t = (g.withColumn("chars", F.length("text_extracted").cast("long"))
          .withColumn("tile_id", tile_op.tile_col(
-             F.col("lon_e6"), F.col("lat_e6"), TILE_RES))
+             F.col("lon_e6"), F.col("lat_e6")))
          .select("tile_id", "lang", "chars"))
     stats = t.groupBy("tile_id").agg(
         F.count("*").cast("long").alias("n_pages"),
@@ -756,8 +756,7 @@ def _q_text_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                             f" i -> CAST(coalesce(element_at("
                             f"m, CAST(i AS BIGINT)), 0) AS DOUBLE))")
                      .alias("embedding")))
-    return kmeans.kmeans_assignments(dense, id_col="vec_id",
-                                     vec="embedding")
+    return kmeans.kmeans_assignments(dense)
 
 
 @query("bpe_train_merges", oracle=bpetrain.bpe_train_sql)
@@ -837,7 +836,7 @@ def _q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _crawl_history_sql(with_host: bool = False) -> str:
     """Crawl-log fixture for snapshot_diff / incremental_host_rollup — the
     exact SQL dual of the engine-side frames (same fragments)."""
-    frags = snapshot_op.crawl_history_fixture_sql("doc_id")
+    frags = snapshot_op.crawl_history_fixture_sql()
     host = (", " + _CRAWL_HOST_SQL + " AS host") if with_host else ""
     return ("SELECT doc_id AS crawl_id, " + frags["raw_url"]
             + " AS raw_url, " + frags["fetch_epoch"]
@@ -852,7 +851,7 @@ def _q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-only crawl log (added/updated/unchanged per canonical URL). One
     hash agg on canon_url; the (epoch, crawl_id) winner rides a single
     int64 MAX key, so partial aggregation stays exact."""
-    frags = snapshot_op.crawl_history_fixture_sql("doc_id")
+    frags = snapshot_op.crawl_history_fixture_sql()
     crawls = (_docs(spark, sf_dir)
               .where(F.expr(frags["keep_pred"]))
               .select(F.col("doc_id").alias("crawl_id"),
@@ -887,7 +886,7 @@ def _q_incremental_host_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental-maintenance proof: per-host live-state rollup at T2
     computed as T1 base ⊕ diff delta (never re-reading history); the oracle
     recomputes T2 from scratch, so hash-equality verifies the algebra."""
-    frags = snapshot_op.crawl_history_fixture_sql("doc_id")
+    frags = snapshot_op.crawl_history_fixture_sql()
     crawls = (_docs(spark, sf_dir)
               .where(F.expr(frags["keep_pred"]))
               .select(F.col("doc_id").alias("crawl_id"),
@@ -906,7 +905,7 @@ def _q_recrawl_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     scheduling decision a continuous crawler derives from snapshot diffs.
     Two map-side-combinable aggs + TakeOrderedAndProject top-k; every
     metric exact int64."""
-    frags = snapshot_op.crawl_history_fixture_sql("doc_id")
+    frags = snapshot_op.crawl_history_fixture_sql()
     crawls = (_docs(spark, sf_dir)
               .where(F.expr(frags["keep_pred"]))
               .select(F.col("doc_id").alias("crawl_id"),
@@ -924,7 +923,7 @@ def _q_crawl_fetch_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     across hosts ∝ (recrawl score + size floor) with the exact
     largest-remainder rule — Σ fetch_quota == budget always (pytest
     invariant). Windows run over the per-host rollup, not the crawl log."""
-    frags = snapshot_op.crawl_history_fixture_sql("doc_id")
+    frags = snapshot_op.crawl_history_fixture_sql()
     crawls = (_docs(spark, sf_dir)
               .where(F.expr(frags["keep_pred"]))
               .select(F.col("doc_id").alias("crawl_id"),
@@ -1153,7 +1152,8 @@ FROM pages WHERE lon_e6 IS NOT NULL""",
 def _q_mode_lang_per_tile(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = flagship.geo_pages(pages_from_documents(spark, sf_dir))
     g = (g.withColumn("chars", F.length("text_extracted").cast("long"))
-         .withColumn("tile_id", tile_op.tile_col(F.col("lon_e6"), F.col("lat_e6"), TILE_RES)))
+         .withColumn("tile_id",
+                     tile_op.tile_col(F.col("lon_e6"), F.col("lat_e6"))))
     return zonal.mode_weighted(g, "tile_id", "lang", "chars")
 
 
@@ -1337,14 +1337,14 @@ def _q_script_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("priority_sample", window=True,
-       oracle=lambda: curation.priority_sample_sql(k=64))
+       oracle=curation.priority_sample_sql)
 def _q_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duffield–Lund–Thorup priority sampling (r4): weighted
     without-replacement k=64 sample by n_chars with unbiased subset-sum
     estimator weights ŵ = max(w, τ); md5-derived priorities, so sample
     AND estimator replay bit-for-bit in DuckDB. Engine plan is
     TakeOrderedAndProject (per-partition heap, no global sort)."""
-    return curation.priority_sample(_docs(spark, sf_dir), k=64)
+    return curation.priority_sample(_docs(spark, sf_dir))
 
 
 PHRASE_QUERIES = [
@@ -1552,10 +1552,9 @@ LOD_LEVELS = (7, 5, 3)
 
 @query("zone_tile_assignment_modeb",
        oracle=lambda: tile_op.largest_overlap_tile_sql(
-           raster.zone_bounds_values_sql(), TILE_RES))
+           raster.zone_bounds_values_sql()))
 def _q_tile_modeb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tile_op.largest_overlap_tile(spark, raster.zone_bounds_df(spark),
-                                        TILE_RES)
+    return tile_op.largest_overlap_tile(spark, raster.zone_bounds_df(spark))
 
 
 def _zone_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1669,7 +1668,7 @@ def _q_skewed_tile_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = flagship.geo_pages(pages_from_documents(spark, sf_dir))
     t = (g.withColumn("chars", F.length("text_extracted").cast("long"))
          .withColumn("tile_id", tile_op.tile_col(
-             F.col("lon_e6"), F.col("lat_e6"), TILE_RES)))
+             F.col("lon_e6"), F.col("lat_e6"))))
     out = skew.salted_agg(
         t, ["tile_id"],
         {"n_pages": ("*", F.count, F.sum),
@@ -1703,7 +1702,7 @@ def _q_salted_tile_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = flagship.geo_pages(pages_from_documents(spark, sf_dir))
     fact = (g.withColumn("chars", F.length("text_extracted").cast("long"))
             .withColumn("tile_id", tile_op.tile_col(
-                F.col("lon_e6"), F.col("lat_e6"), TILE_RES)))
+                F.col("lon_e6"), F.col("lat_e6"))))
     dim = (fact.select("tile_id").distinct()
            .where(F.col("tile_id") % 3 != 1)
            .withColumn("region_code", (F.col("tile_id") % 7).cast("long")))
@@ -2339,7 +2338,7 @@ def _q_event_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            f"SELECT user_id, ts, value FROM events"
            f" WHERE event_id % {ASOF_FEED_MOD} = 0",
            key="user_id", left_cols=("event_id", "user_id", "event_type"),
-           right_vals=("value",), tolerance_us=ASOF_TOL_US))
+           tolerance_us=ASOF_TOL_US))
 def _q_event_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: every event picks up the latest prior feed value for its
     user (feed = every 17th event), NULL when none or staler than 1 h.
@@ -2350,7 +2349,7 @@ def _q_event_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("user_id", "ts", "value"))
     left = ev.select("event_id", "user_id", "ts", "event_type")
     out = asof.as_of_join(left, feed, key="user_id",
-                          right_vals=("value",), tolerance_us=ASOF_TOL_US)
+                          tolerance_us=ASOF_TOL_US)
     return out.select("event_id", "user_id", "event_type",
                       "asof_value", "asof_lag_us")
 
@@ -2400,7 +2399,7 @@ def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         c2 = d.where(F.col("doc_id") >= STREAM_SPLIT_ID).unionByName(recrawl)
         run = lambda: stream_dedup.run_incremental_dedup(
             spark, str(tmp / "in" / "*"), str(tmp / "store"), str(tmp / "out"),
-            str(tmp / "ck"), schema=d.schema, mode="exact")
+            str(tmp / "ck"), schema=d.schema)
         c1.write.mode("overwrite").parquet(str(tmp / "in" / "chunk1"))
         run()
         c2.write.mode("overwrite").parquet(str(tmp / "in" / "chunk2"))
@@ -2644,13 +2643,13 @@ def _q_roof_gable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("tile_neighbor_smoothing",
        oracle=lambda: tile_op.neighbor_smoothing_sql(
-           _mode_lang_per_tile_sql(), TILE_RES, warm=WARM_LANGS))
+           _mode_lang_per_tile_sql(), warm=WARM_LANGS))
 def _q_tile_neighbor_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grid 8-neighbor smoothing over the per-tile weighted lang mode."""
     base = _q_mode_lang_per_tile(spark, sf_dir)
     return tile_op.neighbor_smoothing(
         base.select("tile_id", "mode_lang", "mode_weight"),
-        TILE_RES, warm=WARM_LANGS)
+        warm=WARM_LANGS)
 
 
 def _relation_parts_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2808,8 +2807,7 @@ def _q_wkb_layer_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a green hash proves decode∘snap recovers the exact vertex layer
     (`WorkflowGeoIndicatorsTest.groovy:67-73` load-real-polygons shape)."""
     vtx = wkb_src.decode_wkb_vertices(
-        wkb_src.wkb_feature_layer_df(spark), id_col="feat_id",
-        keep=("layer",), scale=1.0)
+        wkb_src.wkb_feature_layer_df(spark), keep=("layer",))
     # persist: the overlay consumes the vertex layer in 5 subtrees (both
     # PIP sides, crossings, bbox candidates, layer dim) — without it each
     # broadcast re-runs the whole decode
@@ -2832,7 +2830,7 @@ def _q_wkb_hole_net_areas(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer vertex VALUES, so part/ring indexing and hole winding are all
     hash-gated."""
     vtx = wkb_src.decode_wkb_vertices(
-        wkb_src.wkb_multipoly_layer_df(spark), id_col="feat_id", scale=1.0)
+        wkb_src.wkb_multipoly_layer_df(spark))
     return wkb_src.ring_net_areas(vtx)
 
 
@@ -2848,7 +2846,7 @@ def _q_geojson_layer_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertex VALUES and never sees JSON."""
     vtx = geojson_src.feature_vertices(
         geojson_src.geojson_convex_features_df(spark),
-        id_col="feat_id", props=("layer",), scale=1.0)
+        props=("layer",))
     fvtx = (vtx.where((F.col("part") == 0) & (F.col("ring") == 0))
             .select("feat_id", "layer", "seq", "x", "y").persist())
     pairs = polygon_overlay.convex_pair_areas(
@@ -2882,7 +2880,6 @@ def _q_wkb_reprojected_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves decode∘reproject∘snap recovers the exact metric layer."""
     vtx = wkb_src.decode_wkb_vertices(
         wkb_src.lonlat_multipoly_layer_df(spark, WKB_LON0, WKB_LAT0),
-        id_col="feat_id", scale=1.0,
         origin=(WKB_LON0, WKB_LAT0)).persist()
     a = wkb_src.ring_net_areas(vtx)
     p = wkb_src.ring_perimeters(vtx)
@@ -2904,8 +2901,7 @@ def _q_rf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = train.synth_buildings_df(spark)
     rows = train.collect_training(
         b.where(F.col("size_cls").isNotNull()), TRAIN_FEATS, "size_cls")
-    trees = train.fit_forest(rows, TRAIN_FEATS, "size_cls",
-                             n_trees=5, max_depth=4, min_leaf=5, mode="cls")
+    trees = train.fit_forest(rows, TRAIN_FEATS, "size_cls")
     return classify.classify_tree_ensemble(b, ["bld_id"], trees)
 
 
@@ -2939,8 +2935,8 @@ def _q_estimated_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = train.collect_training(
         b.where(F.col("height").isNotNull()), TRAIN_FEATS, "height")
     trees = train.fit_forest(rows, TRAIN_FEATS, "height",
-                             n_trees=5, max_depth=4, min_leaf=5, mode="reg")
-    pred = classify.regress_tree_ensemble(b, ["bld_id"], trees, "pred")
+                             mode="reg")
+    pred = classify.regress_tree_ensemble(b, ["bld_id"], trees)
     patched = (b.join(pred, "bld_id")
                .select("bld_id", "zone_id",
                        F.coalesce(F.col("height"),

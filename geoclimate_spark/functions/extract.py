@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def with_extraction(df, html_col: str = "html"):
+def with_extraction(df):
     """Project extracted text + integer-microdegree coords from html.
 
     Pure substring search, no regex engine: the page format has a single
@@ -23,7 +23,7 @@ def with_extraction(df, html_col: str = "html"):
     never contain the delimiters. Checked against the stored text and the
     coordinate derivation in tests.
     """
-    s = F.decode(F.col(html_col), "UTF-8")
+    s = F.decode(F.col("html"), "UTF-8")
     has_geo = s.contains('<meta name="geo.position"')
     geo = F.substring_index(F.substring_index(s, 'content="', -1), '"', 1)
     return df.withColumns({

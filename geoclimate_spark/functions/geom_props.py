@@ -71,8 +71,8 @@ def geometry_props(vertices: pd.Series) -> pd.DataFrame:
                          "rectangularity": rects})
 
 
-def with_geometry_props(df: DataFrame, vertices_col: str = "vertices") -> DataFrame:
-    p = geometry_props(F.col(vertices_col))
+def with_geometry_props(df: DataFrame) -> DataFrame:
+    p = geometry_props(F.col("vertices"))
     df = df.withColumn("_p", p)
     for c in PROP_COLS:
         df = df.withColumn(c, F.col(f"_p.{c}"))

@@ -10,9 +10,8 @@ Reference analogues:
 - ST_AREA           -> :func:`poly_area`          (`GenericIndicators.groovy:241`)
 - ST_INTERSECTS pt  -> :func:`points_in_polygon`  (`SpatialUnits.groovy:510-515`)
 - ST_INTERSECTION
-  area vs rect/convex -> :func:`clip_area_rect` / :func:`clip_convex`
+  area vs convex    -> :func:`clip_convex`
   (top-1 largest-overlap rule, `SpatialUnits.groovy:517-529`)
-- ST_DISTANCE       -> :func:`point_dist2`        (`BuildingIndicators.groovy:322-336`)
 
 Polygons are (N,2) float64 arrays of vertices, implicitly closed (first vertex
 not repeated). Rings are assumed non-self-intersecting; orientation-free
@@ -102,12 +101,6 @@ def rect_poly(lon0: float, lat0: float, lon1: float, lat1: float) -> np.ndarray:
     return np.asarray([[lon0, lat0], [lon1, lat0], [lon1, lat1], [lon0, lat1]], dtype=np.float64)
 
 
-def clip_area_rect(subject: np.ndarray, lon0, lat0, lon1, lat1) -> float:
-    """Area of subject ∩ axis-aligned rect (the tile-overlap primitive)."""
-    clipped = clip_convex(subject, rect_poly(lon0, lat0, lon1, lat1))
-    return poly_area(clipped) if len(clipped) >= 3 else 0.0
-
-
 def _segments_cross(p1, p2, q1, q2) -> bool:
     def orient(a, b, c):
         v = (b[0] - a[0]) * (c[1] - a[1]) - (b[1] - a[1]) * (c[0] - a[0])
@@ -142,13 +135,6 @@ def rect_intersects_polygon(lon0, lat0, lon1, lat1, poly: np.ndarray) -> bool:
             if _segments_cross(p1, p2, rect[j], rect[(j + 1) % m]):
                 return True
     return False
-
-
-def point_dist2(ax: np.ndarray, ay: np.ndarray, bx: np.ndarray, by: np.ndarray) -> np.ndarray:
-    """Squared planar distance (degrees^2) — monotone, exact for argmin/knn."""
-    dx = np.asarray(ax) - np.asarray(bx)
-    dy = np.asarray(ay) - np.asarray(by)
-    return dx * dx + dy * dy
 
 
 def convex_hull(points: np.ndarray) -> np.ndarray:

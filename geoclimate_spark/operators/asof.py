@@ -95,8 +95,6 @@ def as_of_join(left: DataFrame, right: DataFrame, key: str,
 
 
 def interval_join(left: DataFrame, intervals: DataFrame, key: str,
-                  left_ts: str = "ts", interval_id: str = "interval_id",
-                  start_us: str = "start_us", end_us: str = "end_us",
                   bucket_us: int = 1_800_000_000) -> DataFrame:
     """Range (interval-containment) join: every left event × every interval
     of the same key containing its timestamp (``start <= t < end``).
@@ -112,18 +110,18 @@ def interval_join(left: DataFrame, intervals: DataFrame, key: str,
 
     Returns (left columns, ``interval_id``, ``offset_us`` = t − start).
     """
-    lb = F.unix_micros(F.col(left_ts).cast("timestamp"))
+    lb = F.unix_micros(F.col("ts").cast("timestamp"))
     lcols = list(left.columns)
     l = left.select(*lcols, lb.alias("_lt"),
                     (lb - lb % F.lit(bucket_us)).alias("_b"),
                     F.col(key).alias("_k"))
-    s, e = F.col(start_us), F.col(end_us)
+    s, e = F.col("start_us"), F.col("end_us")
     # empty/inverted intervals yield zero matches (like the oracle's plain
     # inequality join) instead of a runtime error from an inverted sequence
     # (stop bucket < start bucket with a positive step)
     intervals = intervals.where(e > s)
     iv = (intervals.select(
-        F.col(key).alias("_k"), F.col(interval_id),
+        F.col(key).alias("_k"), F.col("interval_id"),
         s.alias("_s"), e.alias("_e"),
         F.explode(F.sequence(
             s - s % F.lit(bucket_us),
@@ -131,46 +129,38 @@ def interval_join(left: DataFrame, intervals: DataFrame, key: str,
             F.lit(bucket_us))).alias("_b")))
     return (l.join(iv, ["_k", "_b"])
             .where((F.col("_lt") >= F.col("_s")) & (F.col("_lt") < F.col("_e")))
-            .select(*lcols, interval_id,
+            .select(*lcols, "interval_id",
                     (F.col("_lt") - F.col("_s")).cast("long").alias("offset_us")))
 
 
 def interval_join_sql(left_sql: str, intervals_sql: str, key: str,
-                      left_cols: tuple[str, ...], left_ts: str = "ts",
-                      interval_id: str = "interval_id",
-                      start_us: str = "start_us",
-                      end_us: str = "end_us") -> str:
+                      left_cols: tuple[str, ...]) -> str:
     """Oracle: the plain inequality join (DuckDB handles the theta join
     directly at oracle scale)."""
     lsel = ", ".join(f"l.{c}" for c in left_cols)
     return f"""WITH lft AS ({left_sql}),
 iv AS ({intervals_sql})
-SELECT {lsel}, i.{interval_id},
-       CAST(epoch_us(l.{left_ts}) - i.{start_us} AS BIGINT) AS offset_us
+SELECT {lsel}, i.interval_id,
+       CAST(epoch_us(l.ts) - i.start_us AS BIGINT) AS offset_us
 FROM lft l JOIN iv i ON l.{key} = i.{key}
- AND epoch_us(l.{left_ts}) >= i.{start_us}
- AND epoch_us(l.{left_ts}) < i.{end_us}"""
+ AND epoch_us(l.ts) >= i.start_us
+ AND epoch_us(l.ts) < i.end_us"""
 
 
 def as_of_join_sql(left_sql: str, right_sql: str, key: str,
                    left_cols: tuple[str, ...],
-                   left_ts: str = "ts", right_ts: str = "ts",
-                   right_vals: tuple[str, ...] = ("value",),
-                   tolerance_us: int | None = None,
-                   prefix: str = "asof_") -> str:
+                   tolerance_us: int | None = None) -> str:
     """Independent DuckDB oracle via the native ASOF LEFT JOIN."""
-    lag = f"epoch_us(l.{left_ts}) - epoch_us(r.{right_ts})"
-    fresh = (f"r.{right_ts} IS NOT NULL"
+    lag = "epoch_us(l.ts) - epoch_us(r.ts)"
+    fresh = ("r.ts IS NOT NULL"
              + (f" AND {lag} <= {tolerance_us}"
                 if tolerance_us is not None else ""))
-    vals = ",\n       ".join(
-        f"CASE WHEN {fresh} THEN r.{v} END AS {prefix}{v}"
-        for v in right_vals)
+    vals = f"CASE WHEN {fresh} THEN r.value END AS asof_value"
     lsel = ", ".join(f"l.{c}" for c in left_cols)
     return f"""WITH lft AS ({left_sql}),
 rgt AS ({right_sql})
 SELECT {lsel},
        {vals},
-       CAST(CASE WHEN {fresh} THEN {lag} END AS BIGINT) AS {prefix}lag_us
+       CAST(CASE WHEN {fresh} THEN {lag} END AS BIGINT) AS asof_lag_us
 FROM lft l ASOF LEFT JOIN rgt r
-  ON l.{key} = r.{key} AND l.{left_ts} >= r.{right_ts}"""
+  ON l.{key} = r.{key} AND l.ts >= r.ts"""

@@ -35,6 +35,7 @@ from ..sources.media import _HDR_FMT, _HDR_SIZE, MAGIC, _frame_byte_sql
 
 N_BANDS = 16
 MAX_DT = 3
+MIN_VOTES = 2
 
 LANDMARK_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -71,9 +72,9 @@ def audio_landmarks(media: DataFrame) -> DataFrame:
 
 
 def snippet_match(landmarks: DataFrame, query_doc: int, q_from: int,
-                  q_to: int, min_votes: int = 2) -> DataFrame:
+                  q_to: int) -> DataFrame:
     """Match frames [q_from, q_to) of ``query_doc`` against the corpus:
-    (doc_id, best_offset, votes) per candidate with ≥ ``min_votes``
+    (doc_id, best_offset, votes) per candidate with ≥ ``MIN_VOTES``
     time-aligned landmark hits; best offset = max votes, ties → smallest
     offset. The query side is a tiny filtered frame → broadcast."""
     q = (landmarks
@@ -91,7 +92,7 @@ def snippet_match(landmarks: DataFrame, query_doc: int, q_from: int,
             .select("doc_id", (-F.col("_b.noff")).cast("long")
                     .alias("best_offset"),
                     F.col("_b.votes").alias("votes")))
-    return best.where(F.col("votes") >= min_votes)
+    return best.where(F.col("votes") >= MIN_VOTES)
 
 
 # ------------------------------------------------------------------- oracle
@@ -126,9 +127,8 @@ lm AS (
 
 
 def snippet_match_sql(query_doc: int, q_from: int, q_to: int,
-                      min_votes: int = 2, doc_rel: str = "documents",
-                      id_col: str = "doc_id") -> str:
-    return f"""WITH {_landmarks_cte_sql(doc_rel, id_col)},
+                      doc_rel: str = "documents") -> str:
+    return f"""WITH {_landmarks_cte_sql(doc_rel, 'doc_id')},
 q AS (SELECT key, f - {q_from} AS qf FROM lm
       WHERE doc_id = {query_doc} AND f >= {q_from} AND f < {q_to}),
 j AS (SELECT lm.doc_id, lm.f - q.qf AS toff
@@ -140,4 +140,4 @@ ranked AS (SELECT doc_id, toff, votes,
                                      ORDER BY votes DESC, toff ASC) AS rk
            FROM votes)
 SELECT doc_id, CAST(toff AS BIGINT) AS best_offset, votes
-FROM ranked WHERE rk = 1 AND votes >= {min_votes}"""
+FROM ranked WHERE rk = 1 AND votes >= {MIN_VOTES}"""

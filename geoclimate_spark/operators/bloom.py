@@ -43,24 +43,22 @@ K_PROBES = 2
 _PROBE_SEEDS = (101, 102)   # mix60 family seeds, disjoint from minhash 0..15
 
 
-def fingerprints(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text",
-                 keep: tuple[str, ...] = ("lang",)) -> DataFrame:
-    """(doc_id, *keep, fp) — the 60-bit normalized-text fingerprint."""
-    return docs.select(F.col(id_col).alias("doc_id"), *keep,
-                       hash60_col(normalize_col(F.col(text_col))).alias("fp"))
+def fingerprints(docs: DataFrame) -> DataFrame:
+    """(doc_id, lang, fp) — the 60-bit normalized-text fingerprint."""
+    return docs.select(F.col("doc_id").alias("doc_id"), "lang",
+                       hash60_col(normalize_col(F.col("text"))).alias("fp"))
 
 
 def _probe(fp: Column, j: int) -> Column:
     return mix60_col(fp, _PROBE_SEEDS[j]) % F.lit(M_BITS)
 
 
-def bloom_bitmap(banned: DataFrame, fp_col: str = "fp") -> DataFrame:
+def bloom_bitmap(banned: DataFrame) -> DataFrame:
     """(w, bits): the blocklist's bloom bitmap as a <=16-row DataFrame.
     Built with one explode + groupBy(bit_or) — distributed, mergeable,
     never collected to the driver."""
     probes = banned.select(F.explode(F.array(
-        *[_probe(F.col(fp_col), j) for j in range(K_PROBES)])).alias("p"))
+        *[_probe(F.col("fp"), j) for j in range(K_PROBES)])).alias("p"))
     return (probes
             .select(F.expr(f"p div {WORD_BITS}").alias("w"),
                     F.expr(f"shiftleft(1L, CAST(p % {WORD_BITS} AS INT))")
@@ -68,16 +66,14 @@ def bloom_bitmap(banned: DataFrame, fp_col: str = "fp") -> DataFrame:
             .groupBy("w").agg(F.bit_or("m").alias("bits")))
 
 
-def with_bloom_flag(rows: DataFrame, bitmap: DataFrame,
-                    fp_col: str = "fp",
-                    flag: str = "bloom_maybe") -> DataFrame:
-    """Adds ``flag``: True iff ALL probe bits of ``fp_col`` are set in the
+def with_bloom_flag(rows: DataFrame, bitmap: DataFrame) -> DataFrame:
+    """Adds ``bloom_maybe``: True iff ALL probe bits of ``fp`` are set in the
     bitmap. False ⇒ the fingerprint is DEFINITELY not in the blocklist."""
     out = rows
     for j in range(K_PROBES):
         bm = F.broadcast(bitmap.select(F.col("w").alias(f"_w{j}"),
                                        F.col("bits").alias(f"_bits{j}")))
-        out = (out.withColumn(f"_p{j}", _probe(F.col(fp_col), j))
+        out = (out.withColumn(f"_p{j}", _probe(F.col("fp"), j))
                .withColumn(f"_w{j}", F.expr(f"_p{j} div {WORD_BITS}"))
                .withColumn(f"_m{j}", F.expr(
                    f"shiftleft(1L, CAST(_p{j} % {WORD_BITS} AS INT))"))
@@ -89,19 +85,17 @@ def with_bloom_flag(rows: DataFrame, bitmap: DataFrame,
         cond = c if cond is None else (cond & c)
     drop = [c for j in range(K_PROBES)
             for c in (f"_p{j}", f"_w{j}", f"_m{j}", f"_bits{j}")]
-    return out.withColumn(flag, cond).drop(*drop)
+    return out.withColumn("bloom_maybe", cond).drop(*drop)
 
 
-def bloom_blocklist_filter(docs: DataFrame, ban_mod: int,
-                           id_col: str = "doc_id",
-                           text_col: str = "text") -> DataFrame:
+def bloom_blocklist_filter(docs: DataFrame, ban_mod: int) -> DataFrame:
     """(doc_id, lang, fp) of documents whose fingerprint is NOT on the
     blocklist (= fingerprints of docs with doc_id % ban_mod == 0 — the
     deterministic stand-in for an externally supplied blocklist table).
 
     Bloom-negative rows pass straight through; only bloom-positive rows pay
     the exact broadcast anti-join. Result == the plain anti-join, always."""
-    rows = fingerprints(docs, id_col, text_col)
+    rows = fingerprints(docs)
     banned = (rows.where(F.col("doc_id") % ban_mod == 0)
               .select("fp").distinct())
     bitmap = bloom_bitmap(banned)
@@ -112,13 +106,11 @@ def bloom_blocklist_filter(docs: DataFrame, ban_mod: int,
     return certain.unionByName(confirm).select("doc_id", "lang", "fp")
 
 
-def bloom_blocklist_filter_sql(ban_mod: int, doc_rel: str = "documents",
-                               id_col: str = "doc_id",
-                               text_col: str = "text") -> str:
+def bloom_blocklist_filter_sql(ban_mod: int) -> str:
     """DuckDB dual: the bloom is an engine-side physical optimization with
     zero semantic effect, so the oracle is the plain anti-join."""
-    fp = hash60_sql(normalize_sql(text_col))
+    fp = hash60_sql(normalize_sql("text"))
     return f"""
-WITH f AS (SELECT {id_col} AS doc_id, lang, {fp} AS fp FROM {doc_rel}),
+WITH f AS (SELECT doc_id AS doc_id, lang, {fp} AS fp FROM documents),
 banned AS (SELECT DISTINCT fp FROM f WHERE doc_id % {ban_mod} = 0)
 SELECT doc_id, lang, fp FROM f WHERE fp NOT IN (SELECT fp FROM banned)"""

@@ -62,8 +62,7 @@ def _doc_terms(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def bm25_topk(docs: DataFrame, queries: list[tuple[int, list[str]]],
-              k: int = BM25_TOPK, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
+              k: int = BM25_TOPK) -> DataFrame:
     """(query_id, rank, doc_id, score): top-k docs per query by BM25.
 
     ``queries``: literal (query_id, [terms...]) pairs — terms are matched
@@ -75,11 +74,11 @@ def bm25_topk(docs: DataFrame, queries: list[tuple[int, list[str]]],
     qdf = F.broadcast(spark.createDataFrame(
         [(qid, t) for qid, terms in queries for t in sorted(set(terms))],
         "query_id long, term string"))
-    terms = _doc_terms(docs, id_col, text_col)
+    terms = _doc_terms(docs, "doc_id", "text")
     # corpus stats (exact ints) from the PRE-explode token frame — one scan
     # aggregate, not a groupBy over every posting
-    norm = normalize_col(F.col(text_col))
-    stats = (docs.where(F.col(text_col).isNotNull())
+    norm = normalize_col(F.col("text"))
+    stats = (docs.where(F.col("text").isNotNull())
              .select(F.size(tokens_col(norm)).cast("long").alias("_dl"))
              .agg(F.count("*").cast("long").alias("n_docs"),
                   F.sum("_dl").cast("long").alias("l_total")))
@@ -117,26 +116,25 @@ def bm25_topk(docs: DataFrame, queries: list[tuple[int, list[str]]],
     return (scored.withColumn("rank", F.row_number().over(rk))
             .where(F.col("rank") <= k)
             .select("query_id", F.col("rank").cast("long").alias("rank"),
-                    F.col("id").alias(id_col),
+                    F.col("id").alias("doc_id"),
                     (F.col("score_scaled").cast("double")
                      / F.lit(float(1 << W_SHIFT))).alias("score")))
 
 
 # --------------------------------------------------------------- DuckDB dual
 def bm25_topk_sql(queries: list[tuple[int, list[str]]], k: int = BM25_TOPK,
-                  doc_rel: str = "documents", id_col: str = "doc_id",
-                  text_col: str = "text") -> str:
+                  doc_rel: str = "documents") -> str:
     if not queries:
         raise ValueError("bm25_topk_sql: queries must be non-empty")
-    norm = normalize_sql(text_col)
+    norm = normalize_sql("text")
     # single quotes in terms are SQL-escaped (they cannot match a token of
     # the normalized text anyway, but a stray quote must not break the SQL)
     qvals = ", ".join(f"""({qid}, '{t.replace("'", "''")}')"""
                       for qid, terms in queries for t in sorted(set(terms)))
     return f"""WITH q(query_id, term) AS (VALUES {qvals}),
 toks AS (
-  SELECT {id_col} AS id, string_split({norm}, ' ') AS _tk
-  FROM {doc_rel} WHERE {text_col} IS NOT NULL),
+  SELECT doc_id AS id, string_split({norm}, ' ') AS _tk
+  FROM {doc_rel} WHERE text IS NOT NULL),
 terms AS (
   SELECT id, CAST(len(_tk) AS BIGINT) AS dl, unnest(_tk) AS term FROM toks),
 tfs AS (
@@ -168,6 +166,6 @@ ranked AS (
          ROW_NUMBER() OVER (PARTITION BY query_id
                             ORDER BY score_scaled DESC, id ASC) AS rank
   FROM scored)
-SELECT query_id, CAST(rank AS BIGINT) AS rank, id AS {id_col},
+SELECT query_id, CAST(rank AS BIGINT) AS rank, id AS doc_id,
        CAST(score_scaled AS DOUBLE) / {float(1 << W_SHIFT)} AS score
 FROM ranked WHERE rank <= {k}"""

@@ -89,21 +89,19 @@ def with_synthetic_boilerplate(docs: DataFrame) -> DataFrame:
     return docs.withColumn("host", host).withColumn("raw", raw)
 
 
-def remove_boilerplate(docs: DataFrame, host_col: str = "host",
-                       id_col: str = "doc_id",
-                       text_col: str = "raw") -> DataFrame:
+def remove_boilerplate(docs: DataFrame) -> DataFrame:
     """(doc_id, host, n_lines, n_removed, clean_len, clean_md5): strip
     lines above the per-host frequency threshold, reassemble the rest in
     original order (joined with ``\\n``)."""
-    lines = (docs.select(F.col(id_col).alias("id"),
-                         F.col(host_col).alias("host"),
-                         F.posexplode(F.split(F.col(text_col), "\n"))
+    lines = (docs.select(F.col("doc_id").alias("id"),
+                         F.col("host"),
+                         F.posexplode(F.split(F.col("raw"), "\n"))
                          .alias("pos", "line"))
              .withColumn("lh", hash60_col(F.col("line"))))
     stats = (lines.groupBy("host", "lh")
              .agg(F.countDistinct("id").alias("nd")))
-    hdocs = (docs.groupBy(F.col(host_col).alias("host"))
-             .agg(F.countDistinct(F.col(id_col)).alias("ndocs")))
+    hdocs = (docs.groupBy(F.col("host"))
+             .agg(F.countDistinct(F.col("doc_id")).alias("ndocs")))
     strip = ((F.col("nd") >= STRIP_MIN_DOCS)
              & (F.col("nd") * STRIP_DEN >= F.col("ndocs") * STRIP_NUM))
     joined = (lines.join(stats, ["host", "lh"])
@@ -121,11 +119,11 @@ def remove_boilerplate(docs: DataFrame, host_col: str = "host",
                  .cast("long").alias("n_removed"),
                  F.length(clean).cast("long").alias("clean_len"),
                  F.md5(clean).alias("clean_md5"))
-            .select(F.col("id").alias(id_col), "host", "n_lines",
+            .select(F.col("id").alias("doc_id"), "host", "n_lines",
                     "n_removed", "clean_len", "clean_md5"))
 
 
-def boilerplate_removal_sql(doc_rel: str = "documents") -> str:
+def boilerplate_removal_sql() -> str:
     """DuckDB dual: same injection, same 60-bit line-hash keyed frequency
     table, same integer strip rule, string_agg reassembly ordered by pos."""
     h60 = hash60_sql("line")
@@ -139,7 +137,7 @@ WITH raws AS (
           || CASE WHEN doc_id % 17 = 0 THEN 'promo code '
                   || CAST(doc_id % 3 AS VARCHAR) || chr(10) ELSE '' END
           || 'copyright 2024 ' || {_HOST_DUCK}) AS raw
-  FROM {doc_rel}),
+  FROM documents),
 ls AS (SELECT doc_id, host, string_split(raw, chr(10)) AS a FROM raws),
 lines AS (SELECT doc_id, host, p - 1 AS pos, a[p] AS line
           FROM ls, UNNEST(generate_series(1, len(a))) AS g(p)),

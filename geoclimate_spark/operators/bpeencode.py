@@ -71,10 +71,9 @@ def _sym_doc_col(norm: Column) -> Column:
         "")
 
 
-def _apply_merges_col(sym: Column,
-                      merges: list[tuple[str, str]] = MERGES) -> Column:
+def _apply_merges_col(sym: Column) -> Column:
     out = sym
-    for left, right in merges:
+    for left, right in MERGES:
         pat = F.lit(f" {left} {right} ")
         rep = F.lit(f" {left}{right} ")
         for _ in range(REPLACE_PASSES):
@@ -89,41 +88,35 @@ def _count_symbols(s: Column) -> Column:
             .otherwise(F.size(F.split(squeezed, " ")).cast("long"))
 
 
-def bpe_encode_stats(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text",
-                     merges: list[tuple[str, str]] = MERGES) -> DataFrame:
+def bpe_encode_stats(docs: DataFrame) -> DataFrame:
     """(id, n_words, n_chars, n_tokens): per-document token counts under the
     frozen merge table. n_chars = symbols before any merge (non-space chars
     of the normalized text); n_tokens = symbols after all merges; the gap is
     the compression the tokenizer buys."""
-    norm = normalize_col(F.col(text_col))
-    d = (docs.where(F.col(text_col).isNotNull())
-         .select(F.col(id_col), norm.alias("_norm"))
+    norm = normalize_col(F.col("text"))
+    d = (docs.where(F.col("text").isNotNull())
+         .select(F.col("doc_id"), norm.alias("_norm"))
          .where(F.length("_norm") > 0))
     sym = _sym_doc_col(F.col("_norm"))
-    enc = _apply_merges_col(sym, merges)
+    enc = _apply_merges_col(sym)
     return d.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(F.split("_norm", " ")).cast("long").alias("n_words"),
         _count_symbols(sym).alias("n_chars"),
         _count_symbols(enc).alias("n_tokens"))
 
 
-def corpus_token_budget(stats: DataFrame, by: DataFrame,
-                        key: str = "doc_id",
-                        group: str = "lang") -> DataFrame:
+def corpus_token_budget(stats: DataFrame, by: DataFrame) -> DataFrame:
     """Roll per-doc token counts up to a grouping column (tokens per lang —
     the number a mixture planner consumes)."""
-    return (stats.join(by.select(key, group), key)
-            .groupBy(group)
+    return (stats.join(by.select("doc_id", "lang"), "doc_id")
+            .groupBy("lang")
             .agg(F.count("*").cast("long").alias("n_docs"),
                  F.sum("n_tokens").cast("long").alias("total_tokens"),
                  F.sum("n_chars").cast("long").alias("total_chars")))
 
 
-def tokenizer_fertility(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", lang_col: str = "lang",
-                        merges: list[tuple[str, str]] = MERGES) -> DataFrame:
+def tokenizer_fertility(docs: DataFrame) -> DataFrame:
     """Per-language tokenizer fertility — the standard tokenizer-evaluation
     metric (chars per token / tokens per word, cf. the XLM-R and BLOOM
     tokenizer analyses): languages the merge table under-serves show low
@@ -137,10 +130,9 @@ def tokenizer_fertility(docs: DataFrame, id_col: str = "doc_id",
     :func:`bpe_encode_stats`; the lang join is on the id key the stats
     already carry (at rest both sides share partitioning); ONE map-side
     combinable groupBy(lang) ends the plan."""
-    stats = bpe_encode_stats(docs, id_col=id_col, text_col=text_col,
-                             merges=merges)
-    by = docs.select(F.col(id_col), F.col(lang_col).alias("lang"))
-    return (stats.join(by, id_col)
+    stats = bpe_encode_stats(docs)
+    by = docs.select(F.col("doc_id"), F.col("lang"))
+    return (stats.join(by, "doc_id")
             .groupBy("lang")
             .agg(F.count("*").cast("long").alias("n_docs"),
                  F.sum("n_words").cast("long").alias("total_words"),
@@ -157,16 +149,13 @@ def tokenizer_fertility(docs: DataFrame, id_col: str = "doc_id",
                 " AS tokens_per_word_milli"))
 
 
-def token_length_histogram(docs: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text",
-                           merges: list[tuple[str, str]] = MERGES) -> DataFrame:
+def token_length_histogram(docs: DataFrame) -> DataFrame:
     """(bucket, n_docs, total_tokens, min_tokens, max_tokens): power-of-two
     histogram of per-doc token counts — the sequence-length distribution a
     packing/batching planner reads (bucket = floor(log2(n_tokens)), via the
     libm-free ``length(bin(x)) - 1`` identity shared with lmquality).
     Composes the encoder: one shuffle-free encode pass + one tiny hash agg."""
-    stats = bpe_encode_stats(docs, id_col=id_col, text_col=text_col,
-                             merges=merges)
+    stats = bpe_encode_stats(docs)
     bucket = (F.length(F.expr("bin(n_tokens)")) - 1).cast("long")
     return (stats.where(F.col("n_tokens") > 0)
             .groupBy(bucket.alias("bucket"))
@@ -185,10 +174,9 @@ def _sym_doc_sql(norm_sql: str) -> str:
         " '')")
 
 
-def _apply_merges_sql(sym_sql: str,
-                      merges: list[tuple[str, str]] = MERGES) -> str:
+def _apply_merges_sql(sym_sql: str) -> str:
     out = sym_sql
-    for left, right in merges:
+    for left, right in MERGES:
         for _ in range(REPLACE_PASSES):
             out = f"replace({out}, ' {left} {right} ', ' {left}{right} ')"
     return out
@@ -200,40 +188,34 @@ def _count_symbols_sql(s_sql: str) -> str:
             f"ELSE CAST(len(string_split({sq}, ' ')) AS BIGINT) END")
 
 
-def bpe_encode_sql(doc_rel: str = "documents", id_col: str = "doc_id",
-                   text_col: str = "text",
-                   merges: list[tuple[str, str]] = MERGES) -> str:
-    norm = normalize_sql(text_col)
+def bpe_encode_sql() -> str:
+    norm = normalize_sql("text")
     return f"""
 WITH d AS (
-  SELECT {id_col}, {norm} AS _norm
-  FROM {doc_rel}
-  WHERE {text_col} IS NOT NULL AND length({norm}) > 0
+  SELECT doc_id, {norm} AS _norm
+  FROM documents
+  WHERE text IS NOT NULL AND length({norm}) > 0
 ), s AS (
-  SELECT {id_col}, _norm, {_sym_doc_sql('_norm')} AS _sym FROM d
+  SELECT doc_id, _norm, {_sym_doc_sql('_norm')} AS _sym FROM d
 )
-SELECT {id_col},
+SELECT doc_id,
        CAST(len(string_split(_norm, ' ')) AS BIGINT) AS n_words,
        {_count_symbols_sql('_sym')} AS n_chars,
-       {_count_symbols_sql(_apply_merges_sql('_sym', merges))} AS n_tokens
+       {_count_symbols_sql(_apply_merges_sql('_sym'))} AS n_tokens
 FROM s"""
 
 
-def tokenizer_fertility_sql(doc_rel: str = "documents",
-                            id_col: str = "doc_id", text_col: str = "text",
-                            lang_col: str = "lang",
-                            merges: list[tuple[str, str]] = MERGES) -> str:
+def tokenizer_fertility_sql() -> str:
     """DuckDB dual of :func:`tokenizer_fertility`."""
-    enc = bpe_encode_sql(doc_rel=doc_rel, id_col=id_col, text_col=text_col,
-                         merges=merges)
+    enc = bpe_encode_sql()
     return f"""
 WITH enc AS ({enc}),
 agg AS (
-  SELECT d.{lang_col} AS lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
+  SELECT d.lang AS lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
          CAST(SUM(e.n_words) AS BIGINT) AS total_words,
          CAST(SUM(e.n_chars) AS BIGINT) AS total_chars,
          CAST(SUM(e.n_tokens) AS BIGINT) AS total_tokens
-  FROM enc e JOIN {doc_rel} d ON e.{id_col} = d.{id_col}
+  FROM enc e JOIN documents d ON e.doc_id = d.doc_id
   GROUP BY 1)
 SELECT lang, n_docs, total_words, total_chars, total_tokens,
        CASE WHEN total_tokens = 0 THEN 0
@@ -245,12 +227,8 @@ SELECT lang, n_docs, total_words, total_chars, total_tokens,
 FROM agg"""
 
 
-def token_length_histogram_sql(doc_rel: str = "documents",
-                               id_col: str = "doc_id",
-                               text_col: str = "text",
-                               merges: list[tuple[str, str]] = MERGES) -> str:
-    enc = bpe_encode_sql(doc_rel=doc_rel, id_col=id_col, text_col=text_col,
-                         merges=merges)
+def token_length_histogram_sql() -> str:
+    enc = bpe_encode_sql()
     return f"""
 WITH enc AS ({enc})
 SELECT CAST(length(bin(n_tokens)) - 1 AS BIGINT) AS bucket,

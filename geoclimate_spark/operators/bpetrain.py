@@ -83,14 +83,13 @@ _MERGE_SCHEMA = ("merge_round long, left_sym string, right_sym string, "
                  "pair_count long, corpus_tokens long")
 
 
-def bpe_train(docs: DataFrame, n_merges: int = N_MERGES,
-              text_col: str = "text") -> DataFrame:
+def bpe_train(docs: DataFrame, n_merges: int = N_MERGES) -> DataFrame:
     """Learn ``n_merges`` BPE merges; returns the merge table
     (merge_round, left_sym, right_sym, pair_count, corpus_tokens) where
     corpus_tokens is the weighted symbol count AFTER applying that merge —
     the curve a tokenizer trainer reports."""
     spark = docs.sparkSession
-    words = _word_counts(docs, text_col).localCheckpoint()
+    words = _word_counts(docs, "text").localCheckpoint()
     stats: list[tuple] = []
     for rnd in range(1, n_merges + 1):
         # argmax pair under (cnt DESC, l ASC, r ASC): min-of-struct over the
@@ -116,16 +115,15 @@ def bpe_train(docs: DataFrame, n_merges: int = N_MERGES,
 
 
 # --------------------------------------------------------------- DuckDB dual
-def bpe_train_sql(n_merges: int = N_MERGES, doc_rel: str = "documents",
-                  text_col: str = "text") -> str:
-    norm = normalize_sql(text_col)
+def bpe_train_sql(n_merges: int = N_MERGES, doc_rel: str = "documents") -> str:
+    norm = normalize_sql("text")
     ctes = [f"""w0 AS (
   SELECT ' ' || array_to_string(list_transform(
            generate_series(1, length(word)), i -> substr(word, i, 1)), ' ')
          || ' ' AS w,
          CAST(COUNT(*) AS BIGINT) AS n
   FROM (SELECT unnest(string_split({norm}, ' ')) AS word
-        FROM {doc_rel} WHERE {text_col} IS NOT NULL)
+        FROM {doc_rel} WHERE text IS NOT NULL)
   WHERE length(word) > 0 GROUP BY word)"""]
     selects = []
     for r in range(1, n_merges + 1):

@@ -65,16 +65,15 @@ def _gear(cp: int) -> int:
     return int(h[:15], 16) % (1 << GEAR_BITS)
 
 
-def cdc_chunks(docs: DataFrame, mask_bits: int = MASK_BITS,
-               id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def cdc_chunks(docs: DataFrame, mask_bits: int = MASK_BITS) -> DataFrame:
     """(doc_id, chunk_id, start, n_chars, chunk_md5): content-defined
     chunks of the normalized text; ``start`` is 1-based, md5 is over the
     chunk substring."""
     import numpy as np
 
     mask = (1 << mask_bits) - 1
-    base = docs.select(F.col(id_col).alias("doc_id"),
-                       normalize_col(F.col(text_col)).alias("t"))
+    base = docs.select(F.col("doc_id"),
+                       normalize_col(F.col("text")).alias("t"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         gear_cache: dict[int, int] = {}
@@ -116,13 +115,12 @@ def cdc_chunks(docs: DataFrame, mask_bits: int = MASK_BITS,
     return base.mapInPandas(run, CHUNK_SCHEMA)
 
 
-def cdc_dedup(docs: DataFrame, mask_bits: int = MASK_BITS,
-              id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def cdc_dedup(docs: DataFrame) -> DataFrame:
     """Chunk table + corpus-wide occurrence counts: (doc_id, chunk_id,
     start, n_chars, chunk_md5, n_occ). ``n_occ > 1`` marks a chunk whose
     exact content exists elsewhere — the bytes a chunk store would keep
     once. One groupBy on the 32-hex hash, text never shuffles."""
-    ch = cdc_chunks(docs, mask_bits, id_col, text_col)
+    ch = cdc_chunks(docs)
     occ = ch.groupBy("chunk_md5").agg(F.count("*").cast("long").alias("n_occ"))
     return ch.join(occ, "chunk_md5").select(
         "doc_id", "chunk_id", "start", "n_chars", "chunk_md5", "n_occ")
@@ -171,9 +169,8 @@ h AS (
 )"""
 
 
-def cdc_dedup_sql(mask_bits: int = MASK_BITS, rel: str = "documents",
-                  id_sql: str = "doc_id", text_sql: str = "text") -> str:
-    return f"""WITH {_cdc_chunks_cte_sql(mask_bits, rel, id_sql, text_sql)},
+def cdc_dedup_sql(rel: str = "documents") -> str:
+    return f"""WITH {_cdc_chunks_cte_sql(MASK_BITS, rel, 'doc_id', 'text')},
 occ AS (SELECT chunk_md5, CAST(COUNT(*) AS BIGINT) AS n_occ
         FROM chunks GROUP BY 1)
 SELECT c.doc_id, c.chunk_id, c.start, c.n_chars, c.chunk_md5, o.n_occ

@@ -40,15 +40,14 @@ STRIDE = 24
 
 
 def chunk_documents(docs: DataFrame, window: int = WINDOW,
-                    stride: int = STRIDE, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+                    stride: int = STRIDE) -> DataFrame:
     """(doc_id, chunk_id, tok_start, tok_end, n_toks, n_chars, chunk_md5,
     chunk_text) — one row per window over the normalized token stream."""
     if not 0 < stride <= window:
         raise ValueError("need 0 < stride <= window")
     base = (docs
-            .select(F.col(id_col).alias("doc_id"),
-                    normalize_col(F.col(text_col)).alias("_t"))
+            .select(F.col("doc_id"),
+                    normalize_col(F.col("text")).alias("_t"))
             .withColumn("_toks", F.split(F.col("_t"), " "))
             .withColumn("_n", F.when(F.col("_t") == "", F.lit(0))
                         .otherwise(F.size("_toks")).cast("long"))
@@ -78,13 +77,12 @@ def chunk_documents(docs: DataFrame, window: int = WINDOW,
 
 
 def chunk_documents_sql(window: int = WINDOW, stride: int = STRIDE,
-                        rel: str = "documents", id_sql: str = "doc_id",
-                        text_sql: str = "text") -> str:
+                        rel: str = "documents") -> str:
     """DuckDB dual: string_split + lateral unnest(range) + list_slice."""
-    norm = normalize_sql(text_sql)
+    norm = normalize_sql("text")
     return f"""
 WITH tokenized AS (
-  SELECT {id_sql} AS doc_id,
+  SELECT doc_id AS doc_id,
          string_split({norm}, ' ') AS toks,
          CASE WHEN {norm} = '' THEN 0
               ELSE len(string_split({norm}, ' ')) END AS n

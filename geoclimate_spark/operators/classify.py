@@ -181,8 +181,7 @@ def _rtree_sql(node: dict) -> str:
 
 
 def regress_tree_ensemble(df: DataFrame, key_cols: list[str],
-                          trees: list[dict],
-                          out_col: str = "pred") -> DataFrame:
+                          trees: list[dict]) -> DataFrame:
     """Regression-forest inference — the reference's building-height
     estimation model applied per row (`WorkflowGeoIndicators.groovy:1342`
     `estimateBuildingHeight`; model = RF REGRESSION over indicator columns).
@@ -191,7 +190,7 @@ def regress_tree_ensemble(df: DataFrame, key_cols: list[str],
     (:func:`regress_tree_ensemble_sql`) evaluates identically. Rows with a
     NULL feature predict NULL (the caller decides the fallback).
 
-    Output: (key_cols..., {out_col})."""
+    Output: (key_cols..., pred)."""
     feats = sorted({n["feature"] for t in trees for n in _iter_nodes(t)
                     if "feature" in n})
     acc = None
@@ -205,12 +204,11 @@ def regress_tree_ensemble(df: DataFrame, key_cols: list[str],
         anynull = c if anynull is None else (anynull | c)
     return df.select(*key_cols,
                      F.when(anynull, F.lit(None).cast("double"))
-                     .otherwise(pred).alias(out_col))
+                     .otherwise(pred).alias("pred"))
 
 
 def regress_tree_ensemble_sql(rows_sql: str, key_cols: list[str],
-                              trees: list[dict],
-                              out_col: str = "pred") -> str:
+                              trees: list[dict]) -> str:
     feats = sorted({n["feature"] for t in trees for n in _iter_nodes(t)
                     if "feature" in n})
     expr = "(" + " + ".join(_rtree_sql(t) for t in trees) \
@@ -218,7 +216,7 @@ def regress_tree_ensemble_sql(rows_sql: str, key_cols: list[str],
     anynull = " OR ".join(f"{f} IS NULL" for f in feats)
     keys = ", ".join(key_cols)
     return (f"SELECT {keys}, CASE WHEN {anynull} THEN NULL"
-            f" ELSE {expr} END AS {out_col} FROM ({rows_sql})")
+            f" ELSE {expr} END AS pred FROM ({rows_sql})")
 
 
 def classify_tree_ensemble_sql(rows_sql: str, key_cols: list[str],

@@ -37,18 +37,13 @@ from .langid import N_TOP, TRAIN_MOD, lang_profiles
 CS_WINDOW = 16  # non-overlapping chunks: stride == window
 
 
-def code_switch_scores(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", lang_col: str = "lang",
-                       window: int = CS_WINDOW, n_top: int = N_TOP,
-                       train_mod: int = TRAIN_MOD) -> DataFrame:
+def code_switch_scores(docs: DataFrame) -> DataFrame:
     """Per-document chunk-level language mixing report (see module doc)."""
-    profiles = lang_profiles(docs, id_col, text_col, lang_col,
-                             n_top, train_mod)
+    profiles = lang_profiles(docs)
     # persist: the chunk subtree feeds both the bigram explode and the
     # per-chunk spine — without it the normalize/split/chunk-explode scan
     # (the most expensive projection) runs twice
-    chunks = (chunk_documents(docs, window=window, stride=window,
-                              id_col=id_col, text_col=text_col)
+    chunks = (chunk_documents(docs, window=CS_WINDOW, stride=CS_WINDOW)
               .select("doc_id", "chunk_id",
                       F.col("chunk_text").alias("_norm"))
               .persist())
@@ -80,8 +75,8 @@ def code_switch_scores(docs: DataFrame, id_col: str = "doc_id",
                    .alias("majority_lang"),
                    F.max(F.when(F.col("_rk") == 1, F.col("_n")))
                    .cast("long").alias("_maj")))
-    doc_lang = docs.select(F.col(id_col).alias("doc_id"),
-                           F.col(lang_col).alias("doc_lang"))
+    doc_lang = docs.select(F.col("doc_id"),
+                           F.col("lang").alias("doc_lang"))
     return (doc_lang.join(rolled, "doc_id")
             .select("doc_id", "doc_lang", "n_chunks", "n_chunk_langs",
                     "majority_lang",
@@ -92,48 +87,44 @@ def code_switch_scores(docs: DataFrame, id_col: str = "doc_id",
                         .cast("long")))
 
 
-def code_switch_scores_sql(doc_rel: str = "documents",
-                           id_col: str = "doc_id", text_col: str = "text",
-                           lang_col: str = "lang", window: int = CS_WINDOW,
-                           n_top: int = N_TOP,
-                           train_mod: int = TRAIN_MOD) -> str:
+def code_switch_scores_sql() -> str:
     """DuckDB dual of :func:`code_switch_scores` — profile CTEs mirror
     langid.lang_confusion_sql, chunk CTEs mirror chunker SQL with
     stride == window."""
-    norm = normalize_sql(text_col)
+    norm = normalize_sql("text")
     return f"""
 WITH base AS (
-  SELECT {id_col}, {lang_col} AS lang_true, {norm} AS _norm
-  FROM {doc_rel} WHERE {text_col} IS NOT NULL),
+  SELECT doc_id, lang AS lang_true, {norm} AS _norm
+  FROM documents WHERE text IS NOT NULL),
 tgrams AS (
   SELECT t.*, substring(t._norm, CAST(p.i AS INT), 2) AS bigram
   FROM base t, LATERAL (SELECT unnest(range(1,
        greatest(length(t._norm), 1))) AS i) p),
 counts AS (
   SELECT lang_true AS lang, bigram, COUNT(*) AS _n
-  FROM tgrams WHERE {id_col} % {train_mod} = 0
+  FROM tgrams WHERE doc_id % {TRAIN_MOD} = 0
   GROUP BY 1, 2),
 profiles AS (
-  SELECT lang, bigram, CAST({n_top} + 1 - _rk AS BIGINT) AS weight
+  SELECT lang, bigram, CAST({N_TOP} + 1 - _rk AS BIGINT) AS weight
   FROM (SELECT lang, bigram, _n,
                ROW_NUMBER() OVER (PARTITION BY lang
                                   ORDER BY _n DESC, bigram ASC) AS _rk
         FROM counts)
-  WHERE _rk <= {n_top}),
+  WHERE _rk <= {N_TOP}),
 tokenized AS (
-  SELECT {id_col} AS doc_id, string_split(_norm, ' ') AS toks,
+  SELECT doc_id AS doc_id, string_split(_norm, ' ') AS toks,
          CASE WHEN _norm = '' THEN 0
               ELSE len(string_split(_norm, ' ')) END AS n
   FROM base),
 counted AS (
   SELECT doc_id, toks, n,
-         CASE WHEN n = 0 THEN 0 WHEN n <= {window} THEN 1
-              ELSE 1 + (n - {window} + {window} - 1) // {window} END AS nc
+         CASE WHEN n = 0 THEN 0 WHEN n <= {CS_WINDOW} THEN 1
+              ELSE 1 + (n - {CS_WINDOW} + {CS_WINDOW} - 1) // {CS_WINDOW} END AS nc
   FROM tokenized),
 chunks AS (
   SELECT doc_id, CAST(u.i AS BIGINT) AS chunk_id,
-         array_to_string(list_slice(toks, u.i * {window} + 1,
-                         least(u.i * {window} + {window}, n)), ' ') AS ct
+         array_to_string(list_slice(toks, u.i * {CS_WINDOW} + 1,
+                         least(u.i * {CS_WINDOW} + {CS_WINDOW}, n)), ' ') AS ct
   FROM counted, LATERAL unnest(range(0, nc)) AS u(i)),
 cgrams AS (
   SELECT c.doc_id, c.chunk_id, substring(c.ct, CAST(p.i AS INT), 2) AS bigram
@@ -166,9 +157,9 @@ rolled AS (
          MIN(CASE WHEN _rk = 1 THEN chunk_lang END) AS majority_lang,
          CAST(MAX(CASE WHEN _rk = 1 THEN _n END) AS BIGINT) AS _maj
   FROM ranked GROUP BY doc_id)
-SELECT d.{id_col} AS doc_id, d.{lang_col} AS doc_lang,
+SELECT d.doc_id AS doc_id, d.lang AS doc_lang,
        r.n_chunks, r.n_chunk_langs, r.majority_lang,
        (r._maj * 1000) // r.n_chunks AS majority_millis,
        CAST(1000 - (r._maj * 1000) // r.n_chunks AS BIGINT)
          AS switch_millis
-FROM {doc_rel} d JOIN rolled r ON d.{id_col} = r.doc_id"""
+FROM documents d JOIN rolled r ON d.doc_id = r.doc_id"""

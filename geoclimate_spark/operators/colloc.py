@@ -44,11 +44,10 @@ TOPK = 20
 LR_SHIFT = 10
 
 
-def pmi_collocations(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def pmi_collocations(docs: DataFrame) -> DataFrame:
     """Top-k collocations: (pair, n_ab, n_a, n_b, lr_q10)."""
     toks = docs.select(
-        F.split(normalize_col(F.col(text_col)), " ").alias("_t"))
+        F.split(normalize_col(F.col("text")), " ").alias("_t"))
     uni = (toks.select(F.explode("_t").alias("w"))
            .groupBy("w").agg(F.count("*").cast("long").alias("n")))
     bg = (toks.selectExpr(
@@ -82,10 +81,9 @@ def pmi_collocations(docs: DataFrame, id_col: str = "doc_id",
             .select("pair", "n_ab", "n_a", "n_b", "lr_q10"))
 
 
-def pmi_collocations_sql(rel: str = "documents", id_col: str = "doc_id",
-                         text_col: str = "text") -> str:
+def pmi_collocations_sql(rel: str = "documents") -> str:
     """DuckDB dual of :func:`pmi_collocations`."""
-    norm = normalize_sql(text_col)
+    norm = normalize_sql("text")
     return f"""WITH toks AS (
   SELECT str_split({norm}, ' ') AS _t FROM {rel}),
 uni AS (

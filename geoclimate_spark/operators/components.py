@@ -29,18 +29,20 @@ from .knn import _kring9, pick_res_for_radius
 from .. import grid
 
 
-def proximity_edges(points: DataFrame, radius_e6: int, key: str = "page_id",
-                    lon: str = "lon_e6", lat: str = "lat_e6") -> DataFrame:
+def proximity_edges(points: DataFrame, radius_e6: int) -> DataFrame:
     """Undirected edge list (id_a < id_b) of point pairs within radius —
     same kring-9 candidate generation + exact integer d² refine as
     operators/knn.py."""
     res = pick_res_for_radius(radius_e6)
     a = points.select(
-        F.col(key).alias("id_a"), F.col(lon).alias("_alon"), F.col(lat).alias("_alat"),
-        F.explode(_kring9(grid.cell_col(F.col(lon), F.col(lat), res), res)).alias("_cell"))
+        F.col("page_id").alias("id_a"), F.col("lon_e6").alias("_alon"),
+        F.col("lat_e6").alias("_alat"),
+        F.explode(_kring9(grid.cell_col(F.col("lon_e6"), F.col("lat_e6"), res),
+                          res)).alias("_cell"))
     b = points.select(
-        F.col(key).alias("id_b"), F.col(lon).alias("_blon"), F.col(lat).alias("_blat"),
-        grid.cell_col(F.col(lon), F.col(lat), res).alias("_cell"))
+        F.col("page_id").alias("id_b"), F.col("lon_e6").alias("_blon"),
+        F.col("lat_e6").alias("_blat"),
+        grid.cell_col(F.col("lon_e6"), F.col("lat_e6"), res).alias("_cell"))
     dx = F.col("_alon") - F.col("_blon")
     dy = F.col("_alat") - F.col("_blat")
     return (a.join(b, "_cell")
@@ -51,7 +53,7 @@ def proximity_edges(points: DataFrame, radius_e6: int, key: str = "page_id",
 
 
 def connected_components(vertices: DataFrame, edges: DataFrame,
-                         key: str = "id", max_iter: int = 30) -> DataFrame:
+                         key: str = "id") -> DataFrame:
     """(key, component, component_size); component = min reachable key.
 
     ``vertices``: one column ``key``; ``edges``: (id_a, id_b) undirected.
@@ -91,7 +93,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     sym = sym.persist()
     labels = edge_verts.select("vid", F.col("vid").alias("label"))
     changed = -1
-    for it in range(max_iter):
+    for it in range(30):
         # ONE join + ONE agg per neighbor-min round: sym carries a self-loop
         # (vid, vid) for every edge vertex, so the grouped rows for dst
         # include dst's own label — min(label) is already least(old, min of
@@ -123,7 +125,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
             break
     if changed != 0:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds")
+            "connected_components did not converge in 30 rounds")
     labels = labels.unionByName(
         iso.select("vid", F.col("vid").alias("label")))
     sizes = labels.groupBy("label").agg(F.count("*").alias("component_size"))
@@ -132,23 +134,22 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
                     F.col("component_size").cast("long")))
 
 
-def connected_components_sql(points_sql: str, radius_e6: int,
-                             key: str = "page_id") -> str:
+def connected_components_sql(points_sql: str, radius_e6: int) -> str:
     """Oracle: brute-force proximity edges + recursive-CTE closure."""
     return f"""WITH RECURSIVE pts AS ({points_sql}),
-edges AS (SELECT a.{key} AS id_a, b.{key} AS id_b
-  FROM pts a JOIN pts b ON a.{key} < b.{key}
+edges AS (SELECT a.page_id AS id_a, b.page_id AS id_b
+  FROM pts a JOIN pts b ON a.page_id < b.page_id
   WHERE (a.lon_e6 - b.lon_e6) * (a.lon_e6 - b.lon_e6)
       + (a.lat_e6 - b.lat_e6) * (a.lat_e6 - b.lat_e6)
       <= CAST({radius_e6} AS BIGINT) * {radius_e6}),
 sym AS (SELECT id_a AS src, id_b AS dst FROM edges
   UNION SELECT id_b, id_a FROM edges
-  UNION SELECT {key}, {key} FROM pts),
+  UNION SELECT page_id, page_id FROM pts),
 reach(src, dst) AS (
-  SELECT {key}, {key} FROM pts
+  SELECT page_id, page_id FROM pts
   UNION
   SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src),
-comp AS (SELECT src AS {key}, MIN(dst) AS component FROM reach GROUP BY src),
+comp AS (SELECT src AS page_id, MIN(dst) AS component FROM reach GROUP BY src),
 sizes AS (SELECT component, COUNT(*) AS component_size FROM comp GROUP BY component)
-SELECT c.{key}, c.component, CAST(s.component_size AS BIGINT) AS component_size
+SELECT c.page_id, c.component, CAST(s.component_size AS BIGINT) AS component_size
 FROM comp c JOIN sizes s USING (component)"""

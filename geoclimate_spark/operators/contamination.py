@@ -52,19 +52,18 @@ def _token_ngrams_col(toks: Column, n: int) -> Column:
         .otherwise(F.array().cast("array<string>")))
 
 
-def contamination_hits(docs: DataFrame, bench_quota: int = 10,
-                       n: int = NGRAM_N, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def contamination_hits(docs: DataFrame, bench_quota: int = 10) -> DataFrame:
     """(doc_id, n_hits): training documents (not in the benchmark) sharing
     >= 1 token n-gram with the benchmark set, with the count of distinct
     shared n-grams. Benchmark = the ``bench_quota`` lowest-hash doc ids."""
     spark = docs.sparkSession
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    did = F.col(id_col).cast("long")
-    base = (docs.repartition(n_parts, id_col)
+    did = F.col("doc_id").cast("long")
+    base = (docs.repartition(n_parts, "doc_id")
             .select(did.alias("id"),
-                    F.split(normalize_col(F.col(text_col)), " ").alias("toks"))
-            .select("id", _token_ngrams_col(F.col("toks"), n).alias("ngs")))
+                    F.split(normalize_col(F.col("text")), " ").alias("toks"))
+            .select("id",
+                    _token_ngrams_col(F.col("toks"), NGRAM_N).alias("ngs")))
     rank_w = Window.orderBy(hash60_col(F.col("id").cast("string")), "id")
     ids = (docs.select(did.alias("id"))
            .withColumn("_r", F.row_number().over(rank_w)))
@@ -79,15 +78,14 @@ def contamination_hits(docs: DataFrame, bench_quota: int = 10,
             .agg(F.count("*").cast("long").alias("n_hits")))
 
 
-def contamination_hits_sql(doc_rel: str = "documents", bench_quota: int = 10,
-                           n: int = NGRAM_N, id_sql: str = "doc_id",
-                           text_sql: str = "text") -> str:
+def contamination_hits_sql(doc_rel: str = "documents",
+                           bench_quota: int = 10) -> str:
     """DuckDB mirror of :func:`contamination_hits`."""
-    norm = normalize_sql(text_sql)
+    norm = normalize_sql("text")
     h_id = hash60_sql("CAST(id AS VARCHAR)")
     h_ng = hash60_sql("ng")
     return f"""WITH base AS (
-  SELECT CAST({id_sql} AS BIGINT) AS id, string_split({norm}, ' ') AS toks
+  SELECT CAST(doc_id AS BIGINT) AS id, string_split({norm}, ' ') AS toks
   FROM {doc_rel}),
 ranked AS (
   SELECT id, ROW_NUMBER() OVER (ORDER BY {h_id}, id) AS r
@@ -96,8 +94,8 @@ bench_ids AS (SELECT id FROM ranked WHERE r <= {bench_quota}),
 ngs AS (
   SELECT DISTINCT id, ng FROM (
     SELECT id, unnest(list_transform(
-        generate_series(1, greatest(len(toks) - {n - 1}, 0)),
-        i -> array_to_string(toks[i:i+{n - 1}], ' '))) AS ng
+        generate_series(1, greatest(len(toks) - {NGRAM_N - 1}, 0)),
+        i -> array_to_string(toks[i:i+{NGRAM_N - 1}], ' '))) AS ng
     FROM base)),
 ngh AS (SELECT id, {h_ng} AS ngh FROM ngs),
 bench_ngrams AS (SELECT DISTINCT ngh FROM ngh

@@ -39,7 +39,6 @@ def _explode_cells(df: DataFrame, x0: str, y0: str, x1: str, y1: str,
 
 def bbox_cell_join(a: DataFrame, a_bounds: tuple[str, str, str, str],
                    b: DataFrame, b_bounds: tuple[str, str, str, str],
-                   cell: int = CELL_E6,
                    broadcast_b: bool = False) -> DataFrame:
     """All (a row, b row) pairs whose closed bboxes intersect or touch —
     a superset-free candidate set, each pair exactly once. ``a_bounds`` /
@@ -47,11 +46,11 @@ def bbox_cell_join(a: DataFrame, a_bounds: tuple[str, str, str, str],
     Callers apply their own exact refine on the joined columns."""
     ax0, ay0, ax1, ay1 = a_bounds
     bx0, by0, bx1, by1 = b_bounds
-    ac = _explode_cells(a, ax0, ay0, ax1, ay1, cell)
-    bc = _explode_cells(b, bx0, by0, bx1, by1, cell)
+    ac = _explode_cells(a, ax0, ay0, ax1, ay1, CELL_E6)
+    bc = _explode_cells(b, bx0, by0, bx1, by1, CELL_E6)
     if broadcast_b:
         bc = F.broadcast(bc)
-    c = F.lit(float(cell))
+    c = F.lit(float(CELL_E6))
     mx, my = F.greatest(F.col(ax0), F.col(bx0)), F.greatest(F.col(ay0), F.col(by0))
     return (ac.join(bc, ["_cx", "_cy"])
             .where((F.col(ax0) <= F.col(bx1)) & (F.col(bx0) <= F.col(ax1))

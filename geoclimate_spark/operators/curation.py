@@ -48,7 +48,7 @@ from ..functions.hashing import (hash60_col, hash60_seeded_col,
 
 # ------------------------------------------------------------------- packing
 def pack_sequences(docs: DataFrame, n_tokens_col: str, budget: int,
-                   n_shards: int, id_col: str = "doc_id") -> DataFrame:
+                   n_shards: int) -> DataFrame:
     """Concat-then-chunk packing: per (shard, chunk) doc/token rollup.
 
     A document belongs to chunk ``(cum_tokens - 1) // budget`` of its shard,
@@ -56,7 +56,7 @@ def pack_sequences(docs: DataFrame, n_tokens_col: str, budget: int,
     ``id`` order — i.e. the chunk containing the document's last token when
     the shard's documents are concatenated and cut every ``budget`` tokens.
     """
-    did = F.col(id_col).cast("long")
+    did = F.col("doc_id").cast("long")
     shard = F.pmod(hash60_col(did.cast("string")), F.lit(n_shards))
     w = (Window.partitionBy("shard").orderBy("id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -76,10 +76,10 @@ def pack_sequences(docs: DataFrame, n_tokens_col: str, budget: int,
 
 
 def pack_sequences_sql(docs_rel: str, n_tokens_sql: str, budget: int,
-                       n_shards: int, id_sql: str = "doc_id") -> str:
-    h = hash60_sql(f"CAST(CAST({id_sql} AS BIGINT) AS VARCHAR)")
+                       n_shards: int) -> str:
+    h = hash60_sql("CAST(CAST(doc_id AS BIGINT) AS VARCHAR)")
     return f"""WITH rows_in AS (
-  SELECT CAST({id_sql} AS BIGINT) AS id,
+  SELECT CAST(doc_id AS BIGINT) AS id,
          CAST({n_tokens_sql} AS BIGINT) AS n_tok,
          CAST(((({h}) % {n_shards}) + {n_shards}) % {n_shards} AS BIGINT) AS shard
   FROM {docs_rel}),
@@ -96,12 +96,12 @@ GROUP BY shard, chunk_id"""
 
 
 # --------------------------------------------------------- stratified sample
-def stratified_sample(docs: DataFrame, stratum_col: str, quota: int,
-                      id_col: str = "doc_id") -> DataFrame:
+def stratified_sample(docs: DataFrame, stratum_col: str,
+                      quota: int) -> DataFrame:
     """Keep the ``quota`` lowest-hash documents of each stratum (ties broken
     by id — the hash is injective on ids in practice but the tie-break keeps
     the plan total-order deterministic)."""
-    did = F.col(id_col).cast("long")
+    did = F.col("doc_id").cast("long")
     h = hash60_col(did.cast("string"))
     w = Window.partitionBy("stratum").orderBy("h", "id")
     return (docs.select(did.alias("id"), F.col(stratum_col).alias("stratum"),
@@ -111,13 +111,12 @@ def stratified_sample(docs: DataFrame, stratum_col: str, quota: int,
             .select(F.col("id").alias("doc_id"), "stratum", "rank"))
 
 
-def stratified_sample_sql(docs_rel: str, stratum_sql: str, quota: int,
-                          id_sql: str = "doc_id") -> str:
-    h = hash60_sql(f"CAST(CAST({id_sql} AS BIGINT) AS VARCHAR)")
+def stratified_sample_sql(docs_rel: str, stratum_sql: str, quota: int) -> str:
+    h = hash60_sql("CAST(CAST(doc_id AS BIGINT) AS VARCHAR)")
     return f"""WITH ranked AS (
-  SELECT CAST({id_sql} AS BIGINT) AS doc_id, {stratum_sql} AS stratum,
+  SELECT CAST(doc_id AS BIGINT) AS doc_id, {stratum_sql} AS stratum,
          ROW_NUMBER() OVER (PARTITION BY {stratum_sql}
-                            ORDER BY {h}, CAST({id_sql} AS BIGINT)) AS rank
+                            ORDER BY {h}, CAST(doc_id AS BIGINT)) AS rank
   FROM {docs_rel})
 SELECT doc_id, stratum, CAST(rank AS BIGINT) AS rank
 FROM ranked WHERE rank <= {quota}"""
@@ -125,9 +124,7 @@ FROM ranked WHERE rank <= {quota}"""
 
 # ------------------------------------------------------------ domain capping
 def domain_curation(docs: DataFrame, quality_col: str, min_quality: float,
-                    blocked: list[str], cap: int,
-                    id_col: str = "doc_id",
-                    domain_col: str = "source") -> DataFrame:
+                    blocked: list[str], cap: int) -> DataFrame:
     """Blocklist → quality gate → per-domain cap (hash-rank keeps).
 
     The blocklist is applied as a broadcast LEFT ANTI join (the §2.8 anti-join
@@ -135,14 +132,14 @@ def domain_curation(docs: DataFrame, quality_col: str, min_quality: float,
     """
     spark = docs.sparkSession
     block_df = spark.createDataFrame([(b,) for b in blocked],
-                                     f"{domain_col} string")
-    did = F.col(id_col).cast("long")
+                                     "source string")
+    did = F.col("doc_id").cast("long")
     h = hash60_col(did.cast("string"))
     w = Window.partitionBy("domain").orderBy("h", "id")
     return (docs
-            .join(F.broadcast(block_df), domain_col, "left_anti")
+            .join(F.broadcast(block_df), "source", "left_anti")
             .where(F.col(quality_col) >= min_quality)
-            .select(did.alias("id"), F.col(domain_col).alias("domain"),
+            .select(did.alias("id"), F.col("source").alias("domain"),
                     F.col(quality_col).alias("quality"), h.alias("h"))
             .withColumn("rank", F.row_number().over(w).cast("long"))
             .where(F.col("rank") <= cap)
@@ -150,35 +147,35 @@ def domain_curation(docs: DataFrame, quality_col: str, min_quality: float,
 
 
 def domain_curation_sql(docs_rel: str, quality_sql: str, min_quality: float,
-                        blocked: list[str], cap: int,
-                        id_sql: str = "doc_id",
-                        domain_sql: str = "source") -> str:
-    h = hash60_sql(f"CAST(CAST({id_sql} AS BIGINT) AS VARCHAR)")
+                        blocked: list[str], cap: int) -> str:
+    h = hash60_sql("CAST(CAST(doc_id AS BIGINT) AS VARCHAR)")
     inlist = ", ".join(f"'{b}'" for b in blocked)
     return f"""WITH kept AS (
-  SELECT CAST({id_sql} AS BIGINT) AS doc_id, {domain_sql} AS domain,
+  SELECT CAST(doc_id AS BIGINT) AS doc_id, source AS domain,
          {quality_sql} AS quality,
-         ROW_NUMBER() OVER (PARTITION BY {domain_sql}
-                            ORDER BY {h}, CAST({id_sql} AS BIGINT)) AS rank
+         ROW_NUMBER() OVER (PARTITION BY source
+                            ORDER BY {h}, CAST(doc_id AS BIGINT)) AS rank
   FROM {docs_rel}
-  WHERE {domain_sql} NOT IN ({inlist}) AND {quality_sql} >= {min_quality})
+  WHERE source NOT IN ({inlist}) AND {quality_sql} >= {min_quality})
 SELECT doc_id, domain, quality, CAST(rank AS BIGINT) AS rank
 FROM kept WHERE rank <= {cap}"""
 
 
+SPLIT_SEED = 7
+TRAIN_BP = 8000
+VAL_BP = 1000
+
+
 # --------------------------------------------------------------- split gates
-def dataset_split(docs: DataFrame, train_bp: int = 8000, val_bp: int = 1000,
-                  seed: int = 7, id_col: str = "doc_id",
-                  stratum_col: str = "lang",
-                  size_col: str = "n_chars") -> DataFrame:
+def dataset_split(docs: DataFrame) -> DataFrame:
     """Deterministic train/val/test assignment by seeded hash — the split
     every training pipeline needs to be REPRODUCIBLE and leakage-free:
-    membership is a pure function of (seed, id), so re-runs, engines and
+    membership is a pure function of (SPLIT_SEED, id), so re-runs, engines and
     incremental snapshots agree, and no document migrates between splits
     when the corpus grows (a row-number split would reshuffle everything).
 
-    ``hash60(seed:id) mod 10000`` lands in basis-point space:
-    ``[0, train_bp) = train``, ``[train_bp, train_bp+val_bp) = val``,
+    ``hash60(SPLIT_SEED:id) mod 10000`` lands in basis-point space:
+    ``[0, TRAIN_BP) = train``, ``[TRAIN_BP, TRAIN_BP+VAL_BP) = val``,
     rest = test. Output is the per-(split, stratum) audit rollup
     (doc/char counts + id range); the per-doc assignment is the same
     expression inlined upstream of any consumer.
@@ -186,15 +183,16 @@ def dataset_split(docs: DataFrame, train_bp: int = 8000, val_bp: int = 1000,
     Scale: ONE hash aggregation over a scan projection (the split key is
     computed per row, no join, no window) — map-side combine end to end.
     """
-    did = F.col(id_col).cast("long")
-    part = F.pmod(hash60_seeded_col(seed, did.cast("string")), F.lit(10000))
-    split = (F.when(part < train_bp, F.lit("train"))
-             .when(part < train_bp + val_bp, F.lit("val"))
+    did = F.col("doc_id").cast("long")
+    part = F.pmod(hash60_seeded_col(SPLIT_SEED, did.cast("string")),
+                  F.lit(10000))
+    split = (F.when(part < TRAIN_BP, F.lit("train"))
+             .when(part < TRAIN_BP + VAL_BP, F.lit("val"))
              .otherwise(F.lit("test")))
     return (docs.select(split.alias("split"),
-                        F.col(stratum_col).alias("stratum"),
+                        F.col("lang").alias("stratum"),
                         did.alias("_id"),
-                        F.col(size_col).cast("long").alias("_sz"))
+                        F.col("n_chars").cast("long").alias("_sz"))
             .groupBy("split", "stratum")
             .agg(F.count("*").alias("n_docs"),
                  F.sum("_sz").alias("chars_total"),
@@ -202,19 +200,16 @@ def dataset_split(docs: DataFrame, train_bp: int = 8000, val_bp: int = 1000,
                  F.max("_id").alias("max_id")))
 
 
-def dataset_split_sql(docs_rel: str, train_bp: int = 8000,
-                      val_bp: int = 1000, seed: int = 7,
-                      id_sql: str = "doc_id", stratum_sql: str = "lang",
-                      size_sql: str = "n_chars") -> str:
-    h = hash60_seeded_sql(seed,
-                          f"CAST(CAST({id_sql} AS BIGINT) AS VARCHAR)")
+def dataset_split_sql(docs_rel: str) -> str:
+    h = hash60_seeded_sql(SPLIT_SEED,
+                          "CAST(CAST(doc_id AS BIGINT) AS VARCHAR)")
     part = f"((({h}) % 10000) + 10000) % 10000"
     return f"""WITH rows_in AS (
-  SELECT CASE WHEN {part} < {train_bp} THEN 'train'
-              WHEN {part} < {train_bp + val_bp} THEN 'val'
+  SELECT CASE WHEN {part} < {TRAIN_BP} THEN 'train'
+              WHEN {part} < {TRAIN_BP + VAL_BP} THEN 'val'
               ELSE 'test' END AS split,
-         {stratum_sql} AS stratum, CAST({id_sql} AS BIGINT) AS _id,
-         CAST({size_sql} AS BIGINT) AS _sz
+         lang AS stratum, CAST(doc_id AS BIGINT) AS _id,
+         CAST(n_chars AS BIGINT) AS _sz
   FROM {docs_rel})
 SELECT split, stratum, COUNT(*) AS n_docs,
        CAST(SUM(_sz) AS BIGINT) AS chars_total,
@@ -231,50 +226,42 @@ FROM rows_in GROUP BY split, stratum"""
 # join); the only work is the dedup pass itself.
 
 
-def _split_expr_col(idc, train_bp: int = 8000, val_bp: int = 1000,
-                    seed: int = 7):
-    part = F.pmod(hash60_seeded_col(seed, idc.cast("long").cast("string")),
+def _split_expr_col(idc):
+    part = F.pmod(hash60_seeded_col(SPLIT_SEED, idc.cast("long").cast("string")),
                   F.lit(10000))
-    return (F.when(part < train_bp, F.lit("train"))
-            .when(part < train_bp + val_bp, F.lit("val"))
+    return (F.when(part < TRAIN_BP, F.lit("train"))
+            .when(part < TRAIN_BP + VAL_BP, F.lit("val"))
             .otherwise(F.lit("test")))
 
 
-def _split_case_sql(id_sql: str, train_bp: int = 8000, val_bp: int = 1000,
-                    seed: int = 7) -> str:
-    h = hash60_seeded_sql(seed, f"CAST(CAST({id_sql} AS BIGINT) AS VARCHAR)")
+def _split_case_sql(id_sql: str) -> str:
+    h = hash60_seeded_sql(SPLIT_SEED,
+                          f"CAST(CAST({id_sql} AS BIGINT) AS VARCHAR)")
     part = f"((({h}) % 10000) + 10000) % 10000"
-    return (f"CASE WHEN {part} < {train_bp} THEN 'train' "
-            f"WHEN {part} < {train_bp + val_bp} THEN 'val' "
+    return (f"CASE WHEN {part} < {TRAIN_BP} THEN 'train' "
+            f"WHEN {part} < {TRAIN_BP + VAL_BP} THEN 'val' "
             f"ELSE 'test' END")
 
 
-def split_leakage(docs: DataFrame, threshold: float = 0.8,
-                  train_bp: int = 8000, val_bp: int = 1000, seed: int = 7,
-                  id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def split_leakage(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Cross-split near-duplicate pairs:
     (id_a, id_b, split_a, split_b, jaccard) where split_a != split_b."""
     from . import dedup
-    pairs = dedup.minhash_near_duplicates(docs, threshold,
-                                          id_col=id_col, text_col=text_col)
+    pairs = dedup.minhash_near_duplicates(docs, threshold)
     return (pairs
-            .withColumn("split_a", _split_expr_col(F.col("id_a"),
-                                                   train_bp, val_bp, seed))
-            .withColumn("split_b", _split_expr_col(F.col("id_b"),
-                                                   train_bp, val_bp, seed))
+            .withColumn("split_a", _split_expr_col(F.col("id_a")))
+            .withColumn("split_b", _split_expr_col(F.col("id_b")))
             .where(F.col("split_a") != F.col("split_b"))
             .select("id_a", "id_b", "split_a", "split_b", "jaccard"))
 
 
-def split_leakage_sql(threshold: float = 0.8, doc_rel: str = "documents",
-                      train_bp: int = 8000, val_bp: int = 1000,
-                      seed: int = 7, id_col: str = "doc_id",
-                      text_col: str = "text") -> str:
+def split_leakage_sql(threshold: float = 0.8,
+                      doc_rel: str = "documents") -> str:
     """DuckDB dual: the minhash pair query nested as a derived table."""
     from . import dedup
-    inner = dedup.minhash_lsh_sql(threshold, doc_rel, id_col, text_col)
-    sa = _split_case_sql("id_a", train_bp, val_bp, seed)
-    sb = _split_case_sql("id_b", train_bp, val_bp, seed)
+    inner = dedup.minhash_lsh_sql(threshold, doc_rel)
+    sa = _split_case_sql("id_a")
+    sb = _split_case_sql("id_b")
     return f"""SELECT id_a, id_b, {sa} AS split_a, {sb} AS split_b, jaccard
 FROM ({inner}) WHERE ({sa}) <> ({sb})"""
 
@@ -285,8 +272,7 @@ _U_SCALE = float(1 << 60)
 
 
 def priority_sample(docs: DataFrame, k: int = 64,
-                    weight_col: str = "n_chars", id_col: str = "doc_id",
-                    keep_cols: tuple[str, ...] = ("lang",)) -> DataFrame:
+                    id_col: str = "doc_id") -> DataFrame:
     """Duffield–Lund–Thorup priority sampling: a weighted without-replacement
     sample of ``k`` documents with UNBIASED subset-sum estimator weights —
     the principled way to downsample a 100-TB corpus proportionally to a
@@ -312,8 +298,8 @@ def priority_sample(docs: DataFrame, k: int = 64,
     q = (F.col("w").cast("double")
          / (F.col("u").cast("double") / F.lit(_U_SCALE)))
     scored = (docs.select(F.col(id_col).cast("long").alias("doc_id"),
-                          *keep_cols,
-                          F.col(weight_col).cast("long").alias("w"))
+                          "lang",
+                          F.col("n_chars").cast("long").alias("w"))
               .withColumn("u", u.cast("long"))
               .withColumn("q", q))
     top = scored.orderBy(F.col("q").desc(), "doc_id").limit(k + 1)
@@ -325,21 +311,18 @@ def priority_sample(docs: DataFrame, k: int = 64,
         .alias("tau")))
     return (ranked.where(F.col("rank") <= k)
             .crossJoin(F.broadcast(tau))
-            .select("doc_id", *keep_cols, "w", "q",
+            .select("doc_id", "lang", "w", "q",
                     F.greatest(F.col("w").cast("double"), F.col("tau"))
                     .alias("w_hat"))
             )
 
 
-def priority_sample_sql(k: int = 64, docs_rel: str = "documents",
-                        weight_sql: str = "n_chars", id_sql: str = "doc_id",
-                        keep_cols: tuple[str, ...] = ("lang",)) -> str:
+def priority_sample_sql(k: int = 64, docs_rel: str = "documents") -> str:
     u = hash60_seeded_sql(
-        PSAMPLE_SEED, f"concat('ps:', CAST(CAST({id_sql} AS BIGINT) AS VARCHAR))")
-    keep = "".join(f"{c}, " for c in keep_cols)
+        PSAMPLE_SEED, "concat('ps:', CAST(CAST(doc_id AS BIGINT) AS VARCHAR))")
     return f"""WITH scored AS (
-  SELECT CAST({id_sql} AS BIGINT) AS doc_id, {keep}
-         CAST({weight_sql} AS BIGINT) AS w,
+  SELECT CAST(doc_id AS BIGINT) AS doc_id, lang, 
+         CAST(n_chars AS BIGINT) AS w,
          CAST({u} + 1 AS BIGINT) AS u
   FROM {docs_rel}
 ), q AS (
@@ -351,13 +334,11 @@ def priority_sample_sql(k: int = 64, docs_rel: str = "documents",
   SELECT coalesce(min(CASE WHEN rank = {k} + 1 THEN q END), 0.0) AS tau
   FROM ranked WHERE rank <= {k} + 1
 )
-SELECT doc_id, {keep}w, q, greatest(CAST(w AS DOUBLE), tau) AS w_hat
+SELECT doc_id, lang, w, q, greatest(CAST(w AS DOUBLE), tau) AS w_hat
 FROM ranked, tau WHERE rank <= {k}"""
 
 
-def grouped_split(docs: DataFrame, group_expr_spark: str,
-                  train_bp: int = 8000, val_bp: int = 1000,
-                  seed: int = 7, size_col: str = "n_chars") -> DataFrame:
+def grouped_split(docs: DataFrame, group_expr_spark: str) -> DataFrame:
     """Domain-GROUPED train/val/test split (the GroupShuffleSplit
     discipline): membership hashes the GROUP (host / registrable domain),
     not the document, so every page of a host lands in ONE split — the
@@ -375,12 +356,12 @@ def grouped_split(docs: DataFrame, group_expr_spark: str,
     rollup is one hash agg + one distinct-group agg — no join against a
     group table, no window."""
     g = F.expr(group_expr_spark)
-    part = F.pmod(hash60_seeded_col(seed, g), F.lit(10000))
-    split = (F.when(part < train_bp, F.lit("train"))
-             .when(part < train_bp + val_bp, F.lit("val"))
+    part = F.pmod(hash60_seeded_col(SPLIT_SEED, g), F.lit(10000))
+    split = (F.when(part < TRAIN_BP, F.lit("train"))
+             .when(part < TRAIN_BP + VAL_BP, F.lit("val"))
              .otherwise(F.lit("test")))
     base = docs.select(split.alias("split"), g.alias("grp"),
-                       F.col(size_col).cast("long").alias("_sz"))
+                       F.col("n_chars").cast("long").alias("_sz"))
     per_split = (base.groupBy("split")
                  .agg(F.count("*").cast("long").alias("n_docs"),
                       F.countDistinct("grp").cast("long").alias("n_groups"),
@@ -392,17 +373,15 @@ def grouped_split(docs: DataFrame, group_expr_spark: str,
     return per_split.crossJoin(F.broadcast(straddle))
 
 
-def grouped_split_sql(docs_rel: str, group_expr_sql: str,
-                      train_bp: int = 8000, val_bp: int = 1000,
-                      seed: int = 7, size_sql: str = "n_chars") -> str:
-    h = hash60_seeded_sql(seed, group_expr_sql)
+def grouped_split_sql(docs_rel: str, group_expr_sql: str) -> str:
+    h = hash60_seeded_sql(SPLIT_SEED, group_expr_sql)
     part = f"((({h}) % 10000) + 10000) % 10000"
     return f"""WITH base AS (
-  SELECT CASE WHEN {part} < {train_bp} THEN 'train'
-              WHEN {part} < {train_bp + val_bp} THEN 'val'
+  SELECT CASE WHEN {part} < {TRAIN_BP} THEN 'train'
+              WHEN {part} < {TRAIN_BP + VAL_BP} THEN 'val'
               ELSE 'test' END AS split,
          {group_expr_sql} AS grp,
-         CAST({size_sql} AS BIGINT) AS _sz
+         CAST(n_chars AS BIGINT) AS _sz
   FROM {docs_rel}),
 per_split AS (
   SELECT split, CAST(COUNT(*) AS BIGINT) AS n_docs,

@@ -41,6 +41,7 @@ N_HASHES = 16
 LSH_BANDS = 4
 LSH_ROWS = 4
 SIMHASH_BITS = 32
+SIMHASH_BAND_BITS = 8
 # Oracle-side shingle position bound; the driver's oracle only runs at
 # sf=0.01 where max doc length is ~600. Engine side has no bound. The oracle
 # SQL raises a DuckDB error() if any normalized doc exceeds the bound, so a
@@ -61,7 +62,7 @@ def _shingle_array_expr(k: int) -> Column:
 
 
 def shingle_array_df(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text", k: int = K_SHINGLE) -> DataFrame:
+                     text_col: str = "text") -> DataFrame:
     """(id, sha: array<string>) — each doc's distinct shingle SET as one row.
 
     The array form keeps the whole shingle set inside the scan projection:
@@ -77,11 +78,10 @@ def shingle_array_df(docs: DataFrame, id_col: str = "doc_id",
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     return (docs.repartition(n_parts, id_col)
             .select(F.col(id_col).alias("id"), t)
-            .select("id", _shingle_array_expr(k).alias("sha")))
+            .select("id", _shingle_array_expr(K_SHINGLE).alias("sha")))
 
 
-def shingle_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-               k: int = K_SHINGLE) -> DataFrame:
+def shingle_df(docs: DataFrame) -> DataFrame:
     """Exploded inverted-index form of :func:`shingle_array_df`: (id, sh).
 
     ``explode_outer`` on purpose: plain ``explode`` makes the optimizer infer
@@ -90,19 +90,18 @@ def shingle_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     shingle expression would be evaluated a second time, serially, on the
     unshuffled input. The array is never empty (greatest(…, 1) yields at
     least one shingle), so outer semantics are identical here."""
-    return (shingle_array_df(docs, id_col, text_col, k)
+    return (shingle_array_df(docs)
             .select("id", F.explode_outer("sha").alias("sh")))
 
 
-def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Per-doc canonical id under exact (normalized) text equality:
     (id, canon_id, group_size). canon = lowest id with identical md5 —
     deterministic, mirrors the lowest-id tie-break used by the PIP join."""
     from pyspark.sql import Window
-    fp = F.md5(normalize_col(F.col(text_col)))
+    fp = F.md5(normalize_col(F.col("text")))
     w = Window.partitionBy("fp")
-    return (docs.select(F.col(id_col).alias("id"), fp.alias("fp"))
+    return (docs.select(F.col("doc_id").alias("id"), fp.alias("fp"))
             .withColumn("canon_id", F.min("id").over(w))
             .withColumn("group_size", F.count("*").over(w).cast("long"))
             .select("id", "canon_id", "group_size"))
@@ -116,14 +115,13 @@ def _df_capped(sh: DataFrame, max_df: int | None) -> DataFrame:
 
 
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.7,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        k: int = K_SHINGLE, max_df: int | None = None) -> DataFrame:
+                        max_df: int | None = None) -> DataFrame:
     """Exact Jaccard near-dup pairs via the inverted shingle index:
     (id_a, id_b, jaccard) with id_a < id_b and jaccard >= threshold.
     Integer intersection/union counts → the double division is bit-exact."""
     # persist the RAW index too: _df_capped reads it twice (hot-shingle scan
     # + anti-join probe) and each read would otherwise rebuild the shingles
-    raw = shingle_df(docs, id_col, text_col, k).persist()
+    raw = shingle_df(docs).persist()
     sh = _df_capped(raw, max_df).persist()
     sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
@@ -140,8 +138,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.7,
 
 
 def containment_pairs(docs: DataFrame, threshold: float = 0.8,
-                      id_col: str = "doc_id", text_col: str = "text",
-                      k: int = K_SHINGLE, max_df: int | None = None,
+                      max_df: int | None = None,
                       min_common: int = 5) -> DataFrame:
     """Shingle CONTAINMENT pairs: (id_a, id_b, n_common, contained_id,
     containment) with id_a < id_b and containment >= threshold, where
@@ -152,7 +149,7 @@ def containment_pairs(docs: DataFrame, threshold: float = 0.8,
     (ties → lower id). Same inverted-index shape as
     :func:`ngram_jaccard_pairs` — the `max_df` stop-shingle cap bounds the
     candidate blowup identically, so the 100-TB story is shared."""
-    raw = shingle_df(docs, id_col, text_col, k).persist()
+    raw = shingle_df(docs).persist()
     sh = _df_capped(raw, max_df).persist()
     sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
@@ -176,16 +173,13 @@ def containment_pairs(docs: DataFrame, threshold: float = 0.8,
                     "containment"))
 
 
-def containment_sql(threshold: float = 0.8, doc_rel: str = "documents",
-                    id_col: str = "doc_id", text_col: str = "text",
-                    k: int = K_SHINGLE, max_df: int | None = None,
-                    min_common: int = 5) -> str:
+def containment_sql(max_df: int | None = None) -> str:
     if max_df is None:
         cap = "sh2 AS (SELECT * FROM sh)"
     else:
         cap = (f"hot AS (SELECT sh FROM sh GROUP BY sh HAVING COUNT(*) > {max_df}),\n"
                f"sh2 AS (SELECT * FROM sh WHERE sh NOT IN (SELECT sh FROM hot))")
-    return f"""WITH {shingle_cte_sql(doc_rel, id_col, text_col, k)},
+    return f"""WITH {shingle_cte_sql()},
 {cap},
 sizes AS (SELECT id, COUNT(*) AS n FROM sh2 GROUP BY 1),
 inter AS (SELECT a.id AS id_a, b.id AS id_b, CAST(COUNT(*) AS BIGINT) AS n_common
@@ -198,7 +192,7 @@ SELECT i.id_a, i.id_b, i.n_common,
          AS containment
 FROM inter i JOIN sizes sa ON sa.id = i.id_a JOIN sizes sb ON sb.id = i.id_b
 WHERE CAST(i.n_common AS DOUBLE) / CAST(least(sa.n, sb.n) AS DOUBLE)
-      >= {threshold} AND i.n_common >= {int(min_common)}"""
+      >= 0.8 AND i.n_common >= 5"""
 
 
 def _with_signature_cols(arr: DataFrame, n_hashes: int) -> DataFrame:
@@ -212,15 +206,13 @@ def _with_signature_cols(arr: DataFrame, n_hashes: int) -> DataFrame:
     return out.select("id", "sha", *mins)
 
 
-def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", n_hashes: int = N_HASHES,
-                       k: int = K_SHINGLE) -> DataFrame:
+def minhash_signatures(docs: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
     """(id, mh0..mh{P-1}): minimum seeded hash over the doc's shingle set.
 
     Computed entirely inside the scan projection (array transform + min) —
     the groupBy-of-exploded-shingles formulation would shuffle one row per
     shingle; this shuffles nothing."""
-    arr = shingle_array_df(docs, id_col, text_col, k)
+    arr = shingle_array_df(docs)
     return _with_signature_cols(arr, n_hashes).drop("sha")
 
 
@@ -229,14 +221,13 @@ def _band_key_col(band: int, rows: int) -> Column:
     return hash60_col(F.concat_ws("_", *parts))
 
 
-def lsh_candidate_pairs(sig: DataFrame, bands: int = LSH_BANDS,
-                        rows: int = LSH_ROWS) -> DataFrame:
+def lsh_candidate_pairs(sig: DataFrame) -> DataFrame:
     """Distinct (id_a, id_b) sharing at least one band bucket, id_a < id_b.
 
     Band keys are emitted in ONE pass over ``sig`` via posexplode (a
     union-of-selects would re-evaluate the signature subtree once per band
     per join side — 2×bands full signature computations)."""
-    keys = F.array(*[_band_key_col(b, rows) for b in range(bands)])
+    keys = F.array(*[_band_key_col(b, LSH_ROWS) for b in range(LSH_BANDS)])
     bl = sig.select("id", F.posexplode(keys).alias("band", "bk"))
     a, b = bl.alias("a"), bl.alias("b")
     return (a.join(b, ["band", "bk"])
@@ -245,10 +236,8 @@ def lsh_candidate_pairs(sig: DataFrame, bands: int = LSH_BANDS,
             .distinct())
 
 
-def minhash_near_duplicates(docs: DataFrame, threshold: float = 0.8,
-                            id_col: str = "doc_id", text_col: str = "text",
-                            n_hashes: int = N_HASHES, bands: int = LSH_BANDS,
-                            rows: int = LSH_ROWS, k: int = K_SHINGLE) -> DataFrame:
+def minhash_near_duplicates(docs: DataFrame,
+                            threshold: float = 0.8) -> DataFrame:
     """LSH candidates → exact-Jaccard verify: (id_a, id_b, jaccard >= t).
     Deterministic end-to-end (md5-seeded minhash), so the whole pipeline —
     including LSH recall behavior — is oracle-checkable.
@@ -261,9 +250,9 @@ def minhash_near_duplicates(docs: DataFrame, threshold: float = 0.8,
     # one frame feeds signatures AND both verify sides — persist it once;
     # per-doc arrays, so memory is ~the normalized corpus size
     arr = _with_signature_cols(
-        shingle_array_df(docs, id_col, text_col, k), n_hashes).persist()
+        shingle_array_df(docs), N_HASHES).persist()
     sig = arr.drop("sha")
-    cand = lsh_candidate_pairs(sig, bands, rows)
+    cand = lsh_candidate_pairs(sig)
     sets_ = arr.select("id", "sha", F.size("sha").cast("long").alias("n"))
     return (cand
             .join(sets_.withColumnsRenamed(
@@ -278,24 +267,23 @@ def minhash_near_duplicates(docs: DataFrame, threshold: float = 0.8,
             .select("id_a", "id_b", "jaccard"))
 
 
-def near_dup_clusters(docs: DataFrame, threshold: float = 0.8,
-                      id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def near_dup_clusters(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Dedup end-game: MinHash-LSH near-dup pairs → connected components →
     one canonical doc per cluster: (doc_id, component, component_size).
     Singletons are their own component. The reference's createBlocks shape
     (adjacency → CC → merge, `SpatialUnits.groovy:395-475`) applied to text."""
     from .components import connected_components
-    pairs = minhash_near_duplicates(docs, threshold, id_col, text_col)
-    verts = docs.select(F.col(id_col))
+    pairs = minhash_near_duplicates(docs, threshold)
+    verts = docs.select(F.col("doc_id"))
     return connected_components(verts, pairs.select("id_a", "id_b"),
-                                key=id_col)
+                                key="doc_id")
 
 
-def near_dup_clusters_sql(threshold: float = 0.8, doc_rel: str = "documents",
-                          id_col: str = "doc_id", text_col: str = "text") -> str:
-    pairs = minhash_lsh_sql(threshold, doc_rel, id_col, text_col)
+def near_dup_clusters_sql(threshold: float = 0.8,
+                          doc_rel: str = "documents") -> str:
+    pairs = minhash_lsh_sql(threshold, doc_rel)
     return f"""WITH RECURSIVE pairs AS ({pairs}),
-verts AS (SELECT {id_col} AS id FROM {doc_rel}),
+verts AS (SELECT doc_id AS id FROM {doc_rel}),
 sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
   UNION SELECT id_b, id_a FROM pairs
   UNION SELECT id, id FROM verts),
@@ -303,21 +291,19 @@ reach(src, dst) AS (
   SELECT id, id FROM verts
   UNION
   SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src),
-comp AS (SELECT src AS {id_col}, MIN(dst) AS component FROM reach GROUP BY src),
+comp AS (SELECT src AS doc_id, MIN(dst) AS component FROM reach GROUP BY src),
 sizes AS (SELECT component, COUNT(*) AS component_size FROM comp GROUP BY component)
-SELECT c.{id_col}, c.component, CAST(s.component_size AS BIGINT) AS component_size
+SELECT c.doc_id, c.component, CAST(s.component_size AS BIGINT) AS component_size
 FROM comp c JOIN sizes s USING (component)"""
 
 
-def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", bits: int = SIMHASH_BITS,
-                       k: int = K_SHINGLE) -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """(id, simhash): per-bit majority vote over the shingle-hash set.
 
     Per-row array expressions inside the scan projection — bit i is set iff
     more than half the shingle hashes have bit i set (identical to the ±1
     vote sum > 0 the oracle SQL uses). No explode, no shuffle."""
-    arr = shingle_array_df(docs, id_col, text_col, k)
+    arr = shingle_array_df(docs)
     hs = F.transform(F.col("sha"), lambda s: hash60_col(s))
     base = arr.select("id", hs.alias("_hs"), F.size("sha").alias("_n"))
     terms = [
@@ -325,25 +311,23 @@ def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
             F.col("_hs"),
             lambda h: F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1))
             * 2 > F.col("_n"), F.lit(1 << i)).otherwise(F.lit(0)).cast("long")
-        for i in range(bits)]
+        for i in range(SIMHASH_BITS)]
     simhash = terms[0]
     for t in terms[1:]:
         simhash = simhash + t
     return base.select("id", simhash.alias("simhash"))
 
 
-def simhash_near_duplicates(docs: DataFrame, max_hamming: int = 3,
-                            id_col: str = "doc_id", text_col: str = "text",
-                            bits: int = SIMHASH_BITS, band_bits: int = 8,
-                            k: int = K_SHINGLE) -> DataFrame:
+def simhash_near_duplicates(docs: DataFrame,
+                            max_hamming: int = 3) -> DataFrame:
     """Banded hamming join: pairs agreeing on >=1 byte-band of the simhash and
     within max_hamming overall: (id_a, id_b, hamming)."""
     # persist: one row per doc, but referenced by both sides of the band
     # self-join — see lsh_candidate_pairs for the re-evaluation trap
-    sig = simhash_signatures(docs, id_col, text_col, bits, k).persist()
-    nb = bits // band_bits
-    mask = (1 << band_bits) - 1
-    keys = F.array(*[F.shiftright(F.col("simhash"), b * band_bits)
+    sig = simhash_signatures(docs).persist()
+    nb = SIMHASH_BITS // SIMHASH_BAND_BITS
+    mask = (1 << SIMHASH_BAND_BITS) - 1
+    keys = F.array(*[F.shiftright(F.col("simhash"), b * SIMHASH_BAND_BITS)
                      .bitwiseAND(F.lit(mask)) for b in range(nb)])
     bl = sig.select("id", "simhash", F.posexplode(keys).alias("band", "bk"))
     a, b = bl.alias("a"), bl.alias("b")
@@ -357,26 +341,24 @@ def simhash_near_duplicates(docs: DataFrame, max_hamming: int = 3,
 
 
 # ------------------------------------------------------------------ SQL path
-def shingle_cte_sql(doc_rel: str = "documents", id_col: str = "doc_id",
-                    text_col: str = "text", k: int = K_SHINGLE) -> str:
+def shingle_cte_sql(doc_rel: str = "documents") -> str:
     """CTE body list producing sh(id, sh) — DuckDB mirror of shingle_df."""
-    norm = normalize_sql(text_col)
+    norm = normalize_sql("text")
     guard = (f"CASE WHEN length({norm}) > {_ORACLE_MAX_POS} THEN "
              f"error('oracle shingle bound {_ORACLE_MAX_POS} exceeded') "
              f"ELSE {norm} END")
     return (
-        f"norm AS (SELECT {id_col} AS id, {guard} AS t FROM {doc_rel}),\n"
+        f"norm AS (SELECT doc_id AS id, {guard} AS t FROM {doc_rel}),\n"
         f"series AS (SELECT i FROM generate_series(1, {_ORACLE_MAX_POS}) g(i)),\n"
-        f"sh AS (SELECT DISTINCT id, substring(t, i, {k}) AS sh\n"
-        f"       FROM norm JOIN series ON i <= greatest(length(t) - {k - 1}, 1))"
+        f"sh AS (SELECT DISTINCT id, substring(t, i, {K_SHINGLE}) AS sh\n"
+        f"       FROM norm JOIN series ON i <= greatest(length(t) - {K_SHINGLE - 1}, 1))"
     )
 
 
-def exact_duplicates_sql(doc_rel: str = "documents", id_col: str = "doc_id",
-                         text_col: str = "text") -> str:
-    norm = normalize_sql(text_col)
+def exact_duplicates_sql() -> str:
+    norm = normalize_sql("text")
     return f"""
-WITH f AS (SELECT {id_col} AS id, md5({norm}) AS fp FROM {doc_rel})
+WITH f AS (SELECT doc_id AS id, md5({norm}) AS fp FROM documents)
 SELECT id, MIN(id) OVER (PARTITION BY fp) AS canon_id,
        CAST(COUNT(*) OVER (PARTITION BY fp) AS BIGINT) AS group_size
 FROM f"""
@@ -401,15 +383,14 @@ FROM inter i JOIN sizes sa ON sa.id = i.id_a JOIN sizes sb ON sb.id = i.id_b
 WHERE CAST(i.c AS DOUBLE) / CAST(sa.n + sb.n - i.c AS DOUBLE) >= {threshold}"""
 
 
-def ngram_jaccard_sql(threshold: float = 0.7, doc_rel: str = "documents",
-                      id_col: str = "doc_id", text_col: str = "text",
-                      k: int = K_SHINGLE, max_df: int | None = None) -> str:
+def ngram_jaccard_sql(threshold: float = 0.7,
+                      max_df: int | None = None) -> str:
     if max_df is None:
         cap = "sh2 AS (SELECT * FROM sh)"
     else:
         cap = (f"hot AS (SELECT sh FROM sh GROUP BY sh HAVING COUNT(*) > {max_df}),\n"
                f"sh2 AS (SELECT * FROM sh WHERE sh NOT IN (SELECT sh FROM hot))")
-    return (f"WITH {shingle_cte_sql(doc_rel, id_col, text_col, k)},\n{cap},\n"
+    return (f"WITH {shingle_cte_sql()},\n{cap},\n"
             + _jaccard_tail_sql(threshold, "from_shingles"))
 
 
@@ -420,41 +401,37 @@ def minhash_sig_cte_sql(n_hashes: int = N_HASHES) -> str:
     return f"sig AS (SELECT id, {mins}\n  FROM sh GROUP BY id)"
 
 
-def minhash_lsh_sql(threshold: float = 0.8, doc_rel: str = "documents",
-                    id_col: str = "doc_id", text_col: str = "text",
-                    n_hashes: int = N_HASHES, bands: int = LSH_BANDS,
-                    rows: int = LSH_ROWS, k: int = K_SHINGLE) -> str:
+def minhash_lsh_sql(threshold: float = 0.8, doc_rel: str = "documents") -> str:
     band_selects = []
-    for b in range(bands):
-        parts = " , ".join(f"CAST(mh{b * rows + r} AS VARCHAR)" for r in range(rows))
+    for b in range(LSH_BANDS):
+        parts = " , ".join(f"CAST(mh{b * LSH_ROWS + r} AS VARCHAR)"
+                           for r in range(LSH_ROWS))
         key = hash60_sql(f"concat_ws('_', {parts})")
         band_selects.append(f"SELECT id, {b} AS band, {key} AS bk FROM sig")
     bl = " UNION ALL ".join(band_selects)
-    return f"""WITH {shingle_cte_sql(doc_rel, id_col, text_col, k)},
+    return f"""WITH {shingle_cte_sql(doc_rel)},
 sh2 AS (SELECT * FROM sh),
-{minhash_sig_cte_sql(n_hashes)},
+{minhash_sig_cte_sql()},
 bl AS ({bl}),
 cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
   FROM bl a JOIN bl b ON a.band = b.band AND a.bk = b.bk AND a.id < b.id),
 {_jaccard_tail_sql(threshold, "cand")}"""
 
 
-def simhash_sql(max_hamming: int = 3, doc_rel: str = "documents",
-                id_col: str = "doc_id", text_col: str = "text",
-                bits: int = SIMHASH_BITS, band_bits: int = 8,
-                k: int = K_SHINGLE) -> str:
+def simhash_sql(max_hamming: int = 3) -> str:
     h = hash60_sql("sh")
     votes = ",\n       ".join(
-        f"SUM((({h} >> {i}) & 1) * 2 - 1) AS v{i}" for i in range(bits))
+        f"SUM((({h} >> {i}) & 1) * 2 - 1) AS v{i}"
+        for i in range(SIMHASH_BITS))
     simhash = " + ".join(
         f"(CASE WHEN v{i} > 0 THEN CAST({1 << i} AS BIGINT) ELSE 0 END)"
-        for i in range(bits))
-    nb = bits // band_bits
-    mask = (1 << band_bits) - 1
+        for i in range(SIMHASH_BITS))
+    nb = SIMHASH_BITS // SIMHASH_BAND_BITS
+    mask = (1 << SIMHASH_BAND_BITS) - 1
     band_selects = " UNION ALL ".join(
-        f"SELECT id, simhash, {b} AS band, (simhash >> {b * band_bits}) & {mask} AS bk FROM sim"
+        f"SELECT id, simhash, {b} AS band, (simhash >> {b * SIMHASH_BAND_BITS}) & {mask} AS bk FROM sim"
         for b in range(nb))
-    return f"""WITH {shingle_cte_sql(doc_rel, id_col, text_col, k)},
+    return f"""WITH {shingle_cte_sql()},
 votes AS (SELECT id, {votes}\n  FROM sh GROUP BY id),
 sim AS (SELECT id, {simhash} AS simhash FROM votes),
 bl AS ({band_selects}),
@@ -464,13 +441,15 @@ pairs AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
 SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= {max_hamming}"""
 
 
+RECALL_MAX_DF = 20
+RECALL_SAMPLE_MOD = 2
+
+
 # ----------------------------------------------------- LSH recall audit
-def lsh_recall_report(docs: DataFrame, threshold: float = 0.8,
-                      sample_mod: int = 2, max_df: int | None = 20,
-                      id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def lsh_recall_report(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Measured LSH banding recall — the dedup analogue of
     similarity's ``ann_recall_report`` ("measure, don't guess"): on a
-    deterministic ``doc_id % sample_mod`` slice, compare the MinHash-LSH
+    deterministic ``doc_id % RECALL_SAMPLE_MOD`` slice, compare the MinHash-LSH
     candidate pairs against the exact (stop-shingle-capped) Jaccard pairs
     the inverted index produces, and report recall / candidate efficiency
     as exact integer millis.
@@ -484,14 +463,13 @@ def lsh_recall_report(docs: DataFrame, threshold: float = 0.8,
     index costs Σ df(sh)² join rows, so the full-corpus truth is exactly
     the thing LSH exists to avoid; sampling by id keeps pair semantics
     (both endpoints in-sample) and bounds cost at any corpus size. Truth
-    uses the same ``max_df`` stop-shingle cap as the shipping
+    uses the same ``max_df`` stop-shingle cap (``RECALL_MAX_DF``) as the shipping
     ngram-Jaccard operator, so this audits the BANDING against the
     engine's own exact-pair definition."""
-    sampled = docs.where(F.col(id_col) % sample_mod == 0)
-    truth = (ngram_jaccard_pairs(sampled, threshold, id_col, text_col,
-                                 max_df=max_df)
+    sampled = docs.where(F.col("doc_id") % RECALL_SAMPLE_MOD == 0)
+    truth = (ngram_jaccard_pairs(sampled, threshold, max_df=RECALL_MAX_DF)
              .select("id_a", "id_b", F.lit(1).alias("in_t")))
-    cand = (lsh_candidate_pairs(minhash_signatures(sampled, id_col, text_col))
+    cand = (lsh_candidate_pairs(minhash_signatures(sampled))
             .select("id_a", "id_b", F.lit(1).alias("in_c")))
     both = truth.join(cand, ["id_a", "id_b"], "full_outer")
     return (both.agg(
@@ -509,26 +487,21 @@ def lsh_recall_report(docs: DataFrame, threshold: float = 0.8,
                 .alias("cand_efficiency_millis")))
 
 
-def lsh_recall_report_sql(threshold: float = 0.8, sample_mod: int = 2,
-                          max_df: int | None = 20, doc_rel: str = "documents",
-                          id_col: str = "doc_id", text_col: str = "text",
-                          n_hashes: int = N_HASHES, bands: int = LSH_BANDS,
-                          rows: int = LSH_ROWS, k: int = K_SHINGLE) -> str:
+def lsh_recall_report_sql(threshold: float = 0.8,
+                          doc_rel: str = "documents") -> str:
     sampled = (f"(SELECT * FROM {doc_rel} "
-               f"WHERE {id_col} % {sample_mod} = 0)")
-    if max_df is None:
-        cap = "sh2 AS (SELECT * FROM sh)"
-    else:
-        cap = (f"hot AS (SELECT sh FROM sh GROUP BY sh HAVING COUNT(*) > {max_df}),\n"
-               f"sh2 AS (SELECT * FROM sh WHERE sh NOT IN (SELECT sh FROM hot))")
+               f"WHERE doc_id % {RECALL_SAMPLE_MOD} = 0)")
+    cap = ("hot AS (SELECT sh FROM sh GROUP BY sh HAVING COUNT(*) > "
+           f"{RECALL_MAX_DF}),\n"
+           "sh2 AS (SELECT * FROM sh WHERE sh NOT IN (SELECT sh FROM hot))")
     band_selects = []
-    for b in range(bands):
-        parts = " , ".join(f"CAST(mh{b * rows + r} AS VARCHAR)"
-                           for r in range(rows))
+    for b in range(LSH_BANDS):
+        parts = " , ".join(f"CAST(mh{b * LSH_ROWS + r} AS VARCHAR)"
+                           for r in range(LSH_ROWS))
         key = hash60_sql(f"concat_ws('_', {parts})")
         band_selects.append(f"SELECT id, {b} AS band, {key} AS bk FROM sig")
     bl = " UNION ALL ".join(band_selects)
-    return f"""WITH {shingle_cte_sql(sampled, id_col, text_col, k)},
+    return f"""WITH {shingle_cte_sql(sampled)},
 {cap},
 sizes AS (SELECT id, COUNT(*) AS n FROM sh2 GROUP BY 1),
 inter AS (SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS c
@@ -536,7 +509,7 @@ inter AS (SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS c
 truth AS (SELECT i.id_a, i.id_b
   FROM inter i JOIN sizes sa ON sa.id = i.id_a JOIN sizes sb ON sb.id = i.id_b
   WHERE CAST(i.c AS DOUBLE) / CAST(sa.n + sb.n - i.c AS DOUBLE) >= {threshold}),
-{minhash_sig_cte_sql(n_hashes)},
+{minhash_sig_cte_sql()},
 bl AS ({bl}),
 cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
   FROM bl a JOIN bl b ON a.band = b.band AND a.bk = b.bk AND a.id < b.id),
@@ -557,20 +530,17 @@ SELECT n_docs, n_truth, n_cand, n_hit,
 FROM agg, nd"""
 
 
+DELTA_MOD = 4
+
+
 # ----------------------------------------------- incremental (delta) dedup
-def incremental_minhash_delta(docs: DataFrame, delta_mod: int = 4,
-                              threshold: float = 0.8,
-                              id_col: str = "doc_id",
-                              text_col: str = "text",
-                              n_hashes: int = N_HASHES,
-                              bands: int = LSH_BANDS,
-                              rows: int = LSH_ROWS,
-                              k: int = K_SHINGLE) -> DataFrame:
+def incremental_minhash_delta(docs: DataFrame,
+                              threshold: float = 0.8) -> DataFrame:
     """Daily-ingest dedup: near-dup pairs INVOLVING the new batch only —
     (id_a, id_b, jaccard, pair_kind ∈ delta_vs_base / delta_vs_delta),
     id_a < id_b, never re-verifying base×base.
 
-    The batch is the deterministic ``id % delta_mod == 0`` slice (standing
+    The batch is the deterministic ``id % DELTA_MOD == 0`` slice (standing
     in for "today's crawl"); everything else is the existing corpus whose
     band index a real deployment has ON DISK (sources/bucketing.py — the
     same store-side shape as the streaming dedup's bucketed fingerprint
@@ -582,11 +552,11 @@ def incremental_minhash_delta(docs: DataFrame, delta_mod: int = 4,
     FULL pair set from scratch and filters to delta-involving pairs, so
     delta-join ≡ full-recompute is what the hash gate proves."""
     arr = _with_signature_cols(
-        shingle_array_df(docs, id_col, text_col, k), n_hashes).persist()
+        shingle_array_df(docs), N_HASHES).persist()
     sig = arr.drop("sha")
-    keys = F.array(*[_band_key_col(b, rows) for b in range(bands)])
+    keys = F.array(*[_band_key_col(b, LSH_ROWS) for b in range(LSH_BANDS)])
     bl = sig.select("id", F.posexplode(keys).alias("band", "bk")).persist()
-    is_delta = F.col("id") % delta_mod == 0
+    is_delta = F.col("id") % DELTA_MOD == 0
     dl, al = bl.where(is_delta).alias("d"), bl.alias("a")
     cand = (dl.join(al, ["band", "bk"])
             .where(F.col("d.id") != F.col("a.id"))
@@ -606,36 +576,26 @@ def incremental_minhash_delta(docs: DataFrame, delta_mod: int = 4,
                         .cast("double"))
             .where(F.col("jaccard") >= F.lit(threshold))
             .select("id_a", "id_b", "jaccard",
-                    F.when((F.col("id_a") % delta_mod == 0)
-                           & (F.col("id_b") % delta_mod == 0),
+                    F.when((F.col("id_a") % DELTA_MOD == 0)
+                           & (F.col("id_b") % DELTA_MOD == 0),
                            F.lit("delta_vs_delta"))
                     .otherwise(F.lit("delta_vs_base")).alias("pair_kind")))
 
 
-def incremental_minhash_delta_sql(delta_mod: int = 4, threshold: float = 0.8,
-                                  doc_rel: str = "documents",
-                                  id_col: str = "doc_id",
-                                  text_col: str = "text",
-                                  n_hashes: int = N_HASHES,
-                                  bands: int = LSH_BANDS,
-                                  rows: int = LSH_ROWS,
-                                  k: int = K_SHINGLE) -> str:
+def incremental_minhash_delta_sql(threshold: float = 0.8) -> str:
     """Oracle = the FULL minhash-LSH recompute, filtered to pairs with a
     delta-side member — deliberately NOT the incremental algorithm."""
-    full = minhash_lsh_sql(threshold, doc_rel, id_col, text_col,
-                           n_hashes, bands, rows, k)
+    full = minhash_lsh_sql(threshold)
     return f"""WITH full_pairs AS ({full})
 SELECT id_a, id_b, jaccard,
-       CASE WHEN id_a % {delta_mod} = 0 AND id_b % {delta_mod} = 0
+       CASE WHEN id_a % {DELTA_MOD} = 0 AND id_b % {DELTA_MOD} = 0
             THEN 'delta_vs_delta' ELSE 'delta_vs_base' END AS pair_kind
 FROM full_pairs
-WHERE id_a % {delta_mod} = 0 OR id_b % {delta_mod} = 0"""
+WHERE id_a % {DELTA_MOD} = 0 OR id_b % {DELTA_MOD} = 0"""
 
 
 # --------------------------------------------------- cluster cohesion audit
-def cluster_cohesion(docs: DataFrame, threshold: float = 0.8,
-                     id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def cluster_cohesion(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Near-dup cluster quality audit: per multi-doc cluster
     (component, component_size, n_pairs, min_jaccard, max_jaccard) — the
     check that catches CHAINING, transitive-closure clustering's failure
@@ -649,12 +609,11 @@ def cluster_cohesion(docs: DataFrame, threshold: float = 0.8,
     components; one extra equi-join (pair → cluster of its left end — both
     ends share a cluster by construction) + one groupBy(component)."""
     from .components import connected_components
-    pairs = minhash_near_duplicates(docs, threshold, id_col,
-                                    text_col).persist()
-    verts = docs.select(F.col(id_col))
+    pairs = minhash_near_duplicates(docs, threshold).persist()
+    verts = docs.select(F.col("doc_id"))
     comp = connected_components(verts, pairs.select("id_a", "id_b"),
-                                key=id_col)
-    j = pairs.join(comp.select(F.col(id_col).alias("id_a"),
+                                key="doc_id")
+    j = pairs.join(comp.select(F.col("doc_id").alias("id_a"),
                                "component", "component_size"), "id_a")
     return (j.groupBy("component", "component_size")
             .agg(F.count("*").cast("long").alias("n_pairs"),
@@ -666,12 +625,11 @@ def cluster_cohesion(docs: DataFrame, threshold: float = 0.8,
                     "n_pairs", "min_jaccard", "max_jaccard"))
 
 
-def cluster_cohesion_sql(threshold: float = 0.8, doc_rel: str = "documents",
-                         id_col: str = "doc_id",
-                         text_col: str = "text") -> str:
-    pairs = minhash_lsh_sql(threshold, doc_rel, id_col, text_col)
+def cluster_cohesion_sql(threshold: float = 0.8,
+                         doc_rel: str = "documents") -> str:
+    pairs = minhash_lsh_sql(threshold, doc_rel)
     return f"""WITH RECURSIVE pairs AS ({pairs}),
-verts AS (SELECT {id_col} AS id FROM {doc_rel}),
+verts AS (SELECT doc_id AS id FROM {doc_rel}),
 sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
   UNION SELECT id_b, id_a FROM pairs
   UNION SELECT id, id FROM verts),

@@ -40,12 +40,11 @@ _NTOK_SQL = ("CASE WHEN {t} IS NULL OR {t} = '' THEN CAST(0 AS BIGINT)"
              " ELSE CAST(len(string_split({t}, ' ')) AS BIGINT) END")
 
 
-def dedup_funnel_report(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def dedup_funnel_report(docs: DataFrame) -> DataFrame:
     """(stage_ord, stage, n_docs_kept, n_tokens_kept,
     tokens_removed_millis) for raw / exact / segment / span."""
-    base = (docs.select(F.col(id_col).alias("id"),
-                        normalize_col(F.col(text_col)).alias("_t"))
+    base = (docs.select(F.col("doc_id").alias("id"),
+                        normalize_col(F.col("text")).alias("_t"))
             .withColumn("_nt", F.expr(_NTOK.format(t="_t"))))
     raw = base.agg(F.count("*").cast("long").alias("d"),
                    F.sum("_nt").cast("long").alias("t"))
@@ -55,12 +54,12 @@ def dedup_funnel_report(docs: DataFrame, id_col: str = "doc_id",
              .where(F.col("_rn") == 1)
              .agg(F.count("*").cast("long").alias("d"),
                   F.sum("_nt").cast("long").alias("t")))
-    seg = (segment_dedup(docs, id_col=id_col, text_col=text_col)
+    seg = (segment_dedup(docs)
            .withColumn("_kt", F.expr(_NTOK.format(t="dedup_text")))
            .where(F.col("_kt") > 0)
            .agg(F.count("*").cast("long").alias("d"),
                 F.sum("_kt").cast("long").alias("t")))
-    span = (duplicate_spans(docs, id_col=id_col, text_col=text_col)
+    span = (duplicate_spans(docs)
             .withColumn("_kt", F.expr(_NTOK.format(t="trimmed_text")))
             .where(F.col("_kt") > 0)
             .agg(F.count("*").cast("long").alias("d"),
@@ -85,22 +84,18 @@ def dedup_funnel_report(docs: DataFrame, id_col: str = "doc_id",
     return out
 
 
-def dedup_funnel_report_sql(doc_rel: str = "documents",
-                            id_col: str = "doc_id",
-                            text_col: str = "text") -> str:
+def dedup_funnel_report_sql() -> str:
     """DuckDB dual of :func:`dedup_funnel_report` — segment/span stages
     reuse the existing operator duals verbatim as subqueries."""
-    norm = normalize_sql(text_col)
+    norm = normalize_sql("text")
     nt = _NTOK_SQL.format(t="_t")
     ktseg = _NTOK_SQL.format(t="dedup_text")
     ktspan = _NTOK_SQL.format(t="trimmed_text")
-    seg = segment_dedup_sql(doc_rel=doc_rel, id_col=id_col,
-                            text_col=text_col)
-    span = duplicate_spans_sql(doc_rel=doc_rel, id_col=id_col,
-                               text_col=text_col)
+    seg = segment_dedup_sql()
+    span = duplicate_spans_sql()
     return f"""
 WITH base AS (
-  SELECT {id_col} AS id, {norm} AS _t FROM {doc_rel}),
+  SELECT doc_id AS id, {norm} AS _t FROM documents),
 nbase AS (SELECT id, _t, {nt} AS _nt FROM base),
 raw AS (SELECT CAST(COUNT(*) AS BIGINT) AS d,
                CAST(SUM(_nt) AS BIGINT) AS t FROM nbase),

@@ -53,17 +53,16 @@ def _bits_sql(tot: str, cnt: str) -> str:
             f"// ({cnt} + 1))) - 1 AS BIGINT)")
 
 
-def token_drift_report(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
+def token_drift_report(docs: DataFrame,
                        n_batches: int = N_BATCHES) -> DataFrame:
     """All ordered batch pairs: (batch_a, batch_b, n_tokens_a, n_tokens_b,
     drift_bits, drift_millibits_per_token)."""
     if int(n_batches) < 2:
         raise ValueError("n_batches must be >= 2 (drift needs a pair)")
     words = (docs
-             .withColumn("_norm", normalize_col(F.col(text_col)))
+             .withColumn("_norm", normalize_col(F.col("text")))
              .where(F.col("_norm") != "")
-             .select((F.col(id_col) % n_batches).cast("long").alias("batch"),
+             .select((F.col("doc_id") % n_batches).cast("long").alias("batch"),
                      F.explode(F.split("_norm", " ")).alias("word"))
              .withColumn("bucket", F.expr(_BUCKET).cast("long")))
     dim = (words.groupBy("bucket")
@@ -98,16 +97,14 @@ def token_drift_report(docs: DataFrame, id_col: str = "doc_id",
                     " AS drift_millibits_per_token"))
 
 
-def token_drift_report_sql(doc_rel: str = "documents",
-                           id_col: str = "doc_id", text_col: str = "text",
-                           n_batches: int = N_BATCHES) -> str:
+def token_drift_report_sql(n_batches: int = N_BATCHES) -> str:
     """DuckDB dual of :func:`token_drift_report`."""
     from ..functions.hashing import hash60_sql
 
     if int(n_batches) < 2:
         raise ValueError("n_batches must be >= 2 (drift needs a pair)")
 
-    norm = normalize_sql(text_col)
+    norm = normalize_sql("text")
     bucket = _BUCKET_SQL_T.format(h=hash60_sql("u.word"))
     pairs = [(a, b) for a in range(n_batches) for b in range(n_batches)
              if a != b]
@@ -128,7 +125,7 @@ def token_drift_report_sql(doc_rel: str = "documents",
         f" AS batch_b, n{a} AS n_tokens_a, n{b} AS n_tokens_b,"
         f" d{a}{b} AS drift_bits FROM agg" for a, b in pairs)
     return f"""
-WITH base AS (SELECT {id_col} AS id, {norm} AS t FROM {doc_rel}),
+WITH base AS (SELECT doc_id AS id, {norm} AS t FROM documents),
 words AS (SELECT CAST(id % {n_batches} AS BIGINT) AS batch,
                  {bucket} AS bucket
           FROM base, UNNEST(string_split(t, ' ')) AS u(word)

@@ -86,9 +86,7 @@ _BITS = (f"CAST(length(bin((({{tot}} + {NB}) * {1 << SURP_SHIFT}) "
          f"div ({{cnt}} + 1))) - 1 AS BIGINT)")
 
 
-def dsir_importance(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text",
-                    bucket_hash: str = "md5") -> DataFrame:
+def dsir_importance(docs: DataFrame, bucket_hash: str = "md5") -> DataFrame:
     """Per-doc DSIR importance: (doc_id, is_target, n_grams,
     importance_bits, selected). Docs with no grams are absent (their bag is
     empty — nothing to score, same as the oracle).
@@ -99,9 +97,9 @@ def dsir_importance(docs: DataFrame, id_col: str = "doc_id",
         raise ValueError("bucket_hash must be 'md5' or 'xxhash64'")
     bucket = _BUCKET if bucket_hash == "md5" else _BUCKET_XX
     grams = (docs
-             .withColumn("_norm", normalize_col(F.col(text_col)))
-             .select(F.col(id_col),
-                     (F.col(id_col) % TARGET_MOD == 0).alias("is_target"),
+             .withColumn("_norm", normalize_col(F.col("text")))
+             .select(F.col("doc_id"),
+                     (F.col("doc_id") % TARGET_MOD == 0).alias("is_target"),
                      F.explode(F.expr(_grams_expr("_norm"))).alias("gram"))
              .withColumn("bucket", F.expr(bucket).cast("long")))
     # per-bucket occurrence counts for both distributions in one pass;
@@ -119,11 +117,11 @@ def dsir_importance(docs: DataFrame, id_col: str = "doc_id",
                        _BITS.format(tot="tt", cnt="ct") + " AS bits_t",
                        _BITS.format(tot="tr", cnt="cr") + " AS bits_r"))
     return (grams.join(F.broadcast(dim), "bucket")
-            .groupBy(id_col, "is_target")
+            .groupBy("doc_id", "is_target")
             .agg(F.count("*").alias("n_grams"),
                  F.sum(F.col("bits_r") - F.col("bits_t"))
                  .alias("importance_bits"))
-            .select(id_col, F.col("is_target").cast("int").alias("is_target"),
+            .select("doc_id", F.col("is_target").cast("int").alias("is_target"),
                     "n_grams",
                     F.col("importance_bits").cast("long")
                     .alias("importance_bits"),
@@ -131,19 +129,18 @@ def dsir_importance(docs: DataFrame, id_col: str = "doc_id",
                     .alias("selected")))
 
 
-def dsir_importance_sql(rel: str = "documents", id_col: str = "doc_id",
-                        text_col: str = "text") -> str:
+def dsir_importance_sql(rel: str = "documents") -> str:
     """DuckDB dual of :func:`dsir_importance`."""
     bits_t = (f"CAST(length(bin(((tt + {NB}) * {1 << SURP_SHIFT}) "
               f"// (ct + 1))) - 1 AS BIGINT)")
     bits_r = (f"CAST(length(bin(((tr + {NB}) * {1 << SURP_SHIFT}) "
               f"// (cr + 1))) - 1 AS BIGINT)")
     return f"""WITH grams AS (
-  SELECT {id_col}, ({id_col} % {TARGET_MOD} = 0) AS is_target,
+  SELECT doc_id, (doc_id % {TARGET_MOD} = 0) AS is_target,
          unnest({_grams_sql(f"normed.n")}) AS gram
-  FROM (SELECT {id_col}, {normalize_sql(text_col)} AS n FROM {rel}) normed),
+  FROM (SELECT doc_id, {normalize_sql('text')} AS n FROM {rel}) normed),
 bucketed AS (
-  SELECT {id_col}, is_target,
+  SELECT doc_id, is_target,
          {hash60_sql("gram")} % {NB} AS bucket
   FROM grams),
 dim AS (
@@ -155,10 +152,10 @@ dim AS (
   FROM bucketed GROUP BY bucket),
 weights AS (
   SELECT bucket, {bits_t} AS bits_t, {bits_r} AS bits_r FROM dim)
-SELECT b.{id_col},
+SELECT b.doc_id,
        CAST(b.is_target AS INT) AS is_target,
        CAST(COUNT(*) AS BIGINT) AS n_grams,
        CAST(SUM(w.bits_r - w.bits_t) AS BIGINT) AS importance_bits,
        CAST(SUM(w.bits_r - w.bits_t) >= 0 AS INT) AS selected
 FROM bucketed b JOIN weights w USING (bucket)
-GROUP BY b.{id_col}, b.is_target"""
+GROUP BY b.doc_id, b.is_target"""

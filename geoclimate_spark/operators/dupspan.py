@@ -117,9 +117,7 @@ def _coverage_trim(base: DataFrame, marked: DataFrame, n: int, id_col: str,
                 F.coalesce(F.col("_tt"), F.lit("")).alias(text_name)))
 
 
-def duplicate_spans(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text",
-                    n: int = SPAN_TOKENS) -> DataFrame:
+def duplicate_spans(docs: DataFrame, n: int = SPAN_TOKENS) -> DataFrame:
     """(doc_id, n_tokens, n_windows, n_dup_windows, dup_tokens, dup_fraction,
     trimmed_text): corpus-wide exact duplicate-span coverage and trim.
 
@@ -132,18 +130,17 @@ def duplicate_spans(docs: DataFrame, id_col: str = "doc_id",
     the window text — the gram column is projected away before either
     exchange (plan-guarded in tests/test_dupspan.py).
     """
-    base = _base(docs, id_col, text_col)
+    base = _base(docs, "doc_id", "text")
     wh = (_windows(base, n)
           .select("id", "pos", hash60_col(F.col("gram")).alias("gh")))
     dup = (wh.groupBy("gh").agg(F.count("*").alias("_c"))
            .where(F.col("_c") >= 2).select("gh"))
     dwin = wh.join(dup, "gh").select("id", "pos")
-    return _coverage_trim(base, dwin, n, id_col, "n_dup_windows",
+    return _coverage_trim(base, dwin, n, "doc_id", "n_dup_windows",
                           "dup_tokens", "dup_fraction", "trimmed_text")
 
 
 def decontaminate_trim(docs: DataFrame, bench_quota: int = 10,
-                       id_col: str = "doc_id", text_col: str = "text",
                        n: int = CONTAM_TOKENS) -> DataFrame:
     """(doc_id, n_tokens, n_windows, n_hit_windows, contam_tokens,
     contam_fraction, clean_text): benchmark decontamination by span REMOVAL
@@ -163,7 +160,7 @@ def decontaminate_trim(docs: DataFrame, bench_quota: int = 10,
     bytes), and only hit windows enter the coverage union. The trim tail is
     shared with :func:`duplicate_spans`.
     """
-    base = _base(docs, id_col, text_col)
+    base = _base(docs, "doc_id", "text")
     wins = _windows(base, n)
     rank_w = Window.orderBy(hash60_col(F.col("id").cast("string")), "id")
     bench_ids = (base.select("id").withColumn("_r", F.row_number().over(rank_w))
@@ -175,7 +172,7 @@ def decontaminate_trim(docs: DataFrame, bench_quota: int = 10,
     hit = (wh.join(F.broadcast(bench_ids), "id", "left_anti")
            .join(F.broadcast(bench_g), "gh", "left_semi")
            .select("id", "pos"))
-    return _coverage_trim(train_base, hit, n, id_col, "n_hit_windows",
+    return _coverage_trim(train_base, hit, n, "doc_id", "n_hit_windows",
                           "contam_tokens", "contam_fraction", "clean_text")
 
 
@@ -224,34 +221,30 @@ LEFT JOIN covs USING (id)
 LEFT JOIN trimmed USING (id)"""
 
 
-def duplicate_spans_sql(doc_rel: str = "documents", id_col: str = "doc_id",
-                        text_col: str = "text", n: int = SPAN_TOKENS) -> str:
+def duplicate_spans_sql() -> str:
     """DuckDB dual of :func:`duplicate_spans` — same hash60 window key as
     the engine, so collision behavior (if any) is identical."""
     h_g = hash60_sql("gram")
     return f"""
-WITH {_base_wins_ctes_sql(doc_rel, id_col, text_col, n)},
+WITH {_base_wins_ctes_sql('documents', 'doc_id', 'text', SPAN_TOKENS)},
 wh AS (SELECT id, pos, {h_g} AS gh FROM wins),
 dup AS (SELECT gh FROM wh GROUP BY gh HAVING COUNT(*) >= 2),
 dwin AS (SELECT id, pos FROM wh JOIN dup USING (gh)),
-{_trim_tail_sql(n, id_col, "base", "dwin", "n_dup_windows",
+{_trim_tail_sql(SPAN_TOKENS, 'doc_id', "base", "dwin", "n_dup_windows",
                 "dup_tokens", "dup_fraction", "trimmed_text")}"""
 
 
-def decontaminate_trim_sql(doc_rel: str = "documents",
-                           bench_quota: int = 10, id_col: str = "doc_id",
-                           text_col: str = "text",
-                           n: int = CONTAM_TOKENS) -> str:
+def decontaminate_trim_sql() -> str:
     """DuckDB dual of :func:`decontaminate_trim` — the benchmark carve and
     the gram hash are the same hash60 expressions as contamination.py, so
     engine and oracle agree bit-for-bit even in the collision case."""
     h_id = hash60_sql("CAST(id AS VARCHAR)")
     h_g = hash60_sql("gram")
     return f"""
-WITH {_base_wins_ctes_sql(doc_rel, id_col, text_col, n)},
+WITH {_base_wins_ctes_sql('documents', 'doc_id', 'text', CONTAM_TOKENS)},
 ranked AS (SELECT id, ROW_NUMBER() OVER (ORDER BY {h_id}, id) AS r
            FROM base),
-bench_ids AS (SELECT id FROM ranked WHERE r <= {bench_quota}),
+bench_ids AS (SELECT id FROM ranked WHERE r <= 10),
 wh AS (SELECT id, pos, {h_g} AS gh FROM wins),
 bench_g AS (SELECT DISTINCT gh FROM wh
             WHERE id IN (SELECT id FROM bench_ids)),
@@ -260,14 +253,13 @@ train_base AS (SELECT * FROM base
 hit AS (SELECT id, pos FROM wh
         WHERE id NOT IN (SELECT id FROM bench_ids)
           AND gh IN (SELECT gh FROM bench_g)),
-{_trim_tail_sql(n, id_col, "train_base", "hit", "n_hit_windows",
+{_trim_tail_sql(CONTAM_TOKENS, 'doc_id', "train_base", "hit", "n_hit_windows",
                 "contam_tokens", "contam_fraction", "clean_text")}"""
 
 
 # ------------------------------------------------- span-dedup recall report
 def span_dedup_recall_report(docs: DataFrame, n: int = SPAN_TOKENS,
-                             k: int | None = None, id_col: str = "doc_id",
-                             text_col: str = "text") -> DataFrame:
+                             k: int | None = None) -> DataFrame:
     """How much of the EXACT duplicated-span coverage does segment-level
     dedup actually catch? The measured-not-asserted companion of
     ``dedup_recall_report``/``ann_recall_report`` for the substring-dedup
@@ -287,7 +279,7 @@ def span_dedup_recall_report(docs: DataFrame, n: int = SPAN_TOKENS,
 
     if k is None:
         k = SEG_TOKENS
-    base = _base(docs, id_col, text_col)
+    base = _base(docs, "doc_id", "text")
     wh = (_windows(base, n)
           .select("id", "pos", hash60_col(F.col("gram")).alias("gh")))
     dupg = (wh.groupBy("gh").agg(F.count("*").alias("_c"))
@@ -301,7 +293,7 @@ def span_dedup_recall_report(docs: DataFrame, n: int = SPAN_TOKENS,
     # zero-token docs normalize to '' whose segment list is [''] — exclude
     # the empty segment so token-less docs never contribute phantom
     # "duplicated tokens" (position 0 of a doc with no tokens)
-    seg = (_segments(docs, id_col, text_col, k)
+    seg = (_segments(docs, "doc_id", "text", k)
            .where(F.col("seg") != "")
            .select("id", "pos", hash60_col(F.col("seg")).alias("sh"),
                    F.size(F.split("seg", " ")).alias("_sl")))
@@ -326,37 +318,32 @@ def span_dedup_recall_report(docs: DataFrame, n: int = SPAN_TOKENS,
                     .alias("precision_millis")))
 
 
-def span_dedup_recall_report_sql(doc_rel: str = "documents",
-                                 n: int = SPAN_TOKENS, k: int | None = None,
-                                 id_col: str = "doc_id",
-                                 text_col: str = "text") -> str:
+def span_dedup_recall_report_sql() -> str:
     """DuckDB dual of :func:`span_dedup_recall_report` (same hash60 keys)."""
     from .segdedup import SEG_TOKENS
 
-    if k is None:
-        k = SEG_TOKENS
-    norm = normalize_sql(text_col)
+    norm = normalize_sql("text")
     h_g = hash60_sql("gram")
     h_s = hash60_sql("seg")
     return f"""
-WITH {_base_wins_ctes_sql(doc_rel, id_col, text_col, n)},
+WITH {_base_wins_ctes_sql('documents', 'doc_id', 'text', SPAN_TOKENS)},
 wh AS (SELECT id, pos, {h_g} AS gh FROM wins),
 dupg AS (SELECT gh FROM wh GROUP BY gh HAVING COUNT(*) >= 2),
 exact_cov AS (SELECT DISTINCT id, p
   FROM (SELECT id, pos FROM wh JOIN dupg USING (gh)) d,
-       UNNEST(generate_series(pos, pos + {n - 1})) AS c(p)),
-toks AS (SELECT {id_col} AS id, string_split({norm}, ' ') AS stk
-         FROM {doc_rel}),
+       UNNEST(generate_series(pos, pos + {SPAN_TOKENS - 1})) AS c(p)),
+toks AS (SELECT doc_id AS id, string_split({norm}, ' ') AS stk
+         FROM documents),
 segs AS (SELECT id, s - 1 AS pos,
-                array_to_string(stk[(s - 1) * {k} + 1 : s * {k}], ' ') AS seg
-  FROM toks, UNNEST(generate_series(1, (len(stk) + {k - 1}) // {k})) AS g(s)),
+                array_to_string(stk[(s - 1) * {SEG_TOKENS} + 1 : s * {SEG_TOKENS}], ' ') AS seg
+  FROM toks, UNNEST(generate_series(1, (len(stk) + {SEG_TOKENS - 1}) // {SEG_TOKENS})) AS g(s)),
 segh AS (SELECT id, pos, {h_s} AS sh,
                 len(string_split(seg, ' ')) AS sl FROM segs
          WHERE seg <> ''),
 dups AS (SELECT sh FROM segh GROUP BY sh HAVING COUNT(*) >= 2),
 seg_cov AS (SELECT id, p
   FROM (SELECT id, pos, sl FROM segh JOIN dups USING (sh)) d,
-       UNNEST(generate_series(pos * {k}, pos * {k} + sl - 1)) AS c(p)),
+       UNNEST(generate_series(pos * {SEG_TOKENS}, pos * {SEG_TOKENS} + sl - 1)) AS c(p)),
 ex AS (SELECT CAST(COUNT(*) AS BIGINT) AS exact_dup_tokens FROM exact_cov),
 sg AS (SELECT CAST(COUNT(*) AS BIGINT) AS seg_dup_tokens FROM seg_cov),
 ct AS (SELECT CAST(COUNT(*) AS BIGINT) AS caught_tokens
@@ -376,9 +363,7 @@ SPECTRUM_LENGTHS = (4, 8, 16, 32)
 
 
 def duplication_spectrum(docs: DataFrame,
-                         lengths: tuple[int, ...] = SPECTRUM_LENGTHS,
-                         id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
+                         lengths: tuple[int, ...] = SPECTRUM_LENGTHS) -> DataFrame:
     """Corpus duplication profile across window lengths: one row per n ∈
     ``lengths`` with (window_len, total_windows, dup_windows, dup_docs,
     dup_window_millis) — how much of the corpus is duplicated at 4-token
@@ -393,7 +378,7 @@ def duplication_spectrum(docs: DataFrame,
     a handful); the per-length stats aggregate to ONE row before the
     union, so the result assembly is free. The shared token array is
     computed once and persisted."""
-    base = _base(docs, id_col, text_col).persist()
+    base = _base(docs, "doc_id", "text").persist()
     outs = []
     for n in lengths:
         wh = (_windows(base, n)
@@ -420,14 +405,12 @@ def duplication_spectrum(docs: DataFrame,
 
 
 def duplication_spectrum_sql(lengths: tuple[int, ...] = SPECTRUM_LENGTHS,
-                             doc_rel: str = "documents",
-                             id_col: str = "doc_id",
-                             text_col: str = "text") -> str:
+                             doc_rel: str = "documents") -> str:
     parts = []
     h_g = hash60_sql("gram")
     for n in lengths:
         parts.append(f"""(
-WITH {_base_wins_ctes_sql(doc_rel, id_col, text_col, n)},
+WITH {_base_wins_ctes_sql(doc_rel, 'doc_id', 'text', n)},
 wh AS (SELECT id, {h_g} AS gh FROM wins),
 dup AS (SELECT gh FROM wh GROUP BY gh HAVING COUNT(*) >= 2),
 dw AS (SELECT CAST(COUNT(*) AS BIGINT) AS dup_windows,

@@ -34,32 +34,26 @@ from pyspark.sql import functions as F
 from .dedup import near_dup_clusters, near_dup_clusters_sql
 
 
-def dup_weighted_budget(docs: DataFrame, threshold: float = 0.8,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        lang_col: str = "lang",
-                        size_col: str = "n_chars") -> DataFrame:
+def dup_weighted_budget(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Per-language token budget after inverse-cluster-size weighting:
     (lang, n_docs, n_clusters, raw_chars, eff_chars), all exact int64."""
-    cc = near_dup_clusters(docs, threshold, id_col, text_col)
-    j = docs.select(id_col, lang_col, size_col).join(cc, id_col)
-    return (j.groupBy(lang_col)
+    cc = near_dup_clusters(docs, threshold)
+    j = docs.select("doc_id", "lang", "n_chars").join(cc, "doc_id")
+    return (j.groupBy("lang")
             .agg(F.count("*").cast("long").alias("n_docs"),
                  F.countDistinct("component").cast("long").alias("n_clusters"),
-                 F.sum(size_col).cast("long").alias("raw_chars"),
-                 F.sum(F.expr(f"{size_col} div component_size"))
+                 F.sum("n_chars").cast("long").alias("raw_chars"),
+                 F.sum(F.expr("n_chars div component_size"))
                  .cast("long").alias("eff_chars")))
 
 
 def dup_weighted_budget_sql(threshold: float = 0.8,
-                            doc_rel: str = "documents",
-                            id_col: str = "doc_id", text_col: str = "text",
-                            lang_col: str = "lang",
-                            size_col: str = "n_chars") -> str:
-    cc = near_dup_clusters_sql(threshold, doc_rel, id_col, text_col)
-    return f"""SELECT d.{lang_col} AS {lang_col},
+                            doc_rel: str = "documents") -> str:
+    cc = near_dup_clusters_sql(threshold, doc_rel)
+    return f"""SELECT d.lang AS lang,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(COUNT(DISTINCT c.component) AS BIGINT) AS n_clusters,
-       CAST(SUM(d.{size_col}) AS BIGINT) AS raw_chars,
-       CAST(SUM(d.{size_col} // c.component_size) AS BIGINT) AS eff_chars
-FROM {doc_rel} d JOIN ({cc}) c USING ({id_col})
-GROUP BY d.{lang_col}"""
+       CAST(SUM(d.n_chars) AS BIGINT) AS raw_chars,
+       CAST(SUM(d.n_chars // c.component_size) AS BIGINT) AS eff_chars
+FROM {doc_rel} d JOIN ({cc}) c USING (doc_id)
+GROUP BY d.lang"""

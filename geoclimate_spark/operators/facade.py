@@ -62,17 +62,16 @@ DIR_CLASSES = ("we", "ns")
 
 
 # ------------------------------------------------------------------ footprints
-def square_footprints(pages: DataFrame, buffer_e6: int,
-                      key: str = "page_id", lon: str = "lon_e6",
-                      lat: str = "lat_e6", height: str = "chars",
-                      zone: str = "zone_id") -> DataFrame:
+def square_footprints(pages: DataFrame, buffer_e6: int) -> DataFrame:
     """(zone_id, page_id, h, x0, y0, x1, y1) buffered squares."""
     return pages.select(
-        F.col(zone).alias("zone_id"), F.col(key).alias("page_id"),
-        F.col(height).cast("long").alias("h"),
-        (F.col(lon) - buffer_e6).alias("x0"), (F.col(lat) - buffer_e6).alias("y0"),
-        (F.col(lon) + buffer_e6).alias("x1"), (F.col(lat) + buffer_e6).alias("y1"),
-        F.col(lon).alias("_lon"), F.col(lat).alias("_lat"))
+        F.col("zone_id").alias("zone_id"), F.col("page_id").alias("page_id"),
+        F.col("chars").cast("long").alias("h"),
+        (F.col("lon_e6") - buffer_e6).alias("x0"),
+        (F.col("lat_e6") - buffer_e6).alias("y0"),
+        (F.col("lon_e6") + buffer_e6).alias("x1"),
+        (F.col("lat_e6") + buffer_e6).alias("y1"),
+        F.col("lon_e6").alias("_lon"), F.col("lat_e6").alias("_lat"))
 
 
 def overlap_pairs(sq: DataFrame, buffer_e6: int) -> DataFrame:
@@ -145,45 +144,43 @@ def _merged_covered_len(ov: DataFrame) -> DataFrame:
             .groupBy("id_a", "dir").agg(F.sum("_c").alias("covered_len")))
 
 
-def _layer_cols(z_min: Column, z_max: Column,
-                bounds: tuple[int, ...] = LAYER_BOUNDS) -> list[Column]:
+def _layer_cols(z_min: Column, z_max: Column) -> list[Column]:
     """The reference's layer clipping (`RsuIndicators.groovy:505-521`):
     height of the [z_min, z_max] band inside each layer; top layer open."""
     out = []
-    for i in range(1, len(bounds)):
-        lo, hi = bounds[i - 1], bounds[i]
+    for i in range(1, len(LAYER_BOUNDS)):
+        lo, hi = LAYER_BOUNDS[i - 1], LAYER_BOUNDS[i]
         out.append(
             F.when(z_max <= lo, F.lit(0))
             .when(z_min >= hi, F.lit(0))
             .otherwise(F.lit(hi - lo) - F.greatest(F.lit(hi) - z_max, F.lit(0))
                        - F.greatest(z_min - F.lit(lo), F.lit(0)))
             .cast("long").alias(f"h{i - 1}"))
-    top = bounds[-1]
+    top = LAYER_BOUNDS[-1]
     out.append(F.when(z_max >= top, z_max - F.greatest(z_min, F.lit(top)))
-               .otherwise(F.lit(0)).cast("long").alias(f"h{len(bounds) - 1}"))
+               .otherwise(F.lit(0)).cast("long").alias(f"h{len(LAYER_BOUNDS) - 1}"))
     return out
 
 
-def _layer_sql(z_min: str, z_max: str, i: int,
-               bounds: tuple[int, ...] = LAYER_BOUNDS) -> str:
-    if i < len(bounds) - 1:
-        lo, hi = bounds[i], bounds[i + 1]
+def _layer_sql(z_min: str, z_max: str, i: int) -> str:
+    if i < len(LAYER_BOUNDS) - 1:
+        lo, hi = LAYER_BOUNDS[i], LAYER_BOUNDS[i + 1]
         return (f"CASE WHEN {z_max} <= {lo} THEN 0 WHEN {z_min} >= {hi} THEN 0 "
                 f"ELSE {hi - lo} - GREATEST({hi} - {z_max}, 0)"
                 f" - GREATEST({z_min} - {lo}, 0) END")
-    top = bounds[-1]
+    top = LAYER_BOUNDS[-1]
     return (f"CASE WHEN {z_max} >= {top} THEN {z_max} - GREATEST({z_min}, {top})"
             f" ELSE 0 END")
 
 
-def facade_col_names(bounds: tuple[int, ...] = LAYER_BOUNDS) -> list[str]:
-    return [f"f_{dc}_h{i}" for dc in DIR_CLASSES for i in range(len(bounds))]
+def facade_col_names() -> list[str]:
+    return [f"f_{dc}_h{i}" for dc in DIR_CLASSES
+            for i in range(len(LAYER_BOUNDS))]
 
 
 # ------------------------------------------------------------- main operator
 def facade_area_distribution(pages: DataFrame, zones: DataFrame,
-                             buffer_e6: int,
-                             bounds: tuple[int, ...] = LAYER_BOUNDS) -> DataFrame:
+                             buffer_e6: int) -> DataFrame:
     """Per-zone projected facade area by (direction class × height layer).
 
     ``pages``: (page_id, zone_id, lon_e6, lat_e6, chars);
@@ -218,23 +215,22 @@ def facade_area_distribution(pages: DataFrame, zones: DataFrame,
                      F.greatest("ha", "hb").alias("z_max")))
     rows = free.unionByName(party)
     rows = rows.select("zone_id", "dir_class", "len",
-                       *_layer_cols(F.col("z_min"), F.col("z_max"), bounds))
+                       *_layer_cols(F.col("z_min"), F.col("z_max")))
     aggs = [F.coalesce(F.sum(F.when(F.col("dir_class") == dc,
                                     F.col("len") * F.col(f"h{i}"))
                              .otherwise(F.lit(0))), F.lit(0))
             .cast("long").alias(f"f_{dc}_h{i}")
-            for dc in DIR_CLASSES for i in range(len(bounds))]
+            for dc in DIR_CLASSES for i in range(len(LAYER_BOUNDS))]
     agg = rows.groupBy("zone_id").agg(*aggs)
     zd = zones.select("zone_id")
     out = zd.join(agg, "zone_id", "left")
     return out.select("zone_id",
                       *[F.coalesce(F.col(c), F.lit(0)).alias(c)
-                        for c in facade_col_names(bounds)])
+                        for c in facade_col_names()])
 
 
 def facade_area_distribution_sql(pages_sql: str, zones_sql: str,
-                                 buffer_e6: int,
-                                 bounds: tuple[int, ...] = LAYER_BOUNDS) -> str:
+                                 buffer_e6: int) -> str:
     """DuckDB mirror — brute-force pair join, same interval-union window,
     same layer clipping, same conditional-sum pivot.
     ``pages_sql`` selects (page_id, zone_id, lon_e6, lat_e6, chars) BIGINT;
@@ -253,17 +249,17 @@ def facade_area_distribution_sql(pages_sql: str, zones_sql: str,
         walls.append(f"SELECT zone_id, page_id AS id_a, h AS ha, '{d}' AS dir,"
                      f" '{dc}' AS dir_class, {hi[1:]} - {lo[1:]} AS len FROM sq")
     layer_free = ", ".join(
-        f"({_layer_sql('0', 'z_max', i, bounds)}) AS h{i}"
-        for i in range(len(bounds)))
+        f"({_layer_sql('0', 'z_max', i)}) AS h{i}"
+        for i in range(len(LAYER_BOUNDS)))
     layer_any = ", ".join(
-        f"({_layer_sql('z_min', 'z_max', i, bounds)}) AS h{i}"
-        for i in range(len(bounds)))
+        f"({_layer_sql('z_min', 'z_max', i)}) AS h{i}"
+        for i in range(len(LAYER_BOUNDS)))
     sums = ",\n       ".join(
         f"CAST(COALESCE(SUM(CASE WHEN dir_class = '{dc}' THEN len * h{i}"
         f" ELSE 0 END), 0) AS BIGINT) AS f_{dc}_h{i}"
-        for dc in DIR_CLASSES for i in range(len(bounds)))
+        for dc in DIR_CLASSES for i in range(len(LAYER_BOUNDS)))
     fcols = ",\n       ".join(
-        f"COALESCE({c}, 0) AS {c}" for c in facade_col_names(bounds))
+        f"COALESCE({c}, 0) AS {c}" for c in facade_col_names())
     return f"""WITH pg AS ({pages_sql}),
 sq AS (SELECT zone_id, page_id, chars AS h,
        lon_e6 - {r} AS x0, lat_e6 - {r} AS y0,
@@ -299,8 +295,7 @@ FROM zones z LEFT JOIN agg USING (zone_id)"""
 
 
 # ------------------------------------------------------- frontal area index
-def frontal_area_index(facade: DataFrame, zones: DataFrame,
-                       bounds: tuple[int, ...] = LAYER_BOUNDS) -> DataFrame:
+def frontal_area_index(facade: DataFrame, zones: DataFrame) -> DataFrame:
     """`frontalAreaIndexDistribution` analogue (`:1967-2178`): facade sums
     normalized by zone rect area — (zone_id, fai_* doubles)."""
     za = ((F.col("zlon1") - F.col("zlon0"))
@@ -309,14 +304,13 @@ def frontal_area_index(facade: DataFrame, zones: DataFrame,
                     "zone_id")
     return j.select("zone_id",
                     *[(F.col(c).cast("double") / za).alias(c.replace("f_", "fai_"))
-                      for c in facade_col_names(bounds)])
+                      for c in facade_col_names()])
 
 
-def frontal_area_index_sql(facade_sql: str, zones_sql: str,
-                           bounds: tuple[int, ...] = LAYER_BOUNDS) -> str:
+def frontal_area_index_sql(facade_sql: str, zones_sql: str) -> str:
     cols = ",\n       ".join(
         f"CAST({c} AS DOUBLE) / CAST((zlon1 - zlon0) * (zlat1 - zlat0) AS DOUBLE)"
-        f" AS {c.replace('f_', 'fai_')}" for c in facade_col_names(bounds))
+        f" AS {c.replace('f_', 'fai_')}" for c in facade_col_names())
     return f"""WITH fac AS ({facade_sql}), zb AS ({zones_sql})
 SELECT f.zone_id, {cols}
 FROM fac f JOIN zb USING (zone_id)"""
@@ -331,8 +325,8 @@ ROOF_SCHEMA = T.StructType([
 ])
 
 
-def roof_layer_distribution_exact(pages: DataFrame, buffer_e6: int,
-                                  bounds: tuple[int, ...] = LAYER_BOUNDS) -> DataFrame:
+def roof_layer_distribution_exact(pages: DataFrame,
+                                  buffer_e6: int) -> DataFrame:
     """`roofFractionDistributionExact` analogue (`:1816-1938`): per-zone
     EXACT roof area per chars-layer — overlapping footprints never double
     counted. Each atom of the per-zone square arrangement is attributed to
@@ -341,8 +335,8 @@ def roof_layer_distribution_exact(pages: DataFrame, buffer_e6: int,
     that page's layer. Grouped applyInPandas per zone; SQL oracle mirrors
     via the ROW_NUMBER winner over the same atom grid."""
     sq = square_footprints(pages, buffer_e6)
-    nb = len(bounds)
-    b_arr = np.asarray(bounds, dtype=np.int64)
+    nb = len(LAYER_BOUNDS)
+    b_arr = np.asarray(LAYER_BOUNDS, dtype=np.int64)
 
     def run(groups: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for g in groups:
@@ -386,13 +380,12 @@ def roof_layer_distribution_exact(pages: DataFrame, buffer_e6: int,
     return sq.groupBy("zone_id").applyInPandas(run, ROOF_SCHEMA)
 
 
-def roof_layer_distribution_exact_sql(pages_sql: str, buffer_e6: int,
-                                      bounds: tuple[int, ...] = LAYER_BOUNDS) -> str:
+def roof_layer_distribution_exact_sql(pages_sql: str, buffer_e6: int) -> str:
     r = buffer_e6
     layer_case = ("CASE "
-                  + " ".join(f"WHEN h < {bounds[i]} THEN {i - 1}"
-                             for i in range(1, len(bounds)))
-                  + f" ELSE {len(bounds) - 1} END")
+                  + " ".join(f"WHEN h < {LAYER_BOUNDS[i]} THEN {i - 1}"
+                             for i in range(1, len(LAYER_BOUNDS)))
+                  + f" ELSE {len(LAYER_BOUNDS) - 1} END")
     return f"""WITH pg AS ({pages_sql}),
 sq AS (SELECT zone_id, page_id, chars AS h,
        lon_e6 - {r} AS x0, lat_e6 - {r} AS y0,
@@ -420,9 +413,9 @@ FROM winner GROUP BY zone_id, layer"""
 
 
 # ------------------------------------------------- gable roof distribution
-def gable_col_names(bounds: tuple[int, ...] = LAYER_BOUNDS) -> list[str]:
-    return ([f"nv_h{i}" for i in range(len(bounds))]
-            + [f"v_h{i}" for i in range(len(bounds))])
+def gable_col_names() -> list[str]:
+    return ([f"nv_h{i}" for i in range(len(LAYER_BOUNDS))]
+            + [f"v_h{i}" for i in range(len(LAYER_BOUNDS))])
 
 
 def _gable_band_cols(z_min: Column, z_max: Column, dh: Column,
@@ -469,8 +462,7 @@ def _gable_band_cols(z_min: Column, z_max: Column, dh: Column,
 
 
 def roof_area_distribution_gable(pages: DataFrame, zones: DataFrame,
-                                 buffer_e6: int,
-                                 bounds: tuple[int, ...] = LAYER_BOUNDS) -> DataFrame:
+                                 buffer_e6: int) -> DataFrame:
     """`roofAreaDistribution` gable model (`RsuIndicators.groovy:659-858`):
     per zone, vertical (gable-end triangles) and non-vertical (tilted
     panels) roof area per height band.
@@ -510,8 +502,8 @@ def roof_area_distribution_gable(pages: DataFrame, zones: DataFrame,
             .withColumn("_nvra", nvra)
             .withColumn("_vra", vra0 - F.coalesce(F.col("_rm"), F.lit(0.0))))
     band_cols = _gable_band_cols(F.col("z_min"), F.col("h"), F.col("dh"),
-                                 F.col("_nvra"), F.col("_vra"), bounds)
-    names = gable_col_names(bounds)
+                                 F.col("_nvra"), F.col("_vra"), LAYER_BOUNDS)
+    names = gable_col_names()
     rows = rows.select("zone_id", *[
         F.round(c * 1000).cast("long").alias(f"_mi_{n}")
         for n, c in zip(names, band_cols)])
@@ -565,11 +557,10 @@ def _gable_band_sqls(bounds: tuple[int, ...]) -> list[tuple[str, str]]:
 
 
 def roof_area_distribution_gable_sql(pages_sql: str, zones_sql: str,
-                                     buffer_e6: int,
-                                     bounds: tuple[int, ...] = LAYER_BOUNDS) -> str:
+                                     buffer_e6: int) -> str:
     r = buffer_e6
     area = (2 * r) ** 2
-    bands = _gable_band_sqls(bounds)
+    bands = _gable_band_sqls(LAYER_BOUNDS)
     mi = ",\n       ".join(
         f"CAST(ROUND(({e}) * 1000) AS BIGINT) AS _mi_{n}" for n, e in bands)
     sums = ",\n       ".join(

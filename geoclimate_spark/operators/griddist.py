@@ -69,69 +69,68 @@ def _seg_d2_sql(px: str, py: str) -> str:
             f" / CAST({len2} AS DOUBLE) END")
 
 
-def grid_distances(poly_vtx: DataFrame, key: str = "zone_id",
-                   cell: int = GRID_CELL) -> DataFrame:
-    """(key, gx, gy, distance) — one row per (polygon, grid cell whose
+def grid_distances(poly_vtx: DataFrame) -> DataFrame:
+    """(zone_id, gx, gy, distance) — one row per (polygon, grid cell whose
     center lies inside it); ``distance`` = exact min distance from the cell
-    center to the polygon boundary. ``poly_vtx``: (key, seq, x, y) CCW
+    center to the polygon boundary. ``poly_vtx``: (zone_id, seq, x, y) CCW
     convex integer vertices."""
     from .polygon_overlay import _edges
 
-    half = cell // 2
-    bb = poly_vtx.groupBy(key).agg(
+    half = GRID_CELL // 2
+    bb = poly_vtx.groupBy("zone_id").agg(
         F.min("x").alias("x0"), F.min("y").alias("y0"),
         F.max("x").alias("x1"), F.max("y").alias("y1"))
-    g = F.lit(cell)
+    g = F.lit(GRID_CELL)
     cells = (bb.select(
-        key,
+        "zone_id",
         F.explode(F.sequence(F.floor(F.col("x0") / g),
                              F.floor(F.col("x1") / g))).alias("gx"),
         F.col("y0"), F.col("y1"))
-        .select(key, "gx", F.explode(F.sequence(
+        .select("zone_id", "gx", F.explode(F.sequence(
             F.floor(F.col("y0") / g), F.floor(F.col("y1") / g))).alias("gy"))
-        .select(key, "gx", "gy",
+        .select("zone_id", "gx", "gy",
                 (F.col("gx") * g + half).alias("px"),
                 (F.col("gy") * g + half).alias("py")))
-    edges = _edges(poly_vtx.select(key, "seq", "x", "y"), key)
+    edges = _edges(poly_vtx.select("zone_id", "seq", "x", "y"), "zone_id")
     px, py = F.col("px"), F.col("py")
     inside = ((F.col("exn") - F.col("ex")) * (py - F.col("ey"))
               - (F.col("eyn") - F.col("ey")) * (px - F.col("ex"))) >= 0
-    j = cells.join(edges, key)
-    return (j.groupBy(key, "gx", "gy")
+    j = cells.join(edges, "zone_id")
+    return (j.groupBy("zone_id", "gx", "gy")
             .agg(F.bool_and(inside).alias("_in"),
                  F.min(_seg_d2_col(px, py)).alias("_d2"))
             .where(F.col("_in"))
-            .select(key, "gx", "gy", F.sqrt(F.col("_d2")).alias("distance")))
+            .select("zone_id", "gx", "gy",
+                    F.sqrt(F.col("_d2")).alias("distance")))
 
 
-def grid_distances_sql(poly_vtx_sql: str, key: str = "zone_id",
-                       cell: int = GRID_CELL) -> str:
+def grid_distances_sql(poly_vtx_sql: str) -> str:
     """DuckDB mirror: same covering ranges, same edge windows, same exact
     PIP predicate and distance expression. ``poly_vtx_sql`` selects
-    (key, seq, x, y) BIGINT CCW."""
-    half = cell // 2
+    (zone_id, seq, x, y) BIGINT CCW."""
+    half = GRID_CELL // 2
     d2 = _seg_d2_sql("px", "py")
     return f"""WITH vtx AS ({poly_vtx_sql}),
-bb AS (SELECT {key}, MIN(x) AS x0, MIN(y) AS y0, MAX(x) AS x1, MAX(y) AS y1
-  FROM vtx GROUP BY {key}),
-cells AS (SELECT {key}, gx, gy,
-       gx * {cell} + {half} AS px, gy * {cell} + {half} AS py
+bb AS (SELECT zone_id, MIN(x) AS x0, MIN(y) AS y0, MAX(x) AS x1, MAX(y) AS y1
+  FROM vtx GROUP BY zone_id),
+cells AS (SELECT zone_id, gx, gy,
+       gx * {GRID_CELL} + {half} AS px, gy * {GRID_CELL} + {half} AS py
   FROM bb,
-       unnest(generate_series(CAST(FLOOR(CAST(x0 AS DOUBLE) / {cell}) AS BIGINT),
-                              CAST(FLOOR(CAST(x1 AS DOUBLE) / {cell}) AS BIGINT))) AS tx(gx),
-       unnest(generate_series(CAST(FLOOR(CAST(y0 AS DOUBLE) / {cell}) AS BIGINT),
-                              CAST(FLOOR(CAST(y1 AS DOUBLE) / {cell}) AS BIGINT))) AS ty(gy)),
-edges AS (SELECT {key}, x AS ex, y AS ey,
+       unnest(generate_series(CAST(FLOOR(CAST(x0 AS DOUBLE) / {GRID_CELL}) AS BIGINT),
+                              CAST(FLOOR(CAST(x1 AS DOUBLE) / {GRID_CELL}) AS BIGINT))) AS tx(gx),
+       unnest(generate_series(CAST(FLOOR(CAST(y0 AS DOUBLE) / {GRID_CELL}) AS BIGINT),
+                              CAST(FLOOR(CAST(y1 AS DOUBLE) / {GRID_CELL}) AS BIGINT))) AS ty(gy)),
+edges AS (SELECT zone_id, x AS ex, y AS ey,
        COALESCE(LEAD(x) OVER w, FIRST_VALUE(x) OVER w2) AS exn,
        COALESCE(LEAD(y) OVER w, FIRST_VALUE(y) OVER w2) AS eyn
   FROM vtx
-  WINDOW w AS (PARTITION BY {key} ORDER BY seq),
-         w2 AS (PARTITION BY {key} ORDER BY seq
+  WINDOW w AS (PARTITION BY zone_id ORDER BY seq),
+         w2 AS (PARTITION BY zone_id ORDER BY seq
                 ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)),
-scored AS (SELECT c.{key}, c.gx, c.gy,
+scored AS (SELECT c.zone_id, c.gx, c.gy,
        BOOL_AND((exn - ex) * (py - ey) - (eyn - ey) * (px - ex) >= 0) AS _in,
        MIN({d2}) AS _d2
-  FROM cells c JOIN edges USING ({key})
+  FROM cells c JOIN edges USING (zone_id)
   GROUP BY 1, 2, 3)
-SELECT {key}, gx, gy, SQRT(_d2) AS distance
+SELECT zone_id, gx, gy, SQRT(_d2) AS distance
 FROM scored WHERE _in"""

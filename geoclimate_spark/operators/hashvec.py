@@ -38,38 +38,35 @@ from ..functions.text import normalize_col, normalize_sql, tokens_col
 HV_DIM = 64
 
 
-def feature_hash_sparse(docs: DataFrame, dim: int = HV_DIM,
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def feature_hash_sparse(docs: DataFrame, dim: int = HV_DIM) -> DataFrame:
     """(doc_id, bucket, weight): signed-hash bucket weights per document,
     zero-weight buckets dropped (sign cancellation can zero a bucket)."""
-    norm = normalize_col(F.col(text_col))
-    toks = (docs.where(F.col(text_col).isNotNull())
-            .select(F.col(id_col), F.explode(tokens_col(norm)).alias("t"))
+    norm = normalize_col(F.col("text"))
+    toks = (docs.where(F.col("text").isNotNull())
+            .select(F.col("doc_id"), F.explode(tokens_col(norm)).alias("t"))
             .where(F.length("t") > 0)
             .withColumn("_h", hash60_col(F.col("t"))))
     sign = (F.expr(f"(_h div {dim}) % 2") * 2 - 1).cast("long")
     return (toks
-            .select(id_col, F.expr(f"_h % {dim}").alias("bucket"),
+            .select("doc_id", F.expr(f"_h % {dim}").alias("bucket"),
                     sign.alias("_s"))
-            .groupBy(id_col, "bucket")
+            .groupBy("doc_id", "bucket")
             .agg(F.sum("_s").alias("weight"))
             .where(F.col("weight") != 0))
 
 
-def feature_hash_sparse_sql(dim: int = HV_DIM, doc_rel: str = "documents",
-                            id_col: str = "doc_id",
-                            text_col: str = "text") -> str:
-    norm = normalize_sql(text_col)
+def feature_hash_sparse_sql(dim: int = HV_DIM,
+                            doc_rel: str = "documents") -> str:
+    norm = normalize_sql("text")
     h = hash60_sql("t")
     return f"""WITH toks AS (
-  SELECT {id_col}, unnest(string_split({norm}, ' ')) AS t
-  FROM {doc_rel} WHERE {text_col} IS NOT NULL),
+  SELECT doc_id, unnest(string_split({norm}, ' ')) AS t
+  FROM {doc_rel} WHERE text IS NOT NULL),
 hashed AS (
-  SELECT {id_col}, {h} AS _h FROM toks WHERE length(t) > 0),
+  SELECT doc_id, {h} AS _h FROM toks WHERE length(t) > 0),
 w AS (
-  SELECT {id_col}, _h % {dim} AS bucket,
+  SELECT doc_id, _h % {dim} AS bucket,
          CAST(SUM((_h // {dim}) % 2 * 2 - 1) AS BIGINT) AS weight
   FROM hashed GROUP BY 1, 2)
-SELECT {id_col}, CAST(bucket AS BIGINT) AS bucket, weight
+SELECT doc_id, CAST(bucket AS BIGINT) AS bucket, weight
 FROM w WHERE weight != 0"""

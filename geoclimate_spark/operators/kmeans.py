@@ -36,6 +36,7 @@ KM_K = 4
 KM_ITERS = 3
 KM_Q = 1 << 20
 KM_DIM = 64
+KM_NPROBE = 2
 
 
 def _quant(vec: str) -> str:
@@ -63,9 +64,8 @@ def _quant_frame(emb: DataFrame, id_col: str, vec: str) -> DataFrame:
             .localCheckpoint())
 
 
-def _assign(q: DataFrame, cents: DataFrame, dim: int,
-            extra: tuple[str, ...] = ()) -> DataFrame:
-    """(id, cl, q, _d2, *extra): each vector's nearest centroid (exact
+def _assign(q: DataFrame, cents: DataFrame, dim: int) -> DataFrame:
+    """(id, cl, q, _d2): each vector's nearest centroid (exact
     integer distance, lowest-cl tie-break).
 
     Constant-key broadcast join — but the key is computed FROM a column on
@@ -80,17 +80,16 @@ def _assign(q: DataFrame, cents: DataFrame, dim: int,
                                          F.col("cl").asc())
     return (j.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
-            .select("id", "cl", "q", "_d2", *extra))
+            .select("id", "cl", "q", "_d2"))
 
 
 def train_centroids(emb: DataFrame, k: int = KM_K, iters: int = KM_ITERS,
-                    dim: int = KM_DIM, id_col: str = "vec_id",
-                    vec: str = "embedding",
+                    dim: int = KM_DIM,
                     q: DataFrame | None = None) -> DataFrame:
     """(cl, c): centroids after ``iters`` Lloyd rounds from the
     deterministic seed (centroids = quantized vectors id 0..k-1)."""
     if q is None:
-        q = _quant_frame(emb, id_col, vec)
+        q = _quant_frame(emb, "vec_id", "embedding")
     cents = (q.where(F.col("id") < k)
              .select(F.col("id").alias("cl"), F.col("q").alias("c")))
     for _ in range(iters):
@@ -113,36 +112,32 @@ def train_centroids(emb: DataFrame, k: int = KM_K, iters: int = KM_ITERS,
 
 
 def kmeans_assignments(emb: DataFrame, k: int = KM_K, iters: int = KM_ITERS,
-                       dim: int = KM_DIM, id_col: str = "vec_id",
-                       vec: str = "embedding") -> DataFrame:
+                       dim: int = KM_DIM) -> DataFrame:
     """(vec_id, cluster, dist2): final assignment after ``iters`` Lloyd
     rounds from the deterministic seed (centroids = vectors id 0..k-1),
     plus one closing assignment against the trained centroids. dist2 is the
     exact integer squared distance in quantized space."""
-    q = _quant_frame(emb, id_col, vec)
-    cents = train_centroids(emb, k, iters, dim, id_col, vec, q=q)
+    q = _quant_frame(emb, "vec_id", "embedding")
+    cents = train_centroids(emb, k, iters, dim, q=q)
     return (_assign(q, cents, dim)
-            .select(F.col("id").alias(id_col),
+            .select(F.col("id").alias("vec_id"),
                     F.col("cl").cast("long").alias("cluster"),
                     F.col("_d2").cast("long").alias("dist2")))
 
 
-def ivf_trained_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
-                     km_k: int = KM_K, iters: int = KM_ITERS,
-                     dim: int = KM_DIM, nprobe: int = 2,
-                     id_col: str = "vec_id",
-                     vec: str = "embedding") -> DataFrame:
+def ivf_trained_topk(emb: DataFrame, query_ids: list[int],
+                     k: int = 5) -> DataFrame:
     """IVF top-k over lists built by the engine's OWN k-means training run
     (train → index → serve, one oracled query). Vectors live in exactly one
-    trained list; a query probes its ``nprobe`` nearest lists (exact
+    trained list; a query probes its ``KM_NPROBE`` nearest lists (exact
     integer centroid distance, lowest-cl tie-break) and candidates re-rank
     by exact cosine — same output schema and tie rules as every other ANN
     operator, so results are comparable across the ladder."""
     from .similarity import _dot, _with_norm
-    q = _quant_frame(emb, id_col, vec)
-    cents = train_centroids(emb, km_k, iters, dim, id_col, vec, q=q)
-    nb = _with_norm(emb, id_col, vec)
-    vecs = (_assign(q, cents, dim).select("id", "cl")
+    q = _quant_frame(emb, "vec_id", "embedding")
+    cents = train_centroids(emb, q=q)
+    nb = _with_norm(emb, "vec_id", "embedding")
+    vecs = (_assign(q, cents, KM_DIM).select("id", "cl")
             .join(nb, "id")
             .select("id", "cl", "v", "nrm"))
     qw = Window.partitionBy("id").orderBy(F.col("_d2").asc(),
@@ -152,23 +147,23 @@ def ivf_trained_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
         .withColumn("_one", F.pmod(F.col("id"), F.lit(1)))
         .join(F.broadcast(cents.withColumn(
             "_one", F.pmod(F.col("cl"), F.lit(1)))), "_one")
-        .withColumn("_d2", F.expr(_d2_spark("q", "c", dim)))
+        .withColumn("_d2", F.expr(_d2_spark("q", "c", KM_DIM)))
         .withColumn("_pr", F.row_number().over(qw))
-        .where(F.col("_pr") <= nprobe)
+        .where(F.col("_pr") <= KM_NPROBE)
         .join(nb.select(F.col("id"), F.col("v").alias("qv"),
                         F.col("nrm").alias("qn")), "id")
         .select(F.col("id").alias("query_id"), "cl", "qv", "qn"))
     cand = (probes.join(vecs, "cl")
             .where(F.col("id") != F.col("query_id"))
-            .select("query_id", F.col("id").alias(id_col),
+            .select("query_id", F.col("id").alias("vec_id"),
                     (_dot(F.col("qv"), F.col("v"))
                      / (F.col("qn") * F.col("nrm"))).alias("cos")))
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(),
-                                               F.col(id_col).asc())
+                                               F.col("vec_id").asc())
     return (cand.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .select("query_id", F.col("rank").cast("long").alias("rank"),
-                    id_col, "cos"))
+                    "vec_id", "cos"))
 
 
 def _train_parts_sql(k: int, iters: int, dim: int, rel: str,
@@ -209,55 +204,50 @@ def _train_parts_sql(k: int, iters: int, dim: int, rel: str,
     return parts
 
 
-def kmeans_assignments_sql(k: int = KM_K, iters: int = KM_ITERS,
-                           dim: int = KM_DIM, rel: str = "embeddings",
-                           id_col: str = "vec_id",
-                           vec: str = "embedding") -> str:
+def kmeans_assignments_sql(rel: str = "embeddings") -> str:
     """DuckDB dual: the iterate unrolled as one CTE chain (the linkrank.py
     pattern)."""
-    d2 = _d2_sql("v.q", "c.c", dim)
-    parts = _train_parts_sql(k, iters, dim, rel, id_col, vec)
+    d2 = _d2_sql("v.q", "c.c", KM_DIM)
+    parts = _train_parts_sql(KM_K, KM_ITERS, KM_DIM, rel, "vec_id",
+                             "embedding")
     final = (
-        f"SELECT id AS {id_col}, CAST(cl AS BIGINT) AS cluster, "
+        "SELECT id AS vec_id, CAST(cl AS BIGINT) AS cluster, "
         f"CAST(d2 AS BIGINT) AS dist2 FROM ("
         f"SELECT v.id, c.cl, {d2} AS d2, ROW_NUMBER() OVER ("
         f"PARTITION BY v.id ORDER BY {d2} ASC, c.cl ASC) AS rn "
-        f"FROM q v CROSS JOIN c{iters} c) WHERE rn = 1")
+        f"FROM q v CROSS JOIN c{KM_ITERS} c) WHERE rn = 1")
     return "WITH " + ",\n".join(parts) + "\n" + final
 
 
-def ivf_trained_topk_sql(query_ids: list[int], k: int = 5,
-                         km_k: int = KM_K, iters: int = KM_ITERS,
-                         dim: int = KM_DIM, nprobe: int = 2,
-                         rel: str = "embeddings", id_col: str = "vec_id",
-                         vec: str = "embedding") -> str:
+def ivf_trained_topk_sql(query_ids: list[int], k: int = 5) -> str:
     from .similarity import _DOT_SQL
-    d2 = _d2_sql("v.q", "c.c", dim)
+    d2 = _d2_sql("v.q", "c.c", KM_DIM)
     ids = ", ".join(str(i) for i in query_ids)
-    nrm = _DOT_SQL.format(a=vec, b=vec)
-    parts = _train_parts_sql(km_k, iters, dim, rel, id_col, vec)
+    nrm = _DOT_SQL.format(a="embedding", b="embedding")
+    parts = _train_parts_sql(KM_K, KM_ITERS, KM_DIM, "embeddings", "vec_id",
+                             "embedding")
     parts.append(
-        f"nb AS (SELECT {id_col} AS id, {vec} AS v, SQRT({nrm}) AS nrm "
-        f"FROM {rel})")
+        f"nb AS (SELECT vec_id AS id, embedding AS v, SQRT({nrm}) AS nrm "
+        "FROM embeddings)")
     parts.append(
         f"asg AS (SELECT id, cl FROM ("
         f"SELECT v.id, c.cl, ROW_NUMBER() OVER (PARTITION BY v.id "
         f"ORDER BY {d2} ASC, c.cl ASC) AS rn "
-        f"FROM q v CROSS JOIN c{iters} c) WHERE rn = 1)")
+        f"FROM q v CROSS JOIN c{KM_ITERS} c) WHERE rn = 1)")
     parts.append(
         f"probes AS (SELECT p.id AS query_id, p.cl, n.v AS qv, n.nrm AS qn "
         f"FROM (SELECT v.id, c.cl, ROW_NUMBER() OVER (PARTITION BY v.id "
         f"ORDER BY {d2} ASC, c.cl ASC) AS pr "
-        f"FROM q v CROSS JOIN c{iters} c WHERE v.id IN ({ids})) p "
-        f"JOIN nb n ON n.id = p.id WHERE p.pr <= {nprobe})")
+        f"FROM q v CROSS JOIN c{KM_ITERS} c WHERE v.id IN ({ids})) p "
+        f"JOIN nb n ON n.id = p.id WHERE p.pr <= {KM_NPROBE})")
     cos = _DOT_SQL.format(a="p.qv", b="n.v") + " / (p.qn * n.nrm)"
     parts.append(
-        f"cand AS (SELECT p.query_id, a.id AS {id_col}, {cos} AS cos "
+        f"cand AS (SELECT p.query_id, a.id AS vec_id, {cos} AS cos "
         f"FROM probes p JOIN asg a ON a.cl = p.cl "
         f"JOIN nb n ON n.id = a.id WHERE a.id != p.query_id)")
     final = (
-        f"SELECT query_id, CAST(rank AS BIGINT) AS rank, {id_col}, cos "
+        "SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id, cos "
         f"FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id "
-        f"ORDER BY cos DESC, {id_col} ASC) AS rank FROM cand) "
+        "ORDER BY cos DESC, vec_id ASC) AS rank FROM cand) "
         f"WHERE rank <= {k}")
     return "WITH " + ",\n".join(parts) + "\n" + final

@@ -62,117 +62,120 @@ def _kring9(cell_col, res: int):
     return F.array_distinct(F.array_compact(F.array(*cells)))
 
 
-def nearest_neighbor(points: DataFrame, neighbors: DataFrame, radius_e6: int,
-                     key: str = "page_id", nkey: str = "nb_id",
-                     lon: str = "lon_e6", lat: str = "lat_e6") -> DataFrame:
+def nearest_neighbor(points: DataFrame, neighbors: DataFrame,
+                     radius_e6: int) -> DataFrame:
     """Per point: nearest neighbor within radius (planar microdegrees).
 
-    Returns (key, nn_id, nn_dist, n_within) for EVERY point; points with no
+    Returns (page_id, nn_id, nn_dist, n_within) for EVERY point; points with no
     neighbor in range get (-1, -1.0, 0) — the reference's default-when-empty
     contract (`BuildingIndicators.groovy:341-344` COALESCE default).
-    ``neighbors`` must carry (nkey, lon, lat); self-pairs (same key value)
+    ``neighbors`` must carry (nb_id, lon_e6, lat_e6); self-pairs (same id)
     are excluded, so passing the same relation gives self-kNN.
     """
     res = pick_res_for_radius(radius_e6)
     pts = points.select(
-        F.col(key), F.col(lon).alias("_alon"), F.col(lat).alias("_alat"),
-        F.explode(_kring9(grid.cell_col(F.col(lon), F.col(lat), res), res))
-        .alias("_cell"))
+        F.col("page_id"), F.col("lon_e6").alias("_alon"),
+        F.col("lat_e6").alias("_alat"),
+        F.explode(_kring9(grid.cell_col(F.col("lon_e6"), F.col("lat_e6"), res),
+                          res)).alias("_cell"))
     nbs = neighbors.select(
-        F.col(nkey), F.col(lon).alias("_blon"), F.col(lat).alias("_blat"),
-        grid.cell_col(F.col(lon), F.col(lat), res).alias("_cell"))
+        F.col("nb_id"), F.col("lon_e6").alias("_blon"),
+        F.col("lat_e6").alias("_blat"),
+        grid.cell_col(F.col("lon_e6"), F.col("lat_e6"), res).alias("_cell"))
     dx = F.col("_alon") - F.col("_blon")
     dy = F.col("_alat") - F.col("_blat")
     d2 = (dx * dx + dy * dy).alias("_d2")
     cand = (pts.join(nbs, "_cell")
-            .where(F.col(key) != F.col(nkey))
-            .select(key, nkey, d2)
+            .where(F.col("page_id") != F.col("nb_id"))
+            .select("page_id", "nb_id", d2)
             .where(F.col("_d2") <= F.lit(radius_e6 * radius_e6)))
-    win = Window.partitionBy(key).orderBy(F.col("_d2").asc(), F.col(nkey).asc())
+    win = Window.partitionBy("page_id").orderBy(F.col("_d2").asc(),
+                                                F.col("nb_id").asc())
     best = (cand.withColumn("_rn", F.row_number().over(win))
-            .groupBy(key)
-            .agg(F.max(F.when(F.col("_rn") == 1, F.col(nkey))).alias("nn_id"),
+            .groupBy("page_id")
+            .agg(F.max(F.when(F.col("_rn") == 1, F.col("nb_id")))
+                 .alias("nn_id"),
                  F.max(F.when(F.col("_rn") == 1, F.col("_d2"))).alias("_d2min"),
                  F.count("*").alias("n_within")))
-    out = points.select(key).join(best, key, "left")
+    out = points.select("page_id").join(best, "page_id", "left")
     return out.select(
-        key,
+        "page_id",
         F.coalesce(F.col("nn_id"), F.lit(-1)).cast("long").alias("nn_id"),
         F.coalesce(F.sqrt(F.col("_d2min").cast("double")), F.lit(-1.0)).alias("nn_dist"),
         F.coalesce(F.col("n_within"), F.lit(0)).cast("long").alias("n_within"))
 
 
 def nearest_neighbors_topk(points: DataFrame, neighbors: DataFrame,
-                           radius_e6: int, k: int,
-                           key: str = "page_id", nkey: str = "nb_id",
-                           lon: str = "lon_e6", lat: str = "lat_e6") -> DataFrame:
-    """Top-k neighbors within radius per point: (key, rank, nb_id, dist) —
+                           radius_e6: int, k: int) -> DataFrame:
+    """Top-k neighbors within radius per point: (page_id, rank, nb_id, dist) —
     same candidate generation as :func:`nearest_neighbor`, ranked by
     (d², neighbor id). Points with fewer than k in-range neighbors return
     fewer rows; with none, no rows (the k=1 variant handles defaults)."""
     res = pick_res_for_radius(radius_e6)
     pts = points.select(
-        F.col(key), F.col(lon).alias("_alon"), F.col(lat).alias("_alat"),
-        F.explode(_kring9(grid.cell_col(F.col(lon), F.col(lat), res), res))
-        .alias("_cell"))
+        F.col("page_id"), F.col("lon_e6").alias("_alon"),
+        F.col("lat_e6").alias("_alat"),
+        F.explode(_kring9(grid.cell_col(F.col("lon_e6"), F.col("lat_e6"), res),
+                          res)).alias("_cell"))
     nbs = neighbors.select(
-        F.col(nkey), F.col(lon).alias("_blon"), F.col(lat).alias("_blat"),
-        grid.cell_col(F.col(lon), F.col(lat), res).alias("_cell"))
+        F.col("nb_id"), F.col("lon_e6").alias("_blon"),
+        F.col("lat_e6").alias("_blat"),
+        grid.cell_col(F.col("lon_e6"), F.col("lat_e6"), res).alias("_cell"))
     dx = F.col("_alon") - F.col("_blon")
     dy = F.col("_alat") - F.col("_blat")
     cand = (pts.join(nbs, "_cell")
-            .where(F.col(key) != F.col(nkey))
-            .select(key, nkey, (dx * dx + dy * dy).alias("_d2"))
+            .where(F.col("page_id") != F.col("nb_id"))
+            .select("page_id", "nb_id", (dx * dx + dy * dy).alias("_d2"))
             .where(F.col("_d2") <= F.lit(radius_e6 * radius_e6)))
-    win = Window.partitionBy(key).orderBy(F.col("_d2").asc(), F.col(nkey).asc())
+    win = Window.partitionBy("page_id").orderBy(F.col("_d2").asc(),
+                                                F.col("nb_id").asc())
     return (cand.withColumn("rank", F.row_number().over(win))
             .where(F.col("rank") <= k)
-            .select(key, F.col("rank").cast("long").alias("rank"), nkey,
+            .select("page_id", F.col("rank").cast("long").alias("rank"), "nb_id",
                     F.sqrt(F.col("_d2").cast("double")).alias("dist")))
 
 
 def nearest_neighbors_topk_sql(points_sql: str, neighbors_sql: str,
-                               radius_e6: int, k: int,
-                               key: str = "page_id", nkey: str = "nb_id") -> str:
+                               radius_e6: int, k: int) -> str:
     return f"""WITH pts AS ({points_sql}),
 nbs AS ({neighbors_sql}),
 cand AS (
-  SELECT p.{key}, n.{nkey},
+  SELECT p.page_id, n.nb_id,
          (p.lon_e6 - n.lon_e6) * (p.lon_e6 - n.lon_e6)
        + (p.lat_e6 - n.lat_e6) * (p.lat_e6 - n.lat_e6) AS d2
-  FROM pts p JOIN nbs n ON p.{key} != n.{nkey}
+  FROM pts p JOIN nbs n ON p.page_id != n.nb_id
   WHERE (p.lon_e6 - n.lon_e6) * (p.lon_e6 - n.lon_e6)
       + (p.lat_e6 - n.lat_e6) * (p.lat_e6 - n.lat_e6)
       <= CAST({radius_e6} AS BIGINT) * {radius_e6}),
-ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY {key}
-           ORDER BY d2 ASC, {nkey} ASC) AS rank FROM cand)
-SELECT {key}, CAST(rank AS BIGINT) AS rank, {nkey},
+ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY page_id
+           ORDER BY d2 ASC, nb_id ASC) AS rank FROM cand)
+SELECT page_id, CAST(rank AS BIGINT) AS rank, nb_id,
        SQRT(CAST(d2 AS DOUBLE)) AS dist
 FROM ranked WHERE rank <= {k}"""
 
 
-def nearest_neighbor_sql(points_sql: str, neighbors_sql: str, radius_e6: int,
-                         key: str = "page_id", nkey: str = "nb_id") -> str:
+def nearest_neighbor_sql(points_sql: str, neighbors_sql: str,
+                         radius_e6: int) -> str:
     """DuckDB oracle: brute-force cross join, same d² filter + tie-break.
-    ``points_sql`` selects (key, lon_e6, lat_e6); ``neighbors_sql`` selects
-    (nkey, lon_e6, lat_e6)."""
+    ``points_sql`` selects (page_id, lon_e6, lat_e6); ``neighbors_sql`` selects
+    (nb_id, lon_e6, lat_e6)."""
     return f"""WITH pts AS ({points_sql}),
 nbs AS ({neighbors_sql}),
 cand AS (
-  SELECT p.{key}, n.{nkey},
+  SELECT p.page_id, n.nb_id,
          (p.lon_e6 - n.lon_e6) * (p.lon_e6 - n.lon_e6)
        + (p.lat_e6 - n.lat_e6) * (p.lat_e6 - n.lat_e6) AS d2
-  FROM pts p JOIN nbs n ON p.{key} != n.{nkey}
+  FROM pts p JOIN nbs n ON p.page_id != n.nb_id
   WHERE (p.lon_e6 - n.lon_e6) * (p.lon_e6 - n.lon_e6)
       + (p.lat_e6 - n.lat_e6) * (p.lat_e6 - n.lat_e6)
       <= CAST({radius_e6} AS BIGINT) * {radius_e6}),
-ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY {key}
-           ORDER BY d2 ASC, {nkey} ASC) AS rn FROM cand),
-best AS (SELECT {key}, MAX(CASE WHEN rn = 1 THEN {nkey} END) AS nn_id,
+ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY page_id
+           ORDER BY d2 ASC, nb_id ASC) AS rn FROM cand),
+best AS (SELECT page_id, MAX(CASE WHEN rn = 1 THEN nb_id END) AS nn_id,
          MAX(CASE WHEN rn = 1 THEN d2 END) AS d2min,
-         COUNT(*) AS n_within FROM ranked GROUP BY {key})
-SELECT p.{key},
+         COUNT(*) AS n_within FROM ranked GROUP BY page_id)
+SELECT p.page_id,
        CAST(COALESCE(b.nn_id, -1) AS BIGINT) AS nn_id,
        COALESCE(SQRT(CAST(b.d2min AS DOUBLE)), -1.0) AS nn_dist,
        CAST(COALESCE(b.n_within, 0) AS BIGINT) AS n_within
-FROM pts p LEFT JOIN best b USING ({key})"""
+FROM pts p LEFT JOIN best b USING (page_id)"""

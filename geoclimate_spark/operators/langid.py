@@ -105,40 +105,38 @@ def _bigrams_sql(norm: str) -> str:
             f"greatest(length(t._norm), 1))) AS i) p")
 
 
-def lang_confusion_sql(doc_rel: str = "documents", id_col: str = "doc_id",
-                       text_col: str = "text", lang_col: str = "lang",
-                       n_top: int = N_TOP, train_mod: int = TRAIN_MOD) -> str:
-    norm = normalize_sql(text_col)
+def lang_confusion_sql(doc_rel: str = "documents") -> str:
+    norm = normalize_sql("text")
     return f"""WITH base AS (
-  SELECT {id_col}, {lang_col} AS lang_true, {norm} AS _norm
-  FROM {doc_rel} WHERE {text_col} IS NOT NULL),
+  SELECT doc_id, lang AS lang_true, {norm} AS _norm
+  FROM {doc_rel} WHERE text IS NOT NULL),
 grams AS ({_bigrams_sql("_norm")}),
 counts AS (
   SELECT lang_true AS lang, bigram, COUNT(*) AS _n
-  FROM grams WHERE {id_col} % {train_mod} = 0
+  FROM grams WHERE doc_id % {TRAIN_MOD} = 0
   GROUP BY 1, 2),
 profiles AS (
-  SELECT lang, bigram, CAST({n_top} + 1 - _rk AS BIGINT) AS weight
+  SELECT lang, bigram, CAST({N_TOP} + 1 - _rk AS BIGINT) AS weight
   FROM (SELECT lang, bigram, _n,
                ROW_NUMBER() OVER (PARTITION BY lang
                                   ORDER BY _n DESC, bigram ASC) AS _rk
         FROM counts)
-  WHERE _rk <= {n_top}),
+  WHERE _rk <= {N_TOP}),
 scores AS (
-  SELECT g.{id_col}, g.lang_true, p.lang, SUM(p.weight) AS score
+  SELECT g.doc_id, g.lang_true, p.lang, SUM(p.weight) AS score
   FROM grams g JOIN profiles p ON g.bigram = p.bigram
   GROUP BY 1, 2, 3),
 best AS (
-  SELECT {id_col}, lang AS _pred, score AS _score
-  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY {id_col}
+  SELECT doc_id, lang AS _pred, score AS _score
+  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
                                      ORDER BY score DESC, lang ASC) AS _rk
         FROM scores)
   WHERE _rk = 1),
 preds AS (
-  SELECT b.{id_col}, b.lang_true,
+  SELECT b.doc_id, b.lang_true,
          COALESCE(p._pred, 'und') AS lang_pred,
          CAST(COALESCE(p._score, 0) AS BIGINT) AS score
-  FROM base b LEFT JOIN best p ON b.{id_col} = p.{id_col})
+  FROM base b LEFT JOIN best p ON b.doc_id = p.doc_id)
 SELECT lang_true, lang_pred, CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(SUM(score) AS BIGINT) AS total_score
 FROM preds GROUP BY 1, 2"""

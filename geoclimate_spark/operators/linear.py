@@ -77,10 +77,7 @@ def _labels(docs: DataFrame, thresh: int, id_col: str, size_col: str,
             .select(F.col(id_col), y.cast("long").alias("y")))
 
 
-def rocchio_train(docs: DataFrame, dim: int = RC_DIM,
-                  thresh: int = RC_THRESH, id_col: str = "doc_id",
-                  text_col: str = "text",
-                  size_col: str = "n_chars") -> DataFrame:
+def rocchio_train(docs: DataFrame) -> DataFrame:
     """(bucket, weight): the trained model as int64 rows (one per POPULATED
     bucket, plus two scalars) — bucket 0..dim-1 = direction w[b] (buckets no
     token hashes into carry no row); bucket −1 = decision threshold
@@ -90,9 +87,9 @@ def rocchio_train(docs: DataFrame, dim: int = RC_DIM,
     Plan: ONE groupBy(label, bucket) over the feature frame + tiny
     driver-free algebra on the (2·dim)-row result — no window, no
     iteration, no Python."""
-    feats = _features(docs, dim, id_col, text_col)
-    labs = _labels(docs, thresh, id_col, size_col, text_col)
-    per = (feats.join(labs, id_col)
+    feats = _features(docs, RC_DIM, "doc_id", "text")
+    labs = _labels(docs, RC_THRESH, "doc_id", "n_chars", "text")
+    per = (feats.join(labs, "doc_id")
            .groupBy("bucket")
            .agg(F.sum(F.when(F.col("y") == 1, F.col("x")).otherwise(0))
                 .alias("mp"),
@@ -122,16 +119,13 @@ def rocchio_train(docs: DataFrame, dim: int = RC_DIM,
             .unionByName(scalars))
 
 
-def rocchio_confusion(docs: DataFrame, dim: int = RC_DIM,
-                      thresh: int = RC_THRESH, id_col: str = "doc_id",
-                      text_col: str = "text",
-                      size_col: str = "n_chars") -> DataFrame:
+def rocchio_confusion(docs: DataFrame) -> DataFrame:
     """(label, pred, n_docs): the trained model served back over the corpus
     — model rows broadcast, scoring is one hash agg per doc. Docs whose
     tokens all hash to zero-weight buckets score 0 → pred −1 (strict >)."""
-    model = rocchio_train(docs, dim, thresh, id_col, text_col, size_col)
-    feats = _features(docs, dim, id_col, text_col)
-    labs = _labels(docs, thresh, id_col, size_col, text_col)
+    model = rocchio_train(docs)
+    feats = _features(docs, RC_DIM, "doc_id", "text")
+    labs = _labels(docs, RC_THRESH, "doc_id", "n_chars", "text")
     wdir = model.where(F.col("bucket") >= 0) \
         .withColumnRenamed("weight", "wv")
     rhs = model.where(F.col("bucket") == -1) \
@@ -139,11 +133,11 @@ def rocchio_confusion(docs: DataFrame, dim: int = RC_DIM,
     scale = model.where(F.col("bucket") == -2) \
         .select(F.col("weight").alias("scale"))
     scores = (feats.join(F.broadcast(wdir), "bucket")
-              .groupBy(id_col)
+              .groupBy("doc_id")
               .agg(F.sum(F.col("wv") * F.col("x")).alias("wx")))
     pred = F.when(F.col("scale") * F.col("wx") > F.col("rhs"), 1) \
         .otherwise(-1).cast("long")
-    return (labs.join(scores, id_col, "left")
+    return (labs.join(scores, "doc_id", "left")
             .na.fill({"wx": 0})
             .crossJoin(F.broadcast(rhs)).crossJoin(F.broadcast(scale))
             .select(F.col("y").alias("label"), pred.alias("pred"))
@@ -189,11 +183,9 @@ def _parts_sql(dim: int, thresh: int, doc_rel: str, id_col: str,
     ]
 
 
-def rocchio_train_sql(dim: int = RC_DIM, thresh: int = RC_THRESH,
-                      doc_rel: str = "documents", id_col: str = "doc_id",
-                      text_col: str = "text",
-                      size_col: str = "n_chars") -> str:
-    parts = _parts_sql(dim, thresh, doc_rel, id_col, text_col, size_col)
+def rocchio_train_sql() -> str:
+    parts = _parts_sql(RC_DIM, RC_THRESH, "documents", "doc_id", "text",
+                       "n_chars")
     return (f"WITH {', '.join(parts)}\n"
             "SELECT CAST(bucket AS BIGINT) AS bucket,"
             " CAST(weight AS BIGINT) AS weight FROM w\n"
@@ -201,20 +193,18 @@ def rocchio_train_sql(dim: int = RC_DIM, thresh: int = RC_THRESH,
             " CAST(weight AS BIGINT) FROM scalars")
 
 
-def rocchio_confusion_sql(dim: int = RC_DIM, thresh: int = RC_THRESH,
-                          doc_rel: str = "documents",
-                          id_col: str = "doc_id", text_col: str = "text",
-                          size_col: str = "n_chars") -> str:
-    parts = _parts_sql(dim, thresh, doc_rel, id_col, text_col, size_col)
-    parts.append(f"""scores AS (
-  SELECT f.{id_col}, SUM(w.weight * f.x) AS wx
+def rocchio_confusion_sql() -> str:
+    parts = _parts_sql(RC_DIM, RC_THRESH, "documents", "doc_id", "text",
+                       "n_chars")
+    parts.append("""scores AS (
+  SELECT f.doc_id, SUM(w.weight * f.x) AS wx
   FROM feats f JOIN w USING (bucket) GROUP BY 1)""")
     return (f"WITH {', '.join(parts)}\n"
-            f"""SELECT l.y AS label,
+            """SELECT l.y AS label,
        CASE WHEN (SELECT weight FROM scalars WHERE bucket = -2)
                  * COALESCE(s.wx, 0)
                > (SELECT weight FROM scalars WHERE bucket = -1)
             THEN 1 ELSE -1 END AS pred,
        COUNT(*) AS n_docs
-FROM labs l LEFT JOIN scores s USING ({id_col})
+FROM labs l LEFT JOIN scores s USING (doc_id)
 GROUP BY 1, 2""")

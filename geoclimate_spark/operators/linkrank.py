@@ -43,13 +43,13 @@ N_ITER = 3
 EDGE_MOD = 5          # keep pairs with hash60(src>dst) % EDGE_MOD == 0
 
 
-def synth_host_edges(docs: DataFrame, host_col: str = "source") -> DataFrame:
+def synth_host_edges(docs: DataFrame) -> DataFrame:
     """Deterministic sparse host-link graph: ordered pair (a, b), a ≠ b,
     kept when hash60(a || '>' || b) % EDGE_MOD == 0. Fixture synthesis over
     the tiny distinct-host dim (broadcast self-pair of a dim table — NOT
     the operator's scale path; real pipelines extract edges from hrefs)."""
-    hosts = (docs.where(F.col(host_col).isNotNull())
-             .select(F.col(host_col).alias("src")).distinct())
+    hosts = (docs.where(F.col("source").isNotNull())
+             .select(F.col("source").alias("src")).distinct())
     dsts = hosts.select(F.col("src").alias("dst"))
     # tiny-dim pair universe: a deliberate broadcast non-equi pairing (the
     # dim is n_hosts rows; real pipelines extract edges from hrefs instead)
@@ -58,8 +58,7 @@ def synth_host_edges(docs: DataFrame, host_col: str = "source") -> DataFrame:
     return pairs.where(key % EDGE_MOD == 0)
 
 
-def host_pagerank(docs: DataFrame, host_col: str = "source",
-                  n_iter: int = N_ITER) -> DataFrame:
+def host_pagerank(docs: DataFrame, n_iter: int = N_ITER) -> DataFrame:
     """k-iteration integer PageRank over the synthesized host graph.
     Returns (host, outdeg, indeg, rank_int) with rank_int the exact
     fixed-point rank after ``n_iter`` iterations (SCALE = 10^6)."""
@@ -67,10 +66,10 @@ def host_pagerank(docs: DataFrame, host_col: str = "source",
     # ONCE and truncate their lineage — the k iteration subtrees reference
     # plain in-memory relations instead of re-expanding the synthesis DAG
     # (and its non-equi pairing) k times
-    hosts = (docs.where(F.col(host_col).isNotNull())
-             .select(F.col(host_col).alias("host")).distinct()
+    hosts = (docs.where(F.col("source").isNotNull())
+             .select(F.col("source").alias("host")).distinct()
              .localCheckpoint(True))
-    edges = synth_host_edges(docs, host_col).localCheckpoint(True)
+    edges = synth_host_edges(docs).localCheckpoint(True)
     outdeg = edges.groupBy("src").agg(F.count("*").cast("long").alias("outdeg"))
     indeg = edges.groupBy("dst").agg(F.count("*").cast("long").alias("indeg"))
     rank = hosts.select("host", F.lit(SCALE).cast("long").alias("rank_int"))
@@ -101,7 +100,7 @@ SEED_MOD = 3   # hosts with hash60(host) % SEED_MOD == 0 are labeled seeds
 LP_ITER = 3
 
 
-def host_label_propagation(docs: DataFrame, host_col: str = "source",
+def host_label_propagation(docs: DataFrame,
                            n_iter: int = LP_ITER) -> DataFrame:
     """Semi-supervised label propagation over the synthesized host graph —
     the host-category spreading pass a web-corpus curation pipeline runs to
@@ -122,10 +121,10 @@ def host_label_propagation(docs: DataFrame, host_col: str = "source",
     Scale shape per round: one equi-join of the label table to the
     symmetrized edge list + one two-level groupBy — identical to the
     distributed PageRank shape (2 shuffles/round, no Python)."""
-    hosts = (docs.where(F.col(host_col).isNotNull())
-             .select(F.col(host_col).alias("host")).distinct()
+    hosts = (docs.where(F.col("source").isNotNull())
+             .select(F.col("source").alias("host")).distinct()
              .localCheckpoint(True))
-    edges = synth_host_edges(docs, host_col).localCheckpoint(True)
+    edges = synth_host_edges(docs).localCheckpoint(True)
     sym = (edges.select("src", "dst")
            .union(edges.select(F.col("dst").alias("src"),
                                F.col("src").alias("dst")))
@@ -155,13 +154,11 @@ def host_label_propagation(docs: DataFrame, host_col: str = "source",
     return lab
 
 
-def host_label_propagation_sql(doc_rel: str = "documents",
-                               host_col: str = "source",
-                               n_iter: int = LP_ITER) -> str:
+def host_label_propagation_sql(doc_rel: str = "documents") -> str:
     key = hash60_sql("(a.host || '>' || b.host)")
     h = hash60_sql("host")
-    ctes = [f"""hosts AS (SELECT DISTINCT {host_col} AS host FROM {doc_rel}
-          WHERE {host_col} IS NOT NULL),
+    ctes = [f"""hosts AS (SELECT DISTINCT source AS host FROM {doc_rel}
+          WHERE source IS NOT NULL),
 edges AS (SELECT a.host AS src, b.host AS dst
           FROM hosts a JOIN hosts b ON a.host <> b.host
           WHERE ({key}) % {EDGE_MOD} = 0),
@@ -174,7 +171,7 @@ l0 AS (SELECT host,
               CAST(CASE WHEN ({h}) % {SEED_MOD} = 0
                         THEN ({h}) % {N_LABELS} END AS BIGINT) AS label
        FROM hosts)"""]
-    for i in range(n_iter):
+    for i in range(LP_ITER):
         ctes.append(f"""v{i} AS (
   SELECT s.src AS host, l.label, CAST(COUNT(*) AS BIGINT) AS votes
   FROM sym s JOIN l{i} l ON s.dst = l.host
@@ -190,7 +187,7 @@ l{i + 1} AS (
                    ELSE COALESCE(w.new_label, l.label) END AS BIGINT) AS label
   FROM l{i} l LEFT JOIN w{i} w ON l.host = w.host)""")
     return (f"WITH {', '.join(ctes)}\n"
-            f"SELECT host, is_seed, seed_label, label FROM l{n_iter}")
+            f"SELECT host, is_seed, seed_label, label FROM l{LP_ITER}")
 
 
 HITS_ITER = 3
@@ -203,8 +200,7 @@ def _ck(df: DataFrame, col: str) -> DataFrame:
     return df.withColumn("_one", F.pmod(F.col(col), F.lit(1)))
 
 
-def host_hits(docs: DataFrame, host_col: str = "source",
-              n_iter: int = HITS_ITER) -> DataFrame:
+def host_hits(docs: DataFrame) -> DataFrame:
     """k-iteration integer HITS (Kleinberg hubs & authorities) over the
     synthesized host graph — the companion ranking to :func:`host_pagerank`
     (authorities = linked-to by good hubs; hubs = linking to good
@@ -225,10 +221,10 @@ def host_hits(docs: DataFrame, host_col: str = "source",
     list (the PageRank shape run once per direction) plus a 1-row max
     aggregate joined back via the constant-key broadcast idiom — no
     corpus-wide window, no Python."""
-    hosts = (docs.where(F.col(host_col).isNotNull())
-             .select(F.col(host_col).alias("host")).distinct()
+    hosts = (docs.where(F.col("source").isNotNull())
+             .select(F.col("source").alias("host")).distinct()
              .localCheckpoint(True))
-    edges = synth_host_edges(docs, host_col).localCheckpoint(True)
+    edges = synth_host_edges(docs).localCheckpoint(True)
     outdeg = edges.groupBy("src").agg(F.count("*").cast("long").alias("outdeg"))
     indeg = edges.groupBy("dst").agg(F.count("*").cast("long").alias("indeg"))
 
@@ -248,7 +244,7 @@ def host_hits(docs: DataFrame, host_col: str = "source",
 
     auth = hosts.select("host", F.lit(SCALE).cast("long").alias("auth_int"))
     hub = hosts.select("host", F.lit(SCALE).cast("long").alias("hub_int"))
-    for _ in range(n_iter):
+    for _ in range(HITS_ITER):
         a_in = (edges.join(hub.select(F.col("host").alias("src"),
                                       F.col("hub_int")), "src")
                 .groupBy("dst").agg(F.sum("hub_int").alias("_s")))
@@ -271,14 +267,17 @@ def host_hits(docs: DataFrame, host_col: str = "source",
                     "auth_int", "hub_int"))
 
 
-def host_hits_sql(doc_rel: str = "documents", host_col: str = "source",
-                  n_iter: int = HITS_ITER) -> str:
+def host_hits_sql(doc_rel: str = "documents") -> str:
     """DuckDB dual of :func:`host_hits` — the same k rounds unrolled, max
-    normalization via a scalar subquery."""
+    normalization via a scalar subquery.
+
+    Every CTE is MATERIALIZED: each round reads the previous round's CTE
+    twice (rows + the MAX subquery), and DuckDB inlines plain CTEs at each
+    reference, so the work would grow with every round."""
     key = hash60_sql("(a.host || '>' || b.host)")
-    ctes = [f"""hosts AS (SELECT DISTINCT {host_col} AS host FROM {doc_rel}
-          WHERE {host_col} IS NOT NULL),
-edges AS (SELECT a.host AS src, b.host AS dst
+    ctes = [f"""hosts AS MATERIALIZED (SELECT DISTINCT source AS host FROM {doc_rel}
+          WHERE source IS NOT NULL),
+edges AS MATERIALIZED (SELECT a.host AS src, b.host AS dst
           FROM hosts a JOIN hosts b ON a.host <> b.host
           WHERE ({key}) % {EDGE_MOD} = 0),
 outdeg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
@@ -287,24 +286,24 @@ indeg AS (SELECT dst, CAST(COUNT(*) AS BIGINT) AS indeg
           FROM edges GROUP BY 1),
 a0 AS (SELECT host, CAST({SCALE} AS BIGINT) AS auth_int FROM hosts),
 h0 AS (SELECT host, CAST({SCALE} AS BIGINT) AS hub_int FROM hosts)"""]
-    for i in range(n_iter):
-        ctes.append(f"""ar{i} AS (
+    for i in range(HITS_ITER):
+        ctes.append(f"""ar{i} AS MATERIALIZED (
   SELECT hh.host, CAST(COALESCE(s._s, 0) AS BIGINT) AS raw
   FROM hosts hh LEFT JOIN (
     SELECT e.dst, SUM(h.hub_int) AS _s
     FROM edges e JOIN h{i} h ON e.src = h.host GROUP BY 1) s
   ON hh.host = s.dst),
-a{i + 1} AS (
+a{i + 1} AS MATERIALIZED (
   SELECT host, CAST((raw * {SCALE})
     // GREATEST((SELECT MAX(raw) FROM ar{i}), 1) AS BIGINT) AS auth_int
   FROM ar{i}),
-hr{i} AS (
+hr{i} AS MATERIALIZED (
   SELECT hh.host, CAST(COALESCE(s._s, 0) AS BIGINT) AS raw
   FROM hosts hh LEFT JOIN (
     SELECT e.src, SUM(a.auth_int) AS _s
     FROM edges e JOIN a{i + 1} a ON e.dst = a.host GROUP BY 1) s
   ON hh.host = s.src),
-h{i + 1} AS (
+h{i + 1} AS MATERIALIZED (
   SELECT host, CAST((raw * {SCALE})
     // GREATEST((SELECT MAX(raw) FROM hr{i}), 1) AS BIGINT) AS hub_int
   FROM hr{i})""")
@@ -314,15 +313,14 @@ h{i + 1} AS (
             f"       a.auth_int, u.hub_int\n"
             f"FROM hosts h LEFT JOIN outdeg o ON h.host = o.src\n"
             f"     LEFT JOIN indeg i ON h.host = i.dst\n"
-            f"     JOIN a{n_iter} a ON h.host = a.host\n"
-            f"     JOIN h{n_iter} u ON h.host = u.host")
+            f"     JOIN a{HITS_ITER} a ON h.host = a.host\n"
+            f"     JOIN h{HITS_ITER} u ON h.host = u.host")
 
 
-def host_pagerank_sql(doc_rel: str = "documents", host_col: str = "source",
-                      n_iter: int = N_ITER) -> str:
+def host_pagerank_sql(doc_rel: str = "documents") -> str:
     key = hash60_sql("(a.host || '>' || b.host)")
-    ctes = [f"""hosts AS (SELECT DISTINCT {host_col} AS host FROM {doc_rel}
-          WHERE {host_col} IS NOT NULL),
+    ctes = [f"""hosts AS (SELECT DISTINCT source AS host FROM {doc_rel}
+          WHERE source IS NOT NULL),
 edges AS (SELECT a.host AS src, b.host AS dst
           FROM hosts a JOIN hosts b ON a.host <> b.host
           WHERE ({key}) % {EDGE_MOD} = 0),
@@ -331,7 +329,7 @@ outdeg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
 indeg AS (SELECT dst, CAST(COUNT(*) AS BIGINT) AS indeg
           FROM edges GROUP BY 1),
 r0 AS (SELECT host, CAST({SCALE} AS BIGINT) AS rank_int FROM hosts)"""]
-    for i in range(n_iter):
+    for i in range(N_ITER):
         ctes.append(f"""inc{i} AS (
   SELECT e.dst, SUM(r.rank_int // o.outdeg) AS _in
   FROM edges e JOIN r{i} r ON e.src = r.host
@@ -348,4 +346,4 @@ r{i + 1} AS (
             f"       r.rank_int\n"
             f"FROM hosts h LEFT JOIN outdeg o ON h.host = o.src\n"
             f"     LEFT JOIN indeg i ON h.host = i.dst\n"
-            f"     JOIN r{n_iter} r ON h.host = r.host")
+            f"     JOIN r{N_ITER} r ON h.host = r.host")

@@ -111,19 +111,18 @@ def with_synthetic_links(docs: DataFrame) -> DataFrame:
     return docs.withColumn("html", F.encode(F.expr(html), "UTF-8"))
 
 
-def extract_links(pages: DataFrame, html_col: str = "html",
-                  id_col: str = "doc_id") -> DataFrame:
+def extract_links(pages: DataFrame) -> DataFrame:
     """(src_id, src_host, dst_host, anchor) parsed from the html bytes only.
     Pure codegen: decode -> isolate <title>/<nav> -> regexp_extract_all the
     anchor elements -> explode -> split href/text -> host from href."""
-    s = F.decode(F.col(html_col), "UTF-8")
+    s = F.decode(F.col("html"), "UTF-8")
     own = F.substring_index(
         F.substring_index(s, "<title>", -1), "</title>", 1)
     src_host = F.substring_index(F.substring_index(own, "://", -1), "/", 1)
     nav = F.substring_index(F.substring_index(s, "<nav>", -1), "</nav>", 1)
     elems = F.regexp_extract_all(
         nav, F.lit('<a href="[^"]*">[^<]*</a>'), F.lit(0))
-    exploded = (pages.select(F.col(id_col).alias("src_id"),
+    exploded = (pages.select(F.col("doc_id").alias("src_id"),
                              src_host.alias("src_host"),
                              F.explode(elems).alias("a")))
     href = F.regexp_extract(F.col("a"), 'href="([^"]*)"', 1)
@@ -147,12 +146,12 @@ def anchor_rollup(links: DataFrame) -> DataFrame:
                  F.min("anchor").alias("min_anchor")))
 
 
-def anchor_rollup_sql(doc_rel: str = "documents") -> str:
+def anchor_rollup_sql() -> str:
     """DuckDB dual: replay the link generator arithmetically (no html), same
     rollup."""
     return f"""
 WITH links AS (
-{_links_rows_duck(doc_rel)})
+{_links_rows_duck('documents')})
 SELECT dst_host,
        CAST(COUNT(*) AS BIGINT) AS n_inlinks,
        CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_src_pages,

@@ -61,15 +61,13 @@ OOV_MARGIN_BITS = 2
 KEEP_MAX_MEAN_BITS = 11.95  # keep docs with mean bits <= this
 
 
-def train_bigram_lm(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text",
-                    train_mod: int = TRAIN_MOD) -> DataFrame:
+def train_bigram_lm(docs: DataFrame) -> DataFrame:
     """(bigram, bits): integer surprisal bits of every bigram seen in the
     deterministic training slice. V (add-one vocabulary size) = distinct
     first-chars + 1, a deterministic integer derived from the slice."""
-    train = (docs.where(F.col(text_col).isNotNull()
-                        & (F.col(id_col) % train_mod == 0))
-             .select(normalize_col(F.col(text_col)).alias("_norm")))
+    train = (docs.where(F.col("text").isNotNull()
+                        & (F.col("doc_id") % TRAIN_MOD == 0))
+             .select(normalize_col(F.col("text")).alias("_norm")))
     from pyspark.sql import Window
 
     bg = (train.select(F.explode(_bigrams_col("_norm")).alias("bigram"))
@@ -94,52 +92,46 @@ def train_bigram_lm(docs: DataFrame, id_col: str = "doc_id",
         (F.length(F.expr("bin(_surp)")) - 1).cast("long").alias("bits"))
 
 
-def lm_quality_scores(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", train_mod: int = TRAIN_MOD,
-                      oov_margin: int = OOV_MARGIN_BITS,
-                      keep_max_mean: float = KEEP_MAX_MEAN_BITS) -> DataFrame:
+def lm_quality_scores(docs: DataFrame) -> DataFrame:
     """Per-doc LM quality: (doc_id, n_bigrams, total_bits, mean_bits, keep).
     Docs whose normalized text has no bigram (len < 2) are dropped — their
     mean is undefined and real pipelines cut them on length first."""
-    lm = train_bigram_lm(docs, id_col, text_col, train_mod)
+    lm = train_bigram_lm(docs)
     # derived OOV penalty = MAX(seen bits) + margin: a 1-row aggregate of
     # the LM, attached to the occurrence stream through the column-derived
     # constant-key broadcast (kmeans idiom — a literal key would fold into
     # a BNLJ; a window over occ would be a one-partition scale-killer)
-    oov = (lm.agg((F.max("bits") + F.lit(oov_margin)).cast("long")
+    oov = (lm.agg((F.max("bits") + F.lit(OOV_MARGIN_BITS)).cast("long")
                   .alias("_oov")))
     # the join key must stay non-NULL when the training slice is EMPTY
     # (max over zero rows is NULL): a NULL key would drop every document
     # on the Spark side while the DuckDB dual's CROSS JOIN keeps them with
     # NULL scores — coalesce keeps both engines at "NULL scores", parity
-    occ = (docs.where(F.col(text_col).isNotNull())
-           .select(F.col(id_col),
-                   normalize_col(F.col(text_col)).alias("_norm"))
-           .select(id_col, F.explode(_bigrams_col("_norm")).alias("bigram"))
+    occ = (docs.where(F.col("text").isNotNull())
+           .select(F.col("doc_id"),
+                   normalize_col(F.col("text")).alias("_norm"))
+           .select("doc_id", F.explode(_bigrams_col("_norm")).alias("bigram"))
            .withColumn("_one", F.pmod(F.crc32(F.col("bigram")), F.lit(1)))
            .join(F.broadcast(oov.withColumn(
                "_one", F.pmod(F.coalesce(F.col("_oov"), F.lit(0)),
                               F.lit(1)))), "_one"))
     scored = (occ.join(F.broadcast(lm), "bigram", "left")
-              .groupBy(id_col)
+              .groupBy("doc_id")
               .agg(F.count("*").alias("n_bigrams"),
                    F.sum(F.coalesce(F.col("bits"), F.col("_oov")))
                    .alias("total_bits")))
     mean = F.col("total_bits").cast("double") / F.col("n_bigrams").cast("double")
     return scored.select(
-        id_col, "n_bigrams", "total_bits", mean.alias("mean_bits"),
-        (mean <= F.lit(keep_max_mean)).alias("keep"))
+        "doc_id", "n_bigrams", "total_bits", mean.alias("mean_bits"),
+        (mean <= F.lit(KEEP_MAX_MEAN_BITS)).alias("keep"))
 
 
 # --------------------------------------------------------------- DuckDB dual
-def lm_quality_sql(doc_rel: str = "documents", id_col: str = "doc_id",
-                   text_col: str = "text", train_mod: int = TRAIN_MOD,
-                   oov_margin: int = OOV_MARGIN_BITS,
-                   keep_max_mean: float = KEEP_MAX_MEAN_BITS) -> str:
-    norm = normalize_sql(text_col)
+def lm_quality_sql(doc_rel: str = "documents") -> str:
+    norm = normalize_sql("text")
     return f"""WITH train AS (
   SELECT {norm} AS _norm FROM {doc_rel}
-  WHERE {text_col} IS NOT NULL AND {id_col} % {train_mod} = 0),
+  WHERE text IS NOT NULL AND doc_id % {TRAIN_MOD} = 0),
 bg AS (
   SELECT bigram, COUNT(*) AS n_bg FROM (
     SELECT unnest({_bigrams_sql("_norm")}) AS bigram FROM train)
@@ -153,18 +145,18 @@ lm AS (
          CAST(length(bin(((n_pre + _v) * {1 << SURP_SHIFT}) // (n_bg + 1)))
               AS BIGINT) - 1 AS bits
   FROM bg JOIN pre ON substr(bg.bigram, 1, 1) = pre._pfx CROSS JOIN v),
-oov AS (SELECT CAST(MAX(bits) + {oov_margin} AS BIGINT) AS _oov FROM lm),
+oov AS (SELECT CAST(MAX(bits) + {OOV_MARGIN_BITS} AS BIGINT) AS _oov FROM lm),
 occ AS (
-  SELECT {id_col}, unnest({_bigrams_sql(norm)}) AS bigram
-  FROM {doc_rel} WHERE {text_col} IS NOT NULL),
+  SELECT doc_id, unnest({_bigrams_sql(norm)}) AS bigram
+  FROM {doc_rel} WHERE text IS NOT NULL),
 scored AS (
-  SELECT o.{id_col},
+  SELECT o.doc_id,
          CAST(COUNT(*) AS BIGINT) AS n_bigrams,
          CAST(SUM(COALESCE(l.bits, v._oov)) AS BIGINT) AS total_bits
   FROM occ o CROSS JOIN oov v LEFT JOIN lm l ON l.bigram = o.bigram
-  GROUP BY o.{id_col})
-SELECT {id_col}, n_bigrams, total_bits,
+  GROUP BY o.doc_id)
+SELECT doc_id, n_bigrams, total_bits,
        CAST(total_bits AS DOUBLE) / CAST(n_bigrams AS DOUBLE) AS mean_bits,
        (CAST(total_bits AS DOUBLE) / CAST(n_bigrams AS DOUBLE))
-         <= {keep_max_mean} AS keep
+         <= {KEEP_MAX_MEAN_BITS} AS keep
 FROM scored"""

@@ -42,58 +42,52 @@ TOKEN_BUDGET = 1_000_000
 
 def mixture_plan(spark: SparkSession, docs: DataFrame,
                  shares_bp: list[tuple[str, int]] | None = None,
-                 budget: int = TOKEN_BUDGET,
-                 id_col: str = "doc_id", text_col: str = "text",
-                 group: str = "lang") -> DataFrame:
+                 budget: int = TOKEN_BUDGET) -> DataFrame:
     """(lang, n_docs, avail_tokens, share_bp, target_tokens, n_epochs,
     deficit_tokens): the mixture table a sampler consumes. ``n_epochs`` is
     ceil(target/avail); ``deficit_tokens = n_epochs*avail - target`` is the
     over-shoot the sampler trims by subsampling the final epoch."""
     shares = shares_bp or TARGET_SHARES_BP
-    stats = bpe_encode_stats(docs, id_col=id_col, text_col=text_col)
-    avail = (corpus_token_budget(stats, docs, key=id_col, group=group)
+    stats = bpe_encode_stats(docs)
+    avail = (corpus_token_budget(stats, docs)
              .withColumnRenamed("total_tokens", "avail_tokens")
              .drop("total_chars"))
     share_df = spark.createDataFrame(
-        [(lang, bp) for lang, bp in shares], f"{group} string, share_bp long")
+        [(lang, bp) for lang, bp in shares], "lang string, share_bp long")
     # floor division via integral DIV to match the SQL dual's `//` exactly
     target = F.expr(f"CAST(share_bp * {int(budget)} DIV 10000 AS LONG)")
     epochs = F.expr("CAST((target_tokens + avail_tokens - 1)"
                     " DIV avail_tokens AS LONG)")
-    return (avail.join(F.broadcast(share_df), group)
+    return (avail.join(F.broadcast(share_df), "lang")
             .withColumn("target_tokens", target)
             .withColumn("n_epochs", epochs)
             .withColumn("deficit_tokens",
                         (F.col("n_epochs") * F.col("avail_tokens")
                          - F.col("target_tokens")).cast("long"))
-            .select(group, "n_docs", "avail_tokens", "share_bp",
+            .select("lang", "n_docs", "avail_tokens", "share_bp",
                     "target_tokens", "n_epochs", "deficit_tokens"))
 
 
 # --------------------------------------------------------------- DuckDB dual
-def mixture_plan_sql(shares_bp: list[tuple[str, int]] | None = None,
-                     budget: int = TOKEN_BUDGET, doc_rel: str = "documents",
-                     id_col: str = "doc_id", text_col: str = "text",
-                     group: str = "lang") -> str:
-    shares = shares_bp or TARGET_SHARES_BP
+def mixture_plan_sql() -> str:
     values = ", ".join(f"('{lang}', CAST({bp} AS BIGINT))"
-                       for lang, bp in shares)
-    enc = bpe_encode_sql(doc_rel=doc_rel, id_col=id_col, text_col=text_col)
+                       for lang, bp in TARGET_SHARES_BP)
+    enc = bpe_encode_sql()
     return f"""
 WITH enc AS ({enc}),
 avail AS (
-  SELECT d.{group},
+  SELECT d.lang,
          CAST(COUNT(*) AS BIGINT) AS n_docs,
          CAST(SUM(e.n_tokens) AS BIGINT) AS avail_tokens
-  FROM enc e JOIN {doc_rel} d USING ({id_col})
-  GROUP BY d.{group}
-), shares({group}, share_bp) AS (VALUES {values}),
+  FROM enc e JOIN documents d USING (doc_id)
+  GROUP BY d.lang
+), shares(lang, share_bp) AS (VALUES {values}),
 planned AS (
-  SELECT a.{group}, a.n_docs, a.avail_tokens, s.share_bp,
-         CAST(s.share_bp * {int(budget)} // 10000 AS BIGINT) AS target_tokens
-  FROM avail a JOIN shares s USING ({group})
+  SELECT a.lang, a.n_docs, a.avail_tokens, s.share_bp,
+         CAST(s.share_bp * {TOKEN_BUDGET} // 10000 AS BIGINT) AS target_tokens
+  FROM avail a JOIN shares s USING (lang)
 )
-SELECT {group}, n_docs, avail_tokens, share_bp, target_tokens,
+SELECT lang, n_docs, avail_tokens, share_bp, target_tokens,
        CAST((target_tokens + avail_tokens - 1) // avail_tokens AS BIGINT)
          AS n_epochs,
        CAST((target_tokens + avail_tokens - 1) // avail_tokens * avail_tokens
@@ -120,19 +114,17 @@ def _isqrt_sql(x: str) -> str:
             f" - (CASE WHEN {s} * {s} > {x} THEN 1 ELSE 0 END))")
 
 
-def temperature_mixture(docs: DataFrame, budget: int = TOKEN_BUDGET,
-                        group: str = "lang",
-                        size_col: str = "n_chars") -> DataFrame:
+def temperature_mixture(docs: DataFrame) -> DataFrame:
     """(lang, n_docs, avail_chars, weight, target_tokens): per-slice budget
     ∝ isqrt(avail_chars), exact largest-remainder apportionment."""
     from pyspark.sql import Window
-    rolled = (docs.groupBy(group)
+    rolled = (docs.groupBy("lang")
               .agg(F.count("*").cast("long").alias("n_docs"),
-                   F.sum(size_col).cast("long").alias("avail_chars"))
+                   F.sum("n_chars").cast("long").alias("avail_chars"))
               .withColumn("weight",
                           F.expr(_isqrt_sql("avail_chars")).cast("long")))
     w_all = Window.partitionBy()          # ≤ |slices| rows — constant size
-    b = int(budget)
+    b = TOKEN_BUDGET
     rolled = (rolled
               .withColumn("_tw", F.sum("weight").over(w_all))
               .withColumn("_base", F.expr(f"(weight * {b}) div _tw"))
@@ -140,22 +132,20 @@ def temperature_mixture(docs: DataFrame, budget: int = TOKEN_BUDGET,
               .withColumn("_extra_n", F.expr(f"{b} - sum(_base) over ()"))
               .withColumn("_rk", F.row_number().over(
                   Window.partitionBy().orderBy(
-                      F.col("_rem").desc(), F.col(group).asc()))))
+                      F.col("_rem").desc(), F.col("lang").asc()))))
     return rolled.select(
-        group, "n_docs", "avail_chars", "weight",
+        "lang", "n_docs", "avail_chars", "weight",
         (F.col("_base") + (F.col("_rk") <= F.col("_extra_n")).cast("long"))
         .cast("long").alias("target_tokens"))
 
 
-def temperature_mixture_sql(budget: int = TOKEN_BUDGET,
-                            doc_rel: str = "documents", group: str = "lang",
-                            size_col: str = "n_chars") -> str:
+def temperature_mixture_sql() -> str:
     """DuckDB dual of :func:`temperature_mixture`."""
-    b = int(budget)
+    b = TOKEN_BUDGET
     return f"""WITH rolled AS (
-  SELECT {group}, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM({size_col}) AS BIGINT) AS avail_chars
-  FROM {doc_rel} GROUP BY 1),
+  SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
+         CAST(SUM(n_chars) AS BIGINT) AS avail_chars
+  FROM documents GROUP BY 1),
 weighted AS (
   SELECT *, CAST({_isqrt_sql("avail_chars")} AS BIGINT) AS weight
   FROM rolled),
@@ -168,9 +158,9 @@ apportioned AS (
 ranked AS (
   SELECT *,
          {b} - SUM(_base) OVER () AS _extra_n,
-         ROW_NUMBER() OVER (ORDER BY _rem DESC, {group} ASC) AS _rk
+         ROW_NUMBER() OVER (ORDER BY _rem DESC, lang ASC) AS _rk
   FROM apportioned)
-SELECT {group}, n_docs, avail_chars, weight,
+SELECT lang, n_docs, avail_chars, weight,
        CAST(_base + (CASE WHEN _rk <= _extra_n THEN 1 ELSE 0 END)
             AS BIGINT) AS target_tokens
 FROM ranked"""

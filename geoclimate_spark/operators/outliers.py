@@ -38,12 +38,10 @@ from .kmeans import KM_DIM, KM_Q, _d2_spark, _d2_sql, _quant
 OUTLIER_DECILE = 10  # flag rank <= n DIV 10
 
 
-def label_centroids(emb: DataFrame, id_col: str = "vec_id",
-                    vec: str = "embedding",
-                    label: str = "label") -> DataFrame:
+def label_centroids(emb: DataFrame) -> DataFrame:
     """(label, c): floor-mean centroid of the quantized vectors per label."""
-    q = emb.select(F.col(label).alias("lbl"),
-                   F.expr(_quant(vec)).alias("q"))
+    q = emb.select(F.col("label").alias("lbl"),
+                   F.expr(_quant("embedding")).alias("q"))
     per = (q.select("lbl", F.posexplode("q").alias("d", "v"))
            .groupBy("lbl", "d")
            .agg(F.sum("v").alias("_s"), F.count("*").alias("_n")))
@@ -56,16 +54,13 @@ def label_centroids(emb: DataFrame, id_col: str = "vec_id",
                 lambda x: x["m"]).alias("c")))
 
 
-def embedding_outliers(emb: DataFrame, dim: int = KM_DIM,
-                       id_col: str = "vec_id", vec: str = "embedding",
-                       label: str = "label",
-                       decile: int = OUTLIER_DECILE) -> DataFrame:
+def embedding_outliers(emb: DataFrame, dim: int = KM_DIM) -> DataFrame:
     """(vec_id, label, d2, d2_rank, n_label, is_outlier): exact integer
     distance to the own-label centroid; is_outlier=1 for the top
-    ``1/decile`` of each label by (d2 DESC, id ASC) rank."""
-    cents = label_centroids(emb, id_col, vec, label)
-    q = emb.select(F.col(id_col).alias("id"), F.col(label).alias("lbl"),
-                   F.expr(_quant(vec)).alias("q"))
+    ``1/OUTLIER_DECILE`` of each label by (d2 DESC, id ASC) rank."""
+    cents = label_centroids(emb)
+    q = emb.select(F.col("vec_id").alias("id"), F.col("label").alias("lbl"),
+                   F.expr(_quant("embedding")).alias("q"))
     j = (q.join(F.broadcast(cents), "lbl")
          .withColumn("d2", F.expr(_d2_spark("q", "c", dim))))
     w = Window.partitionBy("lbl")
@@ -73,25 +68,22 @@ def embedding_outliers(emb: DataFrame, dim: int = KM_DIM,
     return (j.withColumn("d2_rank", F.row_number().over(wr).cast("long"))
             .withColumn("n_label", F.count("*").over(w).cast("long"))
             .withColumn("is_outlier",
-                        (F.col("d2_rank") * F.lit(int(decile))
+                        (F.col("d2_rank") * F.lit(int(OUTLIER_DECILE))
                          <= F.col("n_label")).cast("long"))
-            .select(F.col("id").alias(id_col), F.col("lbl").alias(label),
+            .select(F.col("id").alias("vec_id"), F.col("lbl").alias("label"),
                     "d2", "d2_rank", "n_label", "is_outlier"))
 
 
 # --------------------------------------------------------------- DuckDB dual
-def embedding_outliers_sql(rel: str = "embeddings", dim: int = KM_DIM,
-                           id_col: str = "vec_id", vec: str = "embedding",
-                           label: str = "label",
-                           decile: int = OUTLIER_DECILE) -> str:
-    quant = (f"list_transform({vec}, x -> "
+def embedding_outliers_sql() -> str:
+    quant = ("list_transform(embedding, x -> "
              f"CAST(FLOOR(CAST(x AS DOUBLE) * {KM_Q}) AS BIGINT))")
     return f"""
 WITH q AS (
-  SELECT {id_col} AS id, {label} AS lbl, {quant} AS q FROM {rel}
+  SELECT vec_id AS id, label AS lbl, {quant} AS q FROM embeddings
 ), per AS (
   SELECT lbl, d, CAST(SUM(v) AS BIGINT) AS _s, COUNT(*) AS _n
-  FROM (SELECT lbl, unnest(generate_series(1, {dim})) AS d, unnest(q) AS v
+  FROM (SELECT lbl, unnest(generate_series(1, {KM_DIM})) AS d, unnest(q) AS v
         FROM q)
   GROUP BY lbl, d
 ), cents AS (
@@ -99,7 +91,7 @@ WITH q AS (
                         AS BIGINT) ORDER BY d) AS c
   FROM per GROUP BY lbl
 ), scored AS (
-  SELECT q.id, q.lbl, {_d2_sql('q.q', 'cents.c', dim)} AS d2
+  SELECT q.id, q.lbl, {_d2_sql('q.q', 'cents.c', KM_DIM)} AS d2
   FROM q JOIN cents USING (lbl)
 ), ranked AS (
   SELECT id, lbl, CAST(d2 AS BIGINT) AS d2,
@@ -109,7 +101,7 @@ WITH q AS (
          CAST(COUNT(*) OVER (PARTITION BY lbl) AS BIGINT) AS n_label
   FROM scored
 )
-SELECT id AS {id_col}, lbl AS {label}, d2, d2_rank, n_label,
-       CAST(CASE WHEN d2_rank * {int(decile)} <= n_label
+SELECT id AS vec_id, lbl AS label, d2, d2_rank, n_label,
+       CAST(CASE WHEN d2_rank * {int(OUTLIER_DECILE)} <= n_label
                  THEN 1 ELSE 0 END AS BIGINT) AS is_outlier
 FROM ranked"""

@@ -358,20 +358,19 @@ def layer_difference(combos: DataFrame, layer_names: list[str],
 
 
 def inverse_cover(combos: DataFrame, zones: DataFrame,
-                  layer_names: list[str],
-                  layers: list[str] | None = None) -> DataFrame:
-    """Per-zone geometric COMPLEMENT of the union of ``layers`` (default:
-    all) inside the zone — the `inversePolygons` / sprawl "cool area" shape
+                  layer_names: list[str]) -> DataFrame:
+    """Per-zone geometric COMPLEMENT of the union of all layers inside the
+    zone — the `inversePolygons` / sprawl "cool area" shape
     (`/root/reference/geoindicators/.../SpatialUnits.groovy:695-732`
     ST_DIFFERENCE(zone envelope, ST_UNION(accumulated polygons));
     consumed by `WorkflowGeoIndicators.groovy:2174-2235`).
 
     Pure combo-bitmask algebra over the :func:`overlay_rect_layers` atoms:
-    the complement is exactly the atoms covered by NONE of the selected
-    layers. Zones with no overlay row at all are fully uncovered (LEFT
-    JOIN keeps them at inverse == zone area). Returns
+    the complement is exactly the atoms covered by NONE of the layers.
+    Zones with no overlay row at all are fully uncovered (LEFT JOIN keeps
+    them at inverse == zone area). Returns
     (zone_id, inverse_area_e6sq, inverse_frac, n_atoms)."""
-    mask = sum(1 << layer_names.index(n) for n in (layers or layer_names))
+    mask = (1 << len(layer_names)) - 1
     inv = (combos.where(F.col("combo").bitwiseAND(F.lit(mask)) == 0)
            .groupBy("zone_id")
            .agg(F.sum("area_e6sq").alias("_a"), F.sum("n_atoms").alias("_n")))
@@ -388,9 +387,8 @@ def inverse_cover(combos: DataFrame, zones: DataFrame,
 
 
 def inverse_cover_sql(combos_sql: str, zones_sql: str,
-                      layer_names: list[str],
-                      layers: list[str] | None = None) -> str:
-    mask = sum(1 << layer_names.index(n) for n in (layers or layer_names))
+                      layer_names: list[str]) -> str:
+    mask = (1 << len(layer_names)) - 1
     return f"""WITH combos AS ({combos_sql}),
 zones AS ({zones_sql}),
 inv AS (SELECT zone_id, SUM(area_e6sq) AS a, SUM(n_atoms) AS n
@@ -496,19 +494,18 @@ def dissolve_components(labeled_points: DataFrame,
 
 
 def dissolve_components_sql(comp_sql: str, points_sql: str,
-                            buffer_e6: int = 25_000,
-                            key: str = "page_id") -> str:
+                            buffer_e6: int = 25_000) -> str:
     """DuckDB mirror of the SQL-expressible dissolve columns: per component
     n_points, exact union-of-squares area (atom grid per component), bbox.
-    ``comp_sql`` selects (key, component); ``points_sql`` (key, lon_e6,
+    ``comp_sql`` selects (page_id, component); ``points_sql`` (page_id, lon_e6,
     lat_e6) — both BIGINT."""
     return f"""WITH comp AS ({comp_sql}),
 pts AS ({points_sql}),
-sq AS (SELECT c.component, p.{key},
+sq AS (SELECT c.component, p.page_id,
        p.lon_e6 - {buffer_e6} AS x0, p.lat_e6 - {buffer_e6} AS y0,
        p.lon_e6 + {buffer_e6} AS x1, p.lat_e6 + {buffer_e6} AS y1,
        p.lon_e6, p.lat_e6
-  FROM pts p JOIN comp c ON c.{key} = p.{key}),
+  FROM pts p JOIN comp c ON c.page_id = p.page_id),
 xs AS (SELECT component, x0 AS x FROM sq UNION SELECT component, x1 FROM sq),
 xs2 AS (SELECT component, x, ROW_NUMBER() OVER (PARTITION BY component ORDER BY x) AS i FROM xs),
 xc AS (SELECT a.component, a.x AS ax0, b.x AS ax1

@@ -38,16 +38,16 @@ def _qterm_rows(phrases: list[tuple[int, str]]) -> list[tuple[int, int, str, int
     return rows
 
 
-def phrase_search(docs: DataFrame, phrases: list[tuple[int, str]],
-                  id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def phrase_search(docs: DataFrame,
+                  phrases: list[tuple[int, str]]) -> DataFrame:
     """(query_id, doc_id, n_occ, first_pos) for every document containing
     each phrase verbatim (whitespace tokens of the normalized text)."""
     spark = docs.sparkSession
     qterms = spark.createDataFrame(
         _qterm_rows(phrases), "qid int, tidx int, term string, qlen int")
     post = (docs
-            .select(F.col(id_col).alias("id"),
-                    normalize_col(F.col(text_col)).alias("_t"))
+            .select(F.col("doc_id").alias("id"),
+                    normalize_col(F.col("text")).alias("_t"))
             .select("id", F.posexplode(F.split("_t", " "))
                     .alias("pos0", "term")))
     cand = (post.join(F.broadcast(qterms), "term")
@@ -67,9 +67,8 @@ def phrase_search(docs: DataFrame, phrases: list[tuple[int, str]],
 
 
 def phrase_search_sql(phrases: list[tuple[int, str]],
-                      rel: str = "documents", id_sql: str = "doc_id",
-                      text_sql: str = "text") -> str:
-    norm = normalize_sql(text_sql)
+                      rel: str = "documents") -> str:
+    norm = normalize_sql("text")
     guard = (f"CASE WHEN length({norm}) > {_ORACLE_MAX_POS} THEN "
              f"error('oracle phrase bound {_ORACLE_MAX_POS} exceeded') "
              f"ELSE {norm} END")
@@ -77,7 +76,7 @@ def phrase_search_sql(phrases: list[tuple[int, str]],
     # apostrophes produce valid VALUES rows instead of broken SQL.
     vals = ", ".join(f"({q}, {i}, '{t.replace(chr(39), chr(39) * 2)}', {n})"
                      for q, i, t, n in _qterm_rows(phrases))
-    return f"""WITH norm AS (SELECT {id_sql} AS id, {guard} AS t FROM {rel}),
+    return f"""WITH norm AS (SELECT doc_id AS id, {guard} AS t FROM {rel}),
 toks AS (SELECT id, string_split(t, ' ') AS l FROM norm),
 series AS (SELECT i FROM generate_series(1, {_ORACLE_MAX_POS}) s(i)),
 post AS (SELECT id, i AS pos, l[i] AS term

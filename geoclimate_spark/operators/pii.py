@@ -65,10 +65,10 @@ def with_synthetic_pii(docs: DataFrame) -> DataFrame:
     return docs.withColumn("raw", F.expr(_RAW_SPARK))
 
 
-def scrub_pii(docs: DataFrame, text_col: str = "raw") -> DataFrame:
+def scrub_pii(docs: DataFrame) -> DataFrame:
     """Per-doc PII counts + redacted-text fingerprint:
     (doc_id, n_emails, n_phones, n_ips, clean_len, clean_md5)."""
-    t = F.col(text_col)
+    t = F.col("raw")
     clean = F.regexp_replace(
         F.regexp_replace(
             F.regexp_replace(t, EMAIL_RE, "[EMAIL]"),
@@ -100,7 +100,7 @@ def scrub_select_sql(rel: str) -> str:
 FROM {rel}"""
 
 
-def scrub_pii_sql(rel: str = "documents") -> str:
+def scrub_pii_sql() -> str:
     """Full oracle: deterministic injection + scrub."""
-    return (f"WITH raws AS (SELECT doc_id, {_RAW_DUCK} AS raw FROM {rel})\n"
+    return (f"WITH raws AS (SELECT doc_id, {_RAW_DUCK} AS raw FROM documents)\n"
             + scrub_select_sql("raws"))

@@ -345,8 +345,7 @@ def simple_poly_pair_areas(zvtx: DataFrame, fvtx: DataFrame) -> DataFrame:
             .select("zone_id", "feat_id", "layer", "inter_area"))
 
 
-def simple_poly_pair_areas_sql(parts_sql: str, fvtx_sql: str,
-                               part_stride: int = 16) -> str:
+def simple_poly_pair_areas_sql(parts_sql: str, fvtx_sql: str) -> str:
     """DuckDB oracle for :func:`simple_poly_pair_areas` via the fixture's
     convex decomposition: each (zone, part) becomes a synthetic convex
     "zone" keyed ``zone_id·stride + part_id`` through
@@ -354,13 +353,13 @@ def simple_poly_pair_areas_sql(parts_sql: str, fvtx_sql: str,
     pkey order (ordered cumulative window — never a bare double SUM), and
     the total is snapped to the same grid."""
     inner = convex_pair_areas_sql(
-        f"SELECT zone_id * {part_stride} + part_id AS zone_id, seq, x, y"
+        "SELECT zone_id * 16 + part_id AS zone_id, seq, x, y"
         f" FROM ({parts_sql})", fvtx_sql)
     g = AREA_GRID
     return f"""WITH pairs AS ({inner}),
-cum AS (SELECT zone_id // {part_stride} AS rid, zone_id AS pkey, feat_id,
+cum AS (SELECT zone_id // 16 AS rid, zone_id AS pkey, feat_id,
        layer,
-       SUM(inter_area) OVER (PARTITION BY zone_id // {part_stride}, feat_id
+       SUM(inter_area) OVER (PARTITION BY zone_id // 16, feat_id
            ORDER BY zone_id ROWS UNBOUNDED PRECEDING) AS cs
   FROM pairs),
 agg AS (SELECT CAST(rid AS BIGINT) AS zone_id, feat_id, MAX(layer) AS layer,

@@ -125,12 +125,12 @@ def population_chain(raster: DataFrame, buildings: DataFrame,
         ("tlon0", "tlat0", "tlon1", "tlat1"))
 
 
-def tiles_sql(res: int = TILE_RES_POP) -> str:
+def tiles_sql() -> str:
     """(tile_id, tlon0, tlat0, tlon1, tlat1) — the res-N grid cells as SQL,
     mirroring raster.grid_cells_df's exact integer bounds."""
     from .raster import _check_res
 
-    nx, ny, w = _check_res(res)
+    nx, ny, w = _check_res(TILE_RES_POP)
     return f"""SELECT i AS tile_id,
        (i % {nx}) * {w} - 180000000 AS tlon0,
        CAST((i - i % {nx}) / {nx} AS BIGINT) * {w} - 90000000 AS tlat0,

@@ -40,16 +40,14 @@ _GAMMA_BITS = "CAST(2 * (length(bin(gap)) - 1) + 1 AS BIGINT)"
 _GAMMA_BITS_SQL = "CAST(2 * (length(bin(gap)) - 1) + 1 AS BIGINT)"
 
 
-def posting_size_plan(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text",
-                      topk: int = TOPK_TERMS) -> DataFrame:
+def posting_size_plan(docs: DataFrame, topk: int = TOPK_TERMS) -> DataFrame:
     """Top-``topk`` most storage-expensive posting lists:
     (term, df, postings_bits, bits_per_posting_milli). The first gap is
     ``doc_id + 1`` (ids are 0-based; gamma needs >= 1), later gaps are
     consecutive-id differences — the standard d-gap convention."""
     postings = (docs
-                .select(F.col(id_col).cast("long").alias("doc"),
-                        normalize_col(F.col(text_col)).alias("_t"))
+                .select(F.col("doc_id").cast("long").alias("doc"),
+                        normalize_col(F.col("text")).alias("_t"))
                 .where(F.col("_t") != "")
                 .select("doc", F.explode(F.split("_t", " ")).alias("term"))
                 .distinct())
@@ -70,14 +68,12 @@ def posting_size_plan(docs: DataFrame, id_col: str = "doc_id",
                     .alias("bits_per_posting_milli")))
 
 
-def posting_size_plan_sql(doc_rel: str = "documents",
-                          id_col: str = "doc_id", text_col: str = "text",
-                          topk: int = TOPK_TERMS) -> str:
+def posting_size_plan_sql(topk: int = TOPK_TERMS) -> str:
     """DuckDB dual of :func:`posting_size_plan`."""
-    norm = normalize_sql(text_col)
+    norm = normalize_sql("text")
     return f"""
-WITH base AS (SELECT CAST({id_col} AS BIGINT) AS doc, {norm} AS t
-              FROM {doc_rel}),
+WITH base AS (SELECT CAST(doc_id AS BIGINT) AS doc, {norm} AS t
+              FROM documents),
 postings AS (SELECT DISTINCT doc, u.term
   FROM base, UNNEST(string_split(t, ' ')) AS u(term)
   WHERE t <> ''),

@@ -45,16 +45,14 @@ _KEY_SHIFT = 20
 _PB_SHIFT = 14
 
 
-def ppl_tercile_assignments(docs: DataFrame, id_col: str = "doc_id",
-                            text_col: str = "text",
-                            lang_col: str = "lang") -> DataFrame:
+def ppl_tercile_assignments(docs: DataFrame) -> DataFrame:
     """Per-doc bucket assignment: (doc_id, lang, ppl_key, cum_chars,
     total_chars, bucket). Docs lm_quality drops (no bigram) are absent."""
-    scored = lmquality.lm_quality_scores(docs, id_col, text_col)
+    scored = lmquality.lm_quality_scores(docs)
     base = (scored
-            .join(docs.select(id_col, lang_col,
-                              F.length(text_col).cast("long")
-                              .alias("_chars")), id_col)
+            .join(docs.select("doc_id", "lang",
+                              F.length("text").cast("long")
+                              .alias("_chars")), "doc_id")
             .withColumn("ppl_key",
                         # SQL `div` = exact int64 division (Spark `/` on
                         # longs is a double divide — truncation near a
@@ -64,8 +62,8 @@ def ppl_tercile_assignments(docs: DataFrame, id_col: str = "doc_id",
                                "div n_bigrams"))
             .withColumn("_pb", F.shiftright("ppl_key", _PB_SHIFT)))
     # tiny (lang, pb) offsets table: exclusive char prefix + per-lang total
-    bw = Window.partitionBy(lang_col).orderBy(F.col("_pb").asc())
-    buckets = (base.groupBy(lang_col, "_pb")
+    bw = Window.partitionBy("lang").orderBy(F.col("_pb").asc())
+    buckets = (base.groupBy("lang", "_pb")
                .agg(F.sum("_chars").alias("_bt"))
                .withColumn("_off", F.coalesce(
                    F.sum("_bt").over(bw.rowsBetween(
@@ -74,16 +72,16 @@ def ppl_tercile_assignments(docs: DataFrame, id_col: str = "doc_id",
                    bw.rowsBetween(Window.unboundedPreceding,
                                   Window.unboundedFollowing))))
     # within-bucket cumsum: parallel across (lang, pb) partitions
-    ww = (Window.partitionBy(lang_col, "_pb")
-          .orderBy(F.col("ppl_key").asc(), F.col(id_col).asc()))
+    ww = (Window.partitionBy("lang", "_pb")
+          .orderBy(F.col("ppl_key").asc(), F.col("doc_id").asc()))
     out = (base.join(F.broadcast(buckets.select(
-               lang_col, "_pb", "_off", "_total")), [lang_col, "_pb"])
+               "lang", "_pb", "_off", "_total")), ["lang", "_pb"])
            .withColumn("cum_chars",
                        (F.col("_off") + F.sum("_chars").over(ww))
                        .cast("long")))
     cum3 = F.col("cum_chars") * 3
     return out.select(
-        id_col, lang_col, F.col("ppl_key").cast("long").alias("ppl_key"),
+        "doc_id", "lang", F.col("ppl_key").cast("long").alias("ppl_key"),
         "cum_chars", F.col("_total").cast("long").alias("total_chars"),
         F.when(cum3 <= F.col("_total"), F.lit("head"))
          .when(cum3 <= F.col("_total") * 2, F.lit("middle"))
@@ -91,26 +89,25 @@ def ppl_tercile_assignments(docs: DataFrame, id_col: str = "doc_id",
 
 
 # --------------------------------------------------------------- DuckDB dual
-def ppl_tercile_sql(doc_rel: str = "documents", id_col: str = "doc_id",
-                    text_col: str = "text", lang_col: str = "lang") -> str:
+def ppl_tercile_sql(doc_rel: str = "documents") -> str:
     """Oracle: the NAIVE per-lang global cumulative window — the engine's
     (lang, pb)-decomposed cumsum must reproduce it bit-for-bit."""
-    lm = lmquality.lm_quality_sql(doc_rel, id_col, text_col)
+    lm = lmquality.lm_quality_sql(doc_rel)
     return f"""WITH scored AS ({lm}),
 keyed AS (
-  SELECT s.{id_col}, d.{lang_col},
+  SELECT s.doc_id, d.lang,
          CAST((s.total_bits * {1 << _KEY_SHIFT}) // s.n_bigrams AS BIGINT)
            AS ppl_key,
-         CAST(length(d.{text_col}) AS BIGINT) AS _chars
-  FROM scored s JOIN {doc_rel} d USING ({id_col})),
+         CAST(length(d.text) AS BIGINT) AS _chars
+  FROM scored s JOIN {doc_rel} d USING (doc_id)),
 cum AS (
-  SELECT {id_col}, {lang_col}, ppl_key,
-         CAST(SUM(_chars) OVER (PARTITION BY {lang_col}
-                ORDER BY ppl_key ASC, {id_col} ASC) AS BIGINT) AS cum_chars,
-         CAST(SUM(_chars) OVER (PARTITION BY {lang_col}) AS BIGINT)
+  SELECT doc_id, lang, ppl_key,
+         CAST(SUM(_chars) OVER (PARTITION BY lang
+                ORDER BY ppl_key ASC, doc_id ASC) AS BIGINT) AS cum_chars,
+         CAST(SUM(_chars) OVER (PARTITION BY lang) AS BIGINT)
            AS total_chars
   FROM keyed)
-SELECT {id_col}, {lang_col}, ppl_key, cum_chars, total_chars,
+SELECT doc_id, lang, ppl_key, cum_chars, total_chars,
        CASE WHEN cum_chars * 3 <= total_chars THEN 'head'
             WHEN cum_chars * 3 <= total_chars * 2 THEN 'middle'
             ELSE 'tail' END AS bucket

@@ -58,15 +58,15 @@ def grid_cells_df(spark: SparkSession, res: int = RASTER_RES) -> DataFrame:
         ((F.col("y") + 1) * w - 90_000_000).alias("lat1_e6"))
 
 
-def raster_df(spark: SparkSession, res: int = RASTER_RES) -> DataFrame:
+def raster_df(spark: SparkSession) -> DataFrame:
     """Deterministic synthetic raster: one row per cell with integer µ°
     bounds and an LCG value in [0, 1000)."""
-    return (grid_cells_df(spark, res).drop("x", "y")
+    return (grid_cells_df(spark).drop("x", "y")
             .withColumn("value", (F.col("cell_id") * _A + 11) % _M % 1000))
 
 
-def raster_sql(res: int = RASTER_RES) -> str:
-    nx, ny, w = _check_res(res)
+def raster_sql() -> str:
+    nx, ny, w = _check_res(RASTER_RES)
     return f"""SELECT i AS cell_id,
        (i % {nx}) * {w} - 180000000 AS lon0_e6,
        CAST((i - i % {nx}) / {nx} AS BIGINT) * {w} - 90000000 AS lat0_e6,
@@ -133,8 +133,8 @@ def raster_zonal_stats(raster: DataFrame, zones: DataFrame) -> DataFrame:
         F.col("n_cells").cast("long").alias("n_cells"))
 
 
-def raster_zonal_stats_sql(res: int = RASTER_RES) -> str:
-    return f"""WITH raster AS ({raster_sql(res)}),
+def raster_zonal_stats_sql() -> str:
+    return f"""WITH raster AS ({raster_sql()}),
 zones AS ({zone_bounds_values_sql()}),
 j AS (SELECT z.zone_id, r.value,
         (LEAST(r.lon1_e6, z.zlon1) - GREATEST(r.lon0_e6, z.zlon0))
@@ -150,13 +150,12 @@ SELECT zone_id,
 FROM j GROUP BY zone_id"""
 
 
-def intersect_pair_areas(zones: DataFrame, rects: DataFrame,
-                         rect_id: str = "rect_id") -> DataFrame:
+def intersect_pair_areas(zones: DataFrame, rects: DataFrame) -> DataFrame:
     """spatialJoin mode C (`SpatialUnits.groovy:531-538`): every intersecting
     (zone, rect) pair with its shared area — the all-relations join that
     feeds area-weighted rollups. Exact bigint µ°² overlaps; candidates via
     the cell-keyed covering equi-join (operators/covering.py).
-    ``rects``: ({rect_id}, lon0, lat0, lon1, lat1)."""
+    ``rects``: (rect_id, lon0, lat0, lon1, lat1)."""
     from .covering import bbox_cell_join
 
     ox = F.least(F.col("lon1"), F.col("zlon1")) - F.greatest(F.col("lon0"), F.col("zlon0"))
@@ -167,14 +166,13 @@ def intersect_pair_areas(zones: DataFrame, rects: DataFrame,
             .withColumn("area_e6sq",
                         F.when((ox > 0) & (oy > 0), ox * oy).otherwise(F.lit(0)))
             .where(F.col("area_e6sq") > 0)
-            .select("zone_id", rect_id, "area_e6sq"))
+            .select("zone_id", "rect_id", "area_e6sq"))
 
 
-def intersect_pair_areas_sql(zones_sql: str, rects_sql: str,
-                             rect_id: str = "rect_id") -> str:
+def intersect_pair_areas_sql(zones_sql: str, rects_sql: str) -> str:
     return f"""WITH zones AS ({zones_sql}),
 rects AS ({rects_sql})
-SELECT z.zone_id, r.{rect_id},
+SELECT z.zone_id, r.rect_id,
        (LEAST(r.lon1, z.zlon1) - GREATEST(r.lon0, z.zlon0))
      * (LEAST(r.lat1, z.zlat1) - GREATEST(r.lat0, z.zlat0)) AS area_e6sq
 FROM rects r, zones z
@@ -182,10 +180,10 @@ WHERE LEAST(r.lon1, z.zlon1) > GREATEST(r.lon0, z.zlon0)
   AND LEAST(r.lat1, z.zlat1) > GREATEST(r.lat0, z.zlat0)"""
 
 
-def page_raster_enrich(pages_cells: DataFrame, raster: DataFrame,
-                       res: int = RASTER_RES, cell_col: str = "rcell_id") -> DataFrame:
+def page_raster_enrich(pages_cells: DataFrame, raster: DataFrame) -> DataFrame:
     """Point-side raster lookup: pages keyed by their raster cell id join the
     cell value (broadcast raster / co-partitioned join at scale)."""
     return pages_cells.join(
-        F.broadcast(raster.select(F.col("cell_id").alias(cell_col), "value")),
-        cell_col, "left")
+        F.broadcast(raster.select(F.col("cell_id").alias("rcell_id"),
+                                  "value")),
+        "rcell_id", "left")

@@ -39,8 +39,7 @@ def _bigrams_col(toks: Column) -> Column:
                            F.element_at(toks, i + 1)))
 
 
-def repetition_metrics(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def repetition_metrics(docs: DataFrame) -> DataFrame:
     """Per-document repetition metrics; documents with < 2 tokens are
     excluded (no bigrams exist — same filter on the oracle side).
 
@@ -52,15 +51,15 @@ def repetition_metrics(docs: DataFrame, id_col: str = "doc_id",
     * ``top_bigram_frac``     occurrences of the most frequent bigram
                               divided by n_bigrams
     """
-    toks = F.split(normalize_col(F.col(text_col)), " ")
+    toks = F.split(normalize_col(F.col("text")), " ")
     # repartition the RAW rows first so the tokenize/bigram projections run
     # post-shuffle on all workers instead of serializing on a one-file scan
     # (see dedup.shingle_array_df for the same pattern + rationale)
     spark = docs.sparkSession
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    base = (docs.repartition(n_parts, id_col)
+    base = (docs.repartition(n_parts, "doc_id")
         .select(
-        F.col(id_col).cast("long").alias("id"),
+        F.col("doc_id").cast("long").alias("id"),
         toks.alias("toks"))
         .where(F.size(F.col("toks")) >= 2)
         .select(
@@ -91,14 +90,12 @@ def repetition_metrics(docs: DataFrame, id_col: str = "doc_id",
                  / d("n_bigrams").cast("double")).alias("top_bigram_frac")))
 
 
-def repetition_metrics_sql(doc_rel: str = "documents",
-                           id_sql: str = "doc_id",
-                           text_sql: str = "text") -> str:
+def repetition_metrics_sql() -> str:
     """DuckDB oracle for :func:`repetition_metrics` (same names/semantics)."""
-    norm = normalize_sql(text_sql)
+    norm = normalize_sql("text")
     return f"""WITH base AS (
-  SELECT CAST({id_sql} AS BIGINT) AS id, string_split({norm}, ' ') AS toks
-  FROM {doc_rel}
+  SELECT CAST(doc_id AS BIGINT) AS id, string_split({norm}, ' ') AS toks
+  FROM documents
   WHERE len(string_split({norm}, ' ')) >= 2),
 scalars AS (
   SELECT id, CAST(len(toks) AS BIGINT) AS n_tokens,

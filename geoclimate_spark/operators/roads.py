@@ -39,7 +39,7 @@ ROAD_TYPES = ("motorway", "primary", "secondary", "residential",
 ROAD_SURFACES = ("asphalt", "concrete", "paved", "gravel", "grass")
 
 
-def synth_roads_rows(n: int = 400) -> list[tuple]:
+def synth_roads_rows() -> list[tuple]:
     """(road_id, x0, y0, x1, y1, type, surface, maxspeed, direction, zindex)
     deterministic LCG segments, dx>0 and dy!=0 guaranteed (see module
     docstring). maxspeed -1 means "unknown, take the class default"
@@ -47,7 +47,7 @@ def synth_roads_rows(n: int = 400) -> list[tuple]:
     level (tunnel / ground / bridge, `RsuIndicators.groovy:1010-1020`)."""
     rows = []
     s = 987_653
-    for k in range(n):
+    for k in range(400):
         s = _lcg(s)
         x0 = s % 330_000_000 - 170_000_000
         s = _lcg(s)

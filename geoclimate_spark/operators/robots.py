@@ -105,15 +105,13 @@ def synth_candidates(docs: DataFrame) -> DataFrame:
         f"{_cand_path('div', 'STRING')} AS path")
 
 
-def robots_verdicts(cands: DataFrame, rules: DataFrame,
-                    broadcast_rules: bool = True) -> DataFrame:
+def robots_verdicts(cands: DataFrame, rules: DataFrame) -> DataFrame:
     """(host, rule_id, action, n_urls): per-URL longest-prefix winner, rolled
     up per winning rule. Unmatched URLs land on (rule_id=-1, allow)."""
-    r = F.broadcast(rules) if broadcast_rules else rules
     # left join keeps every URL; non-matching rule rows contribute NULL to
     # the min, so a URL whose host-rules all miss still lands on the
     # default (min over nothing = NULL -> coalesce below)
-    j = cands.join(r, "host", "left")
+    j = cands.join(F.broadcast(rules), "host", "left")
     matched = (F.col("prefix").isNotNull()
                & (F.expr("substr(path, 1, length(prefix))")
                   == F.col("prefix")))
@@ -130,7 +128,7 @@ def robots_verdicts(cands: DataFrame, rules: DataFrame,
             .agg(F.count("*").cast("long").alias("n_urls")))
 
 
-def robots_verdicts_sql(doc_rel: str = "documents") -> str:
+def robots_verdicts_sql() -> str:
     """DuckDB dual: same rules/candidates synthesis, correlated
     longest-prefix winner via arg_min over (-len, rule_id)."""
     rule_parts = []
@@ -149,7 +147,7 @@ WITH rules AS (
 cands AS (
   SELECT doc_id, {_host(f'doc_id % {N_HOSTS}', 'VARCHAR')} AS host,
          {_cand_path('//', 'VARCHAR')} AS path
-  FROM {doc_rel}),
+  FROM documents),
 matched AS (
   SELECT c.doc_id, c.host, r.rule_id, r.action, length(r.prefix) AS plen
   FROM cands c LEFT JOIN rules r

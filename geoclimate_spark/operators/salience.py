@@ -33,49 +33,47 @@ TOP_K = 3
 _SCALE = 1 << 30
 
 
-def doc_top_terms(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", k: int = TOP_K) -> DataFrame:
-    """Top-``k`` salient terms per document by (tf·2^30) div df, term-asc
-    tie-break. Returns (id_col, rank, term, tf, df, score)."""
-    toks = (docs.where(F.col(text_col).isNotNull())
-            .select(F.col(id_col),
-                    F.explode(F.split(normalize_col(F.col(text_col)), " "))
+def doc_top_terms(docs: DataFrame) -> DataFrame:
+    """Top-``TOP_K`` salient terms per document by (tf·2^30) div df, term-asc
+    tie-break. Returns (doc_id, rank, term, tf, df, score)."""
+    toks = (docs.where(F.col("text").isNotNull())
+            .select(F.col("doc_id"),
+                    F.explode(F.split(normalize_col(F.col("text")), " "))
                     .alias("term"))
             .where(F.col("term") != ""))
-    tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df_ = toks.groupBy("term").agg(
-        F.countDistinct(id_col).cast("long").alias("df"))
+        F.countDistinct("doc_id").cast("long").alias("df"))
     scored = (tf.join(df_, "term")
               .withColumn("score",
                           F.expr(f"(tf * {_SCALE}L) div df").cast("long")))
-    w = Window.partitionBy(id_col).orderBy(F.col("score").desc(),
-                                           F.col("term").asc())
+    w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(),
+                                             F.col("term").asc())
     return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(id_col, F.col("rank").cast("long").alias("rank"),
+            .where(F.col("rank") <= TOP_K)
+            .select("doc_id", F.col("rank").cast("long").alias("rank"),
                     "term", F.col("tf").cast("long").alias("tf"), "df",
                     "score"))
 
 
-def doc_top_terms_sql(doc_rel: str = "documents", id_col: str = "doc_id",
-                      text_col: str = "text", k: int = TOP_K) -> str:
-    norm = normalize_sql(text_col)
+def doc_top_terms_sql(doc_rel: str = "documents") -> str:
+    norm = normalize_sql("text")
     return f"""WITH toks AS (
-  SELECT {id_col}, t.term
-  FROM (SELECT {id_col}, {norm} AS _norm FROM {doc_rel}
-        WHERE {text_col} IS NOT NULL) d,
+  SELECT doc_id, t.term
+  FROM (SELECT doc_id, {norm} AS _norm FROM {doc_rel}
+        WHERE text IS NOT NULL) d,
        LATERAL (SELECT unnest(string_split(d._norm, ' ')) AS term) t
   WHERE t.term <> ''),
-tf AS (SELECT {id_col}, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
-df AS (SELECT term, CAST(COUNT(DISTINCT {id_col}) AS BIGINT) AS df
+tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
+df AS (SELECT term, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
        FROM toks GROUP BY 1),
 scored AS (
-  SELECT tf.{id_col}, tf.term, tf.tf, df.df,
+  SELECT tf.doc_id, tf.term, tf.tf, df.df,
          CAST((tf.tf * {_SCALE}) // df.df AS BIGINT) AS score
   FROM tf JOIN df ON tf.term = df.term)
-SELECT {id_col}, CAST(rank AS BIGINT) AS rank, term,
+SELECT doc_id, CAST(rank AS BIGINT) AS rank, term,
        CAST(tf AS BIGINT) AS tf, df, score
-FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY {id_col}
+FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
                                    ORDER BY score DESC, term ASC) AS rank
       FROM scored)
-WHERE rank <= {k}"""
+WHERE rank <= {TOP_K}"""

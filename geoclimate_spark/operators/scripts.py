@@ -80,14 +80,14 @@ def with_synthetic_scripts(docs: DataFrame) -> DataFrame:
     return docs.withColumn("mtext", F.expr(_inject_spark()))
 
 
-def script_profile(docs: DataFrame, text_col: str = "mtext") -> DataFrame:
+def script_profile(docs: DataFrame) -> DataFrame:
     """Per-doc script histogram: (doc_id, n_<script>…, n_scripts,
     dom_script, dom_share_millis).
 
     ``n_scripts`` counts scripts present at all; ``dom_share_millis`` is the
     dominant script's integer share of all scripted characters (exact int64
     cross-multiplication — no doubles)."""
-    t = F.col(text_col)
+    t = F.col("mtext")
     counts = {n: F.regexp_count(t, F.lit(cls)).cast("long")
               for n, cls in SCRIPT_CLASSES}
     names = [n for n, _ in SCRIPT_CLASSES]

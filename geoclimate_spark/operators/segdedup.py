@@ -52,13 +52,12 @@ def _segments(docs: DataFrame, id_col: str, text_col: str,
             .select("id", F.posexplode(segs).alias("pos", "seg")))
 
 
-def segment_dedup(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", k: int = SEG_TOKENS) -> DataFrame:
+def segment_dedup(docs: DataFrame, k: int = SEG_TOKENS) -> DataFrame:
     """(doc_id, n_segs, n_kept, dedup_text): global first-occurrence segment
     dedup. A segment survives iff its (id, pos) is the minimum over all
     occurrences of that exact segment text — including later occurrences
     inside the SAME document (within-doc repetition dedups too)."""
-    seg = _segments(docs, id_col, text_col, k)
+    seg = _segments(docs, "doc_id", "text", k)
     w = Window.partitionBy("seg").orderBy("id", "pos")
     kept = (seg.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1))
@@ -71,7 +70,7 @@ def segment_dedup(docs: DataFrame, id_col: str = "doc_id",
                         lambda x: x["seg"]),
                     " ").alias("dedup_text")))
     return (tot.join(agg, "id", "left")
-            .select(F.col("id").alias(id_col),
+            .select(F.col("id").alias("doc_id"),
                     F.col("n_segs").cast("long").alias("n_segs"),
                     F.coalesce(F.col("n_kept"), F.lit(0))
                     .cast("long").alias("n_kept"),
@@ -79,18 +78,17 @@ def segment_dedup(docs: DataFrame, id_col: str = "doc_id",
                     .alias("dedup_text")))
 
 
-def segment_dedup_sql(doc_rel: str = "documents", id_col: str = "doc_id",
-                      text_col: str = "text", k: int = SEG_TOKENS) -> str:
+def segment_dedup_sql(doc_rel: str = "documents") -> str:
     """DuckDB dual of :func:`segment_dedup` — list slicing clamps at the tail
     exactly like Spark's slice(arr, start, len), and string_split('') yields
     [''] on both sides, so segment sets match bit-for-bit."""
-    norm = normalize_sql(text_col)
+    norm = normalize_sql("text")
     return f"""
-WITH toks AS (SELECT {id_col} AS id, string_split({norm}, ' ') AS tk
+WITH toks AS (SELECT doc_id AS id, string_split({norm}, ' ') AS tk
               FROM {doc_rel}),
 segs AS (SELECT id, s - 1 AS pos,
-                array_to_string(tk[(s - 1) * {k} + 1 : s * {k}], ' ') AS seg
-  FROM toks, UNNEST(generate_series(1, (len(tk) + {k - 1}) // {k})) AS g(s)),
+                array_to_string(tk[(s - 1) * {SEG_TOKENS} + 1 : s * {SEG_TOKENS}], ' ') AS seg
+  FROM toks, UNNEST(generate_series(1, (len(tk) + {SEG_TOKENS - 1}) // {SEG_TOKENS})) AS g(s)),
 ranked AS (SELECT id, pos, seg,
                   ROW_NUMBER() OVER (PARTITION BY seg ORDER BY id, pos) AS rn
            FROM segs),
@@ -99,7 +97,7 @@ agg AS (SELECT id, COUNT(*) AS n_kept,
                string_agg(seg, ' ' ORDER BY pos) AS dedup_text
         FROM kept GROUP BY id),
 tot AS (SELECT id, COUNT(*) AS n_segs FROM segs GROUP BY id)
-SELECT t.id AS {id_col}, CAST(t.n_segs AS BIGINT) AS n_segs,
+SELECT t.id AS doc_id, CAST(t.n_segs AS BIGINT) AS n_segs,
        CAST(COALESCE(a.n_kept, 0) AS BIGINT) AS n_kept,
        COALESCE(a.dedup_text, '') AS dedup_text
 FROM tot t LEFT JOIN agg a USING (id)"""

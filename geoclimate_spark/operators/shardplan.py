@@ -38,44 +38,38 @@ from pyspark.sql import functions as F
 N_SHARDS = 8
 
 
-def export_shard_plan(docs: DataFrame, id_col: str = "doc_id",
-                      size_col: str = "n_chars",
-                      k: int = N_SHARDS) -> DataFrame:
+def export_shard_plan(docs: DataFrame) -> DataFrame:
     """(doc_id, n_chars, rank, shard): sorted-round-robin shard assignment
     with an exactly decomposed global rank."""
-    base = docs.select(F.col(id_col), F.col(size_col).cast("long")
+    base = docs.select(F.col("doc_id"), F.col("n_chars").cast("long")
                        .alias("_sz"))
     bw = Window.orderBy(F.col("_sz").desc())
     buckets = (base.groupBy("_sz").agg(F.count("*").alias("_bn"))
                .withColumn("_off", F.coalesce(
                    F.sum("_bn").over(bw.rowsBetween(
                        Window.unboundedPreceding, -1)), F.lit(0))))
-    ww = Window.partitionBy("_sz").orderBy(F.col(id_col).asc())
+    ww = Window.partitionBy("_sz").orderBy(F.col("doc_id").asc())
     return (base.join(F.broadcast(buckets.select("_sz", "_off")), "_sz")
             .withColumn("rank",
                         (F.col("_off") + F.row_number().over(ww))
                         .cast("long"))
-            .select(id_col, F.col("_sz").alias(size_col), "rank",
-                    F.expr(f"(rank - 1) % {int(k)}").cast("long")
+            .select("doc_id", F.col("_sz").alias("n_chars"), "rank",
+                    F.expr(f"(rank - 1) % {int(N_SHARDS)}").cast("long")
                     .alias("shard")))
 
 
-def export_shard_plan_sql(rel: str = "documents", id_col: str = "doc_id",
-                          size_col: str = "n_chars",
-                          k: int = N_SHARDS) -> str:
+def export_shard_plan_sql() -> str:
     """DuckDB dual: the naive global window the decomposition must match."""
-    return f"""SELECT {id_col}, {size_col},
-       CAST(ROW_NUMBER() OVER (ORDER BY {size_col} DESC, {id_col} ASC)
+    return f"""SELECT doc_id, n_chars,
+       CAST(ROW_NUMBER() OVER (ORDER BY n_chars DESC, doc_id ASC)
             AS BIGINT) AS rank,
-       CAST((ROW_NUMBER() OVER (ORDER BY {size_col} DESC, {id_col} ASC) - 1)
-            % {int(k)} AS BIGINT) AS shard
-FROM {rel}"""
+       CAST((ROW_NUMBER() OVER (ORDER BY n_chars DESC, doc_id ASC) - 1)
+            % {int(N_SHARDS)} AS BIGINT) AS shard
+FROM documents"""
 
 
 # ---------------------------------------------------- range partition plan
-def range_partition_plan(docs: DataFrame, n_buckets: int = 8,
-                         value_col: str = "n_chars",
-                         id_col: str = "doc_id") -> DataFrame:
+def range_partition_plan(docs: DataFrame, n_buckets: int = 8) -> DataFrame:
     """Equi-depth range-partitioner planning — the physical-layout consumer
     of exact rank arithmetic (what Spark's RangePartitioner does by
     SAMPLING, computed exactly): pick ``n_buckets − 1`` split values so
@@ -101,14 +95,14 @@ def range_partition_plan(docs: DataFrame, n_buckets: int = 8,
         # Degenerate single-bucket plan: no boundaries, one rollup. An
         # UNGROUPED aggregate (always exactly one row, even on empty
         # input) — matching the SQL dual's aggregate-without-GROUP-BY.
-        return (docs.agg(F.min(F.col(value_col).cast("long"))
+        return (docs.agg(F.min(F.col("n_chars").cast("long"))
                          .alias("lo_value"),
-                         F.max(F.col(value_col).cast("long"))
+                         F.max(F.col("n_chars").cast("long"))
                          .alias("hi_value"),
                          F.count("*").cast("long").alias("n_docs"))
                 .select(F.lit(0).cast("long").alias("bucket"),
                         "lo_value", "hi_value", "n_docs"))
-    vc = (docs.select(F.col(value_col).cast("long").alias("v"))
+    vc = (docs.select(F.col("n_chars").cast("long").alias("v"))
           .groupBy("v").agg(F.count("*").alias("c")))
     wv = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     cum = vc.withColumn("_cum", F.sum("c").over(wv)) \
@@ -125,8 +119,8 @@ def range_partition_plan(docs: DataFrame, n_buckets: int = 8,
             .agg(F.sort_array(F.collect_list("bval")).alias("_bs"))
             .withColumn("_one", F.pmod(F.size("_bs").cast("long"),
                                        F.lit(1))))
-    rows = (docs.select(F.col(id_col).alias("id"),
-                        F.col(value_col).cast("long").alias("v"))
+    rows = (docs.select(F.col("doc_id").alias("id"),
+                        F.col("n_chars").cast("long").alias("v"))
             .withColumn("_one", F.pmod(F.col("id"), F.lit(1)))
             .join(F.broadcast(barr), "_one")
             .withColumn("bucket", F.expr(
@@ -137,23 +131,22 @@ def range_partition_plan(docs: DataFrame, n_buckets: int = 8,
                  F.count("*").cast("long").alias("n_docs")))
 
 
-def range_partition_plan_sql(n_buckets: int = 8, doc_rel: str = "documents",
-                             value_sql: str = "n_chars",
-                             id_sql: str = "doc_id") -> str:
+def range_partition_plan_sql(n_buckets: int = 8,
+                             doc_rel: str = "documents") -> str:
     k = int(n_buckets)
     if k < 1:
         raise ValueError("n_buckets must be >= 1")
     if k == 1:
         return f"""SELECT CAST(0 AS BIGINT) AS bucket,
-       CAST(MIN(CAST({value_sql} AS BIGINT)) AS BIGINT) AS lo_value,
-       CAST(MAX(CAST({value_sql} AS BIGINT)) AS BIGINT) AS hi_value,
+       CAST(MIN(CAST(n_chars AS BIGINT)) AS BIGINT) AS lo_value,
+       CAST(MAX(CAST(n_chars AS BIGINT)) AS BIGINT) AS hi_value,
        CAST(COUNT(*) AS BIGINT) AS n_docs
 FROM {doc_rel}"""
     bsel = " UNION ALL ".join(
         f"SELECT {j} AS j, (SELECT MIN(v) FROM cum WHERE _cum > (_n * {j}) // {k}) AS bval"
         for j in range(1, k))
     return f"""WITH vc AS (
-  SELECT CAST({value_sql} AS BIGINT) AS v, COUNT(*) AS c
+  SELECT CAST(n_chars AS BIGINT) AS v, COUNT(*) AS c
   FROM {doc_rel} GROUP BY 1
 ), cum AS (
   SELECT v, c,
@@ -162,9 +155,9 @@ FROM {doc_rel}"""
   FROM vc
 ), bounds AS ({bsel}),
 rows_b AS (
-  SELECT CAST({id_sql} AS BIGINT) AS id, CAST({value_sql} AS BIGINT) AS v,
+  SELECT CAST(doc_id AS BIGINT) AS id, CAST(n_chars AS BIGINT) AS v,
          (SELECT COUNT(*) FROM bounds b
-          WHERE b.bval IS NOT NULL AND b.bval <= CAST({value_sql} AS BIGINT))
+          WHERE b.bval IS NOT NULL AND b.bval <= CAST(n_chars AS BIGINT))
            AS bucket
   FROM {doc_rel}
 )

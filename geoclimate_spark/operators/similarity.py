@@ -31,7 +31,11 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+EMB_DIM = 64          # fixture embedding width
 N_PLANES = 6
+PROBE_RADIUS = 1      # multi-probe LSH: Hamming radius probed per table
+N_BANDS = 4           # cosine_pairs_lsh: independent hyperplane bands
+PLANES_PER_BAND = 6
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -60,40 +64,37 @@ def _with_norm(emb: DataFrame, id_col: str, vec: str) -> DataFrame:
                       F.sqrt(_dot(F.col(vec), F.col(vec))).alias("nrm"))
 
 
-def cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
-                id_col: str = "vec_id", vec: str = "embedding") -> DataFrame:
+def cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 5) -> DataFrame:
     """Exact brute-force top-k: (query_id, rank, vec_id, cos) — ties broken
     by candidate id ascending."""
-    base = _with_norm(emb, id_col, vec)
+    base = _with_norm(emb, "vec_id", "embedding")
     q = F.broadcast(base.where(F.col("id").isin(query_ids))
                     .select(F.col("id").alias("query_id"), F.col("v").alias("qv"),
                             F.col("nrm").alias("qn")))
     cand = (q.crossJoin(base)
             .where(F.col("id") != F.col("query_id"))
-            .select("query_id", F.col("id").alias(id_col),
+            .select("query_id", F.col("id").alias("vec_id"),
                     (_dot(F.col("qv"), F.col("v"))
                      / (F.col("qn") * F.col("nrm"))).alias("cos")))
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(),
-                                               F.col(id_col).asc())
+                                               F.col("vec_id").asc())
     return (cand.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .select("query_id", F.col("rank").cast("long").alias("rank"),
-                    id_col, "cos"))
+                    "vec_id", "cos"))
 
 
-def cosine_topk_sql(query_ids: list[int], k: int = 5,
-                    rel: str = "embeddings", id_col: str = "vec_id",
-                    vec: str = "embedding") -> str:
+def cosine_topk_sql(query_ids: list[int], k: int = 5) -> str:
     ids = ", ".join(str(i) for i in query_ids)
-    nrm = _DOT_SQL.format(a=vec, b=vec)
-    return f"""WITH base AS (SELECT {id_col} AS id, {vec}, SQRT({nrm}) AS nrm FROM {rel}),
-cand AS (SELECT q.id AS query_id, c.id AS {id_col},
-         {_DOT_SQL.format(a='q.' + vec, b='c.' + vec)} / (q.nrm * c.nrm) AS cos
+    nrm = _DOT_SQL.format(a="embedding", b="embedding")
+    return f"""WITH base AS (SELECT vec_id AS id, embedding, SQRT({nrm}) AS nrm FROM embeddings),
+cand AS (SELECT q.id AS query_id, c.id AS vec_id,
+         {_DOT_SQL.format(a='q.embedding', b='c.embedding')} / (q.nrm * c.nrm) AS cos
   FROM base q JOIN base c ON c.id != q.id
   WHERE q.id IN ({ids})),
 ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           ORDER BY cos DESC, {id_col} ASC) AS rank FROM cand)
-SELECT query_id, CAST(rank AS BIGINT) AS rank, {id_col}, cos
+           ORDER BY cos DESC, vec_id ASC) AS rank FROM cand)
+SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id, cos
 FROM ranked WHERE rank <= {k}"""
 
 
@@ -112,13 +113,12 @@ def _fold_dots(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
     return acc
 
 
-def cosine_pairs(emb: DataFrame, threshold: float, id_col: str = "vec_id",
-                 vec: str = "embedding", n_blocks: int = 8) -> DataFrame:
+def cosine_pairs(emb: DataFrame, threshold: float) -> DataFrame:
     """All pairs (id_a < id_b) with cosine >= threshold — EXACT embedding
     near-dup detection, fully distributed (nothing touches the driver).
 
     Physical strategy — triangular block-pairing: vectors are hashed into
-    ``n_blocks`` disjoint blocks by id; the G·(G+1)/2 unordered block pairs
+    8 disjoint blocks by id; the G·(G+1)/2 unordered block pairs
     become independent tasks (a broadcast task list joined on the block id),
     and each task evaluates its |A|×|B| cross block vectorized in one Arrow
     group (``applyInPandas``), emitting only the ≥threshold pairs. Every
@@ -134,12 +134,13 @@ def cosine_pairs(emb: DataFrame, threshold: float, id_col: str = "vec_id",
     import pandas as pd
 
     spark = emb.sparkSession
-    G = n_blocks
+    G = 8
     tasks = spark.createDataFrame(
         [(i, j) for i in range(G) for j in range(i, G)], "ga long, gb long")
-    base = emb.select(F.col(id_col).cast("long").alias("id"),
-                      F.col(vec).alias("v"),
-                      F.pmod(F.col(id_col).cast("long"), F.lit(G)).alias("g"))
+    base = emb.select(F.col("vec_id").cast("long").alias("id"),
+                      F.col("embedding").alias("v"),
+                      F.pmod(F.col("vec_id").cast("long"), F.lit(G))
+                      .alias("g"))
     side_a = (base.join(F.broadcast(tasks), F.col("g") == F.col("ga"))
               .select("ga", "gb", "id", "v", F.lit(0).alias("side")))
     side_b = (base.join(F.broadcast(tasks), F.col("g") == F.col("gb"))
@@ -186,15 +187,13 @@ def _band_plane_coeffs(n_bands: int, planes_per_band: int,
             for b in range(n_bands)]
 
 
-def cosine_pairs_lsh(emb: DataFrame, threshold: float, n_bands: int = 4,
-                     planes_per_band: int = 6, dim: int = 64,
-                     id_col: str = "vec_id", vec: str = "embedding") -> DataFrame:
+def cosine_pairs_lsh(emb: DataFrame, threshold: float) -> DataFrame:
     """Banded hyperplane-LSH near-dup pairs — the 10^12-row scale path.
 
     Same filter-and-refine shape as :func:`~geoclimate_spark.operators.dedup.
     minhash_near_duplicates`: candidates are id pairs sharing a sign bucket
-    in ANY of ``n_bands`` independent hyperplane bands (recall grows with
-    bands, candidate volume shrinks with planes_per_band), then an exact
+    in ANY of ``N_BANDS`` independent hyperplane bands (recall grows with
+    bands, candidate volume shrinks with PLANES_PER_BAND), then an exact
     cosine verify keeps pairs ≥ threshold. Entirely JVM column expressions —
     the band join ships only (band, bucket, id), never vectors; vectors are
     fetched per *candidate* via two id equi-joins. The candidate generation
@@ -202,8 +201,8 @@ def cosine_pairs_lsh(emb: DataFrame, threshold: float, n_bands: int = 4,
     sides), so LSH recall behavior itself is oracle-checked, not just the
     final pair list.
     """
-    bands = _band_plane_coeffs(n_bands, planes_per_band, dim)
-    base = _with_norm(emb, id_col, vec)
+    bands = _band_plane_coeffs(N_BANDS, PLANES_PER_BAND, EMB_DIM)
+    base = _with_norm(emb, "vec_id", "embedding")
     keyed = [base.select("id", F.lit(b).alias("band"),
                          _bucket_col(F.col("v"), coeffs).alias("bk"))
              for b, coeffs in enumerate(bands)]
@@ -226,17 +225,14 @@ def cosine_pairs_lsh(emb: DataFrame, threshold: float, n_bands: int = 4,
             .where(F.col("cos") >= F.lit(threshold)))
 
 
-def cosine_pairs_lsh_sql(threshold: float, n_bands: int = 4,
-                         planes_per_band: int = 6, dim: int = 64,
-                         rel: str = "embeddings", id_col: str = "vec_id",
-                         vec: str = "embedding") -> str:
-    bands = _band_plane_coeffs(n_bands, planes_per_band, dim)
-    nrm = _DOT_SQL.format(a=vec, b=vec)
+def cosine_pairs_lsh_sql(threshold: float) -> str:
+    bands = _band_plane_coeffs(N_BANDS, PLANES_PER_BAND, EMB_DIM)
+    nrm = _DOT_SQL.format(a="embedding", b="embedding")
     band_selects = " UNION ALL ".join(
-        f"SELECT id, {b} AS band, {_bucket_sql(vec, coeffs)} AS bk FROM base"
+        f"SELECT id, {b} AS band, {_bucket_sql('embedding', coeffs)} AS bk FROM base"
         for b, coeffs in enumerate(bands))
-    dot = _DOT_SQL.format(a=f"a.{vec}", b=f"b.{vec}")
-    return f"""WITH base AS (SELECT {id_col} AS id, {vec}, SQRT({nrm}) AS nrm FROM {rel}),
+    dot = _DOT_SQL.format(a="a.embedding", b="b.embedding")
+    return f"""WITH base AS (SELECT vec_id AS id, embedding, SQRT({nrm}) AS nrm FROM embeddings),
 bl AS ({band_selects}),
 cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
   FROM bl a JOIN bl b ON a.band = b.band AND a.bk = b.bk AND a.id < b.id)
@@ -245,42 +241,32 @@ FROM cand c JOIN base a ON a.id = c.id_a JOIN base b ON b.id = c.id_b
 WHERE {dot} / (a.nrm * b.nrm) >= {threshold}"""
 
 
-def cosine_pairs_sql(threshold: float, rel: str = "embeddings",
-                     id_col: str = "vec_id", vec: str = "embedding") -> str:
-    nrm = _DOT_SQL.format(a=vec, b=vec)
-    dot = _DOT_SQL.format(a=f"a.{vec}", b=f"b.{vec}")
-    return f"""WITH base AS (SELECT {id_col} AS id, {vec}, SQRT({nrm}) AS nrm FROM {rel})
+def cosine_pairs_sql(threshold: float) -> str:
+    nrm = _DOT_SQL.format(a="embedding", b="embedding")
+    dot = _DOT_SQL.format(a="a.embedding", b="b.embedding")
+    return f"""WITH base AS (SELECT vec_id AS id, embedding, SQRT({nrm}) AS nrm FROM embeddings)
 SELECT a.id AS id_a, b.id AS id_b, {dot} / (a.nrm * b.nrm) AS cos
 FROM base a JOIN base b ON a.id < b.id
 WHERE {dot} / (a.nrm * b.nrm) >= {threshold}"""
 
 
-def embedding_dup_clusters(emb: DataFrame, threshold: float,
-                           n_bands: int = 4, planes_per_band: int = 6,
-                           dim: int = 64, id_col: str = "vec_id",
-                           vec: str = "embedding") -> DataFrame:
+def embedding_dup_clusters(emb: DataFrame, threshold: float) -> DataFrame:
     """Embedding dedup end-game: banded-LSH cosine pairs → connected
     components → one canonical vector per cluster:
     (vec_id, component, component_size). The embedding-space twin of
     :func:`~geoclimate_spark.operators.dedup.near_dup_clusters` — same
     createBlocks shape (candidates → verify → CC → canon)."""
     from .components import connected_components
-    pairs = cosine_pairs_lsh(emb, threshold, n_bands, planes_per_band,
-                             dim, id_col, vec)
-    verts = emb.select(F.col(id_col))
+    pairs = cosine_pairs_lsh(emb, threshold)
+    verts = emb.select(F.col("vec_id"))
     return connected_components(verts, pairs.select("id_a", "id_b"),
-                                key=id_col)
+                                key="vec_id")
 
 
-def embedding_dup_clusters_sql(threshold: float, n_bands: int = 4,
-                               planes_per_band: int = 6, dim: int = 64,
-                               rel: str = "embeddings",
-                               id_col: str = "vec_id",
-                               vec: str = "embedding") -> str:
-    pairs = cosine_pairs_lsh_sql(threshold, n_bands, planes_per_band, dim,
-                                 rel, id_col, vec)
+def embedding_dup_clusters_sql(threshold: float) -> str:
+    pairs = cosine_pairs_lsh_sql(threshold)
     return f"""WITH RECURSIVE pairs AS ({pairs}),
-verts AS (SELECT {id_col} AS id FROM {rel}),
+verts AS (SELECT vec_id AS id FROM embeddings),
 sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
   UNION SELECT id_b, id_a FROM pairs
   UNION SELECT id, id FROM verts),
@@ -288,9 +274,9 @@ reach(src, dst) AS (
   SELECT id, id FROM verts
   UNION
   SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src),
-comp AS (SELECT src AS {id_col}, MIN(dst) AS component FROM reach GROUP BY src),
+comp AS (SELECT src AS vec_id, MIN(dst) AS component FROM reach GROUP BY src),
 sizes AS (SELECT component, COUNT(*) AS component_size FROM comp GROUP BY component)
-SELECT c.{id_col}, c.component, CAST(s.component_size AS BIGINT) AS component_size
+SELECT c.vec_id, c.component, CAST(s.component_size AS BIGINT) AS component_size
 FROM comp c JOIN sizes s USING (component)"""
 
 
@@ -360,9 +346,7 @@ def _centroid_sql(vec: str, cents: list[list[float]]) -> str:
 
 
 def ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
-             n_centroids: int = N_CENTROIDS, dim: int = 64,
-             nprobe: int = 1,
-             id_col: str = "vec_id", vec: str = "embedding") -> DataFrame:
+             nprobe: int = 1) -> DataFrame:
     """IVF(-flat) top-k: vectors are assigned to their max-dot-product
     centroid; a query scans its ``nprobe`` nearest inverted lists (ranked
     by centroid dot product, lowest-index tie-break — the standard IVF
@@ -370,8 +354,8 @@ def ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
     the list assignment is the Iceberg partition key, so every probe is a
     partition-pruned scan; the probe fan-out rides the broadcast query
     side only. Same output schema as cosine_topk."""
-    cents = centroid_coeffs(n_centroids, dim)
-    base = (_with_norm(emb, id_col, vec)
+    cents = centroid_coeffs(N_CENTROIDS, EMB_DIM)
+    base = (_with_norm(emb, "vec_id", "embedding")
             .withColumn("cluster", _centroid_col(F.col("v"), cents)))
     qside = base.where(F.col("id").isin(query_ids))
     if nprobe <= 1:
@@ -395,36 +379,32 @@ def ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
     q = F.broadcast(q)
     cand = (q.join(base, "cluster")
             .where(F.col("id") != F.col("query_id"))
-            .select("query_id", F.col("id").alias(id_col),
+            .select("query_id", F.col("id").alias("vec_id"),
                     (_dot(F.col("qv"), F.col("v"))
                      / (F.col("qn") * F.col("nrm"))).alias("cos")))
     if nprobe > 1:
         cand = cand.distinct()
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(),
-                                               F.col(id_col).asc())
+                                               F.col("vec_id").asc())
     return (cand.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .select("query_id", F.col("rank").cast("long").alias("rank"),
-                    id_col, "cos"))
+                    "vec_id", "cos"))
 
 
-def ivf_topk_sql(query_ids: list[int], k: int = 5,
-                 n_centroids: int = N_CENTROIDS, dim: int = 64,
-                 nprobe: int = 1,
-                 rel: str = "embeddings", id_col: str = "vec_id",
-                 vec: str = "embedding") -> str:
-    cents = centroid_coeffs(n_centroids, dim)
+def ivf_topk_sql(query_ids: list[int], k: int = 5, nprobe: int = 1) -> str:
+    cents = centroid_coeffs(N_CENTROIDS, EMB_DIM)
     ids = ", ".join(str(i) for i in query_ids)
-    nrm = _DOT_SQL.format(a=vec, b=vec)
-    cluster = _centroid_sql(vec, cents)
+    nrm = _DOT_SQL.format(a="embedding", b="embedding")
+    cluster = _centroid_sql("embedding", cents)
     if nprobe <= 1:
-        probe_cte = f"""probes AS (SELECT id AS query_id, {vec} AS qv,
+        probe_cte = f"""probes AS (SELECT id AS query_id, embedding AS qv,
        nrm AS qn, cluster FROM base WHERE id IN ({ids}))"""
     else:
         arms = "\nUNION ALL ".join(
-            f"SELECT id AS query_id, {vec} AS qv, nrm AS qn, "
+            "SELECT id AS query_id, embedding AS qv, nrm AS qn, "
             f"CAST({i} AS BIGINT) AS cluster, "
-            f"{_DOT_SQL.format(a=vec, b='[' + ', '.join(repr(x) for x in row) + ']')} AS dot "
+            f"{_DOT_SQL.format(a='embedding', b='[' + ', '.join(repr(x) for x in row) + ']')} AS dot "
             f"FROM base WHERE id IN ({ids})"
             for i, row in enumerate(cents))
         probe_cte = f"""qdots AS ({arms}),
@@ -432,59 +412,55 @@ probes AS (SELECT query_id, qv, qn, cluster FROM (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
       ORDER BY dot DESC, cluster ASC) AS pr FROM qdots)
   WHERE pr <= {nprobe})"""
-    return f"""WITH base AS (SELECT {id_col} AS id, {vec}, SQRT({nrm}) AS nrm,
-       {cluster} AS cluster FROM {rel}),
+    return f"""WITH base AS (SELECT vec_id AS id, embedding, SQRT({nrm}) AS nrm,
+       {cluster} AS cluster FROM embeddings),
 {probe_cte},
-cand AS (SELECT DISTINCT q.query_id, c.id AS {id_col},
-         {_DOT_SQL.format(a='q.qv', b='c.' + vec)} / (q.qn * c.nrm) AS cos
+cand AS (SELECT DISTINCT q.query_id, c.id AS vec_id,
+         {_DOT_SQL.format(a='q.qv', b='c.embedding')} / (q.qn * c.nrm) AS cos
   FROM probes q JOIN base c ON c.cluster = q.cluster AND c.id != q.query_id),
 ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           ORDER BY cos DESC, {id_col} ASC) AS rank FROM cand)
-SELECT query_id, CAST(rank AS BIGINT) AS rank, {id_col}, cos
+           ORDER BY cos DESC, vec_id ASC) AS rank FROM cand)
+SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id, cos
 FROM ranked WHERE rank <= {k}"""
 
 
-def lsh_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
-             n_planes: int = N_PLANES, dim: int = 64,
-             id_col: str = "vec_id", vec: str = "embedding") -> DataFrame:
+def lsh_topk(emb: DataFrame, query_ids: list[int], k: int = 5) -> DataFrame:
     """LSH-bucketed top-k: candidates restricted to the query's sign bucket.
     Same output schema as :func:`cosine_topk`; queries whose bucket holds
     fewer than k others return fewer rows (single-probe trade-off)."""
-    coeffs = plane_coeffs(n_planes, dim)
-    base = (_with_norm(emb, id_col, vec)
+    coeffs = plane_coeffs(N_PLANES, EMB_DIM)
+    base = (_with_norm(emb, "vec_id", "embedding")
             .withColumn("bucket", _bucket_col(F.col("v"), coeffs)))
     q = F.broadcast(base.where(F.col("id").isin(query_ids))
                     .select(F.col("id").alias("query_id"), F.col("v").alias("qv"),
                             F.col("nrm").alias("qn"), "bucket"))
     cand = (q.join(base, "bucket")
             .where(F.col("id") != F.col("query_id"))
-            .select("query_id", F.col("id").alias(id_col),
+            .select("query_id", F.col("id").alias("vec_id"),
                     (_dot(F.col("qv"), F.col("v"))
                      / (F.col("qn") * F.col("nrm"))).alias("cos")))
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(),
-                                               F.col(id_col).asc())
+                                               F.col("vec_id").asc())
     return (cand.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .select("query_id", F.col("rank").cast("long").alias("rank"),
-                    id_col, "cos"))
+                    "vec_id", "cos"))
 
 
-def lsh_topk_sql(query_ids: list[int], k: int = 5, n_planes: int = N_PLANES,
-                 dim: int = 64, rel: str = "embeddings",
-                 id_col: str = "vec_id", vec: str = "embedding") -> str:
-    coeffs = plane_coeffs(n_planes, dim)
+def lsh_topk_sql(query_ids: list[int], k: int = 5) -> str:
+    coeffs = plane_coeffs(N_PLANES, EMB_DIM)
     ids = ", ".join(str(i) for i in query_ids)
-    nrm = _DOT_SQL.format(a=vec, b=vec)
-    bucket = _bucket_sql(vec, coeffs)
-    return f"""WITH base AS (SELECT {id_col} AS id, {vec}, SQRT({nrm}) AS nrm,
-       {bucket} AS bucket FROM {rel}),
-cand AS (SELECT q.id AS query_id, c.id AS {id_col},
-         {_DOT_SQL.format(a='q.' + vec, b='c.' + vec)} / (q.nrm * c.nrm) AS cos
+    nrm = _DOT_SQL.format(a="embedding", b="embedding")
+    bucket = _bucket_sql("embedding", coeffs)
+    return f"""WITH base AS (SELECT vec_id AS id, embedding, SQRT({nrm}) AS nrm,
+       {bucket} AS bucket FROM embeddings),
+cand AS (SELECT q.id AS query_id, c.id AS vec_id,
+         {_DOT_SQL.format(a='q.embedding', b='c.embedding')} / (q.nrm * c.nrm) AS cos
   FROM base q JOIN base c ON c.bucket = q.bucket AND c.id != q.id
   WHERE q.id IN ({ids})),
 ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           ORDER BY cos DESC, {id_col} ASC) AS rank FROM cand)
-SELECT query_id, CAST(rank AS BIGINT) AS rank, {id_col}, cos
+           ORDER BY cos DESC, vec_id ASC) AS rank FROM cand)
+SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id, cos
 FROM ranked WHERE rank <= {k}"""
 
 
@@ -496,9 +472,7 @@ def _probe_masks(n_planes: int, radius: int) -> list[int]:
 
 
 def lsh_topk_multiprobe(emb: DataFrame, query_ids: list[int], k: int = 5,
-                        n_planes: int = N_PLANES, dim: int = 64,
-                        probe_radius: int = 1, id_col: str = "vec_id",
-                        vec: str = "embedding") -> DataFrame:
+                        probe_radius: int = 1) -> DataFrame:
     """Multi-probe LSH top-k: each query probes its own sign bucket PLUS
     every bucket within Hamming distance ``probe_radius`` (planes flipped) —
     the standard recall fix for single-probe LSH (the near-miss neighbor
@@ -509,11 +483,11 @@ def lsh_topk_multiprobe(emb: DataFrame, query_ids: list[int], k: int = 5,
     scans of the bucket-partitioned corpus. Same output schema and
     tie-break as :func:`cosine_topk`.
     """
-    coeffs = plane_coeffs(n_planes, dim)
-    base = (_with_norm(emb, id_col, vec)
+    coeffs = plane_coeffs(N_PLANES, EMB_DIM)
+    base = (_with_norm(emb, "vec_id", "embedding")
             .withColumn("bucket", _bucket_col(F.col("v"), coeffs)))
     probes = F.array(*[F.col("bucket").bitwiseXOR(F.lit(m))
-                       for m in _probe_masks(n_planes, probe_radius)])
+                       for m in _probe_masks(N_PLANES, probe_radius)])
     q = F.broadcast(
         base.where(F.col("id").isin(query_ids))
         .select(F.col("id").alias("query_id"), F.col("v").alias("qv"),
@@ -521,42 +495,38 @@ def lsh_topk_multiprobe(emb: DataFrame, query_ids: list[int], k: int = 5,
                 F.explode(probes).alias("bucket")))
     cand = (q.join(base, "bucket")
             .where(F.col("id") != F.col("query_id"))
-            .select("query_id", F.col("id").alias(id_col),
+            .select("query_id", F.col("id").alias("vec_id"),
                     (_dot(F.col("qv"), F.col("v"))
                      / (F.col("qn") * F.col("nrm"))).alias("cos"))
             .distinct())
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(),
-                                               F.col(id_col).asc())
+                                               F.col("vec_id").asc())
     return (cand.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .select("query_id", F.col("rank").cast("long").alias("rank"),
-                    id_col, "cos"))
+                    "vec_id", "cos"))
 
 
-def lsh_topk_multiprobe_sql(query_ids: list[int], k: int = 5,
-                            n_planes: int = N_PLANES, dim: int = 64,
-                            probe_radius: int = 1, rel: str = "embeddings",
-                            id_col: str = "vec_id",
-                            vec: str = "embedding") -> str:
-    coeffs = plane_coeffs(n_planes, dim)
+def lsh_topk_multiprobe_sql(query_ids: list[int], k: int = 5) -> str:
+    coeffs = plane_coeffs(N_PLANES, EMB_DIM)
     ids = ", ".join(str(i) for i in query_ids)
-    nrm = _DOT_SQL.format(a=vec, b=vec)
-    bucket = _bucket_sql(vec, coeffs)
+    nrm = _DOT_SQL.format(a="embedding", b="embedding")
+    bucket = _bucket_sql("embedding", coeffs)
     masks = ", ".join(f"({m})"
-                      for m in _probe_masks(n_planes, probe_radius))
-    return f"""WITH base AS (SELECT {id_col} AS id, {vec}, SQRT({nrm}) AS nrm,
-       {bucket} AS bucket FROM {rel}),
-probes AS (SELECT q.id AS query_id, q.{vec} AS qv, q.nrm AS qn,
+                      for m in _probe_masks(N_PLANES, PROBE_RADIUS))
+    return f"""WITH base AS (SELECT vec_id AS id, embedding, SQRT({nrm}) AS nrm,
+       {bucket} AS bucket FROM embeddings),
+probes AS (SELECT q.id AS query_id, q.embedding AS qv, q.nrm AS qn,
        xor(q.bucket, m.m) AS bucket
   FROM base q CROSS JOIN (VALUES {masks}) AS m(m)
   WHERE q.id IN ({ids})),
-cand AS (SELECT DISTINCT p.query_id, c.id AS {id_col},
-         {_DOT_SQL.format(a='p.qv', b='c.' + vec)} / (p.qn * c.nrm) AS cos
+cand AS (SELECT DISTINCT p.query_id, c.id AS vec_id,
+         {_DOT_SQL.format(a='p.qv', b='c.embedding')} / (p.qn * c.nrm) AS cos
   FROM probes p JOIN base c ON c.bucket = p.bucket
   WHERE c.id != p.query_id),
 ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           ORDER BY cos DESC, {id_col} ASC) AS rank FROM cand)
-SELECT query_id, CAST(rank AS BIGINT) AS rank, {id_col}, cos
+           ORDER BY cos DESC, vec_id ASC) AS rank FROM cand)
+SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id, cos
 FROM ranked WHERE rank <= {k}"""
 
 
@@ -582,38 +552,35 @@ def table_plane_coeffs(n_tables: int, n_planes: int,
 N_TABLES = 3
 
 
-def lsh_topk_multitable(emb: DataFrame, query_ids: list[int], k: int = 5,
-                        n_planes: int = N_PLANES, dim: int = 64,
-                        n_tables: int = N_TABLES, probe_radius: int = 1,
-                        id_col: str = "vec_id",
-                        vec: str = "embedding") -> DataFrame:
-    """Multi-TABLE multi-probe LSH top-k: ``n_tables`` independent
-    hyperplane sets, each probed within Hamming distance ``probe_radius``.
+def lsh_topk_multitable(emb: DataFrame, query_ids: list[int],
+                        k: int = 5) -> DataFrame:
+    """Multi-TABLE multi-probe LSH top-k: ``N_TABLES`` independent
+    hyperplane sets, each probed within Hamming distance ``PROBE_RADIUS``.
     A true neighbor is missed only if it falls outside the probe radius in
     EVERY table — misses are (1-r)^L instead of (1-r), the standard
     recall lever beyond multi-probe alone. Measured vs exact top-k on the
     sf0.01 fixture (6 planes): single-probe 0.05, multiprobe r1/r2
     0.175/0.425, 3 tables r1 0.750, 3 tables r2 0.975, 5 tables r2 1.0.
 
-    Scale shape: the corpus is stored ``n_tables`` times, partitioned by
+    Scale shape: the corpus is stored ``N_TABLES`` times, partitioned by
     (table, bucket) — the classic LSH space/recall trade (Iceberg: one
     table partitioned by (tbl, bucket); each probe is a partition-pruned
-    scan). Queries fan out n_tables x probes on the broadcast side only;
+    scan). Queries fan out N_TABLES x probes on the broadcast side only;
     candidates meet in one hash equi-join on (tbl, bucket) and dedup
     BEFORE the exact rerank. Same output schema/tie-break as cosine_topk.
     """
-    tables = table_plane_coeffs(n_tables, n_planes, dim)
-    base = _with_norm(emb, id_col, vec)
+    tables = table_plane_coeffs(N_TABLES, N_PLANES, EMB_DIM)
+    base = _with_norm(emb, "vec_id", "embedding")
     buckets = F.array(*[_bucket_col(F.col("v"), c) for c in tables])
     corpus = base.select(
         "id", "v", "nrm",
         F.posexplode(buckets).alias("tbl", "bucket"))
-    masks = _probe_masks(n_planes, probe_radius)
+    masks = _probe_masks(N_PLANES, PROBE_RADIUS)
     probes = F.array(*[
         F.struct(F.lit(t).cast("int").alias("tbl"),
                  F.element_at(F.col("_bks"), t + 1)
                  .bitwiseXOR(F.lit(m)).alias("bucket"))
-        for t in range(n_tables) for m in masks])
+        for t in range(N_TABLES) for m in masks])
     q = F.broadcast(
         base.where(F.col("id").isin(query_ids))
         .withColumn("_bks", buckets)
@@ -623,44 +590,40 @@ def lsh_topk_multitable(emb: DataFrame, query_ids: list[int], k: int = 5,
                 F.col("_p.tbl").alias("tbl"), F.col("_p.bucket").alias("bucket")))
     cand = (q.join(corpus, ["tbl", "bucket"])
             .where(F.col("id") != F.col("query_id"))
-            .select("query_id", F.col("id").alias(id_col),
+            .select("query_id", F.col("id").alias("vec_id"),
                     (_dot(F.col("qv"), F.col("v"))
                      / (F.col("qn") * F.col("nrm"))).alias("cos"))
             .distinct())
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(),
-                                               F.col(id_col).asc())
+                                               F.col("vec_id").asc())
     return (cand.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .select("query_id", F.col("rank").cast("long").alias("rank"),
-                    id_col, "cos"))
+                    "vec_id", "cos"))
 
 
-def lsh_topk_multitable_sql(query_ids: list[int], k: int = 5,
-                            n_planes: int = N_PLANES, dim: int = 64,
-                            n_tables: int = N_TABLES, probe_radius: int = 1,
-                            rel: str = "embeddings", id_col: str = "vec_id",
-                            vec: str = "embedding") -> str:
-    tables = table_plane_coeffs(n_tables, n_planes, dim)
+def lsh_topk_multitable_sql(query_ids: list[int], k: int = 5) -> str:
+    tables = table_plane_coeffs(N_TABLES, N_PLANES, EMB_DIM)
     ids = ", ".join(str(i) for i in query_ids)
-    nrm = _DOT_SQL.format(a=vec, b=vec)
+    nrm = _DOT_SQL.format(a="embedding", b="embedding")
     arms = "\nUNION ALL ".join(
-        f"SELECT {id_col} AS id, {vec}, SQRT({nrm}) AS nrm, "
-        f"CAST({t} AS INT) AS tbl, {_bucket_sql(vec, c)} AS bucket FROM {rel}"
+        f"SELECT vec_id AS id, embedding, SQRT({nrm}) AS nrm, "
+        f"CAST({t} AS INT) AS tbl, {_bucket_sql('embedding', c)} AS bucket FROM embeddings"
         for t, c in enumerate(tables))
     masks = ", ".join(f"({m})"
-                      for m in _probe_masks(n_planes, probe_radius))
+                      for m in _probe_masks(N_PLANES, PROBE_RADIUS))
     return f"""WITH tb AS ({arms}),
-probes AS (SELECT q.id AS query_id, q.{vec} AS qv, q.nrm AS qn,
+probes AS (SELECT q.id AS query_id, q.embedding AS qv, q.nrm AS qn,
        q.tbl, xor(q.bucket, m.m) AS bucket
   FROM tb q CROSS JOIN (VALUES {masks}) AS m(m)
   WHERE q.id IN ({ids})),
-cand AS (SELECT DISTINCT p.query_id, c.id AS {id_col},
-         {_DOT_SQL.format(a='p.qv', b='c.' + vec)} / (p.qn * c.nrm) AS cos
+cand AS (SELECT DISTINCT p.query_id, c.id AS vec_id,
+         {_DOT_SQL.format(a='p.qv', b='c.embedding')} / (p.qn * c.nrm) AS cos
   FROM probes p JOIN tb c ON c.tbl = p.tbl AND c.bucket = p.bucket
   WHERE c.id != p.query_id),
 ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           ORDER BY cos DESC, {id_col} ASC) AS rank FROM cand)
-SELECT query_id, CAST(rank AS BIGINT) AS rank, {id_col}, cos
+           ORDER BY cos DESC, vec_id ASC) AS rank FROM cand)
+SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id, cos
 FROM ranked WHERE rank <= {k}"""
 
 
@@ -677,6 +640,7 @@ FROM ranked WHERE rank <= {k}"""
 PQ_SUB = 16     # subspaces (64-dim fixture -> 4 dims each)
 PQ_CODES = 8    # codewords per subspace (codebook inlined as literals)
 PQ_RERANK = 8   # exact-rerank pool = PQ_RERANK * k per query
+PQ_NPROBE = 3   # coarse lists probed per query
 
 
 def pq_codebooks(n_sub: int, n_codes: int,
@@ -784,27 +748,23 @@ def _pq_lut_sql(qv: str, books: list[list[list[float]]], sub: int) -> str:
     return "[" + ", ".join(ents) + "]"
 
 
-def ivf_pq_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
-                n_centroids: int = N_CENTROIDS, dim: int = 64,
-                nprobe: int = 3, n_sub: int = PQ_SUB,
-                n_codes: int = PQ_CODES, rerank: int = PQ_RERANK,
-                id_col: str = "vec_id", vec: str = "embedding") -> DataFrame:
-    """IVF-PQ top-k with exact re-rank: coarse IVF lists (nprobe nearest
+def ivf_pq_topk(emb: DataFrame, query_ids: list[int], k: int = 5) -> DataFrame:
+    """IVF-PQ top-k with exact re-rank: coarse IVF lists (PQ_NPROBE nearest
     centroids per query), an ADC scan that touches ONLY (id, cluster,
-    codes[n_sub], nrm) per candidate — approximate cosine =
+    codes[PQ_SUB], nrm) per candidate — approximate cosine =
     sum_s lut[codes[s]] / (|q|·|x|) via the per-query lookup table — then
-    full vectors are fetched for just the top ``rerank*k`` ADC candidates
+    full vectors are fetched for just the top ``PQ_RERANK*k`` ADC candidates
     and re-ranked by exact cosine. Deterministic end-to-end: ADC ties break
     by candidate id, the exact stage reuses cosine_topk's (cos DESC, id)
     rule, and the returned ``cos`` is EXACT (comparable across ANN ops).
 
     Scale shape: codes ride the inverted list (Iceberg partition by
-    cluster → probes are partition-pruned scans of ~n_sub bytes/vector);
-    the rerank is a broadcast semi-join of q*rerank*k ids against the
+    cluster → probes are partition-pruned scans of ~PQ_SUB bytes/vector);
+    the rerank is a broadcast semi-join of q*PQ_RERANK*k ids against the
     vector table. Query-side fan-out (probes, LUT) is broadcast-only."""
-    cents = centroid_coeffs(n_centroids, dim)
-    books = pq_codebooks(n_sub, n_codes, dim)
-    sub = dim // n_sub
+    cents = centroid_coeffs(N_CENTROIDS, EMB_DIM)
+    books = pq_codebooks(PQ_SUB, PQ_CODES, EMB_DIM)
+    sub = EMB_DIM // PQ_SUB
     # the centroid-dots array does double duty: argmax-position = cluster
     # assignment (first-occurrence-of-max == _centroid_col's lowest-index
     # tie-break), posexplode = the probe ranking dots
@@ -814,7 +774,7 @@ def ivf_pq_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
     # PQ expression trees are analyzed only on the branches that use them
     # (eager per-transformation analysis over 3 copies of the full tree was
     # a measurable driver cost at plan-build time)
-    nb = _with_norm(emb, id_col, vec)
+    nb = _with_norm(emb, "vec_id", "embedding")
     base = (nb.withColumn("_cd", cdots)
             .withColumn("cluster", F.expr(
                 "CAST(array_position(_cd, array_max(_cd)) - 1 AS BIGINT)")))
@@ -832,87 +792,82 @@ def ivf_pq_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
                      F.col("lut"),
                      F.posexplode(F.col("_cd")).alias("cluster", "_dot"))
         .withColumn("_pr", F.row_number().over(pw))
-        .where(F.col("_pr") <= nprobe)
+        .where(F.col("_pr") <= PQ_NPROBE)
         .select("query_id", "qn", "lut",
                 F.col("cluster").cast("long").alias("cluster")))
     adc = None
-    for s in range(n_sub):
-        idx = (F.lit(s * n_codes + 1)
+    for s in range(PQ_SUB):
+        idx = (F.lit(s * PQ_CODES + 1)
                + F.element_at(F.col("codes"), s + 1)).cast("int")
         t = F.element_at(F.col("lut"), idx)
         adc = t if adc is None else adc + t
     cand = (probes.join(codes_side, "cluster")
             .where(F.col("id") != F.col("query_id"))
-            .select("query_id", F.col("id").alias(id_col),
+            .select("query_id", F.col("id").alias("vec_id"),
                     (adc / (F.col("qn") * F.col("nrm"))).alias("adc")))
     aw = Window.partitionBy("query_id").orderBy(F.col("adc").desc(),
-                                                F.col(id_col).asc())
+                                                F.col("vec_id").asc())
     pool = (cand.withColumn("_ar", F.row_number().over(aw))
-            .where(F.col("_ar") <= rerank * k)
-            .select("query_id", id_col))
+            .where(F.col("_ar") <= PQ_RERANK * k)
+            .select("query_id", "vec_id"))
     # exact re-rank: fetch full vectors for the pooled ids only
     qfull = F.broadcast(qside.select(F.col("id").alias("query_id"),
                                      F.col("v").alias("qv"),
                                      F.col("nrm").alias("qn")))
     exact = (F.broadcast(pool).join(
-        nb.select(F.col("id").alias(id_col), "v", "nrm"), id_col)
+        nb.select(F.col("id").alias("vec_id"), "v", "nrm"), "vec_id")
         .join(qfull, "query_id")
-        .select("query_id", id_col,
+        .select("query_id", "vec_id",
                 (_dot(F.col("qv"), F.col("v"))
                  / (F.col("qn") * F.col("nrm"))).alias("cos")))
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(),
-                                               F.col(id_col).asc())
+                                               F.col("vec_id").asc())
     return (exact.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .select("query_id", F.col("rank").cast("long").alias("rank"),
-                    id_col, "cos"))
+                    "vec_id", "cos"))
 
 
-def ivf_pq_topk_sql(query_ids: list[int], k: int = 5,
-                    n_centroids: int = N_CENTROIDS, dim: int = 64,
-                    nprobe: int = 3, n_sub: int = PQ_SUB,
-                    n_codes: int = PQ_CODES, rerank: int = PQ_RERANK,
-                    rel: str = "embeddings", id_col: str = "vec_id",
-                    vec: str = "embedding") -> str:
-    cents = centroid_coeffs(n_centroids, dim)
-    books = pq_codebooks(n_sub, n_codes, dim)
-    sub = dim // n_sub
+def ivf_pq_topk_sql(query_ids: list[int], k: int = 5) -> str:
+    cents = centroid_coeffs(N_CENTROIDS, EMB_DIM)
+    books = pq_codebooks(PQ_SUB, PQ_CODES, EMB_DIM)
+    sub = EMB_DIM // PQ_SUB
     ids = ", ".join(str(i) for i in query_ids)
-    nrm = _DOT_SQL.format(a=vec, b=vec)
+    nrm = _DOT_SQL.format(a="embedding", b="embedding")
     arms = "\nUNION ALL ".join(
         f"SELECT query_id, qn, lut, CAST({i} AS BIGINT) AS cluster, "
         f"{_DOT_SQL.format(a='qv', b='[' + ', '.join(repr(x) for x in row) + ']')} AS dot "
         f"FROM q0"
         for i, row in enumerate(cents))
     adc = " + ".join(
-        f"lut[{s * n_codes} + codes[{s + 1}] + 1]" for s in range(n_sub))
-    dot_aliases, codes_expr = _pq_codes_sql(vec, books, sub)
-    return f"""WITH base AS (SELECT {id_col} AS id, {vec}, SQRT({nrm}) AS nrm,
-       {_centroid_sql(vec, cents)} AS cluster,
+        f"lut[{s * PQ_CODES} + codes[{s + 1}] + 1]" for s in range(PQ_SUB))
+    dot_aliases, codes_expr = _pq_codes_sql("embedding", books, sub)
+    return f"""WITH base AS (SELECT vec_id AS id, embedding, SQRT({nrm}) AS nrm,
+       {_centroid_sql('embedding', cents)} AS cluster,
        {dot_aliases},
-       {codes_expr} AS codes FROM {rel}),
-q0 AS (SELECT id AS query_id, {vec} AS qv, nrm AS qn,
-       {_pq_lut_sql(vec, books, sub)} AS lut
+       {codes_expr} AS codes FROM embeddings),
+q0 AS (SELECT id AS query_id, embedding AS qv, nrm AS qn,
+       {_pq_lut_sql('embedding', books, sub)} AS lut
   FROM base WHERE id IN ({ids})),
 qdots AS ({arms}),
 probes AS (SELECT query_id, qn, lut, cluster FROM (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      ORDER BY dot DESC, cluster ASC) AS pr FROM qdots) WHERE pr <= {nprobe}),
-cand AS (SELECT p.query_id, c.id AS {id_col},
+      ORDER BY dot DESC, cluster ASC) AS pr FROM qdots) WHERE pr <= {PQ_NPROBE}),
+cand AS (SELECT p.query_id, c.id AS vec_id,
          ({adc}) / (p.qn * c.nrm) AS adc
   FROM probes p JOIN base c ON c.cluster = p.cluster
   WHERE c.id != p.query_id),
-pool AS (SELECT query_id, {id_col} FROM (
+pool AS (SELECT query_id, vec_id FROM (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      ORDER BY adc DESC, {id_col} ASC) AS ar FROM cand)
-  WHERE ar <= {rerank * k}),
-exact AS (SELECT t.query_id, t.{id_col},
-          {_DOT_SQL.format(a='q.qv', b='c.' + vec)} / (q.qn * c.nrm) AS cos
-  FROM pool t JOIN base c ON c.id = t.{id_col}
+      ORDER BY adc DESC, vec_id ASC) AS ar FROM cand)
+  WHERE ar <= {PQ_RERANK * k}),
+exact AS (SELECT t.query_id, t.vec_id,
+          {_DOT_SQL.format(a='q.qv', b='c.embedding')} / (q.qn * c.nrm) AS cos
+  FROM pool t JOIN base c ON c.id = t.vec_id
   JOIN q0 q ON q.query_id = t.query_id),
 ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           ORDER BY cos DESC, {id_col} ASC) AS rank FROM exact)
-SELECT query_id, CAST(rank AS BIGINT) AS rank, {id_col}, cos
+           ORDER BY cos DESC, vec_id ASC) AS rank FROM exact)
+SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id, cos
 FROM ranked WHERE rank <= {k}"""
 
 
@@ -922,19 +877,15 @@ BENCH_PERTURB = 1.25  # component-0 scale: cos(source, bench copy) ~0.99
 CONTAM_COS_T = 0.9
 
 
-def semantic_contamination(emb: DataFrame,
-                           bench_src_ids: list[int] | None = None,
-                           threshold: float = CONTAM_COS_T,
-                           id_col: str = "vec_id",
-                           vec: str = "embedding") -> DataFrame:
+def semantic_contamination(emb: DataFrame) -> DataFrame:
     """(vec_id, bench_id, cos): corpus vectors whose cosine to ANY benchmark
-    vector reaches ``threshold`` — embedding-space benchmark decontamination,
+    vector reaches ``CONTAM_COS_T`` — embedding-space benchmark decontamination,
     the fuzzy sibling of :mod:`.contamination`'s n-gram detector (catches
     paraphrased/reformatted leaks that shingles miss). ``bench_id`` is the
     best-matching benchmark item (ties → lowest id).
 
     The benchmark set here is derived IN the query as deterministically
-    perturbed copies of ``bench_src_ids``'s vectors (component 0 scaled by
+    perturbed copies of ``BENCH_SRC_IDS``'s vectors (component 0 scaled by
     BENCH_PERTURB) — a stand-in for a real leaked-benchmark table with known
     positives: each source doc must flag against its own perturbed copy
     while the near-orthogonal rest of the corpus (max cross-cos ~0.45 on
@@ -945,58 +896,53 @@ def semantic_contamination(emb: DataFrame,
     (kmeans idiom — a literal key constant-folds into a BNLJ); scoring is a
     codegen fold per (corpus, bench) pair; the threshold filter runs BEFORE
     the best-match window, so the rank shuffle only carries flagged rows."""
-    ids = bench_src_ids or BENCH_SRC_IDS
-    base = _with_norm(emb, id_col, vec)
+    base = _with_norm(emb, "vec_id", "embedding")
     # promote to DOUBLE before the perturb multiply: DuckDB would otherwise
     # multiply in float32 and the last-ulp drift breaks the cos hash parity
     pert = F.transform(
         F.col("v"),
         lambda x, i: F.when(i == 0, x.cast("double") * F.lit(BENCH_PERTURB))
                       .otherwise(x.cast("double")))
-    bench = (base.where(F.col("id").isin(ids))
+    bench = (base.where(F.col("id").isin(BENCH_SRC_IDS))
              .select(F.col("id").alias("bench_id"), pert.alias("bv"))
              .withColumn("bn", F.sqrt(_dot(F.col("bv"), F.col("bv")))))
     j = (base.withColumn("_one", F.pmod(F.col("id"), F.lit(1)))
          .join(F.broadcast(bench.withColumn(
              "_one", F.pmod(F.col("bench_id"), F.lit(1)))), "_one")
-         .select(F.col("id").alias(id_col), "bench_id",
+         .select(F.col("id").alias("vec_id"), "bench_id",
                  (_dot(F.col("v"), F.col("bv"))
                   / (F.col("nrm") * F.col("bn"))).alias("cos"))
-         .where(F.col("cos") >= F.lit(threshold)))
-    w = Window.partitionBy(id_col).orderBy(F.col("cos").desc(),
-                                           F.col("bench_id").asc())
+         .where(F.col("cos") >= F.lit(CONTAM_COS_T)))
+    w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(),
+                                             F.col("bench_id").asc())
     return (j.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
-            .select(id_col, "bench_id", "cos"))
+            .select("vec_id", "bench_id", "cos"))
 
 
-def semantic_contamination_sql(bench_src_ids: list[int] | None = None,
-                               threshold: float = CONTAM_COS_T,
-                               rel: str = "embeddings",
-                               id_col: str = "vec_id",
-                               vec: str = "embedding") -> str:
-    ids = ", ".join(str(i) for i in (bench_src_ids or BENCH_SRC_IDS))
-    nrm = _DOT_SQL.format(a=vec, b=vec)
+def semantic_contamination_sql() -> str:
+    ids = ", ".join(str(i) for i in BENCH_SRC_IDS)
+    nrm = _DOT_SQL.format(a="embedding", b="embedding")
     # DuckDB two-arg list lambdas index from 1; Spark transform() from 0 —
     # both expressions perturb exactly the first component
-    pert = (f"list_transform({vec}, (x, i) -> CASE WHEN i = 1 "
+    pert = ("list_transform(embedding, (x, i) -> CASE WHEN i = 1 "
             f"THEN CAST(x AS DOUBLE) * {BENCH_PERTURB} "
             f"ELSE CAST(x AS DOUBLE) END)")
     return f"""
-WITH base AS (SELECT {id_col} AS id, {vec}, SQRT({nrm}) AS nrm FROM {rel}),
+WITH base AS (SELECT vec_id AS id, embedding, SQRT({nrm}) AS nrm FROM embeddings),
 bench AS (
-  SELECT id AS bench_id, {pert.replace(vec, vec)} AS bv
-  FROM (SELECT id, {vec} FROM base WHERE id IN ({ids}))
+  SELECT id AS bench_id, {pert} AS bv
+  FROM (SELECT id, embedding FROM base WHERE id IN ({ids}))
 ), benchn AS (
   SELECT bench_id, bv, SQRT({_DOT_SQL.format(a='bv', b='bv')}) AS bn
   FROM bench
 ), scored AS (
-  SELECT c.id AS {id_col}, b.bench_id,
-         {_DOT_SQL.format(a='c.' + vec, b='b.bv')} / (c.nrm * b.bn) AS cos
+  SELECT c.id AS vec_id, b.bench_id,
+         {_DOT_SQL.format(a='c.embedding', b='b.bv')} / (c.nrm * b.bn) AS cos
   FROM base c CROSS JOIN benchn b
 ), flagged AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY {id_col}
+  SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
             ORDER BY cos DESC, bench_id ASC) AS rn
-  FROM scored WHERE cos >= {threshold}
+  FROM scored WHERE cos >= {CONTAM_COS_T}
 )
-SELECT {id_col}, bench_id, cos FROM flagged WHERE rn = 1"""
+SELECT vec_id, bench_id, cos FROM flagged WHERE rn = 1"""

@@ -138,8 +138,7 @@ FROM per JOIN exact ON per.{group} = exact.{group}"""
 KMV_K = 32
 
 
-def kmv_distinct(df: DataFrame, group: str, item: str,
-                 k: int = KMV_K) -> DataFrame:
+def kmv_distinct(df: DataFrame, group: str, item: str) -> DataFrame:
     """Per-``group`` bottom-k sketch: the k smallest distinct hash60 values.
     Returns (group, kmv_used, kmv_kth, kmv_est, n_exact): when the group
     has ≥ k distinct items, ``est = (k−1)·2^60 / h_(k)``; below k the
@@ -149,23 +148,22 @@ def kmv_distinct(df: DataFrame, group: str, item: str,
               .distinct())
     w = Window.partitionBy(group).orderBy("_h")
     per = (hashes.withColumn("_rk", F.row_number().over(w))
-           .where(F.col("_rk") <= k)
+           .where(F.col("_rk") <= KMV_K)
            .groupBy(group)
            .agg(F.count("*").cast("long").alias("kmv_used"),
                 F.max("_h").cast("long").alias("kmv_kth")))
     exact = (hashes.groupBy(group)
              .agg(F.count("*").cast("long").alias("n_exact")))
-    est = (F.when(F.col("kmv_used") < k, F.col("n_exact").cast("double"))
-           .otherwise(F.lit(float(k - 1) * float(1 << HASH_BITS))
+    est = (F.when(F.col("kmv_used") < KMV_K, F.col("n_exact").cast("double"))
+           .otherwise(F.lit(float(KMV_K - 1) * float(1 << HASH_BITS))
                       / F.col("kmv_kth").cast("double")))
     return (per.join(exact, group)
             .select(group, "kmv_used", "kmv_kth", est.alias("kmv_est"),
                     "n_exact"))
 
 
-def kmv_distinct_sql(table_sql: str, group: str, item: str,
-                     k: int = KMV_K) -> str:
-    numer = repr(float(k - 1) * float(1 << HASH_BITS))
+def kmv_distinct_sql(table_sql: str, group: str, item: str) -> str:
+    numer = repr(float(KMV_K - 1) * float(1 << HASH_BITS))
     return f"""WITH hashes AS (SELECT DISTINCT {group}, {hash60_sql(item)} AS _h
            FROM ({table_sql}) WHERE {item} IS NOT NULL),
 bottom AS (SELECT {group}, _h,
@@ -173,11 +171,11 @@ bottom AS (SELECT {group}, _h,
            FROM hashes),
 per AS (SELECT {group}, CAST(COUNT(*) AS BIGINT) AS kmv_used,
                CAST(MAX(_h) AS BIGINT) AS kmv_kth
-        FROM bottom WHERE _rk <= {k} GROUP BY 1),
+        FROM bottom WHERE _rk <= {KMV_K} GROUP BY 1),
 exact AS (SELECT {group}, CAST(COUNT(*) AS BIGINT) AS n_exact
           FROM hashes GROUP BY 1)
 SELECT per.{group}, kmv_used, kmv_kth,
-       CASE WHEN kmv_used < {k} THEN CAST(n_exact AS DOUBLE)
+       CASE WHEN kmv_used < {KMV_K} THEN CAST(n_exact AS DOUBLE)
             ELSE {numer} / CAST(kmv_kth AS DOUBLE) END AS kmv_est,
        n_exact
 FROM per JOIN exact ON per.{group} = exact.{group}"""
@@ -203,8 +201,7 @@ def _cms_col_sql(h_sql: str, row: int, w: int) -> str:
     return f"((((({h_sql}) & {_H30_MASK}) * {a} + {b}) % {_MIX_MOD}) % {w})"
 
 
-def cms_heavy_hitters(df: DataFrame, item: str, d: int = CMS_D,
-                      w: int = CMS_W) -> DataFrame:
+def cms_heavy_hitters(df: DataFrame, item: str) -> DataFrame:
     """Count-Min frequency estimates for every distinct ``item``: build the
     d×w counter matrix in one aggregation, answer each item's point query
     with the MIN over its d counters. Returns (item, n_exact, n_cms) with
@@ -217,8 +214,8 @@ def cms_heavy_hitters(df: DataFrame, item: str, d: int = CMS_D,
     shuffles the full key universe."""
     h = hash60_col(F.col(item))
     probes_arr = F.array(*[
-        F.struct(F.lit(r).alias("_row"), _cms_col(h, r, w).alias("_col"))
-        for r in range(d)])
+        F.struct(F.lit(r).alias("_row"), _cms_col(h, r, CMS_W).alias("_col"))
+        for r in range(CMS_D)])
     cells = (df.where(F.col(item).isNotNull())
              .select(F.explode(probes_arr).alias("_c"))
              .groupBy(F.col("_c._row").alias("_row"),
@@ -240,17 +237,16 @@ def cms_heavy_hitters(df: DataFrame, item: str, d: int = CMS_D,
             .agg(F.min("_n").cast("long").alias("n_cms")))
 
 
-def cms_heavy_hitters_sql(table_sql: str, item: str, d: int = CMS_D,
-                          w: int = CMS_W) -> str:
+def cms_heavy_hitters_sql(table_sql: str, item: str) -> str:
     h = hash60_sql(item)
     cell_rows = " UNION ALL ".join(
-        f"SELECT {r} AS _row, {_cms_col_sql(h, r, w)} AS _col "
+        f"SELECT {r} AS _row, {_cms_col_sql(h, r, CMS_W)} AS _col "
         f"FROM src WHERE {item} IS NOT NULL"
-        for r in range(d))
+        for r in range(CMS_D))
     probe_rows = " UNION ALL ".join(
         f"SELECT {item}, n_exact, {r} AS _row, "
-        f"{_cms_col_sql(f'exact_h', r, w)} AS _col FROM exact"
-        for r in range(d))
+        f"{_cms_col_sql('exact_h', r, CMS_W)} AS _col FROM exact"
+        for r in range(CMS_D))
     return f"""WITH src AS ({table_sql}),
 cells AS (SELECT _row, _col, CAST(COUNT(*) AS BIGINT) AS _n
           FROM ({cell_rows}) GROUP BY 1, 2),
@@ -278,21 +274,19 @@ HIST_BIN_W = 32
 HIST_PCTS = (25, 50, 75, 95)
 
 
-def histogram_quantiles(df: DataFrame, group: str, value: str,
-                        bin_w: int = HIST_BIN_W,
-                        pcts: tuple = HIST_PCTS) -> DataFrame:
+def histogram_quantiles(df: DataFrame, group: str, value: str) -> DataFrame:
     """Per-group sketched quantiles: (group, pct, n, est). ONE
     map-side-combinable groupBy builds the histogram; the cumulative
     window runs over ≤ range/bin_w bins per group, not rows."""
     bins = (df.where(F.col(value).isNotNull())
-            .groupBy(group, F.expr(f"{value} div {bin_w}").alias("_bin"))
+            .groupBy(group, F.expr(f"{value} div {HIST_BIN_W}").alias("_bin"))
             .agg(F.count("*").cast("long").alias("_cnt")))
     w = Window.partitionBy(group).orderBy("_bin")
     bins = (bins
             .withColumn("_cum", F.sum("_cnt").over(w).cast("long"))
             .withColumn("_n", F.sum("_cnt").over(
                 Window.partitionBy(group)).cast("long")))
-    pct = F.explode(F.array(*[F.lit(p) for p in pcts])).alias("pct")
+    pct = F.explode(F.array(*[F.lit(p) for p in HIST_PCTS])).alias("pct")
     cand = (bins.select(group, "_bin", "_cnt", "_cum", "_n", pct)
             .withColumn("_r", F.expr("(pct * _n + 99) div 100"))
             .where(F.col("_cum") >= F.col("_r")))
@@ -301,18 +295,16 @@ def histogram_quantiles(df: DataFrame, group: str, value: str,
                  .alias("_b"))
             .selectExpr(group, "CAST(pct AS BIGINT) AS pct",
                         "_b._n AS n",
-                        f"CAST(_b._bin * {bin_w} + ((_b._r - (_b._cum - _b._cnt))"
-                        f" * {bin_w}) div _b._cnt AS BIGINT) AS est"))
+                        f"CAST(_b._bin * {HIST_BIN_W} + ((_b._r - (_b._cum - _b._cnt))"
+                        f" * {HIST_BIN_W}) div _b._cnt AS BIGINT) AS est"))
 
 
-def histogram_quantiles_sql(table_sql: str, group: str, value: str,
-                            bin_w: int = HIST_BIN_W,
-                            pcts: tuple = HIST_PCTS) -> str:
+def histogram_quantiles_sql(table_sql: str, group: str, value: str) -> str:
     """DuckDB dual of :func:`histogram_quantiles`."""
-    pct_rows = " UNION ALL ".join(f"SELECT {p} AS pct" for p in pcts)
+    pct_rows = " UNION ALL ".join(f"SELECT {p} AS pct" for p in HIST_PCTS)
     return f"""WITH src AS ({table_sql}),
 bins AS (
-  SELECT {group}, {value} // {bin_w} AS _bin,
+  SELECT {group}, {value} // {HIST_BIN_W} AS _bin,
          CAST(COUNT(*) AS BIGINT) AS _cnt
   FROM src WHERE {value} IS NOT NULL GROUP BY 1, 2),
 cum AS (
@@ -332,14 +324,13 @@ win AS (
                             ORDER BY _bin ASC) AS _rn
   FROM cand)
 SELECT {group}, CAST(pct AS BIGINT) AS pct, _n AS n,
-       CAST(_bin * {bin_w} + ((_r - (_cum - _cnt)) * {bin_w}) // _cnt
+       CAST(_bin * {HIST_BIN_W} + ((_r - (_cum - _cnt)) * {HIST_BIN_W}) // _cnt
             AS BIGINT) AS est
 FROM win WHERE _rn = 1"""
 
 
 # ---------------------------------------------- join-size (F2) estimation
-def selfjoin_size_estimate(df: DataFrame, item: str, d: int = CMS_D,
-                           w: int = CMS_W) -> DataFrame:
+def selfjoin_size_estimate(df: DataFrame, item: str) -> DataFrame:
     """Equi-join cardinality estimation from the Count-Min matrix — the
     optimizer statistic a distributed planner wants BEFORE committing to a
     join strategy: |R ⋈_k R| = Σ_key c(key)² (the F2 second moment, the
@@ -357,8 +348,8 @@ def selfjoin_size_estimate(df: DataFrame, item: str, d: int = CMS_D,
     rows per sketch scope."""
     h = hash60_col(F.col(item).cast("string"))
     probes_arr = F.array(*[
-        F.struct(F.lit(r).alias("_row"), _cms_col(h, r, w).alias("_col"))
-        for r in range(d)])
+        F.struct(F.lit(r).alias("_row"), _cms_col(h, r, CMS_W).alias("_col"))
+        for r in range(CMS_D)])
     src = df.where(F.col(item).isNotNull())
     cells = (src.select(F.explode(probes_arr).alias("_c"))
              .groupBy(F.col("_c._row").alias("_row"),
@@ -381,13 +372,12 @@ def selfjoin_size_estimate(df: DataFrame, item: str, d: int = CMS_D,
                     .alias("over_millis")))
 
 
-def selfjoin_size_estimate_sql(table_sql: str, item: str, d: int = CMS_D,
-                               w: int = CMS_W) -> str:
+def selfjoin_size_estimate_sql(table_sql: str, item: str) -> str:
     h = hash60_sql(f"CAST({item} AS VARCHAR)")
     cell_rows = " UNION ALL ".join(
-        f"SELECT {r} AS _row, {_cms_col_sql(h, r, w)} AS _col "
+        f"SELECT {r} AS _row, {_cms_col_sql(h, r, CMS_W)} AS _col "
         f"FROM src WHERE {item} IS NOT NULL"
-        for r in range(d))
+        for r in range(CMS_D))
     return f"""WITH src AS ({table_sql}),
 cells AS (
   SELECT _row, _col, CAST(COUNT(*) AS BIGINT) AS _n

@@ -33,11 +33,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def with_salt(df: DataFrame, n_salts: int, id_col: str,
-              out: str = "_salt") -> DataFrame:
+def with_salt(df: DataFrame, n_salts: int, id_col: str) -> DataFrame:
     """Deterministic salt in [0, n_salts) from a stable row id (never
     rand() — reruns and retries must land rows on the same salt)."""
-    return df.withColumn(out, F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts)))
+    return df.withColumn("_salt",
+                         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts)))
 
 
 def salted_agg(df: DataFrame, keys: Sequence[str], aggs: dict[str, tuple],
@@ -56,14 +56,6 @@ def salted_agg(df: DataFrame, keys: Sequence[str], aggs: dict[str, tuple],
           for out, (src, fn1, _) in aggs.items()])
     return p1.groupBy(*keys).agg(
         *[fn2(f"_p_{out}").alias(out) for out, (_, __, fn2) in aggs.items()])
-
-
-def salted_count(df: DataFrame, keys: Sequence[str], n_salts: int,
-                 id_col: str) -> DataFrame:
-    """Salted row count per key — the common dense-cell case."""
-    salted = with_salt(df, n_salts, id_col)
-    p1 = salted.groupBy(*keys, "_salt").agg(F.count("*").alias("_n"))
-    return p1.groupBy(*keys).agg(F.sum("_n").alias("n"))
 
 
 def salted_topk(df: DataFrame, key: str, order_col: str, tie_col: str,

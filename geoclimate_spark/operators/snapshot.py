@@ -44,12 +44,11 @@ _M = 2_147_483_647
 _A = 48_271
 
 
-def crawl_history_fixture_sql(id_col: str = "doc_id",
-                              canon_n: int = 150) -> dict[str, str]:
+def crawl_history_fixture_sql() -> dict[str, str]:
     """Engine-agnostic SQL fragments for a crawl history whose per-URL fetch
     times actually straddle the snapshot boundary. :func:`urlnorm.
     url_crawl_fixture_sql`'s epoch is AFFINE in the id (an LCG step), so
-    within a canon group (ids ≡ mod canon_n) epochs differ by one fixed
+    within a canon group (ids ≡ mod 150) epochs differ by one fixed
     delta and every group straddles mid-year — the diff degenerates to all
     'updated'. Squaring the id first breaks the affinity (verified mix at
     sf0.01: 37 added / 83 updated / 30 unchanged). ``keep_pred`` drops ~1/4
@@ -59,11 +58,11 @@ def crawl_history_fixture_sql(id_col: str = "doc_id",
     The messy ``raw_url`` noise is reused from urlnorm so canonicalization
     stays exercised by the diff."""
     from .urlnorm import url_crawl_fixture_sql
-    raw_url = url_crawl_fixture_sql(id_col, canon_n)["raw_url"]
-    sq = f"(({id_col}) * ({id_col}) % {_M})"
+    raw_url = url_crawl_fixture_sql(canon_n=150)["raw_url"]
+    sq = f"((doc_id) * (doc_id) % {_M})"
     epoch = (f"CAST({_EPOCH} + (({sq}) * {_A} + 11) % {_M} % {_YEAR}"
              f" AS BIGINT)")
-    keep = f"((({id_col}) * {_A} + 11) % {_M}) % 4 <> 0"
+    keep = f"(((doc_id) * {_A} + 11) % {_M}) % 4 <> 0"
     return {"raw_url": raw_url, "fetch_epoch": epoch, "keep_pred": keep}
 
 
@@ -153,8 +152,7 @@ def incremental_host_rollup(crawls: DataFrame, t1: int = T1_EPOCH,
                     .cast("long").alias("sum_epoch")))
 
 
-def incremental_host_rollup_sql(crawls_sql: str,
-                                t2: int = T2_EPOCH) -> str:
+def incremental_host_rollup_sql(crawls_sql: str) -> str:
     """Oracle = FULL RECOMPUTE of the t2 live state (deliberately not the
     incremental algorithm): latest fetch per canonical URL at t2, rolled up
     per host."""
@@ -164,7 +162,7 @@ WITH c AS (
   SELECT {canon} AS canon_url, host,
          CAST(fetch_epoch AS BIGINT) AS fetch_epoch,
          CAST(fetch_epoch * {_KEY_SCALE} + crawl_id AS BIGINT) AS _key
-  FROM ({crawls_sql}) WHERE fetch_epoch <= {int(t2)}
+  FROM ({crawls_sql}) WHERE fetch_epoch <= {int(T2_EPOCH)}
 ), live AS (
   SELECT canon_url, host, MAX(_key) AS _k FROM c GROUP BY canon_url, host
 )
@@ -174,8 +172,7 @@ FROM live GROUP BY host"""
 
 
 # --------------------------------------------------------------- DuckDB dual
-def snapshot_diff_sql(crawls_sql: str, t1: int = T1_EPOCH,
-                      t2: int = T2_EPOCH) -> str:
+def snapshot_diff_sql(crawls_sql: str) -> str:
     canon = canonical_url_sql("raw_url")
     return f"""
 WITH c AS (
@@ -186,8 +183,8 @@ WITH c AS (
   FROM ({crawls_sql})
 ), agg AS (
   SELECT canon_url,
-         MAX(CASE WHEN fetch_epoch <= {int(t1)} THEN _key END) AS _k1,
-         MAX(CASE WHEN fetch_epoch <= {int(t2)} THEN _key END) AS _k2
+         MAX(CASE WHEN fetch_epoch <= {int(T1_EPOCH)} THEN _key END) AS _k1,
+         MAX(CASE WHEN fetch_epoch <= {int(T2_EPOCH)} THEN _key END) AS _k2
   FROM c GROUP BY canon_url
 )
 SELECT canon_url,

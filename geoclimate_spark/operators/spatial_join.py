@@ -153,13 +153,12 @@ def _class_col(c: Column, edges: np.ndarray) -> Column:
 
 
 def spatial_join_points(df: DataFrame, zones: list[Zone], key: str = "page_id",
-                        lon: str = "lon_e6", lat: str = "lat_e6",
                         max_cells: int = 20_000,
                         passthrough: list[str] | None = None) -> DataFrame:
     """Assign each row's point to its containing zone.
 
-    Returns ``(key, zone_id, lon, lat, *passthrough)`` — one row per input
-    row whose point lies in at least one zone; lowest zone_id wins on
+    Returns ``(key, zone_id, lon_e6, lat_e6, *passthrough)`` — one row per
+    input row whose point lies in at least one zone; lowest zone_id wins on
     boundaries/overlaps. ``passthrough`` columns ride along unchanged.
 
     Physical strategy is picked per zone geometry:
@@ -188,7 +187,8 @@ def spatial_join_points(df: DataFrame, zones: list[Zone], key: str = "page_id",
     """
     spark = df.sparkSession
     passthrough = passthrough or []
-    pts = df.where(F.col(lon).isNotNull()).select(key, lon, lat, *passthrough)
+    pts = (df.where(F.col("lon_e6").isNotNull())
+           .select(key, "lon_e6", "lat_e6", *passthrough))
     rect_bounds = _rect_bounds_e6(zones)
     table = _rect_class_table(rect_bounds, max_cells) if rect_bounds else None
     if table is not None:
@@ -196,25 +196,27 @@ def spatial_join_points(df: DataFrame, zones: list[Zone], key: str = "page_id",
         n_lat = 2 * len(lat_e) + 1
         dim = spark.createDataFrame(pd.DataFrame(
             {"z_cls": keys.astype(np.int32), "zone_id": zids}))
-        pts = pts.withColumn("_zcls", _class_col(F.col(lon), lon_e) * n_lat
-                             + _class_col(F.col(lat), lat_e))
+        pts = pts.withColumn("_zcls",
+                             _class_col(F.col("lon_e6"), lon_e) * n_lat
+                             + _class_col(F.col("lat_e6"), lat_e))
         j = pts.join(F.broadcast(dim), pts["_zcls"] == dim["z_cls"], "inner")
-        return j.select(key, "zone_id", lon, lat, *passthrough)
+        return j.select(key, "zone_id", "lon_e6", "lat_e6", *passthrough)
     res = pick_cover_res(zones, max_cells)
     cell, zid = zone_covering(zones, res)
     cov = spark.createDataFrame(pd.DataFrame({"z_cell": cell, "zone_id": zid}))
     pip = _pip_refine_udf(zones)
 
-    pts = pts.withColumn("_jcell", grid.cell_col(F.col(lon), F.col(lat), res))
+    pts = pts.withColumn("_jcell",
+                         grid.cell_col(F.col("lon_e6"), F.col("lat_e6"), res))
     cand = pts.join(F.broadcast(cov), pts["_jcell"] == cov["z_cell"], "inner")
-    hit = cand.where(pip(F.col(lon), F.col(lat), F.col("zone_id")))
+    hit = cand.where(pip(F.col("lon_e6"), F.col("lat_e6"), F.col("zone_id")))
     # Passthrough + coords go in the GROUPING KEY, not first() buffers:
     # string agg buffers would force SortAggregate; as keys the plan stays a
     # HashAggregate with map-side combine (values identical per page, so the
     # grouping is still one group per page).
-    out = (hit.groupBy(key, lon, lat, *passthrough)
+    out = (hit.groupBy(key, "lon_e6", "lat_e6", *passthrough)
            .agg(F.min("zone_id").alias("zone_id")))
-    return out.select(key, "zone_id", lon, lat, *passthrough)
+    return out.select(key, "zone_id", "lon_e6", "lat_e6", *passthrough)
 
 
 def spatial_join_points_np(lon_e6: np.ndarray, lat_e6: np.ndarray,

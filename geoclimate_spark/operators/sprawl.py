@@ -55,54 +55,52 @@ def _rook_cells(key: str, res: int) -> Column:
         f"), c -> c >= 0))")
 
 
-def sprawl_components(tiles: DataFrame, res: int, dense_min: int,
-                      key: str = "tile_id",
-                      cnt: str = "n_pages") -> DataFrame:
+def sprawl_components(tiles: DataFrame, res: int, dense_min: int) -> DataFrame:
     """(component, n_tiles, total_pages): one row per sprawl area — a
-    maximal rook-connected set of tiles with ``cnt`` >= dense_min. The
+    maximal rook-connected set of tiles with ``n_pages`` >= dense_min. The
     component id is the minimum member tile id (deterministic, the CC
     convention shared with page_components / near_dup_clusters)."""
-    dense = tiles.where(F.col(cnt) >= dense_min).select(key, cnt)
-    nbrs = dense.select(F.col(key),
-                        F.explode(_rook_cells(key, res)).alias("_nb"))
-    edges = (nbrs.join(dense.select(F.col(key).alias("_nb")), "_nb")
-             .where(F.col(key) < F.col("_nb"))
-             .select(F.col(key).alias("id_a"), F.col("_nb").alias("id_b")))
-    cc = connected_components(dense.select(key), edges, key=key)
-    return (cc.join(dense, key)
+    dense = (tiles.where(F.col("n_pages") >= dense_min)
+             .select("tile_id", "n_pages"))
+    nbrs = dense.select(F.col("tile_id"),
+                        F.explode(_rook_cells("tile_id", res)).alias("_nb"))
+    edges = (nbrs.join(dense.select(F.col("tile_id").alias("_nb")), "_nb")
+             .where(F.col("tile_id") < F.col("_nb"))
+             .select(F.col("tile_id").alias("id_a"),
+                     F.col("_nb").alias("id_b")))
+    cc = connected_components(dense.select("tile_id"), edges, key="tile_id")
+    return (cc.join(dense, "tile_id")
             .groupBy("component")
             .agg(F.count("*").cast("long").alias("n_tiles"),
-                 F.sum(cnt).cast("long").alias("total_pages")))
+                 F.sum("n_pages").cast("long").alias("total_pages")))
 
 
-def sprawl_components_sql(tiles_sql: str, res: int, dense_min: int,
-                          key: str = "tile_id",
-                          cnt: str = "n_pages") -> str:
+def sprawl_components_sql(tiles_sql: str, res: int, dense_min: int) -> str:
     """DuckDB dual: brute rook edges + recursive-CTE transitive closure.
-    ``tiles_sql`` must select ({key}, {cnt})."""
+    ``tiles_sql`` must select (tile_id, n_pages)."""
     nx_, ny_ = grid.nx(res), grid.ny(res)
     mask = P29 - 1
     rt = res * P58
-    x = f"((d.{key} >> 29) & {mask})"
-    y = f"(d.{key} & {mask})"
+    x = f"((d.tile_id >> 29) & {mask})"
+    y = f"(d.tile_id & {mask})"
     return f"""WITH RECURSIVE tiles AS ({tiles_sql}),
-dense AS (SELECT {key}, {cnt} FROM tiles WHERE {cnt} >= {dense_min}),
-nbrs AS (SELECT d.{key},
+dense AS (SELECT tile_id, n_pages FROM tiles WHERE n_pages >= {dense_min}),
+nbrs AS (SELECT d.tile_id,
        CAST({rt} AS BIGINT) + (({x} + v.dx + {nx_}) % {nx_}) * {P29}
          + ({y} + v.dy) AS nb
   FROM dense d CROSS JOIN (VALUES (1, 0), (-1, 0), (0, 1), (0, -1)) v(dx, dy)
   WHERE {y} + v.dy >= 0 AND {y} + v.dy < {ny_}),
-edges AS (SELECT DISTINCT n.{key} AS id_a, n.nb AS id_b
-  FROM nbrs n JOIN dense b ON b.{key} = n.nb WHERE n.{key} < n.nb),
+edges AS (SELECT DISTINCT n.tile_id AS id_a, n.nb AS id_b
+  FROM nbrs n JOIN dense b ON b.tile_id = n.nb WHERE n.tile_id < n.nb),
 sym AS (SELECT id_a AS src, id_b AS dst FROM edges
   UNION SELECT id_b, id_a FROM edges
-  UNION SELECT {key}, {key} FROM dense),
+  UNION SELECT tile_id, tile_id FROM dense),
 reach(src, dst) AS (
-  SELECT {key}, {key} FROM dense
+  SELECT tile_id, tile_id FROM dense
   UNION
   SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src),
-comp AS (SELECT src AS {key}, MIN(dst) AS component FROM reach GROUP BY src)
+comp AS (SELECT src AS tile_id, MIN(dst) AS component FROM reach GROUP BY src)
 SELECT c.component, CAST(COUNT(*) AS BIGINT) AS n_tiles,
-       CAST(SUM(d.{cnt}) AS BIGINT) AS total_pages
-FROM comp c JOIN dense d USING ({key})
+       CAST(SUM(d.n_pages) AS BIGINT) AS total_pages
+FROM comp c JOIN dense d USING (tile_id)
 GROUP BY c.component"""

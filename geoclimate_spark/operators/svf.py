@@ -75,13 +75,11 @@ def sample_points_values_sql() -> str:
             + "\n) AS t(zone_id, pt_seq, lon_e6, lat_e6)")
 
 
-def zone_svf(points: DataFrame, pages: DataFrame,
-             radius_e6: int = SVF_RADIUS_E6, cap: int = SVF_CAP,
-             samples: int = SVF_SAMPLES) -> DataFrame:
+def zone_svf(points: DataFrame, pages: DataFrame) -> DataFrame:
     """Per-zone SVF from sample ``points`` (zone_id, pt_seq, lon_e6, lat_e6)
     against obstacle ``pages`` (page_id, lon_e6, lat_e6).
     Returns (zone_id, n_points, sum_blocked, mean_svf)."""
-    res = pick_res_for_radius(radius_e6)
+    res = pick_res_for_radius(SVF_RADIUS_E6)
     pts = points.select(
         "zone_id", "pt_seq",
         F.col("lon_e6").alias("_alon"), F.col("lat_e6").alias("_alat"),
@@ -94,42 +92,41 @@ def zone_svf(points: DataFrame, pages: DataFrame,
     dx = F.col("_alon") - F.col("_blon")
     dy = F.col("_alat") - F.col("_blat")
     within = (pts.join(nbs, "_cell")
-              .where(dx * dx + dy * dy <= F.lit(radius_e6 * radius_e6))
+              .where(dx * dx + dy * dy <= F.lit(SVF_RADIUS_E6 * SVF_RADIUS_E6))
               .groupBy("zone_id", "pt_seq")
               .agg(F.count("*").alias("_n")))
     per_pt = (points.select("zone_id", "pt_seq")
               .join(within, ["zone_id", "pt_seq"], "left")
               .select("zone_id",
                       F.least(F.coalesce(F.col("_n"), F.lit(0)),
-                              F.lit(cap)).alias("_blocked")))
-    n_pts = samples * samples
+                              F.lit(SVF_CAP)).alias("_blocked")))
+    n_pts = SVF_SAMPLES * SVF_SAMPLES
     return (per_pt.groupBy("zone_id")
             .agg(F.sum("_blocked").alias("sum_blocked"))
             .select("zone_id",
                     F.lit(n_pts).cast("long").alias("n_points"),
                     F.col("sum_blocked").cast("long").alias("sum_blocked"),
                     (F.lit(1.0) - F.col("sum_blocked").cast("double")
-                     / F.lit(float(cap * n_pts))).alias("mean_svf")))
+                     / F.lit(float(SVF_CAP * n_pts))).alias("mean_svf")))
 
 
-def zone_svf_sql(pages_sql: str, radius_e6: int = SVF_RADIUS_E6,
-                 cap: int = SVF_CAP, samples: int = SVF_SAMPLES) -> str:
+def zone_svf_sql(pages_sql: str) -> str:
     """DuckDB dual: brute-force distance join (the kring equi-join is a
     candidate superset refined by the same integer d² predicate)."""
-    n_pts = samples * samples
+    n_pts = SVF_SAMPLES * SVF_SAMPLES
     return f"""WITH pts AS ({sample_points_values_sql()}),
 pages AS ({pages_sql}),
 within AS (SELECT p.zone_id, p.pt_seq, COUNT(*) AS _n
   FROM pts p JOIN pages g
     ON (p.lon_e6 - g.lon_e6) * (p.lon_e6 - g.lon_e6)
      + (p.lat_e6 - g.lat_e6) * (p.lat_e6 - g.lat_e6)
-    <= CAST({radius_e6} AS BIGINT) * {radius_e6}
+    <= CAST({SVF_RADIUS_E6} AS BIGINT) * {SVF_RADIUS_E6}
   GROUP BY 1, 2),
 per_pt AS (SELECT p.zone_id,
-       LEAST(COALESCE(w._n, 0), {cap}) AS _blocked
+       LEAST(COALESCE(w._n, 0), {SVF_CAP}) AS _blocked
   FROM pts p LEFT JOIN within w USING (zone_id, pt_seq))
 SELECT zone_id, CAST({n_pts} AS BIGINT) AS n_points,
        CAST(SUM(_blocked) AS BIGINT) AS sum_blocked,
        1.0 - CAST(SUM(_blocked) AS DOUBLE)
-           / CAST('{float(cap * n_pts)!r}' AS DOUBLE) AS mean_svf
+           / CAST('{float(SVF_CAP * n_pts)!r}' AS DOUBLE) AS mean_svf
 FROM per_pt GROUP BY zone_id"""

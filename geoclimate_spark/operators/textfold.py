@@ -64,13 +64,13 @@ def _accents_inject_duck() -> str:
             " ELSE '' END)")
 
 
-def fold_profile(docs: DataFrame, text_col: str = "atext") -> DataFrame:
+def fold_profile(docs: DataFrame) -> DataFrame:
     """(doc_id, n_chars_in, n_chars_out, n_changed, folded_md5): the fold
     applied per doc with an exact changed-codepoint count (chars whose
     folded form differs — computed as length-preserving positional
     comparison via the 1:1 translate plus the ligature length delta)."""
-    t = normalize_col(F.col(text_col))
-    folded = fold_col(F.col(text_col))
+    t = normalize_col(F.col("atext"))
+    folded = fold_col(F.col("atext"))
     lig = sum((F.length(t)
                - F.length(F.replace(t, F.lit(a), F.lit(""))))
               / len(a) for a, _ in _LIGATURES)

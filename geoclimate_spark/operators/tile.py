@@ -30,9 +30,9 @@ def tile_sql(lon_e6_sql: str, lat_e6_sql: str, res: int = TILE_RES) -> str:
     return grid.cell_sql(lon_e6_sql, lat_e6_sql, res)
 
 
-def with_tile(df: DataFrame, lon: str = "lon_e6", lat: str = "lat_e6",
-              res: int = TILE_RES, out: str = "tile_id") -> DataFrame:
-    return df.withColumn(out, tile_col(F.col(lon), F.col(lat), res))
+def with_tile(df: DataFrame, res: int = TILE_RES) -> DataFrame:
+    return df.withColumn("tile_id",
+                         tile_col(F.col("lon_e6"), F.col("lat_e6"), res))
 
 
 def lod_rollup(df: DataFrame, cell_col_name: str, child_res: int, levels: int,
@@ -62,8 +62,6 @@ def lod_rollup(df: DataFrame, cell_col_name: str, child_res: int, levels: int,
 
 
 def neighbor_smoothing(tiles: DataFrame, res: int = TILE_RES,
-                       key: str = "tile_id", cat: str = "mode_lang",
-                       weight: str = "mode_weight",
                        warm: tuple[str, ...] = ()) -> DataFrame:
     """Grid 8-neighbor smoothing — the `multiscaleLCZGrid` neighborhood
     stage (`/root/reference/geoindicators/.../GridIndicators.groovy:
@@ -79,35 +77,35 @@ def neighbor_smoothing(tiles: DataFrame, res: int = TILE_RES,
     never a theta join. Missing neighbors (no pages) simply don't join,
     matching the reference's NULL neighbor subqueries counting 0.
 
-    Returns (tile_id, {cat}, n_nbrs, n_warm9, smooth_{cat},
+    Returns (tile_id, mode_lang, n_nbrs, n_warm9, smooth_mode_lang,
     smooth_weight)."""
     from pyspark.sql import Window
 
     from .knn import _kring9
 
     centers = tiles.select(
-        F.col(key),
-        F.explode(_kring9(F.col(key), res)).alias("_cell"))
-    nb = tiles.select(F.col(key).alias("_cell"),
-                      F.col(cat).alias("_ncat"),
-                      F.col(weight).cast("long").alias("_nw"))
+        F.col("tile_id"),
+        F.explode(_kring9(F.col("tile_id"), res)).alias("_cell"))
+    nb = tiles.select(F.col("tile_id").alias("_cell"),
+                      F.col("mode_lang").alias("_ncat"),
+                      F.col("mode_weight").cast("long").alias("_nw"))
     j = centers.join(nb, "_cell")
-    per = (j.groupBy(key, "_ncat")
+    per = (j.groupBy("tile_id", "_ncat")
            .agg(F.sum("_nw").alias("_w"), F.count("*").alias("_n"),
-                F.sum(F.when(F.col("_cell") != F.col(key), 1).otherwise(0))
-                .alias("_nonself")))
-    tot = per.groupBy(key).agg(
+                F.sum(F.when(F.col("_cell") != F.col("tile_id"), 1)
+                      .otherwise(0)).alias("_nonself")))
+    tot = per.groupBy("tile_id").agg(
         F.sum("_nonself").cast("long").alias("n_nbrs"),
         F.sum(F.when(F.col("_ncat").isin(*warm) if warm else F.lit(False),
                      F.col("_n")).otherwise(0)).cast("long").alias("n_warm9"))
-    win = Window.partitionBy(key).orderBy(F.col("_w").desc(),
-                                          F.col("_ncat").asc())
+    win = Window.partitionBy("tile_id").orderBy(F.col("_w").desc(),
+                                                F.col("_ncat").asc())
     top = (per.withColumn("_rn", F.row_number().over(win))
            .where(F.col("_rn") == 1)
-           .select(key, F.col("_ncat").alias(f"smooth_{cat}"),
+           .select("tile_id", F.col("_ncat").alias("smooth_mode_lang"),
                    F.col("_w").cast("long").alias("smooth_weight")))
-    return (tiles.select(key, cat)
-            .join(tot, key).join(top, key))
+    return (tiles.select("tile_id", "mode_lang")
+            .join(tot, "tile_id").join(top, "tile_id"))
 
 
 def kring9_sql(cell_sql: str, res: int) -> str:
@@ -131,34 +129,31 @@ CROSS JOIN (VALUES (-1,-1),(-1,0),(-1,1),(0,-1),(0,0),(0,1),
 WHERE {y} + d.dy >= 0 AND {y} + d.dy < {ny}"""
 
 
-def neighbor_smoothing_sql(tiles_sql: str, res: int = TILE_RES,
-                           key: str = "tile_id", cat: str = "mode_lang",
-                           weight: str = "mode_weight",
-                           warm: tuple[str, ...] = ()) -> str:
+def neighbor_smoothing_sql(tiles_sql: str, warm: tuple[str, ...] = ()) -> str:
     """DuckDB mirror of :func:`neighbor_smoothing`. ``tiles_sql`` selects
-    (key, cat, weight)."""
+    (tile_id, mode_lang, mode_weight)."""
     warm_in = ", ".join(f"'{w}'" for w in warm)
     warm_case = (f"CASE WHEN _ncat IN ({warm_in}) THEN _n ELSE 0 END"
                  if warm else "0")
-    kr = kring9_sql(f"SELECT {key} AS cell FROM tiles", res)
+    kr = kring9_sql("SELECT tile_id AS cell FROM tiles", TILE_RES)
     return f"""WITH tiles AS ({tiles_sql}),
 kr AS ({kr}),
-j AS (SELECT k.cell AS {key}, k.nb AS _cell, t.{cat} AS _ncat,
-             CAST(t.{weight} AS BIGINT) AS _nw
-  FROM kr k JOIN tiles t ON t.{key} = k.nb),
-per AS (SELECT {key}, _ncat, SUM(_nw) AS _w, COUNT(*) AS _n,
-       SUM(CASE WHEN _cell != {key} THEN 1 ELSE 0 END) AS _nonself
-  FROM j GROUP BY {key}, _ncat),
-tot AS (SELECT {key}, CAST(SUM(_nonself) AS BIGINT) AS n_nbrs,
+j AS (SELECT k.cell AS tile_id, k.nb AS _cell, t.mode_lang AS _ncat,
+             CAST(t.mode_weight AS BIGINT) AS _nw
+  FROM kr k JOIN tiles t ON t.tile_id = k.nb),
+per AS (SELECT tile_id, _ncat, SUM(_nw) AS _w, COUNT(*) AS _n,
+       SUM(CASE WHEN _cell != tile_id THEN 1 ELSE 0 END) AS _nonself
+  FROM j GROUP BY tile_id, _ncat),
+tot AS (SELECT tile_id, CAST(SUM(_nonself) AS BIGINT) AS n_nbrs,
        CAST(SUM({warm_case}) AS BIGINT) AS n_warm9
-  FROM per GROUP BY {key}),
-ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY {key}
+  FROM per GROUP BY tile_id),
+ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY tile_id
            ORDER BY _w DESC, _ncat ASC) AS _rn FROM per),
-top AS (SELECT {key}, _ncat AS smooth_{cat}, CAST(_w AS BIGINT)
+top AS (SELECT tile_id, _ncat AS smooth_mode_lang, CAST(_w AS BIGINT)
         AS smooth_weight FROM ranked WHERE _rn = 1)
-SELECT t.{key}, t.{cat}, tot.n_nbrs, tot.n_warm9,
-       top.smooth_{cat}, top.smooth_weight
-FROM tiles t JOIN tot USING ({key}) JOIN top USING ({key})"""
+SELECT t.tile_id, t.mode_lang, tot.n_nbrs, tot.n_warm9,
+       top.smooth_mode_lang, top.smooth_weight
+FROM tiles t JOIN tot USING (tile_id) JOIN top USING (tile_id)"""
 
 
 def largest_overlap_tile(spark, zones_df: DataFrame, res: int = TILE_RES) -> DataFrame:

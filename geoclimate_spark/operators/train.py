@@ -103,24 +103,26 @@ def _fit_node(rows: list[tuple], features: list[str], feat_idx: list[int],
 
 
 def fit_tree(rows: list[dict], features: list[str], label: str,
-             max_depth: int = 4, min_leaf: int = 5,
-             mode: str = "cls") -> dict:
-    """One deterministic CART tree over ``rows`` (list of dicts).
-    ``mode='cls'`` → Gini, leaves {"cls": label}; ``mode='reg'`` → SSE,
-    leaves {"val": mean}. Rows are canonically sorted first so the fit is
-    independent of input order (the collect-from-Spark path has no stable
-    order guarantee)."""
-    reg = mode == "reg"
+             max_depth: int = 4, min_leaf: int = 5) -> dict:
+    """One deterministic CART tree over ``rows`` (list of dicts): Gini
+    impurity, leaves {"cls": label}. Rows are canonically sorted first so
+    the fit is independent of input order (the collect-from-Spark path has
+    no stable order guarantee)."""
     cols = list(features) + [label]
     tup = sorted(tuple(r[c] for c in cols) for r in rows)
     feat_idx = list(range(len(features)))
     return _fit_node(tup, list(features), feat_idx, len(features), 0,
-                     max_depth, min_leaf, reg)
+                     max_depth, min_leaf, False)
+
+
+N_TREES = 5
+FOREST_MAX_DEPTH = 4
+FOREST_MIN_LEAF = 5
+FOREST_SEED = 65_537
 
 
 def fit_forest(rows: list[dict], features: list[str], label: str,
-               n_trees: int = 5, max_depth: int = 4, min_leaf: int = 5,
-               mode: str = "cls", seed: int = 65_537) -> list[dict]:
+               mode: str = "cls") -> list[dict]:
     """Deterministic bagged forest: per tree, an LCG bootstrap resample of
     the canonically-sorted rows and an LCG feature subset of size
     ceil(sqrt(F)) (`TypologyClassification.groovy:540-551` mtry analogue).
@@ -131,9 +133,9 @@ def fit_forest(rows: list[dict], features: list[str], label: str,
     n = len(base)
     m = max(2, math.isqrt(len(features)) + (0 if math.isqrt(len(features)) ** 2 == len(features) else 1))
     m = min(m, len(features))
-    s = seed
+    s = FOREST_SEED
     trees = []
-    for _ in range(n_trees):
+    for _ in range(N_TREES):
         picks = []
         for _ in range(n):
             s = _lcg(s)
@@ -148,7 +150,7 @@ def fit_forest(rows: list[dict], features: list[str], label: str,
         sub_feats = [features[i] for i in fsub]
         li = len(features)
         trees.append(_fit_node(picks, sub_feats, fsub, li, 0,
-                               max_depth, min_leaf, reg))
+                               FOREST_MAX_DEPTH, FOREST_MIN_LEAF, reg))
     return trees
 
 
@@ -177,7 +179,7 @@ N_BUILDINGS = 360
 _LABELS = ("large", "mid", "small")
 
 
-def synth_building_rows(n: int = N_BUILDINGS) -> list[tuple]:
+def synth_building_rows() -> list[tuple]:
     """Deterministic 'building' training fixture:
     (bld_id, zone_id, area, perim, elong, height, size_cls) — integer
     features from the repo LCG; ``height`` follows a planted linear rule
@@ -187,7 +189,7 @@ def synth_building_rows(n: int = N_BUILDINGS) -> list[tuple]:
     classification label (NULL on held-out rows, every 5th)."""
     rows = []
     s = 424_243
-    for i in range(n):
+    for i in range(N_BUILDINGS):
         s = _lcg(s)
         area = 100 + s % 9_000
         s = _lcg(s)
@@ -242,8 +244,7 @@ def trained_cls_forest() -> list[dict]:
     rows = [{"area": a, "perim": p, "elong": e, "size_cls": l}
             for (_, _, a, p, e, _, l) in synth_building_rows()
             if l is not None]
-    return fit_forest(rows, feats, "size_cls", n_trees=5, max_depth=4,
-                      min_leaf=5, mode="cls")
+    return fit_forest(rows, feats, "size_cls")
 
 
 def trained_reg_forest() -> list[dict]:
@@ -252,5 +253,4 @@ def trained_reg_forest() -> list[dict]:
     rows = [{"area": a, "perim": p, "elong": e, "height": h}
             for (_, _, a, p, e, h, _) in synth_building_rows()
             if h is not None]
-    return fit_forest(rows, feats, "height", n_trees=5, max_depth=4,
-                      min_leaf=5, mode="reg")
+    return fit_forest(rows, feats, "height", mode="reg")

@@ -38,12 +38,11 @@ from pyspark.sql import functions as F
 from ..functions.text import normalize_col, normalize_sql
 
 
-def vocab_coverage(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def vocab_coverage(docs: DataFrame) -> DataFrame:
     """(term, cf, df, rank, cum_share): corpus vocabulary ordered by
     (cf DESC, term ASC) with exact cumulative token share."""
-    t = normalize_col(F.col(text_col))
-    toks = (docs.select(F.col(id_col).alias("id"),
+    t = normalize_col(F.col("text"))
+    toks = (docs.select(F.col("doc_id").alias("id"),
                         F.explode(F.split(t, " ")).alias("term")))
     terms = (toks.groupBy("term")
              .agg(F.count("*").alias("cf"),
@@ -81,14 +80,13 @@ def vocab_coverage(docs: DataFrame, id_col: str = "doc_id",
          / F.col("_total").cast("double")).alias("cum_share"))
 
 
-def vocab_coverage_sql(doc_rel: str = "documents", id_col: str = "doc_id",
-                       text_col: str = "text") -> str:
+def vocab_coverage_sql() -> str:
     """DuckDB dual: the NAIVE single global window — the bucketed engine
     decomposition must reproduce it exactly (same integers, one division)."""
-    norm = normalize_sql(text_col)
+    norm = normalize_sql("text")
     return f"""
-WITH toks AS (SELECT {id_col} AS id, UNNEST(string_split({norm}, ' ')) AS term
-              FROM {doc_rel}),
+WITH toks AS (SELECT doc_id AS id, UNNEST(string_split({norm}, ' ')) AS term
+              FROM documents),
 terms AS (SELECT term, COUNT(*) AS cf, COUNT(DISTINCT id) AS df
           FROM toks GROUP BY term),
 tot AS (SELECT SUM(cf) AS total FROM terms)

@@ -120,9 +120,7 @@ def winnow_doc(txt: str, k: int = K_GRAM, w: int = WINNOW_W):
     return g, np.unique(mins)
 
 
-def winnow_fingerprint_arrays(docs: DataFrame, id_col: str = "doc_id",
-                              text_col: str = "text", k: int = K_GRAM,
-                              w: int = WINNOW_W) -> DataFrame:
+def winnow_fingerprint_arrays(docs: DataFrame) -> DataFrame:
     """(id, _g, sel): per-doc gram count and the distinct packed
     (hash, position) winnowing selection — one Arrow-batched ``mapInPandas``
     over the scan (no shuffle; normalization stays a JVM expression so both
@@ -134,18 +132,18 @@ def winnow_fingerprint_arrays(docs: DataFrame, id_col: str = "doc_id",
     import numpy as np  # noqa: F401 — sel arrays in run() are np.ndarray
     import pandas as pd
 
-    t = normalize_col(F.col(text_col))
+    t = normalize_col(F.col("text"))
     # NULL texts are dropped (the numpy kernel has no NULL repr; the SQL
     # dual drops them identically) — empty STRINGS still fingerprint
-    src = (docs.where(F.col(text_col).isNotNull())
-           .select(F.col(id_col).cast("long").alias("id"), t.alias("_t")))
+    src = (docs.where(F.col("text").isNotNull())
+           .select(F.col("doc_id").cast("long").alias("id"), t.alias("_t")))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             gs: list[int] = []
             sels: list[np.ndarray] = []
             for txt in pdf["_t"]:
-                g, sel = winnow_doc(txt, k, w)
+                g, sel = winnow_doc(txt)
                 gs.append(g)
                 sels.append(sel)
             yield pd.DataFrame({"id": pdf["id"].to_numpy(),
@@ -162,18 +160,16 @@ _VAL_DUCK = f"({{key}} // {_POS})"
 # position half, for consumers that need it: (2^32 - 1) - (key % 2^32)
 
 
-def winnow_fingerprints(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", k: int = K_GRAM,
-                        w: int = WINNOW_W) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Per-doc fingerprint summary: (doc_id, n_grams, n_fp, n_distinct_fp,
     fp_checksum). ``n_fp`` counts distinct selected (pos, hash) pairs,
     ``n_distinct_fp`` / ``fp_checksum`` the distinct hash VALUES and their
     exact int64 sum (order-free, so hash-comparable across engines)."""
-    arr = winnow_fingerprint_arrays(docs, id_col, text_col, k, w)
+    arr = winnow_fingerprint_arrays(docs)
     vals = F.array_distinct(
         F.expr(f"transform(sel, x -> {_VAL.format(key='x')})"))
     return arr.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         F.col("_g").cast("long").alias("n_grams"),
         F.size("sel").cast("long").alias("n_fp"),
         F.size(vals).cast("long").alias("n_distinct_fp"),
@@ -181,16 +177,14 @@ def winnow_fingerprints(docs: DataFrame, id_col: str = "doc_id",
                     lambda a, x: a + x).alias("fp_checksum"))
 
 
-def winnow_dup_pairs(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text", k: int = K_GRAM,
-                     w: int = WINNOW_W, max_df: int = MAX_DF,
+def winnow_dup_pairs(docs: DataFrame, max_df: int = MAX_DF,
                      min_shared: int = MIN_SHARED) -> DataFrame:
     """MOSS-style overlap pairs: (id_a, id_b, n_shared, containment) for
     doc pairs sharing >= ``min_shared`` distinct fingerprint hashes, id_a <
     id_b. ``containment`` = n_shared / min(|fp_a|, |fp_b|) — an exact int
     ratio in one double division. Fingerprints present in more than
     ``max_df`` docs are dropped first (stop-key cap, both engines)."""
-    arr = winnow_fingerprint_arrays(docs, id_col, text_col, k, w)
+    arr = winnow_fingerprint_arrays(docs)
     fp = (arr.select("id", F.explode(F.array_distinct(F.expr(
             f"transform(sel, x -> {_VAL.format(key='x')})"))).alias("fp"))
           .persist())
@@ -248,12 +242,10 @@ fp_rows AS (
 grams AS (SELECT id, gcount FROM keyed)"""
 
 
-def winnow_fingerprints_sql(doc_rel: str = "documents",
-                            id_col: str = "doc_id", text_col: str = "text",
-                            k: int = K_GRAM, w: int = WINNOW_W) -> str:
+def winnow_fingerprints_sql(doc_rel: str = "documents") -> str:
     val = _VAL_DUCK.format(key="f.key")
-    return f"""WITH {_fp_rows_cte_sql(doc_rel, id_col, text_col, k, w)}
-SELECT g.id AS {id_col},
+    return f"""WITH {_fp_rows_cte_sql(doc_rel, 'doc_id', 'text', K_GRAM, WINNOW_W)}
+SELECT g.id AS doc_id,
        CAST(g.gcount AS BIGINT) AS n_grams,
        CAST(COUNT(*) AS BIGINT) AS n_fp,
        CAST(COUNT(DISTINCT {val}) AS BIGINT) AS n_distinct_fp,
@@ -262,12 +254,10 @@ FROM grams g JOIN fp_rows f ON f.id = g.id
 GROUP BY g.id, g.gcount"""
 
 
-def winnow_dup_pairs_sql(doc_rel: str = "documents", id_col: str = "doc_id",
-                         text_col: str = "text", k: int = K_GRAM,
-                         w: int = WINNOW_W, max_df: int = MAX_DF,
+def winnow_dup_pairs_sql(doc_rel: str = "documents", max_df: int = MAX_DF,
                          min_shared: int = MIN_SHARED) -> str:
     val = _VAL_DUCK.format(key="key")
-    return f"""WITH {_fp_rows_cte_sql(doc_rel, id_col, text_col, k, w)},
+    return f"""WITH {_fp_rows_cte_sql(doc_rel, 'doc_id', 'text', K_GRAM, WINNOW_W)},
 fps AS (SELECT DISTINCT id, {val} AS fp FROM fp_rows),
 kept AS (SELECT id, fp FROM fps
   WHERE fp NOT IN (SELECT fp FROM fps GROUP BY fp HAVING COUNT(*) > {max_df})),

@@ -41,11 +41,10 @@ UNWEIGHTED_OPS = ("sum", "avg", "std", "geom_avg", "dens", "nb_dens")
 
 # ---------------------------------------------------------------- Spark path
 def unweighted_stats(df: DataFrame, dim: DataFrame, key: str, value: str,
-                     ops: Sequence[str] = UNWEIGHTED_OPS,
-                     area_col: str = "area_deg2") -> DataFrame:
+                     ops: Sequence[str] = UNWEIGHTED_OPS) -> DataFrame:
     """Per-zone stats of an integer value column; empty zones kept at 0.
 
-    ``dim`` must carry (key, area_col) [+ any describe columns]; it is
+    ``dim`` must carry (key, area_deg2) [+ any describe columns]; it is
     broadcast and LEFT-joined so zones with no rows appear with zeros —
     the reference's RIGHT JOIN + COALESCE(0) contract.
     """
@@ -62,7 +61,7 @@ def unweighted_stats(df: DataFrame, dim: DataFrame, key: str, value: str,
     n = F.col("_n").cast("double")
     sx = F.col("_sx").cast("double")
     sx2 = F.col("_sx2").cast("double")
-    area = F.col(area_col)
+    area = F.col("area_deg2")
     exprs: dict[str, Column] = {
         "sum": F.coalesce(F.col("_sx"), F.lit(0)).cast("long"),
         "avg": F.coalesce(sx / n, F.lit(0.0)),
@@ -201,10 +200,9 @@ def exact_quantiles(df: DataFrame, key: str, value: str,
     return t.groupBy(key).agg(*aggs)
 
 
-def exact_quantiles_sql(rows_sql: str, key: str, value: str,
-                        qs: Sequence[int] = QUANTILES) -> str:
+def exact_quantiles_sql(rows_sql: str, key: str, value: str) -> str:
     cols = []
-    for q in qs:
+    for q in QUANTILES:
         lo = f"(((n - 1) * {q}) // 100)"
         fr = f"(((n - 1) * {q}) % 100)"
         vlo = f"MAX(CASE WHEN rk = {lo} THEN v END)"

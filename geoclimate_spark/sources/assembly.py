@@ -34,15 +34,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def assemble_rings(parts: DataFrame, way: str = "way_id", seq: str = "seq",
-                   x: str = "x", y: str = "y",
+def assemble_rings(parts: DataFrame, way: str = "way_id",
                    extra_keys: tuple[str, ...] = ()) -> DataFrame:
     """(way_id, *extra_keys, n_parts, n_ring_points, n_distinct,
     area2_e6sq, perim_floor_e6) for every ring with >= 3 distinct vertices.
     ``extra_keys`` subdivide a way into multiple rings (relation members)."""
-    pt = F.struct(F.col(seq).cast("long").alias("seq"),
-                  F.col(x).cast("long").alias("x"),
-                  F.col(y).cast("long").alias("y"))
+    pt = F.struct(F.col("seq").cast("long").alias("seq"),
+                  F.col("x").cast("long").alias("x"),
+                  F.col("y").cast("long").alias("y"))
     g = (parts.groupBy(F.col(way).alias("way_id"),
                        *[F.col(k) for k in extra_keys])
          .agg(F.sort_array(F.collect_list(pt)).alias("pts")))
@@ -83,9 +82,7 @@ def assemble_rings(parts: DataFrame, way: str = "way_id", seq: str = "seq",
                     area2.alias("area2_e6sq"), perim.alias("perim_floor_e6")))
 
 
-def assemble_relations(parts: DataFrame, rel: str = "relation_id",
-                       ring: str = "ring_id", role: str = "role",
-                       seq: str = "seq", x: str = "x", y: str = "y") -> DataFrame:
+def assemble_relations(parts: DataFrame) -> DataFrame:
     """Relations→multipolygons WITH HOLES.
 
     Reference: `/root/reference/osmtools/src/main/groovy/org/orbisgis/
@@ -104,9 +101,9 @@ def assemble_relations(parts: DataFrame, rel: str = "relation_id",
 
     Returns (relation_id, n_rings, n_holes, area2_e6sq, hole_area2_e6sq,
     perim_floor_e6)."""
-    rings = assemble_rings(parts, way=rel, seq=seq, x=x, y=y,
-                           extra_keys=(ring, role))
-    is_outer = F.col(role) == "outer"
+    rings = assemble_rings(parts, way="relation_id",
+                           extra_keys=("ring_id", "role"))
+    is_outer = F.col("role") == "outer"
     agg = (rings.groupBy("way_id")
            .agg(F.count("*").cast("long").alias("n_rings"),
                 F.sum(F.when(~is_outer, 1).otherwise(0)).cast("long")
@@ -124,31 +121,28 @@ def assemble_relations(parts: DataFrame, rel: str = "relation_id",
                     "perim_floor_e6"))
 
 
-def assemble_relations_sql(parts_sql: str, rel: str = "relation_id",
-                           ring: str = "ring_id", role: str = "role",
-                           seq: str = "seq", x: str = "x", y: str = "y") -> str:
+def assemble_relations_sql(parts_sql: str) -> str:
     """DuckDB mirror of :func:`assemble_relations` (same LEAD/FIRST_VALUE
     ring fold per (relation, ring, role), same signed rollup)."""
-    rings = assemble_rings_sql(parts_sql, way=rel, seq=seq, x=x, y=y,
-                               extra_keys=(ring, role))
+    rings = assemble_rings_sql(parts_sql, way="relation_id",
+                               extra_keys=("ring_id", "role"))
     return f"""WITH rings AS ({rings}),
 agg AS (SELECT way_id AS relation_id,
        CAST(COUNT(*) AS BIGINT) AS n_rings,
-       CAST(SUM(CASE WHEN {role} != 'outer' THEN 1 ELSE 0 END) AS BIGINT) AS n_holes,
-       CAST(SUM(CASE WHEN {role} = 'outer' THEN area2_e6sq
+       CAST(SUM(CASE WHEN role != 'outer' THEN 1 ELSE 0 END) AS BIGINT) AS n_holes,
+       CAST(SUM(CASE WHEN role = 'outer' THEN area2_e6sq
                 ELSE -area2_e6sq END) AS BIGINT) AS area2_e6sq,
-       CAST(SUM(CASE WHEN {role} != 'outer' THEN area2_e6sq ELSE 0 END)
+       CAST(SUM(CASE WHEN role != 'outer' THEN area2_e6sq ELSE 0 END)
             AS BIGINT) AS hole_area2_e6sq,
        CAST(SUM(perim_floor_e6) AS BIGINT) AS perim_floor_e6,
-       MAX(CASE WHEN {role} = 'outer' THEN 1 ELSE 0 END) AS has_outer
+       MAX(CASE WHEN role = 'outer' THEN 1 ELSE 0 END) AS has_outer
   FROM rings GROUP BY way_id)
 SELECT relation_id, n_rings, n_holes, area2_e6sq, hole_area2_e6sq,
        perim_floor_e6
 FROM agg WHERE has_outer = 1"""
 
 
-def size_properties(parts: DataFrame, way: str = "way_id", seq: str = "seq",
-                    x: str = "x", y: str = "y") -> DataFrame:
+def size_properties(parts: DataFrame) -> DataFrame:
     """Per-way size/form properties incl. CONCAVITY — ring area divided by
     convex-hull area (`/root/reference/geoindicators/.../
     BuildingIndicators.groovy:210,254`: ``ST_AREA(g)/ST_AREA(ST_CONVEXHULL
@@ -167,9 +161,9 @@ def size_properties(parts: DataFrame, way: str = "way_id", seq: str = "seq",
     Returns (way_id, area2_e6sq, hull_area2_e6sq, concavity); fully
     collinear ways yield NULL concavity.
     """
-    dpts = (parts.select(F.col(way).alias("way_id"),
-                         F.col(x).cast("long").alias("x"),
-                         F.col(y).cast("long").alias("y"))
+    dpts = (parts.select(F.col("way_id"),
+                         F.col("x").cast("long").alias("x"),
+                         F.col("y").cast("long").alias("y"))
             .distinct())
     p = dpts.select("way_id", F.col("x").alias("px"), F.col("y").alias("py"))
     q = dpts.select("way_id", F.col("x").alias("qx"), F.col("y").alias("qy"))
@@ -192,7 +186,7 @@ def size_properties(parts: DataFrame, way: str = "way_id", seq: str = "seq",
             .groupBy("way_id")
             .agg(F.sum(F.col("px") * F.col("qy")
                        - F.col("qx") * F.col("py")).alias("hull_area2_e6sq")))
-    rings = assemble_rings(parts, way, seq, x, y)
+    rings = assemble_rings(parts)
     return (rings.select("way_id", "area2_e6sq")
             .join(hull, "way_id")
             .select("way_id", "area2_e6sq",
@@ -203,14 +197,13 @@ def size_properties(parts: DataFrame, way: str = "way_id", seq: str = "seq",
                     .alias("concavity")))
 
 
-def size_properties_sql(parts_sql: str, way: str = "way_id",
-                        seq: str = "seq", x: str = "x", y: str = "y") -> str:
+def size_properties_sql(parts_sql: str) -> str:
     """DuckDB mirror of :func:`size_properties` (identical hull-edge
     predicate and integer sums)."""
-    rings = assemble_rings_sql(parts_sql, way, seq, x, y)
+    rings = assemble_rings_sql(parts_sql)
     return f"""WITH parts0 AS ({parts_sql}),
-dpts AS (SELECT DISTINCT {way} AS way_id, CAST({x} AS BIGINT) AS x,
-                CAST({y} AS BIGINT) AS y FROM parts0),
+dpts AS (SELECT DISTINCT way_id AS way_id, CAST(x AS BIGINT) AS x,
+                CAST(y AS BIGINT) AS y FROM parts0),
 pq AS (SELECT p.way_id, p.x AS px, p.y AS py, q.x AS qx, q.y AS qy
   FROM dpts p JOIN dpts q USING (way_id)
   WHERE p.x != q.x OR p.y != q.y),
@@ -234,8 +227,7 @@ SELECT r.way_id, r.area2_e6sq, h.hull_area2_e6sq,
 FROM rings r JOIN hull h USING (way_id)"""
 
 
-def assemble_rings_sql(parts_sql: str, way: str = "way_id", seq: str = "seq",
-                       x: str = "x", y: str = "y",
+def assemble_rings_sql(parts_sql: str, way: str = "way_id",
                        extra_keys: tuple[str, ...] = ()) -> str:
     """DuckDB mirror via LEAD/FIRST_VALUE windows: consecutive part edges
     plus the closing edge when the way is open. ``extra_keys`` subdivide a
@@ -244,12 +236,12 @@ def assemble_rings_sql(parts_sql: str, way: str = "way_id", seq: str = "seq",
     keys = ", ".join(["way_id", *extra_keys])
     ekf = ek
     return f"""WITH parts AS ({parts_sql}),
-o AS (SELECT {way} AS way_id{ekf}, {seq} AS seq, {x} AS x, {y} AS y,
-       LEAD({x}) OVER w AS nx, LEAD({y}) OVER w AS ny,
-       FIRST_VALUE({x}) OVER w AS fx, FIRST_VALUE({y}) OVER w AS fy,
+o AS (SELECT {way} AS way_id{ekf}, seq AS seq, x AS x, y AS y,
+       LEAD(x) OVER w AS nx, LEAD(y) OVER w AS ny,
+       FIRST_VALUE(x) OVER w AS fx, FIRST_VALUE(y) OVER w AS fy,
        ROW_NUMBER() OVER w AS rn,
        COUNT(*) OVER (PARTITION BY {way}{ek}) AS n
-  FROM parts WINDOW w AS (PARTITION BY {way}{ek} ORDER BY {seq} ASC)),
+  FROM parts WINDOW w AS (PARTITION BY {way}{ek} ORDER BY seq ASC)),
 closedness AS (SELECT {keys}, MAX(CASE WHEN rn = n AND x = fx AND y = fy
        THEN 1 ELSE 0 END) AS is_closed FROM o GROUP BY {keys}),
 edges AS (

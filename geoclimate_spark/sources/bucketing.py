@@ -25,16 +25,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def save_bucketed(df: DataFrame, table: str, key: str, n_buckets: int,
-                  sort: bool = True, mode: str = "overwrite") -> None:
-    """Persist as a bucketed (and optionally bucket-sorted) catalog table."""
-    w = df.write.mode(mode).format("parquet").bucketBy(n_buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
+def save_bucketed(df: DataFrame, table: str, key: str, n_buckets: int) -> None:
+    """Persist as a bucketed, bucket-sorted catalog table."""
+    (df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, key)
+     .sortBy(key).saveAsTable(table))
 
 
 def bucketed_join(spark: SparkSession, left_table: str, right_table: str,
-                  key: str, how: str = "inner") -> DataFrame:
+                  key: str) -> DataFrame:
     """Join two same-bucketed tables on their bucket key — no Exchange."""
-    return spark.table(left_table).join(spark.table(right_table), key, how)
+    return spark.table(left_table).join(spark.table(right_table), key, "inner")

@@ -41,47 +41,44 @@ _POLY_COORDS = "array<array<array<double>>>"
 _MPOLY_COORDS = "array<array<array<array<double>>>>"
 
 
-def feature_vertices(feats: DataFrame, id_col: str = "feat_id",
-                     json_col: str = "feature_json",
-                     props: tuple[str, ...] = (),
-                     scale: float = 1.0,
+def feature_vertices(feats: DataFrame, props: tuple[str, ...] = (),
                      origin: tuple[float, float] | None = None) -> DataFrame:
-    """(id_col, *props, part, ring, seq, x, y) from GeoJSON Feature rows.
+    """(feat_id, *props, part, ring, seq, x, y) from GeoJSON Feature rows.
 
-    ``feats``: (id_col, json_col string). ``props`` are pulled from
-    ``$.properties.<name>`` as strings. x/y are int64 on the ``1/scale``
-    grid (metric if ``origin`` is given, raw coordinate units otherwise).
+    ``feats``: (feat_id, feature_json string). ``props`` are pulled from
+    ``$.properties.<name>`` as strings. x/y are int64, rounded from metres
+    if ``origin`` is given, from raw coordinate units otherwise.
     """
-    gtype = F.get_json_object(F.col(json_col), "$.geometry.type")
-    craw = F.get_json_object(F.col(json_col), "$.geometry.coordinates")
+    gtype = F.get_json_object(F.col("feature_json"), "$.geometry.type")
+    craw = F.get_json_object(F.col("feature_json"), "$.geometry.coordinates")
     parts = (F.when(gtype == "MultiPolygon",
                     F.from_json(craw, _MPOLY_COORDS))
              .otherwise(F.array(F.from_json(craw, _POLY_COORDS))))
-    prop_cols = [F.get_json_object(F.col(json_col),
+    prop_cols = [F.get_json_object(F.col("feature_json"),
                                    f"$.properties.{p}").alias(p)
                  for p in props]
-    ex = (feats.select(F.col(id_col), *prop_cols,
+    ex = (feats.select(F.col("feat_id"), *prop_cols,
                        F.posexplode(parts).alias("part", "_rings"))
-          .select(id_col, *props, "part",
+          .select("feat_id", *props, "part",
                   F.posexplode("_rings").alias("ring", "_vts"))
           # GeoJSON rings are explicitly closed; the engine's vertex rows
           # are implicitly closed — drop the repeated closing vertex.
           .withColumn("_vo", F.expr(
               "CASE WHEN size(_vts) >= 2 AND _vts[0] = element_at(_vts, -1)"
               " THEN slice(_vts, 1, size(_vts) - 1) ELSE _vts END"))
-          .select(id_col, *props, "part", "ring",
+          .select("feat_id", *props, "part", "ring",
                   F.posexplode("_vo").alias("seq", "_pt")))
     if origin is not None:
         lon0, lat0 = float(origin[0]), float(origin[1])
         cx, cy = equirect_scales(lat0)
-        xe = (f"CAST(FLOOR(((_pt[0] - {lon0!r}) * {cx!r}) * {scale!r} + 0.5)"
+        xe = (f"CAST(FLOOR(((_pt[0] - {lon0!r}) * {cx!r}) * 1.0 + 0.5)"
               " AS BIGINT)")
-        ye = (f"CAST(FLOOR(((_pt[1] - {lat0!r}) * {cy!r}) * {scale!r} + 0.5)"
+        ye = (f"CAST(FLOOR(((_pt[1] - {lat0!r}) * {cy!r}) * 1.0 + 0.5)"
               " AS BIGINT)")
     else:
-        xe = f"CAST(FLOOR(_pt[0] * {scale!r} + 0.5) AS BIGINT)"
-        ye = f"CAST(FLOOR(_pt[1] * {scale!r} + 0.5) AS BIGINT)"
-    return ex.select(id_col, *props, "part", "ring",
+        xe = "CAST(FLOOR(_pt[0] * 1.0 + 0.5) AS BIGINT)"
+        ye = "CAST(FLOOR(_pt[1] * 1.0 + 0.5) AS BIGINT)"
+    return ex.select("feat_id", *props, "part", "ring",
                      F.col("seq").cast("long"),
                      F.expr(xe).alias("x"), F.expr(ye).alias("y"))
 

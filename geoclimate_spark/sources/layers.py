@@ -141,7 +141,7 @@ def _lcg(s: int) -> int:
 RECT_LAYER_NAMES = ("builtup", "water", "veg")
 
 
-def synth_rect_layer_rows(n_per_layer: int = 25) -> list[tuple[str, int, int, int, int]]:
+def synth_rect_layer_rows() -> list[tuple[str, int, int, int, int]]:
     """Deterministic synthetic land-cover rects (LCG-placed, integer µ°) —
     the abstract-model layers (building/water/vegetation,
     `osm/InputDataFormatting.groovy:63-67,530,605`) reduced to rect
@@ -149,7 +149,7 @@ def synth_rect_layer_rows(n_per_layer: int = 25) -> list[tuple[str, int, int, in
     rows = []
     s = 123_457
     for li, layer in enumerate(RECT_LAYER_NAMES):
-        for k in range(n_per_layer):
+        for k in range(25):
             s = _lcg(s)
             x0 = s % 340_000_000 - 175_000_000
             s = _lcg(s)
@@ -197,8 +197,7 @@ def rect_layers_values_sql() -> str:
 POLY_LAYER_NAMES = ("canopy", "urban", "flood")
 
 
-def _synth_convex(n: int, seed: int, rmin: int, rmax: int,
-                  cbound: int = 400_000) -> list[np.ndarray]:
+def _synth_convex(n: int, seed: int, rmin: int, rmax: int) -> list[np.ndarray]:
     """n deterministic strictly-convex CCW integer polygons.
 
     Cloud of 10 LCG points → float hull → round to int → hull again (exact
@@ -208,8 +207,8 @@ def _synth_convex(n: int, seed: int, rmin: int, rmax: int,
     s = seed
     out = []
     while len(out) < n:
-        s = _lcg(s); cx = s % (2 * cbound + 1) - cbound
-        s = _lcg(s); cy = s % (2 * cbound + 1) - cbound
+        s = _lcg(s); cx = s % 800_001 - 400_000
+        s = _lcg(s); cy = s % 800_001 - 400_000
         s = _lcg(s); r = rmin + s % (rmax - rmin)
         pts = []
         for _ in range(10):
@@ -224,21 +223,21 @@ def _synth_convex(n: int, seed: int, rmin: int, rmax: int,
     return out
 
 
-def synth_poly_zone_rows(n: int = 40) -> list[tuple[int, int, int, int]]:
+def synth_poly_zone_rows() -> list[tuple[int, int, int, int]]:
     """(zone_id, seq, x, y) CCW vertex rows of convex polygon zones."""
     rows = []
-    for zid, hull in enumerate(_synth_convex(n, seed=931, rmin=30_000,
+    for zid, hull in enumerate(_synth_convex(40, seed=931, rmin=30_000,
                                              rmax=100_000)):
         rows += [(zid, k, int(x), int(y)) for k, (x, y) in enumerate(hull)]
     return rows
 
 
-def synth_poly_feature_rows(per_layer: int = 40) -> list[tuple[int, str, int, int, int]]:
+def synth_poly_feature_rows() -> list[tuple[int, str, int, int, int]]:
     """(feat_id, layer, seq, x, y) CCW vertex rows of convex layer features."""
     rows = []
     fid = 0
     for li, layer in enumerate(POLY_LAYER_NAMES):
-        for hull in _synth_convex(per_layer, seed=1_117 + 7 * li,
+        for hull in _synth_convex(40, seed=1_117 + 7 * li,
                                   rmin=10_000, rmax=60_000):
             rows += [(fid, layer, k, int(x), int(y))
                      for k, (x, y) in enumerate(hull)]
@@ -276,7 +275,7 @@ def poly_feature_vertices_values_sql() -> str:
 
 
 # --------------------------------------------- concave (non-convex) zones
-def _synth_nc_zone_data(n: int = 30) -> tuple[list, list]:
+def _synth_nc_zone_data() -> tuple[list, list]:
     """Concave simple-polygon zones WITH a known convex decomposition.
 
     Each zone = a convex base hull plus a convex "wing" glued onto the
@@ -298,7 +297,7 @@ def _synth_nc_zone_data(n: int = 30) -> tuple[list, list]:
     s = 777_001
     ring_rows, part_rows = [], []
     zid = 0
-    while zid < n:
+    while zid < 30:
         s = _lcg(s); cx = s % 600_001 - 300_000
         s = _lcg(s); cy = s % 600_001 - 300_000
         s = _lcg(s); r = 30_000 + s % 60_000
@@ -359,13 +358,12 @@ def nc_zone_parts_values_sql() -> str:
             + "\n) AS t(zone_id, part_id, seq, x, y)")
 
 
-def voronoi_zones(n: int = 40, seed: int = 42,
-                  bbox=(-20.0, 30.0, 30.0, 60.0)) -> list[Zone]:
+def voronoi_zones(n: int = 40, seed: int = 42) -> list[Zone]:
     """Seeded convex zones ("Europe patch"): convex hulls of jittered point
     clouds around LCG-placed seeds. May overlap → exercises the min-id
     tie-break; leaves gaps → exercises unmatched pages."""
     rng = np.random.default_rng(seed)
-    lon0, lat0, lon1, lat1 = bbox
+    lon0, lat0, lon1, lat1 = -20.0, 30.0, 30.0, 60.0
     zones = []
     for i in range(n):
         cx = rng.uniform(lon0, lon1)

@@ -81,10 +81,10 @@ def encode_media(doc_id: int) -> bytes:
     return struct.pack(_HDR_FMT, MAGIC, w, h, nf) + _payload(doc_id, nf)
 
 
-def synth_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_media(docs: DataFrame) -> DataFrame:
     """Deterministic media table via mapInPandas (a *source*, so Python is
     the point here — this is where a WARC/tar reader would plug in)."""
-    ids = docs.select(F.col(id_col).alias("doc_id"))
+    ids = docs.select(F.col("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -123,21 +123,20 @@ def _frame_byte_sql(id_col: str, frame_sql: str, pos: int) -> str:
             f" {2 * pos + 1}, 2))::BIGINT)")
 
 
-def media_metadata_oracle_sql(doc_rel: str = "documents",
-                              id_col: str = "doc_id") -> str:
+def media_metadata_oracle_sql() -> str:
     """Pure-SQL recomputation of what decode_metadata reads from the bytes."""
-    w = f"(64 + {id_col} % 192)"
-    h = f"(64 + ({id_col} * 7) % 128)"
-    nf = f"(1 + {id_col} % 24)"
-    bright = _frame_byte_sql(id_col, "0", 0)
-    return f"""SELECT {id_col} AS doc_id,
+    w = "(64 + doc_id % 192)"
+    h = "(64 + (doc_id * 7) % 128)"
+    nf = "(1 + doc_id % 24)"
+    bright = _frame_byte_sql("doc_id", "0", 0)
+    return f"""SELECT doc_id AS doc_id,
        CAST({w} AS BIGINT) AS width,
        CAST({h} AS BIGINT) AS height,
        CAST({nf} AS BIGINT) AS n_frames,
        CAST(14 + 16 * {nf} AS BIGINT) AS n_bytes,
        CAST((1000 * {w} - (1000 * {w}) % {h}) / {h} AS BIGINT) AS aspect_millis,
        {bright} AS brightness
-FROM {doc_rel}"""
+FROM documents"""
 
 
 # --------------------------------------------------------------- codecs
@@ -263,9 +262,7 @@ def sample_stats(media: DataFrame) -> DataFrame:
     return media.mapInPandas(run, SAMPLE_STATS_SCHEMA)
 
 
-def media_resize_oracle_sql(width: int, height: int,
-                            doc_rel: str = "documents",
-                            id_col: str = "doc_id") -> str:
+def media_resize_oracle_sql(width: int, height: int) -> str:
     """doc_id-arithmetic oracle for resize_stats(image_resize(synth)):
     nearest-neighbor from the 4×4 frame means src byte (r, c) is hit
     exactly count(r)·count(c) times; the frame-0 pixel sum is the weighted
@@ -278,31 +275,30 @@ def media_resize_oracle_sql(width: int, height: int,
     for j in range(width):
         ccount[(j * side) // width] += 1
     terms = " + ".join(
-        f"{rcount[r] * ccount[c]} * {_frame_byte_sql(id_col, '0', r * side + c)}"
+        f"{rcount[r] * ccount[c]} * {_frame_byte_sql('doc_id', '0', r * side + c)}"
         for r in range(side) for c in range(side)
         if rcount[r] * ccount[c] > 0)
-    nf = f"(1 + {id_col} % 24)"
-    return f"""SELECT {id_col} AS doc_id,
+    nf = "(1 + doc_id % 24)"
+    return f"""SELECT doc_id AS doc_id,
        CAST({width} AS BIGINT) AS width,
        CAST({height} AS BIGINT) AS height,
        CAST({nf} AS BIGINT) AS n_frames,
        CAST(14 + {width * height} * {nf} AS BIGINT) AS n_bytes,
        CAST({terms} AS BIGINT) AS px_sum_f0
-FROM {doc_rel}"""
+FROM documents"""
 
 
-def media_frame_sample_oracle_sql(every_n: int, doc_rel: str = "documents",
-                                  id_col: str = "doc_id") -> str:
-    nf = f"(1 + {id_col} % 24)"
+def media_frame_sample_oracle_sql(every_n: int) -> str:
+    nf = "(1 + doc_id % 24)"
     kept = (f"CAST(1 + (({nf} - 1) - ({nf} - 1) % {every_n})"
             f" / {every_n} AS BIGINT)")
     last = f"CAST({every_n} * ({kept} - 1) AS BIGINT)"
-    return f"""SELECT {id_col} AS doc_id,
+    return f"""SELECT doc_id AS doc_id,
        CAST({kept} AS BIGINT) AS n_frames,
        CAST(14 + 16 * {kept} AS BIGINT) AS n_bytes,
-       {_frame_byte_sql(id_col, "0", 0)} AS first_brightness,
-       {_frame_byte_sql(id_col, last, 0)} AS last_brightness
-FROM {doc_rel}"""
+       {_frame_byte_sql('doc_id', "0", 0)} AS first_brightness,
+       {_frame_byte_sql('doc_id', last, 0)} AS last_brightness
+FROM documents"""
 
 
 # ----------------------------------------------------- perceptual-hash dedup
@@ -314,14 +310,16 @@ AHASH_BITS = FRAME_SIDE * FRAME_SIDE  # 16
 AHASH_BAND_BITS = 4                   # 4 bands of 4 bits
 
 
-def synth_media_variants(docs: DataFrame, group: int = 4,
-                         id_col: str = "doc_id") -> DataFrame:
+AHASH_GROUP = 4
+
+
+def synth_media_variants(docs: DataFrame) -> DataFrame:
     """Media fixture with PLANTED near-duplicate images: payload derives
-    from the VARIANT GROUP id (doc_id div group) and only pixel 0 is
-    perturbed by (doc_id % group) — the re-encoded/resized-copy situation
+    from the VARIANT GROUP id (doc_id div AHASH_GROUP) and only pixel 0 is
+    perturbed by (doc_id % AHASH_GROUP) — the re-encoded/resized-copy situation
     image dedup exists for. Headers still derive from the real doc_id, so
     metadata varies within a group (as it does for real re-encodes)."""
-    ids = docs.select(F.col(id_col).alias("doc_id"))
+    ids = docs.select(F.col("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -329,9 +327,9 @@ def synth_media_variants(docs: DataFrame, group: int = 4,
             for i in b["doc_id"]:
                 i = int(i)
                 w, h, nf = media_fields(i)
-                base = i // group
+                base = i // AHASH_GROUP
                 pay = bytearray(_payload(base, nf))
-                pay[0] = (pay[0] + i % group) % 256
+                pay[0] = (pay[0] + i % AHASH_GROUP) % 256
                 out.append(struct.pack(_HDR_FMT, MAGIC, w, h, nf)
                            + bytes(pay))
             yield pd.DataFrame({"doc_id": b["doc_id"], "media": out,
@@ -369,11 +367,14 @@ def image_ahash(media: DataFrame) -> DataFrame:
     return media.mapInPandas(run, AHASH_SCHEMA)
 
 
-def ahash_dup_pairs(hashes: DataFrame, max_hamming: int = 3) -> DataFrame:
+AHASH_MAX_HAMMING = 3
+
+
+def ahash_dup_pairs(hashes: DataFrame) -> DataFrame:
     """(id_a, id_b, hamming): banded-hamming self-join over aHashes — the
     SAME filter-and-refine shape as the SimHash text dedup (band equality
     prunes the pair space; bit_count(xor) verifies). With 4 bands and
-    max_hamming = 3, at most 3 bands are touched by differing bits, so one
+    AHASH_MAX_HAMMING = 3, at most 3 bands are touched by differing bits, so one
     clean band always remains: the banding loses NO pair (exact recall by
     pigeonhole), purely JVM-side.
 
@@ -395,7 +396,7 @@ def ahash_dup_pairs(hashes: DataFrame, max_hamming: int = 3) -> DataFrame:
                     F.col("b.doc_id").alias("id_b"),
                     F.bit_count(F.col("a.ahash").bitwiseXOR(F.col("b.ahash")))
                     .cast("long").alias("hamming"))
-            .where(F.col("hamming") <= max_hamming)
+            .where(F.col("hamming") <= AHASH_MAX_HAMMING)
             .distinct())
 
 
@@ -408,19 +409,19 @@ def _variant_pixel_sql(id_col: str, pos: int, group: int) -> str:
     return raw
 
 
-def ahash_cte_sql(group: int = 4, doc_rel: str = "documents",
-                  id_col: str = "doc_id") -> str:
+def ahash_cte_sql(doc_rel: str = "documents") -> str:
     """CTE list producing ah(doc_id, ahash) — arithmetic recomputation of
     the variant pixels (the oracle never parses bytes; byte-parse parity is
     exactly what the engine-vs-oracle gate proves)."""
-    px = [_variant_pixel_sql(id_col, p, group) for p in range(AHASH_BITS)]
+    px = [_variant_pixel_sql("doc_id", p, AHASH_GROUP)
+          for p in range(AHASH_BITS)]
     cols = ",\n         ".join(f"{e} AS p{p}" for p, e in enumerate(px))
     tot = " + ".join(f"p{p}" for p in range(AHASH_BITS))
     bits = " + ".join(
         f"(CASE WHEN p{p} > mean THEN CAST({1 << p} AS BIGINT) ELSE 0 END)"
         for p in range(AHASH_BITS))
     return f"""px AS (
-  SELECT {id_col} AS doc_id,
+  SELECT doc_id AS doc_id,
          {cols}
   FROM {doc_rel}
 ), withmean AS (
@@ -430,19 +431,17 @@ def ahash_cte_sql(group: int = 4, doc_rel: str = "documents",
 )"""
 
 
-def ahash_dup_pairs_sql(group: int = 4, max_hamming: int = 3,
-                        doc_rel: str = "documents",
-                        id_col: str = "doc_id") -> str:
+def ahash_dup_pairs_sql(doc_rel: str = "documents") -> str:
     nb = AHASH_BITS // AHASH_BAND_BITS
     mask = (1 << AHASH_BAND_BITS) - 1
     bl = " UNION ALL ".join(
         f"SELECT doc_id, ahash, {b} AS band,"
         f" (ahash >> {b * AHASH_BAND_BITS}) & {mask} AS bk FROM ah"
         for b in range(nb))
-    return f"""WITH {ahash_cte_sql(group, doc_rel, id_col)},
+    return f"""WITH {ahash_cte_sql(doc_rel=doc_rel)},
 bl AS ({bl}),
 pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS hamming
   FROM bl a JOIN bl b ON a.band = b.band AND a.bk = b.bk
        AND a.doc_id < b.doc_id)
-SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= {max_hamming}"""
+SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= {AHASH_MAX_HAMMING}"""

@@ -73,13 +73,13 @@ def derivation_sql(id_col: str = "doc_id") -> dict[str, str]:
     }
 
 
-def pages_oracle_sql(doc_rel: str = "documents", id_col: str = "doc_id") -> str:
+def pages_oracle_sql() -> str:
     """DuckDB-runnable derivation of the pages view (no html — the oracle uses
     the stored ``text`` directly; the Spark side must reproduce it from html)."""
-    d = derivation_sql(id_col)
+    d = derivation_sql()
     cols = ",\n       ".join(f"{sql} AS {name}" for name, sql in d.items())
-    return (f"SELECT {id_col} AS page_id, lang, text,\n       {cols}\n"
-            f"FROM {doc_rel}")
+    return (f"SELECT doc_id AS page_id, lang, text,\n       {cols}\n"
+            "FROM documents")
 
 
 _HTML_HEAD = '<html><head><meta charset="utf-8">'
@@ -109,7 +109,7 @@ def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream engine stages must consume only ``html``).
     """
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    d = derivation_sql("doc_id")
+    d = derivation_sql()
     df = docs.select(
         F.col("doc_id").alias("page_id"), "lang", "text",
         *[F.expr(sql).alias(name) for name, sql in d.items()],

@@ -63,12 +63,11 @@ def _payload(text: str) -> bytes:
     return f"<html><main>{text}</main></html>".encode()
 
 
-def synth_warc_segments(docs: DataFrame, recs_per_seg: int = RECS_PER_SEG,
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def synth_warc_segments(docs: DataFrame,
+                        recs_per_seg: int = RECS_PER_SEG) -> DataFrame:
     """(seg, warc, n_records): one blob per ``recs_per_seg`` docs."""
-    base = (docs.select(F.col(id_col).alias("doc_id"),
-                        F.col(text_col).alias("text"))
+    base = (docs.select(F.col("doc_id"),
+                        F.col("text"))
             .withColumn("seg", F.expr(f"doc_id div {recs_per_seg}")))
 
     def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -114,17 +113,16 @@ def parse_warc_segments(segs: DataFrame) -> DataFrame:
 
 
 def warc_roundtrip_sql(recs_per_seg: int = RECS_PER_SEG,
-                       rel: str = "documents", id_sql: str = "doc_id",
-                       text_sql: str = "text") -> str:
+                       rel: str = "documents") -> str:
     """Arithmetic oracle: every parsed field recomputed from doc_id/text —
     the oracle never builds or parses a blob."""
     return f"""
-SELECT {id_sql} // {recs_per_seg} AS seg,
-       CAST(ROW_NUMBER() OVER (PARTITION BY {id_sql} // {recs_per_seg}
-                               ORDER BY {id_sql}) - 1 AS BIGINT) AS rec_idx,
-       'https://seg' || CAST({id_sql} // {recs_per_seg} AS VARCHAR)
-         || '.example.com/p/' || CAST({id_sql} AS VARCHAR) AS url,
-       CAST(octet_length(encode('<html><main>' || {text_sql}
+SELECT doc_id // {recs_per_seg} AS seg,
+       CAST(ROW_NUMBER() OVER (PARTITION BY doc_id // {recs_per_seg}
+                               ORDER BY doc_id) - 1 AS BIGINT) AS rec_idx,
+       'https://seg' || CAST(doc_id // {recs_per_seg} AS VARCHAR)
+         || '.example.com/p/' || CAST(doc_id AS VARCHAR) AS url,
+       CAST(octet_length(encode('<html><main>' || text
             || '</main></html>')) AS BIGINT) AS content_length,
-       md5('<html><main>' || {text_sql} || '</main></html>') AS payload_md5
+       md5('<html><main>' || text || '</main></html>') AS payload_md5
 FROM {rel}"""

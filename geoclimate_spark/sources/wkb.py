@@ -148,16 +148,13 @@ def snap_coords(coords: np.ndarray, scale: float) -> np.ndarray:
 
 
 # ------------------------------------------------------------ spark operator
-def decode_wkb_vertices(geoms: DataFrame, id_col: str = "feat_id",
-                        wkb_col: str = "geom_wkb",
-                        keep: tuple[str, ...] = (),
-                        scale: float = 1.0,
+def decode_wkb_vertices(geoms: DataFrame, keep: tuple[str, ...] = (),
                         origin: tuple[float, float] | None = None) -> DataFrame:
     """WKB layer → snapped integer vertex rows.
 
-    ``geoms``: (id_col, wkb_col binary, *keep). Returns
-    (id_col, *keep, part, ring, seq, x, y) with x/y int64 on the
-    ``1/scale`` grid — ready for the relational geometry operators. One
+    ``geoms``: (feat_id, geom_wkb binary, *keep). Returns
+    (feat_id, *keep, part, ring, seq, x, y) with x/y rounded to int64 —
+    ready for the relational geometry operators. One
     Arrow pass, no shuffle; decode cost rides the scan.
 
     ``origin=(lon0, lat0)``: the layer's coordinates are EPSG:4326 lon/lat
@@ -172,7 +169,7 @@ def decode_wkb_vertices(geoms: DataFrame, id_col: str = "feat_id",
         cx, cy = equirect_scales(lat0)
         _shift = np.array([lon0, lat0], np.float64)
         _mul = np.array([cx, cy], np.float64)
-    schema = (f"{id_col} long, "
+    schema = ("feat_id long, "
               + "".join(f"{k} string, " for k in keep)
               + "part long, ring long, seq long, x long, y long")
 
@@ -180,12 +177,12 @@ def decode_wkb_vertices(geoms: DataFrame, id_col: str = "feat_id",
         for pdf in batches:
             ids, keeps, parts, rings, seqs, xs, ys = ([], [], [], [], [], [], [])
             for row in pdf.itertuples(index=False):
-                gid = getattr(row, id_col)
+                gid = row.feat_id
                 kv = tuple(getattr(row, k) for k in keep)
-                for part, ring, coords in parse_wkb(getattr(row, wkb_col)):
+                for part, ring, coords in parse_wkb(row.geom_wkb):
                     if origin is not None:
                         coords = (coords - _shift) * _mul
-                    snapped = snap_coords(coords, scale)
+                    snapped = snap_coords(coords, 1.0)
                     n = len(snapped)
                     ids.append(np.full(n, gid, np.int64))
                     keeps.append(kv)
@@ -198,7 +195,7 @@ def decode_wkb_vertices(geoms: DataFrame, id_col: str = "feat_id",
                 yield pd.DataFrame({c.split()[0]: [] for c in schema.split(", ")})
                 continue
             counts = [len(a) for a in ids]
-            out = {id_col: np.concatenate(ids)}
+            out = {"feat_id": np.concatenate(ids)}
             for ki, k in enumerate(keep):
                 out[k] = np.repeat([kv[ki] for kv in keeps], counts)
             out.update(part=np.concatenate(parts), ring=np.concatenate(rings),
@@ -210,7 +207,7 @@ def decode_wkb_vertices(geoms: DataFrame, id_col: str = "feat_id",
 
 
 # ------------------------------------------------------------- ring areas
-def ring_net_areas(vtx: DataFrame, id_col: str = "feat_id") -> DataFrame:
+def ring_net_areas(vtx: DataFrame) -> DataFrame:
     """Net polygon area from decoded (id, part, ring, seq, x, y) vertex
     rows: Σ_parts (|outer ring| − Σ |holes|), twice-area in exact int64
     (integer shoelace — order-independent, no double Σ anywhere). The
@@ -221,46 +218,46 @@ def ring_net_areas(vtx: DataFrame, id_col: str = "feat_id") -> DataFrame:
     grid units²."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(id_col, "part", "ring").orderBy("seq")
+    w = Window.partitionBy("feat_id", "part", "ring").orderBy("seq")
     wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     e = vtx.select(
-        id_col, "part", "ring",
+        "feat_id", "part", "ring",
         F.col("x").alias("ex"), F.col("y").alias("ey"),
         F.coalesce(F.lead("x").over(w), F.first("x").over(wf)).alias("exn"),
         F.coalesce(F.lead("y").over(w), F.first("y").over(wf)).alias("eyn"))
-    per_ring = (e.groupBy(id_col, "part", "ring")
+    per_ring = (e.groupBy("feat_id", "part", "ring")
                 .agg(F.sum(F.col("ex") * F.col("eyn")
                            - F.col("exn") * F.col("ey")).alias("a2")))
     signed = F.when(F.col("ring") == 0, F.abs(F.col("a2"))) \
         .otherwise(-F.abs(F.col("a2")))
-    return (per_ring.groupBy(id_col)
+    return (per_ring.groupBy("feat_id")
             .agg(F.countDistinct("part").cast("long").alias("n_parts"),
                  F.sum(F.when(F.col("ring") > 0, 1).otherwise(0))
                  .cast("long").alias("n_holes"),
                  F.sum(signed).cast("long").alias("net_area2")))
 
 
-def ring_net_areas_sql(vtx_sql: str, id_col: str = "feat_id") -> str:
+def ring_net_areas_sql(vtx_sql: str) -> str:
     return f"""WITH vtx AS ({vtx_sql}),
-e AS (SELECT {id_col}, part, ring, x AS ex, y AS ey,
-       COALESCE(LEAD(x) OVER (PARTITION BY {id_col}, part, ring ORDER BY seq),
-         FIRST_VALUE(x) OVER (PARTITION BY {id_col}, part, ring ORDER BY seq
+e AS (SELECT feat_id, part, ring, x AS ex, y AS ey,
+       COALESCE(LEAD(x) OVER (PARTITION BY feat_id, part, ring ORDER BY seq),
+         FIRST_VALUE(x) OVER (PARTITION BY feat_id, part, ring ORDER BY seq
            ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)) AS exn,
-       COALESCE(LEAD(y) OVER (PARTITION BY {id_col}, part, ring ORDER BY seq),
-         FIRST_VALUE(y) OVER (PARTITION BY {id_col}, part, ring ORDER BY seq
+       COALESCE(LEAD(y) OVER (PARTITION BY feat_id, part, ring ORDER BY seq),
+         FIRST_VALUE(y) OVER (PARTITION BY feat_id, part, ring ORDER BY seq
            ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)) AS eyn
   FROM vtx),
-per_ring AS (SELECT {id_col}, part, ring, SUM(ex * eyn - exn * ey) AS a2
+per_ring AS (SELECT feat_id, part, ring, SUM(ex * eyn - exn * ey) AS a2
   FROM e GROUP BY 1, 2, 3)
-SELECT {id_col}, CAST(COUNT(DISTINCT part) AS BIGINT) AS n_parts,
+SELECT feat_id, CAST(COUNT(DISTINCT part) AS BIGINT) AS n_parts,
        CAST(SUM(CASE WHEN ring > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_holes,
        CAST(SUM(CASE WHEN ring = 0 THEN ABS(a2) ELSE -ABS(a2) END) AS BIGINT)
          AS net_area2
-FROM per_ring GROUP BY {id_col}"""
+FROM per_ring GROUP BY feat_id"""
 
 
 # ------------------------------------------------------------- perimeters
-def ring_perimeters(vtx: DataFrame, id_col: str = "feat_id") -> DataFrame:
+def ring_perimeters(vtx: DataFrame) -> DataFrame:
     """Metric perimeter from decoded vertex rows — the facade-length
     consumer of the CRS front door (`GenericIndicators.groovy:241`
     ST_PERIMETER analogue, holes included: interior facades count). Each
@@ -270,49 +267,49 @@ def ring_perimeters(vtx: DataFrame, id_col: str = "feat_id") -> DataFrame:
     (id, perim_mm)."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(id_col, "part", "ring").orderBy("seq")
+    w = Window.partitionBy("feat_id", "part", "ring").orderBy("seq")
     wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     e = vtx.select(
-        id_col, "part", "ring",
+        "feat_id", "part", "ring",
         F.col("x").alias("ex"), F.col("y").alias("ey"),
         F.coalesce(F.lead("x").over(w), F.first("x").over(wf)).alias("exn"),
         F.coalesce(F.lead("y").over(w), F.first("y").over(wf)).alias("eyn"))
     elen = F.expr(
         "CAST(FLOOR(SQRT(CAST((ex - exn) * (ex - exn)"
         " + (ey - eyn) * (ey - eyn) AS DOUBLE)) * 1000.0 + 0.5) AS BIGINT)")
-    return (e.groupBy(id_col)
+    return (e.groupBy("feat_id")
             .agg(F.sum(elen).cast("long").alias("perim_mm")))
 
 
-def ring_perimeters_sql(vtx_sql: str, id_col: str = "feat_id") -> str:
+def ring_perimeters_sql(vtx_sql: str) -> str:
     return f"""WITH vtx AS ({vtx_sql}),
-e AS (SELECT {id_col}, part, ring, x AS ex, y AS ey,
-       COALESCE(LEAD(x) OVER (PARTITION BY {id_col}, part, ring ORDER BY seq),
-         FIRST_VALUE(x) OVER (PARTITION BY {id_col}, part, ring ORDER BY seq
+e AS (SELECT feat_id, part, ring, x AS ex, y AS ey,
+       COALESCE(LEAD(x) OVER (PARTITION BY feat_id, part, ring ORDER BY seq),
+         FIRST_VALUE(x) OVER (PARTITION BY feat_id, part, ring ORDER BY seq
            ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)) AS exn,
-       COALESCE(LEAD(y) OVER (PARTITION BY {id_col}, part, ring ORDER BY seq),
-         FIRST_VALUE(y) OVER (PARTITION BY {id_col}, part, ring ORDER BY seq
+       COALESCE(LEAD(y) OVER (PARTITION BY feat_id, part, ring ORDER BY seq),
+         FIRST_VALUE(y) OVER (PARTITION BY feat_id, part, ring ORDER BY seq
            ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)) AS eyn
   FROM vtx)
-SELECT {id_col},
+SELECT feat_id,
        CAST(SUM(CAST(FLOOR(SQRT(CAST((ex - exn) * (ex - exn)
            + (ey - eyn) * (ey - eyn) AS DOUBLE)) * 1000.0 + 0.5) AS BIGINT))
          AS BIGINT) AS perim_mm
-FROM e GROUP BY {id_col}"""
+FROM e GROUP BY feat_id"""
 
 
 # ---------------------------------------------------------------- fixtures
 N_MULTIPOLY = 48
 
 
-def synth_multipoly_rows(n: int = N_MULTIPOLY) -> list[tuple[int, int, int, int, int, int]]:
+def synth_multipoly_rows() -> list[tuple[int, int, int, int, int, int]]:
     """(feat_id, part, ring, seq, x, y) — deterministic MULTI-part features
     with holes: each feature has 1–2 rect parts; each part carries 0–1
     strictly-interior rect hole (CW — the decoder must not care about hole
     winding). Integer coords in a ±500k patch."""
     rows = []
     s = 77_177
-    for fid in range(n):
+    for fid in range(N_MULTIPOLY):
         s = _lcg(s)
         n_parts = 1 + s % 2
         for part in range(n_parts):
@@ -334,7 +331,10 @@ def synth_multipoly_rows(n: int = N_MULTIPOLY) -> list[tuple[int, int, int, int,
     return rows
 
 
-def wkb_multipoly_layer_df(spark, srid: int = 4326) -> DataFrame:
+SRID = 4326
+
+
+def wkb_multipoly_layer_df(spark) -> DataFrame:
     """The multi-part fixture serialized as WKB MultiPolygon bytes with the
     same deterministic sub-snap jitter as the convex layer."""
     feats: dict[int, dict[int, dict[int, list]]] = {}
@@ -357,7 +357,7 @@ def wkb_multipoly_layer_df(spark, srid: int = 4326) -> DataFrame:
                     arr[i] = (x + jx, y + jy)
                 rings.append(arr)
             polys.append(rings)
-        rows.append((fid, srid, bytearray(multipolygon_wkb(polys))))
+        rows.append((fid, SRID, bytearray(multipolygon_wkb(polys))))
     return spark.createDataFrame(
         rows, "feat_id long, srid int, geom_wkb binary")
 
@@ -408,7 +408,7 @@ def multipoly_vertices_values_sql() -> str:
             + "\n) AS t(feat_id, part, ring, seq, x, y)")
 
 
-def wkb_feature_layer_df(spark, srid: int = 4326) -> DataFrame:
+def wkb_feature_layer_df(spark) -> DataFrame:
     """The convex poly-feature fixture re-serialized as a REAL WKB layer:
     (feat_id, layer, srid, geom_wkb). Coordinates carry a deterministic
     sub-snap jitter in (−0.2, 0.2) around the exact integer vertices, so
@@ -430,6 +430,6 @@ def wkb_feature_layer_df(spark, srid: int = 4326) -> DataFrame:
             s = _lcg(s)
             jy = (s % 401 - 200) / 1000.0
             ring[i] = (x + jx, y + jy)
-        rows.append((fid, layer, srid, bytearray(polygon_wkb([ring]))))
+        rows.append((fid, layer, SRID, bytearray(polygon_wkb([ring]))))
     return spark.createDataFrame(
         rows, "feat_id long, layer string, srid int, geom_wkb binary")

@@ -112,13 +112,12 @@ def dedup_metrics(store_dir: str) -> list[dict]:
 
 # ------------------------------------------------------------------- exact
 def exact_dedup_batch(batch: DataFrame, batch_id: int, store_dir: str,
-                      out_dir: str, id_col: str = "doc_id",
-                      text_col: str = "text") -> None:
+                      out_dir: str) -> None:
     """foreachBatch body, exact mode (exposed for tests)."""
     spark = batch.sparkSession
     batch = batch.persist()
-    fp = F.md5(normalize_col(F.col(text_col)))
-    m = batch.select(F.col(id_col).alias("id"), fp.alias("fp"),
+    fp = F.md5(normalize_col(F.col("text")))
+    m = batch.select(F.col("doc_id").alias("id"), fp.alias("fp"),
                      _fp_bucket(fp).alias("bucket"))
     # ONE tiny action (≤ N_FP_BUCKETS rows) yields both the row count AND
     # the bucket set that buys partition pruning of the whole store history
@@ -143,7 +142,7 @@ def exact_dedup_batch(batch: DataFrame, batch_id: int, store_dir: str,
      .repartition(N_FP_BUCKETS, "bucket")
      .write.partitionBy("bucket")
      .mode("overwrite").parquet(f"{store_dir}/batch={batch_id}"))
-    (batch.join(novel.select(F.col("id").alias(id_col)), id_col)
+    (batch.join(novel.select(F.col("id").alias("doc_id")), "doc_id")
      .write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}"))
     _write_metrics(store_dir, batch_id, {
         "batch_id": batch_id, "mode": "exact", "rows_in": n_in,
@@ -178,13 +177,12 @@ def _est_match(a_pfx: str, b_pfx: str):
 
 
 def minhash_dedup_batch(batch: DataFrame, batch_id: int, store_dir: str,
-                        out_dir: str, id_col: str = "doc_id",
-                        text_col: str = "text") -> None:
+                        out_dir: str) -> None:
     """foreachBatch body, minhash mode: LSH candidates + signature-estimate
     Jaccard vs lower-id batch docs and vs all stored signatures."""
     spark = batch.sparkSession
     batch = batch.persist()
-    sig = _signatures(batch, id_col, text_col).persist()
+    sig = _signatures(batch, "doc_id", "text").persist()
     n_in = sig.count()
     bl = _band_long(sig)
     # within-batch: b dropped when any lower-id a estimated-matches it
@@ -236,7 +234,7 @@ def minhash_dedup_batch(batch: DataFrame, batch_id: int, store_dir: str,
      .repartition(N_FP_BUCKETS, "bucket")  # one file per bucket dir (above)
      .write.partitionBy("bucket").mode("overwrite")
      .parquet(f"{band_dir}/batch={batch_id}"))
-    (batch.join(novel.select(F.col("id").alias(id_col)), id_col)
+    (batch.join(novel.select(F.col("id").alias("doc_id")), "doc_id")
      .write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}"))
     _write_metrics(store_dir, batch_id, {
         "batch_id": batch_id, "mode": "minhash", "rows_in": n_in,
@@ -247,18 +245,16 @@ def minhash_dedup_batch(batch: DataFrame, batch_id: int, store_dir: str,
 
 
 # --------------------------------------------------------------- streaming
-def run_incremental_dedup(spark: SparkSession, input_dir: str,
-                          store_dir: str, out_dir: str, checkpoint_dir: str,
-                          schema, mode: str = "exact",
-                          id_col: str = "doc_id",
-                          text_col: str = "text") -> None:
+def run_incremental_dedup(spark: SparkSession, input_dir: str, store_dir: str,
+                          out_dir: str, checkpoint_dir: str, schema,
+                          mode: str = "exact") -> None:
     """Drain newly-landed document files through the incremental dedup,
     exactly once (checkpointed file tracking + idempotent batch partitions).
     ``schema`` fixes the stream source schema (streaming requirement)."""
     body = exact_dedup_batch if mode == "exact" else minhash_dedup_batch
 
     def on_batch(df: DataFrame, bid: int) -> None:
-        body(df, bid, store_dir, out_dir, id_col=id_col, text_col=text_col)
+        body(df, bid, store_dir, out_dir)
 
     q = (spark.readStream.schema(schema).parquet(input_dir)
          .writeStream.foreachBatch(on_batch)

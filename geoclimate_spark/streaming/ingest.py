@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.extract import with_extraction
-from ..operators.tile import TILE_RES, tile_col
+from ..operators.tile import tile_col
 
 PAGES_SCHEMA = T.StructType([
     T.StructField("page_id", T.LongType()),
@@ -46,20 +46,20 @@ def stream_pages(spark: SparkSession, input_dir: str) -> DataFrame:
             .parquet(input_dir))
 
 
-def enriched_stream(pages: DataFrame, tile_res: int = TILE_RES) -> DataFrame:
+def enriched_stream(pages: DataFrame) -> DataFrame:
     """Stateless streaming enrichment: html → text/coords → tile id.
     Identical operators to the batch path."""
     ex = with_extraction(pages.select("page_id", "url", "warc_ts", "lang", "html"))
     return (ex.where(F.col("lon_e6").isNotNull())
-            .withColumn("tile_id", tile_col(F.col("lon_e6"), F.col("lat_e6"), tile_res))
+            .withColumn("tile_id", tile_col(F.col("lon_e6"), F.col("lat_e6")))
             .drop("html"))
 
 
 def run_ingest(spark: SparkSession, input_dir: str, out_dir: str,
-               checkpoint_dir: str, tile_res: int = TILE_RES):
+               checkpoint_dir: str):
     """Drain all newly-landed page files into the enriched sink, exactly
     once (checkpointed file tracking). Returns after completion."""
-    q = (enriched_stream(stream_pages(spark, input_dir), tile_res)
+    q = (enriched_stream(stream_pages(spark, input_dir))
          .writeStream.format("parquet")
          .option("path", out_dir)
          .option("checkpointLocation", checkpoint_dir)
@@ -71,13 +71,11 @@ def run_ingest(spark: SparkSession, input_dir: str, out_dir: str,
 
 
 def windowed_tile_counts(pages: DataFrame, window: str = "1 hour",
-                         watermark: str = "2 hours",
-                         tile_res: int = TILE_RES) -> DataFrame:
+                         watermark: str = "2 hours") -> DataFrame:
     """Stateful event-time aggregation: pages per (time window, tile) with
     late-data tolerance = watermark. Works on a stream or a batch frame
     (same code path — Spark resolves window() both ways)."""
-    e = enriched_stream(pages, tile_res) if pages.isStreaming else (
-        enriched_stream(pages, tile_res))
+    e = enriched_stream(pages)
     if pages.isStreaming:
         e = e.withWatermark("warc_ts", watermark)
     return (e.groupBy(F.window("warc_ts", window).alias("w"), "tile_id")

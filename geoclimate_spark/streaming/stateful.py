@@ -60,16 +60,14 @@ def _fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
                                      "start_us", "end_us", "duration_us"])
 
 
-def sessionize_stream(events: DataFrame, gap_sec: int,
-                      user: str = "user_id", ts: str = "ts",
-                      id_col: str = "event_id") -> DataFrame:
+def sessionize_stream(events: DataFrame, gap_sec: int) -> DataFrame:
     """Streaming gap-threshold sessions: emits each session when a gap
     closes it; the open tail session per user lives in the group state."""
     from pyspark.sql import functions as F
     e = events.select(
-        F.col(user).cast("long").alias("user_id"),
-        F.col(id_col).alias("event_id"),
-        F.unix_micros(F.col(ts).cast("timestamp")).alias("_us"),
+        F.col("user_id").cast("long").alias("user_id"),
+        F.col("event_id"),
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("_us"),
         F.lit(gap_sec * 1_000_000).alias("_gap_us"))
     return e.groupBy("user_id").applyInPandasWithState(
         _fold, OUT_SCHEMA, STATE_SCHEMA, "append",

@@ -48,19 +48,6 @@ def test_clip_convex_identity_and_half():
     assert len(none) == 0 or geometry.poly_area(none) == pytest.approx(0.0)
 
 
-def test_clip_area_rect_concave_subject():
-    # L-polygon vs rect covering its notch quadrant: only the notch is outside
-    a = geometry.clip_area_rect(ELL, 0, 0, 2, 2)
-    assert a == pytest.approx(3.0)
-    # clip to the top-right quadrant [1,2]x[1,2] → empty (that's the notch)
-    a = geometry.clip_area_rect(ELL, 1.0, 1.0, 2.0, 2.0)
-    assert a == pytest.approx(0.0)
-    # 60/40 overlap case from FIXTURES.md: rect polygon spanning two tiles
-    poly = geometry.rect_poly(0.0, 0.0, 1.0, 1.0)
-    assert geometry.clip_area_rect(poly, -1, -1, 0.6, 2) == pytest.approx(0.6)
-    assert geometry.clip_area_rect(poly, 0.6, -1, 2, 2) == pytest.approx(0.4)
-
-
 def test_rect_intersects_polygon_all_cases():
     f = geometry.rect_intersects_polygon
     assert f(0.25, 0.25, 0.75, 0.75, UNIT_SQ)     # rect inside poly
@@ -79,7 +66,3 @@ def test_convex_hull():
     assert geometry.poly_area(hull) == pytest.approx(1.0)
     assert len(hull) == 4
 
-
-def test_point_dist2():
-    d = geometry.point_dist2([0.0], [0.0], [3.0], [4.0])
-    assert d[0] == pytest.approx(25.0)

@@ -51,7 +51,7 @@ def test_authority_follows_indegree_on_star(spark):
     import geoclimate_spark.operators.linkrank as lr
     orig = lr.synth_host_edges
     try:
-        lr.synth_host_edges = lambda docs, host_col="source": edges
+        lr.synth_host_edges = lambda docs: edges
         docs = hosts.select(
             F.monotonically_increasing_id().alias("doc_id"),
             F.lit("w").alias("text"), F.lit("en").alias("lang"),

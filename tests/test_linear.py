@@ -33,8 +33,8 @@ def test_split_membership_is_stable_under_growth(spark, docs):
     must not move any document between splits (row-number splits fail
     this)."""
     half = docs.where("doc_id % 2 = 0")
-    full = curation.dataset_split(docs, stratum_col="lang").collect()
-    part = curation.dataset_split(half, stratum_col="lang").collect()
+    full = curation.dataset_split(docs).collect()
+    part = curation.dataset_split(half).collect()
     # every (split, stratum) group of the half-corpus is a subset count of
     # the full corpus group
     fmap = {(r.split, r.stratum): r.n_docs for r in full}

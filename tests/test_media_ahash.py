@@ -26,7 +26,7 @@ def test_ahash_from_bytes_matches_oracle(spark, frames):
     con.execute("create table docs (doc_id bigint, text varchar, lang varchar)")
     con.executemany("insert into docs values (?, ?, ?)", DOCS)
     want = con.execute(
-        f"WITH {M.ahash_cte_sql(4, 'docs')} SELECT * FROM ah").fetchdf()
+        f"WITH {M.ahash_cte_sql(doc_rel='docs')} SELECT * FROM ah").fetchdf()
     got = hashes.toPandas()
     g = got.sort_values("doc_id").reset_index(drop=True)
     w = want.sort_values("doc_id").reset_index(drop=True).astype(
@@ -37,7 +37,7 @@ def test_ahash_from_bytes_matches_oracle(spark, frames):
 def test_banding_exact_vs_bruteforce(spark, frames):
     _, _, hashes = frames
     banded = {(r.id_a, r.id_b): r.hamming
-              for r in M.ahash_dup_pairs(hashes, max_hamming=3).collect()}
+              for r in M.ahash_dup_pairs(hashes).collect()}
     a, b = hashes.alias("a"), hashes.alias("b")
     brute = (a.crossJoin(b)
              .where(F.col("a.doc_id") < F.col("b.doc_id"))
@@ -54,7 +54,7 @@ def test_banding_exact_vs_bruteforce(spark, frames):
 def test_planted_variants_found(frames):
     _, _, hashes = frames
     pairs = {(r.id_a, r.id_b)
-             for r in M.ahash_dup_pairs(hashes, max_hamming=3).collect()}
+             for r in M.ahash_dup_pairs(hashes).collect()}
     hits = sum(1 for g in range(N // 4)
                for x in range(4 * g, 4 * g + 4)
                for y in range(x + 1, 4 * g + 4) if (x, y) in pairs)
@@ -69,7 +69,7 @@ def test_pairs_parity(spark, frames):
     con.execute("create table docs (doc_id bigint, text varchar, lang varchar)")
     con.executemany("insert into docs values (?, ?, ?)", DOCS)
     got = M.ahash_dup_pairs(hashes).toPandas()
-    want = con.execute(M.ahash_dup_pairs_sql(4, 3, "docs")).fetchdf()
+    want = con.execute(M.ahash_dup_pairs_sql(doc_rel="docs")).fetchdf()
     cols = sorted(got.columns)
     g = got[cols].sort_values(cols).reset_index(drop=True)
     w = want[cols].sort_values(cols).reset_index(drop=True).astype(

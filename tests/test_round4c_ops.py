@@ -112,7 +112,7 @@ def test_snapshot_diff_canonicalizes_urls(spark):
 def test_snapshot_fixture_produces_all_classes(spark, duck):
     # the squared-id fixture must not degenerate (the urlnorm LCG epoch is
     # affine within a canon group and yields 100% 'updated')
-    frags = snap.crawl_history_fixture_sql("doc_id")
+    frags = snap.crawl_history_fixture_sql()
     sql = ("SELECT doc_id AS crawl_id, " + frags["raw_url"] + " AS raw_url, "
            + frags["fetch_epoch"] + " AS fetch_epoch FROM documents WHERE "
            + frags["keep_pred"])

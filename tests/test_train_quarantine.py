@@ -37,14 +37,14 @@ def test_forest_retrains_identically_from_spark_collect(spark):
         b.where(F.col("size_cls").isNotNull()),
         ["area", "perim", "elong"], "size_cls")
     engine = train.fit_forest(rows, ["area", "perim", "elong"], "size_cls",
-                              n_trees=5, max_depth=4, min_leaf=5, mode="cls")
+                              mode="cls")
     assert json.dumps(engine) == json.dumps(train.trained_cls_forest())
 
 
 def test_regression_patch_fills_only_missing(spark):
     b = train.synth_buildings_df(spark)
     trees = train.trained_reg_forest()
-    pred = classify.regress_tree_ensemble(b, ["bld_id"], trees, "pred")
+    pred = classify.regress_tree_ensemble(b, ["bld_id"], trees)
     j = b.join(pred, "bld_id")
     # rows with a height keep it bit-for-bit; missing rows get a prediction
     kept = j.where(F.col("height").isNotNull()).where(

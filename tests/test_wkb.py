@@ -63,8 +63,7 @@ def test_fixture_decode_recovers_exact_vertex_layer(spark):
     fixture, row for row — the front door provably feeds the overlay
     operators the oracle's layer."""
     vtx = W.decode_wkb_vertices(
-        W.wkb_feature_layer_df(spark), id_col="feat_id",
-        keep=("layer",), scale=1.0)
+        W.wkb_feature_layer_df(spark), keep=("layer",))
     got = sorted(
         (int(r.feat_id), r.layer, int(r.seq), int(r.x), int(r.y))
         for r in vtx.where((F.col("part") == 0) & (F.col("ring") == 0))
@@ -75,8 +74,7 @@ def test_fixture_decode_recovers_exact_vertex_layer(spark):
 
 
 def test_multipoly_fixture_decode_recovers_parts_and_holes(spark):
-    vtx = W.decode_wkb_vertices(W.wkb_multipoly_layer_df(spark),
-                                id_col="feat_id", scale=1.0)
+    vtx = W.decode_wkb_vertices(W.wkb_multipoly_layer_df(spark))
     got = sorted((int(r.feat_id), int(r.part), int(r.ring), int(r.seq),
                   int(r.x), int(r.y)) for r in vtx.collect())
     assert got == sorted(W.synth_multipoly_rows())
@@ -104,7 +102,7 @@ def test_decode_is_mapinpandas_not_python_udf(spark):
     import io
 
     vtx = W.decode_wkb_vertices(W.wkb_feature_layer_df(spark),
-                                id_col="feat_id", keep=("layer",))
+                                keep=("layer",))
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         vtx.explain(True)
@@ -121,7 +119,7 @@ def test_reproject_decode_recovers_metric_layer(spark):
     lon0, lat0 = -1.5534, 47.2173
     vtx = W.decode_wkb_vertices(
         W.lonlat_multipoly_layer_df(spark, lon0, lat0),
-        id_col="feat_id", scale=1.0, origin=(lon0, lat0))
+        origin=(lon0, lat0))
     got = {(r.feat_id, r.part, r.ring, r.seq): (r.x, r.y)
            for r in vtx.collect()}
     want = {(f, p, rg, sq): (x, y)
@@ -135,8 +133,7 @@ def test_degree_space_without_origin_is_wrong_scale(spark):
     door exists to close (metric ops on degrees)."""
     lon0, lat0 = -1.5534, 47.2173
     vtx = W.decode_wkb_vertices(
-        W.lonlat_multipoly_layer_df(spark, lon0, lat0),
-        id_col="feat_id", scale=1.0)
+        W.lonlat_multipoly_layer_df(spark, lon0, lat0))
     mx = vtx.agg({"x": "max"}).collect()[0][0]
     assert abs(mx) < 1000  # degrees snap to tiny ints, not ±500k meters
 
