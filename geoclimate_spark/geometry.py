@@ -29,6 +29,11 @@ def poly_area(poly: np.ndarray) -> float:
     return abs(float(np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1)))) / 2.0
 
 
+# Boundary tolerance of the ray-cast: a point this close to an edge's line
+# and bbox counts as on the edge.
+PIP_TOL = 1e-12
+
+
 def points_in_polygon(px: np.ndarray, py: np.ndarray, poly: np.ndarray) -> np.ndarray:
     """Even-odd ray-cast test, vectorized over points; boundary points count IN.
 
@@ -58,9 +63,9 @@ def points_in_polygon(px: np.ndarray, py: np.ndarray, poly: np.ndarray) -> np.nd
             inside ^= cond & (px < xint)
         # on-edge: collinear and within segment bbox
         cross = (bx - ax) * (py - ay) - (by - ay) * (px - ax)
-        within = (np.minimum(ax, bx) - 1e-12 <= px) & (px <= np.maximum(ax, bx) + 1e-12) & \
-                 (np.minimum(ay, by) - 1e-12 <= py) & (py <= np.maximum(ay, by) + 1e-12)
-        on_edge |= (np.abs(cross) < 1e-12) & within
+        within = (np.minimum(ax, bx) - PIP_TOL <= px) & (px <= np.maximum(ax, bx) + PIP_TOL) & \
+                 (np.minimum(ay, by) - PIP_TOL <= py) & (py <= np.maximum(ay, by) + PIP_TOL)
+        on_edge |= (np.abs(cross) < PIP_TOL) & within
     return inside | on_edge
 
 
@@ -101,40 +106,20 @@ def rect_poly(lon0: float, lat0: float, lon1: float, lat1: float) -> np.ndarray:
     return np.asarray([[lon0, lat0], [lon1, lat0], [lon1, lat1], [lon0, lat1]], dtype=np.float64)
 
 
-def _segments_cross(p1, p2, q1, q2) -> bool:
-    def orient(a, b, c):
-        v = (b[0] - a[0]) * (c[1] - a[1]) - (b[1] - a[1]) * (c[0] - a[0])
-        return 0 if abs(v) < 1e-15 else (1 if v > 0 else -1)
+def segments_meet_boxes(ax, ay, bx, by, x0, y0, x1, y1) -> np.ndarray:
+    """Does segment (a, b) meet the closed box [x0, x1] × [y0, y1]?
 
-    o1, o2 = orient(p1, p2, q1), orient(p1, p2, q2)
-    o3, o4 = orient(q1, q2, p1), orient(q1, q2, p2)
-    if o1 != o2 and o3 != o4:
-        return True
-    def on(a, b, c):
-        return (orient(a, b, c) == 0 and min(a[0], b[0]) <= c[0] <= max(a[0], b[0])
-                and min(a[1], b[1]) <= c[1] <= max(a[1], b[1]))
-    return on(p1, p2, q1) or on(p1, p2, q2) or on(q1, q2, p1) or on(q1, q2, p2)
-
-
-def rect_intersects_polygon(lon0, lat0, lon1, lat1, poly: np.ndarray) -> bool:
-    """Exact rect×polygon intersection test (for tight cell coverings).
-
-    True iff: a rect corner is in the polygon, OR a polygon vertex is in the
-    rect, OR any boundary edges cross. Covers containment both ways + overlap.
+    Separating-axis test, vectorized by broadcasting: the two meet unless
+    their x ranges, their y ranges, or their projections on the segment's
+    normal are disjoint. A rectangle meets a polygon iff some edge meets it
+    or the rectangle's centre lies in the polygon.
     """
-    rect = rect_poly(lon0, lat0, lon1, lat1)
-    if points_in_polygon(rect[:, 0], rect[:, 1], poly).any():
-        return True
-    inx = (poly[:, 0] >= lon0) & (poly[:, 0] <= lon1) & (poly[:, 1] >= lat0) & (poly[:, 1] <= lat1)
-    if inx.any():
-        return True
-    n, m = len(poly), 4
-    for i in range(n):
-        p1, p2 = poly[i], poly[(i + 1) % n]
-        for j in range(m):
-            if _segments_cross(p1, p2, rect[j], rect[(j + 1) % m]):
-                return True
-    return False
+    dx, dy = bx - ax, by - ay
+    hw, hh = (x1 - x0) / 2, (y1 - y0) / 2
+    return ((np.minimum(ax, bx) <= x1) & (np.maximum(ax, bx) >= x0)
+            & (np.minimum(ay, by) <= y1) & (np.maximum(ay, by) >= y0)
+            & (np.abs(dx * (y0 + hh - ay) - dy * (x0 + hw - ax))
+               <= hw * np.abs(dy) + hh * np.abs(dx)))
 
 
 def convex_hull(points: np.ndarray) -> np.ndarray:

@@ -18,25 +18,27 @@ Spark-first physical strategy, picked per zone geometry:
   Python, one map pass over the pages.
 * **general polygons** (filter-and-refine, SURVEY.md §4):
 
-  1. zones (small dim, driver-side) are exploded into a covering of grid
-     cells at an auto-picked resolution: every (cell, zone) pair whose cell
-     rect intersects the zone polygon — the ST_SUBDIVIDE + spatial-index
-     analogue;
+  1. zones (small dim, driver-side) are covered by grid cells at an
+     auto-picked resolution — the ST_SUBDIVIDE + spatial-index analogue —
+     and the covering becomes one row per cell holding the cell's candidate
+     zones sorted by id; a candidate is ``full`` (the zone holds every
+     point of the cell) or carries the zone edges a point of the cell can
+     touch;
   2. the page side derives its cell key with pure column arithmetic
-     (codegen'd, no UDF) and **broadcast hash joins** the covering — no
-     shuffle of the big side, filters/pruning push into the parquet scan;
-  3. every candidate (page, zone) row runs the exact vectorized ray-cast
-     refine (Arrow-batched pandas UDF over the broadcast zone dim) — the
-     same rule as :func:`spatial_join_points_np`, for any simple polygon;
-  4. the winning zone per page is ``min(zone_id)`` — a partial-aggregable
-     (map-side combine) commutative agg, so the only shuffle in the operator
-     is (key, zone_id) pairs, never the wide page rows.
+     (codegen'd, no UDF) and **broadcast hash joins** the candidate table
+     1:1 — no shuffle of the big side, filters/pruning push into the
+     parquet scan;
+  3. the first candidate that is full, or whose edges hold the point by the
+     exact ray-cast of :func:`spatial_join_points_np`, is the zone: JVM
+     higher-order functions over the same doubles, no Python. Sorted
+     candidates make the first hit the lowest id, so no aggregation or
+     exchange follows.
 
 At 100 TB: the broadcast side is sized by the zones, not the pages (class
-pairs for rectangles, a few MB of (cell → zone) pairs for 10^5 polygons);
-skew from dense urban cells is irrelevant to the join itself (broadcast,
-no key shuffle) and handled at aggregation time by AQE + salted two-phase
-aggs (see operators/zonal.py).
+pairs for rectangles, a few MB of per-cell candidate lists for 10^5
+polygons); skew from dense urban cells is irrelevant to the join itself
+(broadcast, no key shuffle) and handled at aggregation time by AQE + salted
+two-phase aggs (see operators/zonal.py).
 """
 
 from __future__ import annotations
@@ -45,10 +47,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .. import geometry, grid
-from ..sources.layers import Zone, zone_covering
+from ..sources.layers import Zone, zone_candidates
 
 
 def pick_cover_res(zones: list[Zone], max_cells: int = 20_000) -> int:
@@ -64,28 +65,6 @@ def pick_cover_res(zones: list[Zone], max_cells: int = 20_000) -> int:
             return best
         best = res
     return best
-
-
-def _pip_refine_udf(zones: list[Zone]):
-    """(lon_e6, lat_e6, zone_id) -> bool, vectorized per zone within a batch.
-
-    The zones list rides the UDF closure → serialized once per task via the
-    broadcast-like closure mechanism (small dim).
-    """
-    polys = {z.zone_id: z.poly for z in zones}
-
-    @F.pandas_udf(T.BooleanType())
-    def pip(lon_e6: pd.Series, lat_e6: pd.Series, zone_id: pd.Series) -> pd.Series:
-        px = lon_e6.to_numpy(np.float64) / grid.LON_SCALE
-        py = lat_e6.to_numpy(np.float64) / grid.LON_SCALE
-        zid = zone_id.to_numpy(np.int64)
-        out = np.zeros(len(px), dtype=bool)
-        for z in np.unique(zid):
-            m = zid == z
-            out[m] = geometry.points_in_polygon(px[m], py[m], polys[int(z)])
-        return pd.Series(out)
-
-    return pip
 
 
 def _rect_bounds_e6(zones: list[Zone]) -> dict[int, tuple[int, int, int, int]] | None:
@@ -143,6 +122,21 @@ def _rect_class_table(bounds: dict[int, tuple[int, int, int, int]],
     return lon_e, lat_e, keys, best.ravel()[keys]
 
 
+# The lowest candidate zone whose ray-cast holds the point (_px, _py), or
+# NULL: a full candidate holds every point of its cell; the others decide by
+# the crossing parity and the on-edge test of geometry.points_in_polygon,
+# over the same doubles. The CASE keeps horizontal edges (dy = 0, never a
+# crossing) from dividing by zero under ANSI.
+_FIRST_ZONE = f"""aggregate(z_cands, CAST(NULL AS BIGINT), (z, c) -> CASE
+  WHEN z IS NULL AND (c.full
+    OR aggregate(c.edges, false, (odd, e) -> odd != CASE
+         WHEN (e.ay > _py) != (e.by > _py)
+         THEN _px < e.dx * (_py - e.ay) / e.dy + e.ax ELSE false END)
+    OR exists(c.edges, e -> abs(e.dx * (_py - e.ay) - e.dy * (_px - e.ax)) < {geometry.PIP_TOL!r}D
+              AND e.x0 <= _px AND _px <= e.x1 AND e.y0 <= _py AND _py <= e.y1))
+  THEN c.zone_id ELSE z END)"""
+
+
 def _class_col(c: Column, edges: np.ndarray) -> Column:
     """The interval class of column ``c`` over ``edges`` (see
     :func:`_rect_class_table`) as one CASE of ``<`` / ``=`` tests."""
@@ -175,11 +169,14 @@ def spatial_join_points(df: DataFrame, zones: list[Zone], key: str = "page_id",
       that filter below the extraction projection and copy the extraction
       into every comparison. When the class grid exceeds ``max_cells``
       the generic path runs instead.
-    * **general simple polygons** (convex or not): filter-and-refine —
-      explode candidates against a covering at the finest resolution whose
-      bbox covering stays under ``max_cells`` cells (:func:`pick_cover_res`),
-      Arrow-batched ray-cast on every candidate row, then a narrow
-      min(zone_id) aggregation.
+    * **general simple polygons** (convex or not): filter-and-refine,
+      also with no shuffle and no Python. The covering at the finest
+      resolution whose bbox covering stays under ``max_cells`` cells
+      (:func:`pick_cover_res`) is broadcast as one row per cell with its
+      candidate zones sorted by id (:func:`~..sources.layers.zone_candidates`);
+      the page side joins it 1:1 on its cell and keeps the first candidate
+      that is full or whose edges hold the point by the ray-cast, once
+      per row through a ``Generate`` over a 0/1-element array.
 
     ``max_cells`` is the one tuning knob: it picks the path and the
     covering resolution. Both paths are bit-equivalent (asserted in
@@ -202,21 +199,17 @@ def spatial_join_points(df: DataFrame, zones: list[Zone], key: str = "page_id",
         j = pts.join(F.broadcast(dim), pts["_zcls"] == dim["z_cls"], "inner")
         return j.select(key, "zone_id", "lon_e6", "lat_e6", *passthrough)
     res = pick_cover_res(zones, max_cells)
-    cell, zid = zone_covering(zones, res)
-    cov = spark.createDataFrame(pd.DataFrame({"z_cell": cell, "zone_id": zid}))
-    pip = _pip_refine_udf(zones)
-
-    pts = pts.withColumn("_jcell",
-                         grid.cell_col(F.col("lon_e6"), F.col("lat_e6"), res))
-    cand = pts.join(F.broadcast(cov), pts["_jcell"] == cov["z_cell"], "inner")
-    hit = cand.where(pip(F.col("lon_e6"), F.col("lat_e6"), F.col("zone_id")))
-    # Passthrough + coords go in the GROUPING KEY, not first() buffers:
-    # string agg buffers would force SortAggregate; as keys the plan stays a
-    # HashAggregate with map-side combine (values identical per page, so the
-    # grouping is still one group per page).
-    out = (hit.groupBy(key, "lon_e6", "lat_e6", *passthrough)
-           .agg(F.min("zone_id").alias("zone_id")))
-    return out.select(key, "zone_id", "lon_e6", "lat_e6", *passthrough)
+    cov = spark.createDataFrame(zone_candidates(zones, res))
+    pts = pts.select(
+        "*", grid.cell_col(F.col("lon_e6"), F.col("lat_e6"), res).alias("_jcell"),
+        (F.col("lon_e6").cast("double") / F.lit(float(grid.LON_SCALE))).alias("_px"),
+        (F.col("lat_e6").cast("double") / F.lit(float(grid.LON_SCALE))).alias("_py"))
+    j = pts.join(F.broadcast(cov), pts["_jcell"] == cov["z_cell"], "inner")
+    # explode of a 0/1-element array: rows with no zone drop out and the
+    # first-hit expression runs once per row (a filter on it would be
+    # copied into the join condition and run twice)
+    zone = F.explode(F.array_compact(F.array(F.expr(_FIRST_ZONE))))
+    return j.select(key, zone.alias("zone_id"), "lon_e6", "lat_e6", *passthrough)
 
 
 def spatial_join_points_np(lon_e6: np.ndarray, lat_e6: np.ndarray,

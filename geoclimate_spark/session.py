@@ -12,6 +12,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_memory() -> str:
+    """SPARK_GRAFT_DRIVER_MEM, else half the host's RAM, at most 16g: local
+    mode runs every executor thread inside the driver JVM, and a heap sized
+    past the host lets two sessions exhaust it."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "16g"
+    return f"{max(1024, min(16 * 1024, kib // 2048))}m"
+
+
 def get_spark(app: str = "geoclimate_spark", cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cores is None:
@@ -31,7 +45,7 @@ def get_spark(app: str = "geoclimate_spark", cores: int | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

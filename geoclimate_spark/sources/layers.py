@@ -23,11 +23,16 @@ a broadcast dimension here).
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
 import numpy as np
 
 from .. import geometry, grid
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 # Band boundaries (degrees, south → north) and names. Zone ids are
 # band_idx * 12 + sector_idx; ties on shared boundaries resolve to the LOWEST
@@ -376,45 +381,113 @@ def voronoi_zones(n: int = 40, seed: int = 42) -> list[Zone]:
     return zones
 
 
-# Covering construction is pure driver-side Python — without caching it is a
-# FIXED SERIAL COST in every query (measured ~3s at res 6 / 72 zones), which
-# destroys N→4N scaling of short jobs. Keyed by res + every zone's id and
-# vertices: two polygons can share an id and a bbox but not a covering.
-_COVER_CACHE: dict = {}
+# A covering cell is "partial" for a zone when some edge of the zone comes
+# within COVER_EPS degrees of the closed cell rectangle. The margin dwarfs
+# the ~1e-13° float error of cell bounds and the ray-cast's PIP_TOL, and
+# stays far below the 1e-6° spacing of the points.
+COVER_EPS = 1e-7
+# Per edge, the doubles geometry.points_in_polygon computes: the start point,
+# the end's y, the deltas and the bbox widened by PIP_TOL.
+EDGE_FIELDS = ("ax", "ay", "by", "dx", "dy", "x0", "x1", "y0", "y1")
+
+
+def _edges(poly: np.ndarray) -> np.ndarray:
+    """(n, len(EDGE_FIELDS)) values of each edge of ``poly``."""
+    tol = geometry.PIP_TOL
+    ax, ay = poly[:, 0], poly[:, 1]
+    bx, by = np.roll(ax, -1), np.roll(ay, -1)
+    return np.column_stack([ax, ay, by, bx - ax, by - ay,
+                            np.minimum(ax, bx) - tol, np.maximum(ax, bx) + tol,
+                            np.minimum(ay, by) - tol, np.maximum(ay, by) + tol])
+
+
+def _cover_zone(poly: np.ndarray, res: int):
+    """One zone's covering at ``res``: the cells within COVER_EPS of the
+    zone; whether each is full (no edge that close and the centre inside,
+    so every point of the closed cell is inside); and, for each partial
+    cell, the mask of edges whose y range (± PIP_TOL) meets the cell's
+    latitude band (± COVER_EPS). No other edge can cross the horizontal ray
+    of a point in the cell or hold the point, so the ray-cast over the
+    masked edges gives the same answer as over all of them."""
+    cells = grid.cover_bbox_np(*poly.min(axis=0), *poly.max(axis=0), res)
+    lo0, la0, lo1, la1 = (b[:, None] for b in grid.cell_bounds_np(cells))
+    e = _edges(poly)
+    ax, ay, by, _, _, _, _, y0, y1 = e.T
+    partial = geometry.segments_meet_boxes(
+        ax, ay, np.roll(ax, -1), by, lo0 - COVER_EPS, la0 - COVER_EPS,
+        lo1 + COVER_EPS, la1 + COVER_EPS).any(axis=1)
+    centre = geometry.points_in_polygon((lo0[:, 0] + lo1[:, 0]) / 2,
+                                        (la0[:, 0] + la1[:, 0]) / 2, poly)
+    keep = partial | centre
+    band = (y0 <= la1 + COVER_EPS) & (y1 >= la0 - COVER_EPS) & partial[:, None]
+    return cells[keep], ~partial[keep], band[keep], e
+
+
+@dataclass(frozen=True)
+class Covering:
+    cell: np.ndarray       # (cell, zone_id) pairs, zone by zone
+    zone_id: np.ndarray
+    candidates: pa.Table   # see zone_candidates
+
+
+@functools.lru_cache(maxsize=8)
+def _covering(res: int, key: tuple) -> Covering:
+    """The covering at ``res`` of the zones in ``key``, ``(zone_id, vertex
+    bytes)`` pairs. Building it is driver-side numpy work paid once per zone
+    set: the cache holds the last 8 sets, and keys on every vertex since two
+    polygons can share an id and a bbox but not a covering."""
+    import pyarrow as pa
+
+    cells, zids, fulls, counts, edges = [], [], [], [], []
+    for zid, b in key:
+        c, full, band, e = _cover_zone(np.frombuffer(b).reshape(-1, 2), res)
+        cells.append(c)
+        zids.append(np.full(len(c), zid, np.int64))
+        fulls.append(full)
+        counts.append(band.sum(axis=1))
+        edges.append(e[np.nonzero(band)[1]])   # pair by pair, in ring order
+    cell, zid, full, n_edges, edge = map(np.concatenate,
+                                         (cells, zids, fulls, counts, edges))
+    # candidates sorted by (cell, zone_id), each followed by its edge run
+    order = np.lexsort((zid, cell))
+    first = np.cumsum(n_edges) - n_edges
+    edge_off = np.concatenate([[0], np.cumsum(n_edges[order])])
+    edge = edge[np.repeat(first[order] - edge_off[:-1], n_edges[order])
+                + np.arange(edge_off[-1])]
+    z_cell, cand_off = np.unique(cell[order], return_index=True)
+    edges = pa.ListArray.from_arrays(
+        pa.array(edge_off, pa.int32()),
+        pa.StructArray.from_arrays(list(edge.T), names=list(EDGE_FIELDS)))
+    cands = pa.StructArray.from_arrays([zid[order], full[order], edges],
+                                       names=["zone_id", "full", "edges"])
+    table = pa.table({"z_cell": z_cell, "z_cands": pa.ListArray.from_arrays(
+        pa.array(np.append(cand_off, len(cell)), pa.int32()), cands)})
+    return Covering(cell, zid, table)
+
+
+def _zones_key(zones: list[Zone]) -> tuple:
+    return tuple((z.zone_id, np.ascontiguousarray(z.poly, np.float64).tobytes())
+                 for z in zones)
 
 
 def zone_covering(zones: list[Zone], res: int) -> tuple[np.ndarray, np.ndarray]:
-    """Filter-and-refine covering: for each zone, every res-cell whose rect
-    intersects the zone polygon. Returns (cell, zone_id) arrays; the exact
-    PIP refine decides which points of a cell lie in the zone.
+    """Filter-and-refine covering: for each zone, every res-cell that comes
+    within COVER_EPS of the zone polygon. Returns (cell, zone_id) arrays.
 
     Analogue of the reference's manual spatial indexing + ST_SUBDIVIDE
     (`SpatialUnits.groovy:128-129`, `InputDataFormatting.groovy:204-208`):
     the small polygon side is pre-exploded to index cells so the big side
-    joins by cell key only.
-
-    Vectorized: the 4 corner-in-polygon tests run over ALL candidate cells of
-    a zone at once; the exact rect↔polygon fallback only runs for the rare
-    cells with no corner inside (polygon spike entering a cell side). Both
-    are exact for any simple polygon, convex or not.
+    joins by cell key only. Exact for any simple polygon, convex or not.
     """
-    key = (res, tuple((z.zone_id, np.ascontiguousarray(z.poly, np.float64).tobytes())
-                      for z in zones))
-    if key in _COVER_CACHE:
-        return _COVER_CACHE[key]
-    cells, zids = [], []
-    for z in zones:
-        cand = grid.cover_bbox_np(*z.bbox, res)
-        lo0, la0, lo1, la1 = grid.cell_bounds_np(cand)
-        keep = np.stack([
-            geometry.points_in_polygon(cx, cy, z.poly)
-            for cx, cy in ((lo0, la0), (lo1, la0), (lo1, la1), (lo0, la1))
-        ]).any(axis=0)
-        for i in np.where(~keep)[0]:
-            keep[i] = geometry.rect_intersects_polygon(
-                lo0[i], la0[i], lo1[i], la1[i], z.poly)
-        cells.append(cand[keep])
-        zids.append(np.full(int(keep.sum()), z.zone_id, np.int64))
-    out = (np.concatenate(cells).astype(np.int64), np.concatenate(zids))
-    _COVER_CACHE[key] = out
-    return out
+    c = _covering(res, _zones_key(zones))
+    return c.cell, c.zone_id
+
+
+def zone_candidates(zones: list[Zone], res: int) -> pa.Table:
+    """The covering as one row per cell: a pyarrow Table of ``z_cell`` and
+    ``z_cands array<struct<zone_id, full, edges array<struct<EDGE_FIELDS>>>>``
+    sorted by zone id. A ``full`` candidate holds every point of the cell
+    and carries no edges; the others carry the edges that decide, by the
+    ray-cast of geometry.points_in_polygon, which points of the cell they
+    hold."""
+    return _covering(res, _zones_key(zones)).candidates

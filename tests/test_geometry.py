@@ -48,8 +48,16 @@ def test_clip_convex_identity_and_half():
     assert len(none) == 0 or geometry.poly_area(none) == pytest.approx(0.0)
 
 
-def test_rect_intersects_polygon_all_cases():
-    f = geometry.rect_intersects_polygon
+def test_segments_meet_boxes_all_cases():
+    def f(lon0, lat0, lon1, lat1, poly):
+        """The covering's rect-meets-polygon rule: an edge meets the rect
+        or the rect's centre lies in the polygon."""
+        ax, ay = poly[:, 0], poly[:, 1]
+        edges = geometry.segments_meet_boxes(ax, ay, np.roll(ax, -1), np.roll(ay, -1),
+                                             lon0, lat0, lon1, lat1)
+        centre = geometry.points_in_polygon(np.array([(lon0 + lon1) / 2]),
+                                            np.array([(lat0 + lat1) / 2]), poly)
+        return bool(edges.any() or centre[0])
     assert f(0.25, 0.25, 0.75, 0.75, UNIT_SQ)     # rect inside poly
     assert f(-1, -1, 2, 2, UNIT_SQ)               # poly inside rect
     assert f(0.5, 0.5, 2, 2, UNIT_SQ)             # overlap
@@ -58,6 +66,10 @@ def test_rect_intersects_polygon_all_cases():
     # crossing but no vertex containment (plus-sign case)
     thin = np.asarray([[-5, 0.4], [5, 0.4], [5, 0.6], [-5, 0.6]], dtype=float)
     assert f(0.0, -5.0, 1.0, 5.0, thin)
+    # a diagonal edge passing the box's corner: only the normal axis separates
+    tri = np.asarray([[0.0, 0.0], [2.0, 0.0], [0.0, 2.0]])
+    assert not f(1.01, 1.01, 2.0, 2.0, tri)
+    assert f(0.99, 0.99, 2.0, 2.0, tri)
 
 
 def test_convex_hull():

@@ -137,7 +137,7 @@ def test_non_convex_zone_matches_numpy_oracle(spark):
 
 
 def test_rect_fast_path_equals_generic_refine(spark):
-    """The zero-shuffle rect path and the explode+ray-cast path must be
+    """The rect path and the generic candidate-list path must be
     bit-equivalent on rect zones — including boundary ties and overlaps."""
     g = _geo_pages(spark)
     zones = layers.climate_zones()
@@ -147,10 +147,15 @@ def test_rect_fast_path_equals_generic_refine(spark):
         .executedPlan().toString()
     assert "ArrowEvalPython" not in plan
     assert "Exchange hashpartitioning" not in plan
-    # the 27 x 17 class grid exceeds max_cells=400: the generic path runs
+    # the 27 x 17 class grid exceeds max_cells=400: the generic path runs,
+    # also with no Python, no exchange and no aggregation, and resolves the
+    # first hit once per row (not again in the join condition)
     slow = spatial_join_points(g, zones, max_cells=400)
-    assert "ArrowEvalPython" in \
-        slow._jdf.queryExecution().executedPlan().toString()
+    plan = slow._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan
+    assert "Exchange hashpartitioning" not in plan
+    assert "HashAggregate" not in plan
+    assert plan.count("aggregate(z_cands") == 1
     slow = slow.orderBy("page_id").toPandas()
     assert fast.page_id.tolist() == slow.page_id.tolist()
     assert fast.zone_id.tolist() == slow.zone_id.tolist()
@@ -206,3 +211,87 @@ def test_zone_covering_cache_keys_on_vertices():
     # every cell dropped from the square's covering lies beyond the hypotenuse
     lo0, la0, _, _ = grid.cell_bounds_np(np.setdiff1d(sq_cells, cells))
     assert ((lo0 - 40.0) + (la0 - 40.0) >= 4.0).all()
+
+
+NOTCH = np.array([[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [5.02, 10.0],
+                  [5.02, 5.0], [4.98, 5.0], [4.98, 10.0], [0.0, 10.0]])
+
+
+def _full_cells(zones, res):
+    """(cell, zone_id) of every candidate flagged full at ``res``."""
+    t = layers.zone_candidates(zones, res).to_pylist()
+    return [(r["z_cell"], c["zone_id"]) for r in t for c in r["z_cands"] if c["full"]]
+
+
+@pytest.mark.parametrize("zones, res, k", [
+    (layers.voronoi_zones(), 9, 9),
+    ([layers.Zone(0, "notched", NOTCH)], 6, 201),
+    ([layers.Zone(0, "notched", NOTCH)], 8, 101)])
+def test_full_cells_hold_every_point(zones, res, k):
+    """A full candidate skips the ray-cast, so every µ° point of its closed
+    cell must pass it: a k x k lattice of each full cell, fine enough to
+    land in the notched square's 0.04°-wide notch (a four-corner test
+    would flag the cells across the notch full)."""
+    polys = {z.zone_id: z.poly for z in zones}
+    full = _full_cells(zones, res)
+    assert full
+    for cell, zid in full:
+        lo0, la0, lo1, la1 = (float(v[0]) for v in grid.cell_bounds_np(np.array([cell])))
+        xs = np.unique(np.clip(np.rint(np.linspace(lo0, lo1, k) * 1e6),
+                               np.ceil(lo0 * 1e6), np.floor(lo1 * 1e6)))
+        ys = np.unique(np.clip(np.rint(np.linspace(la0, la1, k) * 1e6),
+                               np.ceil(la0 * 1e6), np.floor(la1 * 1e6)))
+        px, py = (a.ravel() / 1e6 for a in np.meshgrid(xs, ys))
+        assert geometry.points_in_polygon(px, py, polys[zid]).all(), (cell, zid)
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_generic_join_same_rows_under_ansi(spark, ansi):
+    """Voronoi zones, and the climate zones forced off the rect path: their
+    horizontal edges reach the crossing term's guarded division."""
+    g = _geo_pages(spark)
+    src = g.orderBy("page_id").toPandas()
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        for zones, max_cells in ((layers.voronoi_zones(), 20_000),
+                                 (layers.climate_zones(), 400)):
+            got = spatial_join_points(g, zones, max_cells=max_cells) \
+                .orderBy("page_id").toPandas()
+            want = spatial_join_points_np(src.lon_e6.values, src.lat_e6.values, zones)
+            assert got.page_id.tolist() == src.page_id[want >= 0].tolist()
+            assert got.zone_id.tolist() == want[want >= 0].tolist()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+
+
+def test_generic_join_degenerate_inputs(spark):
+    """Empty input, one row, and one hot cell whose every point lies on the
+    diagonal two triangles share: the lower zone id takes them all."""
+    zones = [layers.Zone(3, "lower_right", np.array([[0.0, 0.0], [1.0, 0.0], [1.0, 1.0]])),
+             layers.Zone(1, "upper_left", np.array([[0.0, 0.0], [1.0, 1.0], [0.0, 1.0]]))]
+    res = pick_cover_res(zones)
+    schema = "page_id long, lon_e6 long, lat_e6 long"
+    assert spatial_join_points(spark.createDataFrame([], schema), zones).count() == 0
+    one = spatial_join_points(spark.createDataFrame([(7, 250_000, 750_000)], schema), zones)
+    assert [tuple(r) for r in one.collect()] == [(7, 1, 250_000, 750_000)]
+    d = np.arange(500_000, 501_000, dtype=np.int64)
+    assert len(np.unique(grid.cell_np(d, d, res))) == 1
+    hot = spark.createDataFrame(pd.DataFrame({"page_id": np.arange(len(d)),
+                                              "lon_e6": d, "lat_e6": d}))
+    got = spatial_join_points(hot, zones).orderBy("page_id").toPandas()
+    assert got.page_id.tolist() == list(range(len(d)))
+    assert set(got.zone_id) == {1}
+    assert (spatial_join_points_np(d, d, zones) == 1).all()
+
+
+def test_covering_cache_is_bounded():
+    """The covering cache keeps at most 8 zone sets, the latest ones."""
+    info = layers._covering.cache_info()
+    assert info.maxsize == 8
+    for i in range(12):
+        layers.zone_covering([layers.Zone(i, "t", geometry.rect_poly(i, 0.0, i + 1.5, 1.5))], 6)
+        assert layers._covering.cache_info().currsize <= 8
+    hits = layers._covering.cache_info().hits
+    layers.zone_covering([layers.Zone(11, "t", geometry.rect_poly(11, 0.0, 12.5, 1.5))], 6)
+    assert layers._covering.cache_info().hits == hits + 1
