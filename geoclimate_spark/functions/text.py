@@ -89,20 +89,27 @@ def _avg_tok_col(n_chars: Column, n_tokens: Column) -> Column:
     return (n_chars - (n_tokens - F.lit(1))).cast("double") / n_tokens.cast("double")
 
 
+def round6_col(x: Column) -> Column:
+    """``x`` rounded to 6 decimals as ``FLOOR(x * 1e6 + 0.5) / 1e6`` in
+    doubles, which both engines evaluate bit-identically. Not
+    ``ROUND(x, 6)``: Spark rounds the shortest decimal form of x HALF_UP
+    while DuckDB rounds ``x * 1e6``, and the two differ next to half-way
+    points. Spark's ``floor`` returns a long, so ``|x|`` must stay below
+    ~9.2e12."""
+    return F.floor(x * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+
+
 def quality_col(n_tokens: Column, n_chars: Column, punct: Column,
                 stop_hits: Column) -> Column:
-    """Quality score in [0, 1] from four integer counts, rounded to 6
-    decimals as ``FLOOR(q * 1e6 + 0.5) / 1e6`` in doubles, which both engines
-    evaluate bit-identically. Not ``ROUND(q, 6)``: Spark rounds the shortest
-    decimal form of q HALF_UP while DuckDB rounds ``q * 1e6``, and the two
-    differ next to half-way points."""
+    """Quality score in [0, 1] from four integer counts, rounded by
+    :func:`round6_col`."""
     punct_ratio = punct.cast("double") / n_chars.cast("double")
     stop_ratio = stop_hits.cast("double") / n_tokens.cast("double")
     q = (F.lit(0.3) * F.least(n_tokens.cast("double") / F.lit(100.0), F.lit(1.0))
          + F.lit(0.3) * (F.lit(1.0) - F.least(punct_ratio * F.lit(5.0), F.lit(1.0)))
          + F.lit(0.2) * F.least(stop_ratio * F.lit(4.0), F.lit(1.0))
          + F.lit(0.2) * F.least(_avg_tok_col(n_chars, n_tokens) / F.lit(8.0), F.lit(1.0)))
-    return F.floor(q * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+    return round6_col(q)
 
 
 def text_metrics_cols(text: Column) -> dict[str, Column]:
@@ -164,6 +171,11 @@ def _avg_tok_sql(n_chars: str, n_tokens: str) -> str:
     return f"(CAST({n_chars} - ({n_tokens} - 1) AS DOUBLE) / CAST({n_tokens} AS DOUBLE))"
 
 
+def round6_sql(x: str) -> str:
+    """DuckDB dual of :func:`round6_col`."""
+    return f"(FLOOR(({x}) * 1e6 + CAST(0.5 AS DOUBLE)) / 1e6)"
+
+
 def quality_sql(n_tokens: str, n_chars: str, punct: str, stop_hits: str) -> str:
     """DuckDB dual of :func:`quality_col`."""
     punct_ratio = f"(CAST({punct} AS DOUBLE) / CAST({n_chars} AS DOUBLE))"
@@ -172,7 +184,7 @@ def quality_sql(n_tokens: str, n_chars: str, punct: str, stop_hits: str) -> str:
          f" + 0.3 * (1.0 - LEAST({punct_ratio} * 5.0, 1.0))"
          f" + 0.2 * LEAST({stop_ratio} * 4.0, 1.0)"
          f" + 0.2 * LEAST({_avg_tok_sql(n_chars, n_tokens)} / 8.0, 1.0)")
-    return f"(FLOOR(({q}) * 1e6 + CAST(0.5 AS DOUBLE)) / 1e6)"
+    return round6_sql(q)
 
 
 def text_metrics_sql(text_sql: str) -> dict[str, str]:

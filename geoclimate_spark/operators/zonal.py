@@ -21,7 +21,8 @@ Numeric determinism (the driver hash-compares against DuckDB): every
 statistic is derived from *exact integer* partial sums (n, Σx, Σx², Σvw, …)
 combined in a fixed double-arithmetic order, so results are bit-identical
 regardless of partitioning — except GEOM_AVG, whose Σln(x) is float and
-order-dependent; it is ROUNDed to 6 decimals on both sides.
+order-dependent; it is rounded to 6 decimals on both sides by the same
+``FLOOR(x * 1e6 + 0.5) / 1e6`` as ``quality`` (functions/text.py::round6_col).
 
 Scale: each operator is ONE ``groupBy(zone)`` with algebraic aggregates —
 map-side partial aggregation shrinks the shuffle to one row per (partition,
@@ -36,10 +37,17 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import round6_col, round6_sql
+
 UNWEIGHTED_OPS = ("sum", "avg", "std", "geom_avg", "dens", "nb_dens")
 
 
 # ---------------------------------------------------------------- Spark path
+def _geom_avg_col(sln: Column, n: Column) -> Column:
+    """exp(mean ln x), rounded to 6 decimals."""
+    return round6_col(F.exp(sln / n))
+
+
 def unweighted_stats(df: DataFrame, dim: DataFrame, key: str, value: str,
                      ops: Sequence[str] = UNWEIGHTED_OPS) -> DataFrame:
     """Per-zone stats of an integer value column; empty zones kept at 0.
@@ -66,7 +74,7 @@ def unweighted_stats(df: DataFrame, dim: DataFrame, key: str, value: str,
         "sum": F.coalesce(F.col("_sx"), F.lit(0)).cast("long"),
         "avg": F.coalesce(sx / n, F.lit(0.0)),
         "std": F.coalesce(F.sqrt((sx2 - sx * sx / n) / n), F.lit(0.0)),
-        "geom_avg": F.coalesce(F.round(F.exp(F.col("_sln") / n), 6), F.lit(0.0)),
+        "geom_avg": F.coalesce(_geom_avg_col(F.col("_sln"), n), F.lit(0.0)),
         "dens": F.coalesce(sx / area, F.lit(0.0)),
         "nb_dens": F.coalesce(n / area, F.lit(0.0)),
     }
@@ -222,6 +230,11 @@ FROM t GROUP BY {key}"""
 
 
 # ------------------------------------------------------------------ SQL path
+def _geom_avg_sql(sln: str, n: str) -> str:
+    """DuckDB dual of :func:`_geom_avg_col`."""
+    return round6_sql(f"EXP({sln} / CAST({n} AS DOUBLE))")
+
+
 def unweighted_stats_sql(rows_sql: str, dim_values_sql: str, key: str,
                          value: str, ops: Sequence[str] = UNWEIGHTED_OPS) -> str:
     """DuckDB mirror. ``rows_sql`` must select (key, value); ``dim_values_sql``
@@ -231,7 +244,7 @@ def unweighted_stats_sql(rows_sql: str, dim_values_sql: str, key: str,
         "avg": f"COALESCE(CAST(_sx AS DOUBLE) / CAST(_n AS DOUBLE), 0.0)",
         "std": ("COALESCE(SQRT((CAST(_sx2 AS DOUBLE) - CAST(_sx AS DOUBLE) * CAST(_sx AS DOUBLE)"
                 " / CAST(_n AS DOUBLE)) / CAST(_n AS DOUBLE)), 0.0)"),
-        "geom_avg": "COALESCE(ROUND(EXP(_sln / CAST(_n AS DOUBLE)), 6), 0.0)",
+        "geom_avg": f"COALESCE({_geom_avg_sql('_sln', '_n')}, 0.0)",
         "dens": "COALESCE(CAST(_sx AS DOUBLE) / area_deg2, 0.0)",
         "nb_dens": "COALESCE(CAST(_n AS DOUBLE) / area_deg2, 0.0)",
     }

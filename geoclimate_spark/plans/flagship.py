@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.extract import with_extraction
+from ..functions.extract import geo_extraction
 from ..operators.spatial_join import spatial_join_points
 from ..operators.tile import TILE_RES, with_tile
 from ..sources.layers import climate_zones
@@ -21,13 +21,13 @@ from ..sources.pages import pages_from_documents
 
 
 def geo_pages(pages: DataFrame) -> DataFrame:
-    """html → (page_id, url, lang, text_extracted, lon_e6, lat_e6); geo rows only.
+    """html → (page_id, url, lang, text_extracted, lat_e6, lon_e6); geo rows only.
 
     Column pruning matters at 100 TB: only html/url/lang are read from the
-    scan; `text` (the verification copy) is never touched here.
+    scan; `text` (the verification copy) is never touched here. Each page
+    is decoded and searched once (functions/extract.py::geo_extraction).
     """
-    ex = with_extraction(pages.select("page_id", "url", "lang", "html"))
-    return ex.where(F.col("lon_e6").isNotNull()).drop("html")
+    return geo_extraction(pages.select("page_id", "url", "lang", "html"))
 
 
 def page_chars(pages: DataFrame) -> DataFrame:

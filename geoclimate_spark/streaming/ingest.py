@@ -9,8 +9,9 @@ north rule's resume mechanism for the ingest edge of the pipeline (the
 batch stages resume via plans/pipeline.py snapshots).
 
 Design rules:
-* the streaming DAG REUSES the batch operators verbatim (`with_extraction`,
-  `tile_col`) — stateless projections are streaming-safe by construction;
+* the streaming DAG REUSES the batch operators verbatim (`geo_extraction`,
+  `tile_col`) — stateless projections (and the extraction's one-row
+  `explode`) are streaming-safe by construction;
 * stateful aggregation (pages per window × tile) uses event-time windows on
   ``warc_ts`` with a watermark for late crawls;
 * ``trigger(availableNow=True)`` drains whatever has landed and stops —
@@ -25,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.extract import with_extraction
+from ..functions.extract import geo_extraction
 from ..operators.tile import tile_col
 
 PAGES_SCHEMA = T.StructType([
@@ -49,10 +50,8 @@ def stream_pages(spark: SparkSession, input_dir: str) -> DataFrame:
 def enriched_stream(pages: DataFrame) -> DataFrame:
     """Stateless streaming enrichment: html → text/coords → tile id.
     Identical operators to the batch path."""
-    ex = with_extraction(pages.select("page_id", "url", "warc_ts", "lang", "html"))
-    return (ex.where(F.col("lon_e6").isNotNull())
-            .withColumn("tile_id", tile_col(F.col("lon_e6"), F.col("lat_e6")))
-            .drop("html"))
+    ex = geo_extraction(pages.select("page_id", "url", "warc_ts", "lang", "html"))
+    return ex.withColumn("tile_id", tile_col(F.col("lon_e6"), F.col("lat_e6")))
 
 
 def run_ingest(spark: SparkSession, input_dir: str, out_dir: str,

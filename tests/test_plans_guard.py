@@ -41,6 +41,20 @@ def test_flagship_scan_prunes_columns(spark):
         assert "n_chars" not in s.split("ReadSchema")[1]
 
 
+def test_flagship_extracts_once(spark):
+    """Each page is decoded once: a Filter on an extracted column pushed
+    below the extraction projection would decode (and search) every page
+    a second time, so no Filter (nor a scan's DataFilters) may mention
+    decode. Cached frames are cleared first: a persisted flagship prefix
+    left by another query would be reused and render its plan twice."""
+    from geoclimate_spark.plans import flagship
+    spark.catalog.clearCache()
+    plan = _plan(flagship.run(spark, SF))
+    assert plan.count("StringDecode.decode") == 1, plan
+    filters = [line for line in plan.splitlines() if "Filter" in line]
+    assert not [f for f in filters if "decode" in f], filters
+
+
 def test_knn_plan_no_cartesian(spark):
     from geoclimate_spark.operators import knn
     pts = (spark.read.parquet(f"{SF}/documents.parquet")

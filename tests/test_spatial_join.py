@@ -3,10 +3,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from geoclimate_spark import geometry, grid
-from geoclimate_spark.functions.extract import with_extraction
+from geoclimate_spark.functions.extract import geo_extraction
 from geoclimate_spark.operators.spatial_join import (
     pick_cover_res, spatial_join_points, spatial_join_points_np)
 from geoclimate_spark.sources import layers
@@ -17,8 +16,7 @@ from conftest import SF_SMOKE
 
 def _geo_pages(spark):
     pages = pages_from_documents(spark, SF_SMOKE)
-    return with_extraction(pages).where(F.col("lon_e6").isNotNull()) \
-        .select("page_id", "lon_e6", "lat_e6")
+    return geo_extraction(pages).select("page_id", "lon_e6", "lat_e6")
 
 
 def test_climate_zone_join_matches_numpy_oracle(spark):

@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
+import duckdb
 import numpy as np
 import pandas as pd
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from geoclimate_spark.operators import distribution as D
@@ -68,6 +70,38 @@ def test_unweighted_keeps_empty_zones(spark, duck):
                ["zone_id"])
     empty = got[got.zone_id >= 9]
     assert len(empty) == 3 and (empty.sum_v == 0).all() and (empty.avg_v == 0).all()
+
+
+# (Σ ln x, n) pairs on which ROUND(EXP(Σ ln x / n), 6) disagrees between
+# the engines although EXP itself agrees: the mean sits next to a half-way
+# point (1068.1670585, 65757.2496495, ...) and Spark rounds its shortest
+# decimal form HALF_UP while DuckDB rounds x * 1e6.
+_GEOM_HALF_WAY = [(41.84219657462402, 6), (44.37490081916252, 4),
+                  (42.88091804807795, 4), (33.32511125815987, 4),
+                  (22.70085425380325, 2), (30.67810793665729, 4)]
+
+
+@st.composite
+def _sln_n(draw):
+    """(Σ ln x, n) of some zone: a mean ln x up to 12 (x up to ~160k)."""
+    n = draw(st.integers(1, 5000))
+    return draw(st.floats(0.0, 12.0 * n)), n
+
+
+@given(st.lists(_sln_n(), min_size=1, max_size=60))
+@example(_GEOM_HALF_WAY)
+@settings(max_examples=25, deadline=None)
+def test_geom_avg_rounding_parity(spark, pairs):
+    """geom_avg = exp(Σ ln x / n) rounded to 6 decimals, equal on both
+    engines."""
+    rows = pd.DataFrame({"i": range(len(pairs)),
+                         "sln": [sln for sln, _ in pairs],
+                         "n": [n for _, n in pairs]})
+    got = (spark.createDataFrame(rows, "i long, sln double, n long").orderBy("i")
+           .select(Z._geom_avg_col(F.col("sln"), F.col("n").cast("double")))
+           .collect())
+    want = duckdb.sql(f"SELECT {Z._geom_avg_sql('sln', 'n')} FROM rows ORDER BY i").fetchall()
+    assert [r[0] for r in got] == [r[0] for r in want]
 
 
 def test_weighted_stats(spark, duck):
